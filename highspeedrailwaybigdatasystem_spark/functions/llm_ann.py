@@ -176,13 +176,25 @@ def _emb_f64(col, n_rows: int):
     values for this array's logical extent (offset-safe on sliced
     batches), and the float32→float64 cast is value-exact, so downstream
     cumsum left folds see bit-identical inputs to the old
-    ``np.array(col.to_pylist(), dtype=float64)`` path. Raises (reshape)
-    if rows are ragged — the embedding corpus is fixed-width by contract."""
+    ``np.array(col.to_pylist(), dtype=float64)`` path. Raises ValueError
+    on null rows or null elements (callers filter NULL embeddings first) and
+    on ragged rows — the embedding corpus is fixed-width by contract."""
     import numpy as np
 
-    flat = col.flatten().to_numpy(zero_copy_only=False)
+    values = col.flatten()
+    if col.null_count or values.null_count:
+        raise ValueError(
+            f"_emb_f64: embedding column has {col.null_count} null rows and "
+            f"{values.null_count} null elements; filter NULLs before decoding"
+        )
+    flat = values.to_numpy(zero_copy_only=False)
     if n_rows == 0 or flat.size == 0:
         return np.empty((0, 0), dtype=np.float64)
+    if flat.size % n_rows:
+        raise ValueError(
+            f"_emb_f64: {flat.size} values do not split into {n_rows} "
+            "equal-width rows (ragged embeddings)"
+        )
     return flat.astype(np.float64).reshape(n_rows, flat.size // n_rows)
 
 

@@ -7,12 +7,12 @@ silently regress:
    ``time_query`` unwraps ``plan_memo`` (``__wrapped__``) so a memoized
    DataFrame can never let AQE serve already-materialized shuffle stages
    into the headline number (that regime is real, but it is serving-mode
-   reuse and is reported separately as ``steady_state``).
-2. The artifact always carries BOTH comparison ratios —
+   reuse, not engine speed).
+2. The artifact always carries its comparison ratios —
    ``vs_recorded_baseline`` (gate math vs the recorded r1 baseline) and
-   ``vs_steady_state`` (quiet-host steady state) — plus the
-   single-threaded fresh-subprocess DuckDB control, so a reader can tell
-   code regressions from host load without consulting prose.
+   ``per_query_vs_baseline`` — plus the single-threaded fresh-subprocess
+   DuckDB control, so a reader can tell code regressions from host load
+   without consulting prose.
 
 These tests exercise bench.py's functions directly (no sf0.1 run): the
 timing-path property via a stub callable, and the artifact-shape property
@@ -61,8 +61,8 @@ def test_time_query_unwraps_plan_memo(spark):
         "time_query called the memo wrapper — headline value would "
         "include serving-mode reuse"
     )
-    # warmup + 2 cache-honest timed runs + 2 warm-cache-regime runs (r17)
-    assert calls["fresh"] == 5
+    # warmup + 2 cache-honest timed runs
+    assert calls["fresh"] == 3
 
 
 def test_registered_memo_ops_expose_wrapped():
@@ -135,7 +135,7 @@ def test_per_query_baseline_pins():
 
 def test_bench_artifact_carries_both_ratios():
     """bench.py's JSON line must always carry vs_recorded_baseline,
-    vs_steady_state, steady_state, and the DuckDB control — run as a
+    per_query_vs_baseline, and the DuckDB control — run as a
     SUBPROCESS against sf0.001 so this stays a smoke and bench's
     spark.stop() cannot kill the suite's shared session (the vs_* fields
     are None off the graded sf0.1 set, but the KEYS must exist)."""
@@ -162,18 +162,15 @@ def test_bench_artifact_carries_both_ratios():
     for key in (
         "value",
         "queries",
-        "steady_state",
         "host_probe",
         "bench_vs_control",
         "vs_recorded_baseline",
-        "vs_steady_state",
         "contended",
         "attempts",
         "per_query_vs_baseline",
     ):
         assert key in art, f"BENCH artifact missing {key}"
     assert art["host_probe"]["duckdb_control_sec"] > 0
-    assert "note" in art["steady_state"]
     assert isinstance(art["contended"], bool)
     assert art["attempts"] >= 1
     # off the graded sf0.1 set the per-query ratio table is None by design

@@ -1,9 +1,11 @@
 """registry.plan_memo semantics (round 12): plan REUSE, never result reuse.
 
-Catalyst planning of a fresh DataFrame was 50-90% of each headline query's
-warm wall-clock at sf0.1, so pure headline ops memoize their constructed
-DataFrame per (op, session, sf_dir, corpus fingerprint). These tests pin
-the contract that makes that safe."""
+Pure ops memoize their constructed DataFrame per (op, session, sf_dir,
+corpus fingerprint) so a repeat caller gets the same DataFrame (AQE then
+reuses its materialized shuffle stages) and composers share the
+llm_minhash_banding stages. Catalyst planning is only 1-8% of a fresh
+headline query at sf0.1, so the memo is about that reuse, not planning
+cost. These tests pin the contract that makes it safe."""
 
 from __future__ import annotations
 

@@ -1,9 +1,9 @@
 """Independent-recompute checks for the round-10 planned gate window's
-previously-untested ops (DRIVER_COVERAGE.md "r10 planned window") — same
-discipline as tests/test_properties_r9_window.py: the oracle mirror proves
-Spark ≡ DuckDB, these recompute each statistic a third way in pandas/numpy
-(different formulation where possible, e.g. centered moments vs the ops'
-raw power sums) so a shared cross-engine mistake cannot hide."""
+previously-untested ops — same discipline as
+tests/test_properties_r9_window.py: the oracle mirror proves Spark ≡ DuckDB,
+these recompute each statistic a third way in pandas/numpy (different
+formulation where possible, e.g. centered moments vs the ops' raw power
+sums) so a shared cross-engine mistake cannot hide."""
 
 from __future__ import annotations
 

@@ -1,9 +1,8 @@
 """Independent-recompute checks for the round-11 planned gate window's
-previously-untested ops (DRIVER_COVERAGE.md "r11 planned window") — the
-third installment of the r9 discipline: pandas/python recomputes or planted
-invariants so a shared cross-engine mistake cannot hide behind a green
-mirror row. (This discipline found the empty bloom-probe-set bug in the
-r10 sweep — see agg_bloom_fpr_audit.)"""
+previously-untested ops — the third installment of the r9 discipline:
+pandas/python recomputes or planted invariants so a shared cross-engine
+mistake cannot hide behind a green mirror row. (This discipline found the
+empty bloom-probe-set bug in the r10 sweep — see agg_bloom_fpr_audit.)"""
 
 from __future__ import annotations
 

@@ -1,9 +1,8 @@
 """Independent-recompute checks for the round-12 planned gate window's
-previously-untested ops (DRIVER_COVERAGE.md "r12 planned window") — the
-final installment of the r9 third-way verification sweep: every op in every
-remaining planned gate window now has either a pandas recompute, a planted
-signal, or a conservation/bounds invariant on top of its oracle-mirror
-row."""
+previously-untested ops — the final installment of the r9 third-way
+verification sweep: every op in every remaining planned gate window now has
+either a pandas recompute, a planted signal, or a conservation/bounds
+invariant on top of its oracle-mirror row."""
 
 from __future__ import annotations
 

@@ -67,17 +67,7 @@ def main() -> None:
                     t0 = time.perf_counter()
                     _drive(fresh(spark, SF_DIR))
                     best = min(best, time.perf_counter() - t0)
-                # old-regime figure (caches warm from the last timed run)
-                # kept for cross-round comparability with pre-r17 sweeps
-                t0 = time.perf_counter()
-                _drive(fresh(spark, SF_DIR))
-                wc = time.perf_counter() - t0
-                rec = {
-                    "op": name,
-                    "sec": round(best, 4),
-                    "cold": round(warm, 4),
-                    "sec_warm_cache": round(wc, 4),
-                }
+                rec = {"op": name, "sec": round(best, 4), "cold": round(warm, 4)}
             except Exception as e:  # noqa: BLE001 — record and continue
                 rec = {"op": name, "error": str(e)[:200]}
             fh.write(json.dumps(rec) + "\n")
