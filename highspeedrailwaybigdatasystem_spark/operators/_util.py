@@ -5,10 +5,9 @@ them identically:
 
 * ``money(col)``   — round(x, 2) for currency aggregates (double, not decimal).
 * ``ratio(col)``   — round(x, 6) for ratios / similarities / stats.
-* events.ts is timestamp[us] parquet (regen 2026-08-13; was ns through round
-  2). ``EVENTS_TS_US`` below is now an identity cast in DuckDB — kept so
-  every oracle stays unit-explicit and the legacy ns path (schemas.load
-  footer branch) still canonicalizes identically.
+* events.ts is timestamp[us] parquet (``schemas.load`` refuses any other
+  encoding). ``EVENTS_TS_US`` below is an identity cast in DuckDB, kept so
+  every oracle stays unit-explicit.
 """
 
 from __future__ import annotations
@@ -175,8 +174,3 @@ def sql_q(spark: SparkSession, sf_dir: str, text: str) -> DataFrame:
 
     ensure_views(spark, sf_dir)
     return spark.sql(text)
-
-
-def events_us(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events with ts already µs (Spark-side no-op; mirrors EVENTS_TS_US)."""
-    return t(spark, sf_dir, "events")

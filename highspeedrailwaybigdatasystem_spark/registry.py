@@ -3,21 +3,18 @@
   * a PySpark query callable ``(spark, sf_dir) -> DataFrame``  (→ ``queries()``)
   * an equivalent DuckDB-runnable ANSI SQL string               (→ ``oracle_sql()``)
 
-Oracle-less registrations (``oracle=None``) are the rows-only operators
-(SURVEY.md §2 inventory line: approximate/randomized results). ZERO remain
-as of round 13: the last three (agg_approx_distinct, agg_hll_sketch,
-llm_ann_lsh) now emit bounded-error audit rows — exact yardstick plus a
-boolean bound check both engines agree on — so every registered op is
-hash-gateable. The ``oracle=None`` path stays supported for future
-genuinely non-SQL-expressible ops.
+Every registration carries its oracle. Approximate ops (agg_approx_distinct,
+agg_hll_sketch, llm_ann_lsh) emit bounded-error audit rows — exact yardstick
+plus a boolean bound check both engines agree on — so every op is
+hash-gateable.
 
 Canonicalization contract (SURVEY.md §5.3) — enforced by convention in every
 registered pair:
   * floating aggregates rounded identically on both sides:
     round(x, 2) for money, round(x, 6) for ratios/similarities;
   * DuckDB integer aggregates cast to BIGINT to match Spark's long;
-  * ``events.ts`` is µs on disk (post-2026-08-13 regen; the loader's footer
-    sniff still guards the legacy ns path — see schemas.py);
+  * ``events.ts`` is timestamp[us] on disk; ``schemas.load`` refuses any
+    other encoding (``schemas.check_events_ts``);
   * every LIMIT/top-k ordered with a unique key suffix;
   * every computed column aliased to the same name on both sides.
 """
@@ -66,15 +63,14 @@ _OPERATOR_MODULES = (
 _loaded = False
 
 
-def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
-    """Decorator: add a query (and optionally its DuckDB oracle) to the surface."""
+def register(name: str, oracle: str) -> Callable[[QueryFn], QueryFn]:
+    """Decorator: add a query and its DuckDB oracle to the surface."""
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in _QUERIES:
             raise ValueError(f"duplicate operator registration: {name}")
         _QUERIES[name] = fn
-        if oracle is not None:
-            _ORACLES[name] = oracle
+        _ORACLES[name] = oracle
         return fn
 
     return deco
@@ -192,17 +188,11 @@ _WINDOW_PRIORITY: tuple[str, ...] = (
 
 
 def all_queries() -> dict[str, QueryFn]:
-    """All registered queries: the pinned gate window first (oracle-backed,
-    see ``_WINDOW_PRIORITY``), then the remaining oracle-backed entries in
-    registration order, then oracle-less entries last. The external gate
-    samples a prefix window of this dict in insertion order — rows-only ops
-    (no oracle ⇒ can never be hash-green) must not occupy gated slots."""
+    """All registered queries: the pinned gate window first (see
+    ``_WINDOW_PRIORITY``), then the rest in registration order."""
     _ensure_loaded()
-    ordered = {
-        n: _QUERIES[n] for n in _WINDOW_PRIORITY if n in _QUERIES and n in _ORACLES
-    }
-    ordered.update({n: f for n, f in _QUERIES.items() if n in _ORACLES})
-    ordered.update({n: f for n, f in _QUERIES.items() if n not in _ORACLES})
+    ordered = {n: _QUERIES[n] for n in _WINDOW_PRIORITY if n in _QUERIES}
+    ordered.update(_QUERIES)
     return ordered
 
 

@@ -79,7 +79,7 @@ SCHEMAS: dict[str, StructType] = {
     ),
     "events": _st(
         ("event_id", LongType()),
-        ("ts", TimestampType()),  # timestamp[us] in parquet since 2026-08-13 regen (FIXTURES.md)
+        ("ts", TimestampType()),  # timestamp[us] in parquet; see check_events_ts
         ("user_id", LongType()),
         ("event_type", StringType()),
         ("value", DoubleType()),
@@ -103,39 +103,16 @@ TABLE_NAMES = tuple(SCHEMAS)
 
 EMBEDDING_DIM = 64
 
-#: Legacy read schema for ns-encoded events files. Historically the corpus
-#: stored ``ts`` as parquet TIMESTAMP(NANOS), which Spark 4.x cannot read as
-#: a timestamp at all (PARQUET_TYPE_ILLEGAL); with
-#: spark.sql.legacy.parquet.nanosAsLong=true (set in session.py) the column
-#: arrives as a raw ns-since-epoch long and is converted to a µs
-#: TimestampType with exact integer division (``div``, not ``/`` — ns epochs
-#: exceed double's 2^53 exact-integer range). The corpus was regenerated on
-#: 2026-08-13 with ``ts`` as plain timestamp[us], which Spark reads natively
-#: — so ``load`` now sniffs the actual footer type per file (one driver-side
-#: metadata read, cached per path) and only falls back to this path for
-#: genuinely ns-encoded data. Applying the ns path to µs data silently
-#: shrinks every timestamp 1000× (the round-2 incident), hence the
-#: footer branch plus the statistics range guard below.
-EVENTS_READ_SCHEMA = _st(
-    ("event_id", LongType()),
-    ("ts", LongType()),
-    ("user_id", LongType()),
-    ("event_type", StringType()),
-    ("value", DoubleType()),
-    ("props", StringType()),
-)
-
 #: events.ts must land in this closed interval (FIXTURES.md: corpus spans
 #: 2024-01-01…2024-01-30). A unit drift (ns↔µs mixup = ×1000) blows far
 #: past this window, so the guard turns silent corruption into a loud error.
 _EVENTS_TS_MIN_US = 1_672_531_200_000_000  # 2023-01-01 UTC, generous lower bound
 _EVENTS_TS_MAX_US = 1_735_689_600_000_000  # 2025-01-01 UTC, generous upper bound
 
-#: Cache of the sniffed ts encoding, keyed on (path, newest mtime_ns, total
-#: size) so a corpus regenerated in-place mid-process (the round-2 incident
-#: scenario) invalidates the entry and is re-sniffed instead of being read
-#: with a stale branch.
-_EVENTS_TS_KIND: dict[tuple[str, int, int], str] = {}
+#: Fingerprints of events datasets that passed ``check_events_ts``, keyed on
+#: (path, newest mtime_ns, total size) so a corpus regenerated in place
+#: mid-process is checked again instead of trusted.
+_EVENTS_CHECKED: set[tuple[str, int, int]] = set()
 
 
 def _events_fingerprint(path: str) -> tuple[str, int, int]:
@@ -166,56 +143,45 @@ def _events_fingerprint(path: str) -> tuple[str, int, int]:
     return (path, mtime, size)
 
 
-def _sniff_events_ts_kind(path: str) -> str:
-    """Classify the physical encoding of ``ts`` from the parquet footers.
+def check_events_ts(path: str) -> None:
+    """Refuse an events dataset unless every file stores ``ts`` as
+    timestamp[us] inside the documented corpus range.
 
-    Driver-side metadata-only read (no data pages). EVERY file under the
-    path is sniffed — a multi-file dataset with mixed encodings raises
-    instead of silently reading some files with the wrong branch. Every
-    row group's footer statistics for ``ts`` are validated against the
-    documented corpus range so a regenerated corpus with a different unit
-    fails loudly here instead of producing 1000×-off results downstream.
-    The corpus is small (≤ a few dozen footers); this stays in the
-    low-millisecond range vs a ~10 s session startup.
+    Driver-side, footer-only (no data pages), one footer read per file,
+    cached per fingerprint. Every file is checked, so a dataset that mixes
+    encodings is refused too. Every row group's ``ts`` statistics must lie
+    in [_EVENTS_TS_MIN_US, _EVENTS_TS_MAX_US]. Run it on corpus files only:
+    Spark writes parquet timestamps as INT96, which pyarrow reports as
+    timestamp[ns], and Spark reads those back natively.
     """
     import datetime as _dt
     import glob
     import os
 
+    import pyarrow as pa
     import pyarrow.parquet as pq
 
+    fp = _events_fingerprint(path)
+    if fp in _EVENTS_CHECKED:
+        return
     files = sorted(glob.glob(os.path.join(path, "*.parquet"))) if os.path.isdir(path) else [path]
     if not files:
         raise FileNotFoundError(f"no parquet files under {path}")
 
-    kinds: set[str] = set()
+    epoch = _dt.datetime(1970, 1, 1)
+
+    def _to_us(v: _dt.datetime) -> int:
+        return (v - epoch) // _dt.timedelta(microseconds=1)
+
     for fpath in files:
-        t = pq.read_schema(fpath).field("ts").type
-        ts_str = str(t)
-        if ts_str.startswith("timestamp["):
-            kind = t.unit  # 'us' or 'ns'
-        elif ts_str == "int64":
-            kind = "int64-ns"
-        else:
-            raise TypeError(f"events.ts has unsupported parquet type {ts_str} in {fpath}")
-        kinds.add(kind)
-        if len(kinds) > 1:
-            raise ValueError(
-                f"events dataset at {path} mixes ts encodings {sorted(kinds)} "
-                f"across files — refusing to load (would misread some files)"
-            )
-
-        def _to_us(v: object) -> int:
-            if isinstance(v, _dt.datetime):
-                epoch = _dt.datetime(1970, 1, 1, tzinfo=v.tzinfo or _dt.timezone.utc)
-                return int((v.replace(tzinfo=epoch.tzinfo) - epoch).total_seconds() * 1e6)
-            v = int(v)  # raw int64: ns for int64-ns files
-            return v // 1000 if kind in ("int64-ns", "ns") else v
-
-        # Range guard from footer row-group statistics (still metadata-only),
-        # checked for EVERY row group so drift in a later row group is caught.
-        md = pq.ParquetFile(fpath).metadata
+        md = pq.read_metadata(fpath)
         arrow_schema = md.schema.to_arrow_schema()
+        t = arrow_schema.field("ts").type
+        if t != pa.timestamp("us"):
+            raise ValueError(
+                f"events.ts in {fpath} has parquet type {t}; only "
+                f"timestamp[us] is supported — refusing to load"
+            )
         ts_idx = arrow_schema.get_field_index("ts")
         for rg in range(md.num_row_groups):
             stats = md.row_group(rg).column(ts_idx).statistics
@@ -226,16 +192,10 @@ def _sniff_events_ts_kind(path: str) -> str:
                 raise ValueError(
                     f"events.ts statistics out of documented corpus range "
                     f"(FIXTURES.md 2024-01-01…2024-01-30): min={stats.min} "
-                    f"max={stats.max} kind={kind} file={fpath} row_group={rg} "
+                    f"max={stats.max} file={fpath} row_group={rg} "
                     f"— possible unit drift; refusing to load"
                 )
-    return kinds.pop()
-
-
-def _events_ts_to_timestamp(df: DataFrame) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    return df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
+    _EVENTS_CHECKED.add(fp)
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -244,24 +204,12 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     The declared schema is passed to the reader so every downstream plan
     sees identical types regardless of parquet footer details; column
     pruning and predicate pushdown still apply (schema is a projection
-    contract, not a cast).
-
-    ``events`` is special-cased: the physical encoding of ``ts`` is sniffed
-    from the parquet footer (cached per path) and the reader branches —
-    native TimestampType for timestamp[us] data, the legacy
-    nanosAsLong + div-1000 conversion only for int64/timestamp[ns] data.
+    contract, not a cast). ``events`` is first passed through
+    ``check_events_ts``, which refuses any ``ts`` encoding but timestamp[us].
     """
     path = f"{sf_dir}/{name}.parquet"
     if name == "events":
-        fp = _events_fingerprint(path)
-        kind = _EVENTS_TS_KIND.get(fp)
-        if kind is None:
-            kind = _sniff_events_ts_kind(path)
-            _EVENTS_TS_KIND[fp] = kind
-        if kind == "us":
-            return spark.read.schema(SCHEMAS["events"]).parquet(path)
-        raw = spark.read.schema(EVENTS_READ_SCHEMA).parquet(path)
-        return _events_ts_to_timestamp(raw)
+        check_events_ts(path)
     return spark.read.schema(SCHEMAS[name]).parquet(path)
 
 
@@ -287,7 +235,7 @@ def ensure_views(spark: SparkSession, sf_dir: str) -> None:
     (session, sf_dir) amortizes that to zero on warm paths. The key
     includes the events-corpus fingerprint (path, mtime, size) so an
     in-place corpus regeneration invalidates the memo and re-registers
-    (and re-sniffs) instead of serving stale views. Re-registers when the
+    (and re-checks) instead of serving stale views. Re-registers when the
     same session switches sf_dir (plain view names hold one corpus at a
     time — exactly the driver/mirror/pytest usage).
     """

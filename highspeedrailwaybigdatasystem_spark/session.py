@@ -52,11 +52,6 @@ def build_session(
         .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # Legacy-corpus support: if events.ts is TIMESTAMP(NANOS) parquet
-        # (unreadable by Spark 4.x as timestamp), read it as a raw ns long,
-        # converted in schemas.load. Harmless for the current timestamp[us]
-        # corpus — schemas.load sniffs the footer and reads natively there.
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))

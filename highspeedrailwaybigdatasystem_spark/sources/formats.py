@@ -28,7 +28,7 @@ from pyspark.sql.types import (
 )
 
 from ..registry import register
-from ..schemas import SCHEMAS
+from ..schemas import SCHEMAS, check_events_ts
 from ._scratch import scratch_dir
 from ..operators._util import money, t
 
@@ -208,16 +208,13 @@ def stream_file_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     End-of-stream state equals the batch aggregate, so the oracle is exact.
     The file source needs a directory, so the parquet is staged into
     scratch first."""
-    from ..schemas import EVENTS_READ_SCHEMA, SCHEMAS, _sniff_events_ts_kind
-
-    kind = _sniff_events_ts_kind(f"{sf_dir}/events.parquet")
-    schema = SCHEMAS["events"] if kind == "us" else EVENTS_READ_SCHEMA
+    check_events_ts(f"{sf_dir}/events.parquet")
     src_dir = scratch_dir("stream_file_source_events")
     shutil.rmtree(src_dir, ignore_errors=True)
     os.makedirs(src_dir)
     shutil.copy(f"{sf_dir}/events.parquet", os.path.join(src_dir, "events_0.parquet"))
     stream = (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(SCHEMAS["events"])
         .parquet(src_dir)
         .groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("cnt"))

@@ -28,12 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
-from ..schemas import (
-    EVENTS_READ_SCHEMA,
-    SCHEMAS,
-    _events_ts_to_timestamp,
-    _sniff_events_ts_kind,
-)
+from ..schemas import SCHEMAS, check_events_ts
 from ..sources._scratch import scratch_dir
 from ..operators._util import EVENTS_TS_US, money
 
@@ -42,22 +37,19 @@ def _stream_events(spark: SparkSession, sf_dir: str, copies: int = 1, tag: str =
     """File-source stream over the events table. copies>1 stages duplicate
     files so the run spans multiple micro-batches (maxFilesPerTrigger=1).
 
-    readStream requires an explicit schema, so the same footer sniff as the
-    batch loader (schemas.load) picks between native timestamp[us] reads and
-    the legacy ns-long + div-1000 conversion — see schemas._sniff_events_ts_kind."""
+    readStream requires an explicit schema: the corpus file passes
+    schemas.check_events_ts and is read natively with SCHEMAS["events"]."""
     src = f"{sf_dir}/events.parquet"
-    kind = _sniff_events_ts_kind(src)
+    check_events_ts(src)
     d = scratch_dir(f"stream_src_{tag}_{os.path.basename(sf_dir)}_{copies}")
     shutil.rmtree(d, ignore_errors=True)
     os.makedirs(d)
     for i in range(copies):
         shutil.copy(src, os.path.join(d, f"events_{i}.parquet"))
-    schema = SCHEMAS["events"] if kind == "us" else EVENTS_READ_SCHEMA
-    reader = spark.readStream.schema(schema)
+    reader = spark.readStream.schema(SCHEMAS["events"])
     if copies > 1:
         reader = reader.option("maxFilesPerTrigger", 1)
-    out = reader.parquet(d)
-    return out if kind == "us" else _events_ts_to_timestamp(out)
+    return reader.parquet(d)
 
 
 def _run_to_memory(df, name: str, mode: str) -> None:

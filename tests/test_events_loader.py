@@ -1,27 +1,22 @@
-"""Events loader unit coverage: the footer sniff must classify µs- and
-ns-encoded events files correctly and both branches must yield IDENTICAL
-µs timestamps — the regression the round-2 corpus regeneration exposed
-(ns conversion applied to µs data → every timestamp 1000× too small).
-
-The live corpus is timestamp[us] only, so the legacy int64-ns path has no
-on-disk fixture anymore; this test synthesizes one with pyarrow so the
-branch stays exercised.
+"""Events loader unit coverage: timestamp[us] events load losslessly, and
+any other ``ts`` encoding is refused at ``load`` with an error naming
+``events.ts``, the file and the type found — never converted. A unit
+mixup shifts every timestamp 1000× (the round-2 regression), so the only
+safe answer to an unexpected encoding is a loud refusal.
 """
 
 from __future__ import annotations
 
 import datetime as dt
 import os
+import re
 import shutil
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from highspeedrailwaybigdatasystem_spark.schemas import (
-    _sniff_events_ts_kind,
-    load,
-)
+from highspeedrailwaybigdatasystem_spark.schemas import load
 from highspeedrailwaybigdatasystem_spark.sources._scratch import scratch_dir
 
 _TS = [
@@ -31,67 +26,55 @@ _TS = [
 ]
 
 
-def _write_events(sf_dir: str, unit: str) -> None:
-    os.makedirs(sf_dir, exist_ok=True)
-    n = len(_TS)
+def _write_events(sf_dir: str, ts: pa.Array) -> str:
+    shutil.rmtree(sf_dir, ignore_errors=True)
+    os.makedirs(sf_dir)
+    n = len(ts)
     cols = {
         "event_id": pa.array(range(n), pa.int64()),
-        "ts": pa.array(_TS, pa.timestamp(unit)),
+        "ts": ts,
         "user_id": pa.array([7] * n, pa.int64()),
         "event_type": pa.array(["click"] * n, pa.string()),
         "value": pa.array([1.5] * n, pa.float64()),
         "props": pa.array(['{"k": 1}'] * n, pa.string()),
     }
-    pq.write_table(pa.table(cols), f"{sf_dir}/events.parquet")
+    path = f"{sf_dir}/events.parquet"
+    pq.write_table(pa.table(cols), path)
+    return path
 
 
-@pytest.fixture(scope="module")
-def two_unit_dirs():
-    base = scratch_dir("events_loader_units")
-    shutil.rmtree(base, ignore_errors=True)
-    us_dir, ns_dir = f"{base}/us_sf", f"{base}/ns_sf"
-    _write_events(us_dir, "us")
-    _write_events(ns_dir, "ns")
-    yield us_dir, ns_dir
-    shutil.rmtree(base, ignore_errors=True)
+def test_us_events_load_losslessly(spark):
+    sf_dir = scratch_dir("events_loader_us")
+    _write_events(sf_dir, pa.array(_TS, pa.timestamp("us")))
+    got = sorted(r["ts"] for r in load(spark, sf_dir, "events").collect())
+    shutil.rmtree(sf_dir, ignore_errors=True)
+    assert got == sorted(_TS), "native µs read must be lossless"
 
 
-def test_sniffer_classifies_both_units(two_unit_dirs):
-    us_dir, ns_dir = two_unit_dirs
-    assert _sniff_events_ts_kind(f"{us_dir}/events.parquet") == "us"
-    assert _sniff_events_ts_kind(f"{ns_dir}/events.parquet") == "ns"
-
-
-def test_both_branches_yield_identical_timestamps(spark, two_unit_dirs):
-    us_dir, ns_dir = two_unit_dirs
-    got_us = sorted(r["ts"] for r in load(spark, us_dir, "events").collect())
-    got_ns = sorted(r["ts"] for r in load(spark, ns_dir, "events").collect())
-    assert got_us == sorted(_TS), "native µs read must be lossless"
-    assert got_ns == sorted(_TS), (
-        "legacy ns branch must div-1000 back to the same µs instants"
-    )
+@pytest.mark.parametrize(
+    "ts",
+    [
+        pa.array(_TS, pa.timestamp("ns")),
+        pa.array(_TS, pa.timestamp("ns")).cast(pa.int64()),
+    ],
+    ids=["ns", "int64"],
+)
+def test_non_us_ts_refuses_to_load(spark, ts):
+    sf_dir = scratch_dir("events_loader_bad_ts")
+    path = _write_events(sf_dir, ts)
+    want = re.escape(f"events.ts in {path} has parquet type {ts.type};")
+    with pytest.raises(ValueError, match=want):
+        load(spark, sf_dir, "events")
+    shutil.rmtree(sf_dir, ignore_errors=True)
 
 
 def test_out_of_range_corpus_refuses_to_load(spark):
     """A corpus whose ts statistics fall outside the documented window
     (here: 1970 epoch-adjacent — exactly what a unit mixup produces) must
-    be rejected at sniff time, not silently mis-read."""
+    be rejected at check time, not silently mis-read."""
     bad_dir = scratch_dir("events_loader_bad")
-    shutil.rmtree(bad_dir, ignore_errors=True)
-    os.makedirs(bad_dir)
-    n = 2
-    cols = {
-        "event_id": pa.array(range(n), pa.int64()),
-        "ts": pa.array(
-            [dt.datetime(1970, 1, 20, 17, 23), dt.datetime(1970, 1, 21)],
-            pa.timestamp("us"),
-        ),
-        "user_id": pa.array([1] * n, pa.int64()),
-        "event_type": pa.array(["click"] * n, pa.string()),
-        "value": pa.array([0.5] * n, pa.float64()),
-        "props": pa.array(["{}"] * n, pa.string()),
-    }
-    pq.write_table(pa.table(cols), f"{bad_dir}/events.parquet")
+    ts = [dt.datetime(1970, 1, 20, 17, 23), dt.datetime(1970, 1, 21)]
+    _write_events(bad_dir, pa.array(ts, pa.timestamp("us")))
     with pytest.raises(ValueError, match="out of documented corpus range"):
         load(spark, bad_dir, "events")
     shutil.rmtree(bad_dir, ignore_errors=True)

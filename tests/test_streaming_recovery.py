@@ -13,24 +13,17 @@ import shutil
 
 from pyspark.sql import functions as F
 
-from highspeedrailwaybigdatasystem_spark.schemas import (
-    EVENTS_READ_SCHEMA,
-    SCHEMAS,
-    _events_ts_to_timestamp,
-    _sniff_events_ts_kind,
-)
+from highspeedrailwaybigdatasystem_spark.schemas import SCHEMAS, check_events_ts
 from highspeedrailwaybigdatasystem_spark.sources._scratch import scratch_dir
 from tests.conftest import SF_ORACLE
 
 
-def _read_events_stream(spark, src):
-    """Footer-aware events stream reader (mirrors streams._stream_events)."""
-    kind = _sniff_events_ts_kind(src)
-    if kind == "us":
-        return spark.readStream.schema(SCHEMAS["events"]).parquet(src)
-    return _events_ts_to_timestamp(
-        spark.readStream.schema(EVENTS_READ_SCHEMA).parquet(src)
-    )
+def _read_events_stream(spark, src, **options):
+    """Events stream over ``src``, a directory of copies or slices of the
+    corpus events file (mirrors streams._stream_events). The check runs on
+    the corpus file, never on Spark-written slices (INT96 timestamps)."""
+    check_events_ts(f"{SF_ORACLE}/events.parquet")
+    return spark.readStream.schema(SCHEMAS["events"]).options(**options).parquet(src)
 
 
 def _run_counting_query(spark, src, ckpt, sink_table):
@@ -238,14 +231,6 @@ def _stage_event_slices(spark, tag, order):
     return src
 
 
-def _events_stream_over(spark, src):
-    kind = _sniff_events_ts_kind(f"{SF_ORACLE}/events.parquet")
-    schema = SCHEMAS["events"] if kind == "us" else EVENTS_READ_SCHEMA
-    reader = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-    out = reader.parquet(src)
-    return out if kind == "us" else _events_ts_to_timestamp(out)
-
-
 def test_topk_candidate_merge_is_arrival_order_independent(spark):
     """stream_topk_per_window's candidate-merge pattern over N=4 disjoint
     micro-batches: the merged exact top-3 equals the single-pass batch
@@ -257,7 +242,7 @@ def test_topk_candidate_merge_is_arrival_order_independent(spark):
 
     def run(order, tag):
         src = _stage_event_slices(spark, tag, order)
-        stream = _events_stream_over(spark, src).select(
+        stream = _read_events_stream(spark, src, maxFilesPerTrigger=1).select(
             F.date_trunc("hour", "ts").alias("win_start"),
             "event_type",
             F.round("value", 2).alias("value"),
@@ -331,7 +316,7 @@ def test_cdc_last_writer_state_is_arrival_order_independent(spark):
 
     def run(order, tag):
         src = _stage_event_slices(spark, tag, order)
-        stream = _events_stream_over(spark, src)
+        stream = _read_events_stream(spark, src, maxFilesPerTrigger=1)
         state, applied = {}, {}
 
         def merge(batch_df, batch_id):

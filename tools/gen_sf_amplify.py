@@ -5,7 +5,7 @@ the base table), so referential joins stay consistent and key cardinality
 scales with the data (no artificial hot keys). Non-key payload columns are
 repeated verbatim — document texts therefore gain exact duplicates, which is
 the realistic shape for dedup operators at scale. pyarrow is used end-to-end
-so physical types (notably the ns-precision events.ts) survive unchanged.
+so physical types (notably the timestamp[us] events.ts) survive unchanged.
 
 Usage:
     python tools/gen_sf_amplify.py [--base /root/testdata/sf0.1] \
