@@ -41,7 +41,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 def oracle_sql() -> dict[str, str]:
     """DuckDB-runnable ANSI SQL equivalent for each query (pre-registered
     views: region nation customer supplier part orders lineitem events
-    documents embeddings). Rows-only operators (approximate / LSH /
-    arrival-order-dependent) are intentionally absent.
+    documents embeddings). Every key of ``queries()`` has one:
+    ``registry.register`` requires an oracle.
     """
     return all_oracles()

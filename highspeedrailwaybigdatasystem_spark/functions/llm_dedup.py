@@ -269,12 +269,13 @@ def llm_minhash_banding(spark: SparkSession, sf_dir: str) -> DataFrame:
     this pipeline spent ~0.85 s PER CALL in driver-side DataFrame
     construction alone (hundreds of JVM round-trips for 20×6 arithmetic
     Columns), which dominated the sf0.1 wall-clock. The physical plan is
-    identical. The WHOLE constructed plan is additionally memoized via the
-    shared ``@plan_memo`` (registry.py): re-parsing two SQL texts, three
-    cache probes and a fresh Catalyst planning pass cost ~0.5 s of pure
-    driver time per warm call; the memoized plan leaves ~46 ms of real
-    execution. Composers (lsh_tuning_curve, dup_partner_degree_dist, ...)
-    call this function directly and inherit the memo."""
+    identical. The registered op is wrapped in the shared ``@plan_memo``
+    (registry.py): a repeat caller gets the same DataFrame back and runs no
+    job to get it. Composers (llm_lsh_tuning_curve,
+    llm_dup_partner_degree_dist) call the unmemoized body
+    (``llm_minhash_banding.__wrapped__``), which stages the shingle and
+    candidate caches itself; _materialize_cache skips the count when an
+    identical cache is already loaded."""
     from ..schemas import ensure_views
 
     ensure_views(spark, sf_dir)
@@ -385,7 +386,7 @@ def llm_minhash_banding(spark: SparkSession, sf_dir: str) -> DataFrame:
     # converts these joins to broadcast when the built side is genuinely
     # small (sf0.1: 254 candidate pairs) and falls back to shuffle joins
     # at the 100x corpus, where a forced broadcast OOMed at 3.5 GiB.
-    out = spark.sql(
+    return spark.sql(
         """
         SELECT doc_a, doc_b,
                round(cast(shared AS double) / (na + nb - shared), 6)
@@ -400,11 +401,6 @@ def llm_minhash_banding(spark: SparkSession, sf_dir: str) -> DataFrame:
         WHERE cast(shared AS double) / (na + nb - shared) >= 0.2
         """
     )
-    # declare the internal caches for plan_memo's hit-path re-materialization
-    # (registry.py): a composer consuming the memoized frame after a
-    # clearCache must not plan against empty InMemoryRelations
-    out._graft_cached_deps = (shingle, cand)
-    return out
 
 
 @register(
@@ -2013,7 +2009,7 @@ def _register_lsh_tuning() -> None:
         bounded and the grid is 6 literal rows, so everything after the
         banding pipeline is broadcast arithmetic. Oracle composes the
         banding oracle verbatim as a CTE — lockstep by construction."""
-        pairs = llm_minhash_banding(spark, sf_dir)
+        pairs = llm_minhash_banding.__wrapped__(spark, sf_dir)
         pairs.createOrReplaceTempView("__lsh_pairs")
         return spark.sql(_lsh_tuning_sql("SELECT * FROM __lsh_pairs"))
 
@@ -2700,7 +2696,7 @@ def _register_dup_partner_degree() -> None:
         pair population (and this histogram) tracks DISTINCT content —
         the formerly output-bound verbatim-duplicate blowup (12.8x
         measured at 10x amplification in round 10) is gone."""
-        pairs = llm_minhash_banding(spark, sf_dir)
+        pairs = llm_minhash_banding.__wrapped__(spark, sf_dir)
         pairs.createOrReplaceTempView("__dupdeg_pairs")
         return spark.sql(
             _degree_dist_sql("SELECT * FROM __dupdeg_pairs")

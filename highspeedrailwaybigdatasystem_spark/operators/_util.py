@@ -125,20 +125,18 @@ def _materialize_cache(spark: SparkSession, *dfs: DataFrame) -> None:
     planner-statistics note — unmaterialized cached explodes carry
     pre-explode size estimates, under which Catalyst force-broadcasts the
     whole view: a 3.5 GiB OOM at the 100x corpus). Gating on the actual
-    CacheManager state (not a process-global seen-set, round 11) keeps the
-    guard correct across spark.catalog.clearCache()/unpersist(): a cleared
-    entry re-registers unmaterialized and gets re-counted here. Falls back
-    to an unconditional count() if the JVM probe is unavailable."""
+    CacheManager state (not a process-global seen-set, round 11) skips the
+    count when a live identical cache is already loaded. Every caller
+    ``.cache()``s its frames in the same op body. Falls back to an
+    unconditional count() if the JVM probe is unavailable."""
     for df in dfs:
-        registered = True
         try:
             opt = (
                 spark._jsparkSession.sharedState()
                 .cacheManager()
                 .lookupCachedData(df._jdf)
             )
-            registered = opt.isDefined()
-            loaded = registered and (
+            loaded = opt.isDefined() and (
                 opt.get()
                 .cachedRepresentation()
                 .cacheBuilder()
@@ -146,15 +144,6 @@ def _materialize_cache(spark: SparkSession, *dfs: DataFrame) -> None:
             )
         except Exception:
             loaded = False
-        if not registered:
-            # r17: spark.catalog.clearCache()/unpersist() removes the
-            # CacheManager ENTRY, not just the buffers — a bare count()
-            # would then be a full uncached recompute and downstream
-            # queries would still inline the whole subtree per reference.
-            # Re-register first so the count below rebuilds a real cache
-            # (plan_memo's hit path relies on this after the cache-honest
-            # harnesses clear between timed runs).
-            df.cache()
         if not loaded:
             df.count()
 

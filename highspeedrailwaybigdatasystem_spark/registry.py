@@ -84,18 +84,19 @@ def plan_memo(fn: QueryFn) -> QueryFn:
     session, sf_dir, corpus fingerprint) — opt-in, for side-effect-free
     batch queries only (no sinks, no streaming runs, no scratch writes).
 
-    Why it exists: a repeat caller (a dashboard tick, a dedup service, a
-    steady pass of ``perfbench/run.py``) gets back the SAME DataFrame, so a
-    repeat collect skips re-planning and AQE serves the frame's
-    already-materialized shuffle stages from shuffle files instead of
-    re-running them — that reuse is what perfbench's steady passes
-    measure. Composers reach the ``llm_minhash_banding`` stages through it
-    too, so one construction of the banding frame (and its caches) serves
-    every op built on top of it. It is NOT a planning-cost optimization:
-    Catalyst parse/analyze/optimize/plan takes 10–80 ms, 1–8% of a fresh
-    headline query (sf0.1, 4-core host); the rest is execution. Because repeat
-    collects reuse stages, bench.py unwraps the memo (``__wrapped__``) so
-    every timed run constructs and executes a fresh DataFrame.
+    Contract: every call with the same key returns the SAME DataFrame, and
+    a hit runs no Spark job — not even after ``spark.catalog.clearCache()``.
+    A repeat caller (a dashboard tick, a dedup service, a steady pass of
+    ``perfbench/run.py``) therefore skips re-planning, and AQE serves the
+    frame's already-materialized shuffle stages from shuffle files instead
+    of re-running them. Composers that build on a memoized op call its
+    unmemoized body (``__wrapped__``), which stages its own caches before
+    the composer plans against them. The memo is NOT a planning-cost
+    optimization: Catalyst parse/analyze/optimize/plan takes 10–80 ms,
+    1–8% of a fresh headline query (sf0.1, 4-core host); the rest is
+    execution. Because repeat collects reuse stages, bench.py unwraps the
+    memo (``__wrapped__``) so every timed run constructs and executes a
+    fresh DataFrame.
 
     Fresh results are still guaranteed where it matters: the fingerprint
     (mtime+size over the sf_dir's parquet files) invalidates on in-place
@@ -126,25 +127,6 @@ def plan_memo(fn: QueryFn) -> QueryFn:
             if len(_PLAN_MEMO) > 64:
                 _PLAN_MEMO.clear()
             hit = _PLAN_MEMO[key] = fn(spark, sf_dir)
-        else:
-            # r17: a memo hit skips the op body, so the body's
-            # materialize-before-plan cache discipline is skipped too. If
-            # spark.catalog.clearCache()/unpersist ran since the miss (the
-            # r17 cache-honest bench does exactly that between timed runs),
-            # a COMPOSER consuming this memoized frame would otherwise plan
-            # and execute against empty InMemoryRelations with their
-            # pre-materialization size estimates — the round-10 planner
-            # trap (measured: llm_dup_partner_degree_dist 1.9 s → 5.8 s
-            # when the banding caches were cleared behind the memo). Ops
-            # that cache declare their cached frames on the returned
-            # DataFrame; a hit re-materializes any that were dropped
-            # (no-op when the buffers are still loaded — the probe in
-            # _materialize_cache gates on live CacheManager state).
-            deps = getattr(hit, "_graft_cached_deps", ())
-            if deps:
-                from .operators._util import _materialize_cache
-
-                _materialize_cache(spark, *deps)
         return hit
 
     # Structural marker (r13 ADVICE): tests detect memoization by THIS

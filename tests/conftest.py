@@ -5,14 +5,35 @@ from __future__ import annotations
 
 import os
 import sys
+import tempfile
 
 import duckdb
+import pandas as pd
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_ORACLE = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.01")
+
+
+def synthetic_sf(**overrides: pd.DataFrame) -> str:
+    """A fresh sf_dir: each override (``documents=``, ``events=``, ...)
+    written as parquet, every other corpus table symlinked from sf0.001 so
+    register_views sees all ten. A new directory per call (per hypothesis
+    example) — ensure_views keys the memo on (sf_dir, events fingerprint),
+    so reusing a path would serve stale views when only documents
+    changed."""
+    from highspeedrailwaybigdatasystem_spark.schemas import TABLE_NAMES
+
+    d = tempfile.mkdtemp(prefix="prop_sf_")
+    for name in TABLE_NAMES:
+        dst = os.path.join(d, f"{name}.parquet")
+        if name in overrides:
+            overrides[name].to_parquet(dst, index=False)
+        else:
+            os.symlink(f"{SF_SMOKE}/{name}.parquet", dst)
+    return d
 
 
 @pytest.fixture(scope="session")

@@ -2,17 +2,21 @@
 
 Pure ops memoize their constructed DataFrame per (op, session, sf_dir,
 corpus fingerprint) so a repeat caller gets the same DataFrame (AQE then
-reuses its materialized shuffle stages) and composers share the
-llm_minhash_banding stages. Catalyst planning is only 1-8% of a fresh
-headline query at sf0.1, so the memo is about that reuse, not planning
-cost. These tests pin the contract that makes it safe."""
+reuses its materialized shuffle stages). A hit only looks the frame up: it
+runs no Spark job, and composers build on the unmemoized body instead of
+reading memo state. Catalyst planning is only 1-8% of a fresh headline
+query at sf0.1, so the memo is about stage reuse, not planning cost. These
+tests pin the contract that makes it safe."""
 
 from __future__ import annotations
 
 import shutil
+import uuid
+
+import pytest
 
 from highspeedrailwaybigdatasystem_spark import registry
-from highspeedrailwaybigdatasystem_spark.registry import all_queries, plan_memo
+from highspeedrailwaybigdatasystem_spark.registry import all_queries
 from highspeedrailwaybigdatasystem_spark.sources._scratch import scratch_dir
 from tests.conftest import SF_ORACLE
 
@@ -112,3 +116,37 @@ def test_memo_keyed_on_jvm_session_uuid(spark):
     finally:
         # no stop(): the clone shares the SparkContext with the suite
         pass
+
+
+def test_memo_hit_after_clear_cache_runs_no_job(spark):
+    """A hit hands back the stored DataFrame and nothing else: even after
+    clearCache() dropped the op's staged caches, looking it up launches no
+    Spark job (rebuilding caches is the op body's job, not the memo's)."""
+    fn = all_queries()["llm_minhash_banding"]
+    fn(spark, SF_ORACLE)
+    spark.catalog.clearCache()
+    sc = spark.sparkContext
+    group = f"plan_memo_hit_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "plan_memo hit")
+    try:
+        fn(spark, SF_ORACLE)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+@pytest.mark.parametrize(
+    "op, min_cache_scans",
+    [("llm_dup_partner_degree_dist", 10), ("llm_lsh_tuning_curve", 5)],
+)
+def test_composer_builds_banding_outside_memo(spark, op, min_cache_scans):
+    """Composers over llm_minhash_banding call its unmemoized body, so they
+    leave no banding memo entry, and the body stages its own caches before
+    the composer plans: the executed plan still reads them."""
+    registry._PLAN_MEMO.clear()
+    spark.catalog.clearCache()
+    df = all_queries()[op](spark, SF_ORACLE)
+    assert not [k for k in registry._PLAN_MEMO if k[0] == "llm_minhash_banding"]
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("InMemoryTableScan") >= min_cache_scans, plan

@@ -17,16 +17,6 @@ from highspeedrailwaybigdatasystem_spark.registry import all_queries
 
 SF_SMOKE = "/root/testdata/sf0.001"
 
-_Q = None
-
-
-def Q():
-    global _Q
-    if _Q is None:
-        _Q = all_queries()
-    return _Q
-
-
 def _events() -> pd.DataFrame:
     return pd.read_parquet(f"{SF_SMOKE}/events.parquet")
 
@@ -38,7 +28,7 @@ def _lineitem() -> pd.DataFrame:
 # --- quantile-family ops ------------------------------------------------------
 
 def test_approx_percentile_exact_regime_is_discrete_and_ordered(spark):
-    out = Q()["agg_approx_percentile_exact_regime"](spark, SF_SMOKE).toPandas()
+    out = all_queries()["agg_approx_percentile_exact_regime"](spark, SF_SMOKE).toPandas()
     ev = _events()
     for _, r in out.iterrows():
         v = ev.loc[ev["event_type"] == r["event_type"], "value"]
@@ -53,7 +43,7 @@ def test_approx_percentile_exact_regime_is_discrete_and_ordered(spark):
 
 
 def test_percentile_disc_returns_member_values_and_true_mode(spark):
-    out = Q()["agg_percentile_disc"](spark, SF_SMOKE).toPandas()
+    out = all_queries()["agg_percentile_disc"](spark, SF_SMOKE).toPandas()
     orders = pd.read_parquet(f"{SF_SMOKE}/orders.parquet")
     cust = pd.read_parquet(f"{SF_SMOKE}/customer.parquet")
     j = orders.merge(cust, left_on="o_custkey", right_on="c_custkey")
@@ -67,7 +57,7 @@ def test_percentile_disc_returns_member_values_and_true_mode(spark):
 
 
 def test_iqr_fences_match_pandas(spark):
-    out = Q()["agg_iqr_outlier_fences"](spark, SF_SMOKE).toPandas()
+    out = all_queries()["agg_iqr_outlier_fences"](spark, SF_SMOKE).toPandas()
     li = _lineitem()
     for _, r in out.iterrows():
         v = li.loc[li["l_returnflag"] == r["l_returnflag"], "l_extendedprice"]
@@ -79,7 +69,7 @@ def test_iqr_fences_match_pandas(spark):
 
 
 def test_winsorized_trimmed_means_match_pandas(spark):
-    out = Q()["agg_winsorized_trimmed_mean"](spark, SF_SMOKE).toPandas()
+    out = all_queries()["agg_winsorized_trimmed_mean"](spark, SF_SMOKE).toPandas()
     li = _lineitem()
     for _, r in out.iterrows():
         v = li.loc[li["l_returnflag"] == r["l_returnflag"], "l_extendedprice"]
@@ -90,7 +80,7 @@ def test_winsorized_trimmed_means_match_pandas(spark):
 
 
 def test_bowley_skew_identity_and_bounds(spark):
-    out = Q()["agg_bowley_quartile_skew"](spark, SF_SMOKE).toPandas()
+    out = all_queries()["agg_bowley_quartile_skew"](spark, SF_SMOKE).toPandas()
     for _, r in out.iterrows():
         assert r["q1"] <= r["q2"] <= r["q3"]
         bow = (r["q3"] + r["q1"] - 2 * r["q2"]) / (r["q3"] - r["q1"])
@@ -103,7 +93,7 @@ def test_bowley_skew_identity_and_bounds(spark):
 # --- moment / correlation / test statistics -----------------------------------
 
 def test_skew_kurtosis_matches_centered_moments(spark):
-    out = Q()["agg_skew_kurtosis"](spark, SF_SMOKE).toPandas()
+    out = all_queries()["agg_skew_kurtosis"](spark, SF_SMOKE).toPandas()
     ev = _events()
     for _, r in out.iterrows():
         v = ev.loc[ev["event_type"] == r["event_type"], "value"].to_numpy()
@@ -118,7 +108,7 @@ def test_skew_kurtosis_matches_centered_moments(spark):
 
 
 def test_spearman_rho_matches_pandas(spark):
-    out = Q()["agg_spearman_rho"](spark, SF_SMOKE).toPandas()
+    out = all_queries()["agg_spearman_rho"](spark, SF_SMOKE).toPandas()
     ev = _events()
     for _, r in out.iterrows():
         g = ev[ev["event_type"] == r["event_type"]]
@@ -131,7 +121,7 @@ def test_spearman_rho_matches_pandas(spark):
 
 
 def test_welch_t_matches_pandas(spark):
-    r = Q()["agg_welch_t_test"](spark, SF_SMOKE).toPandas().iloc[0]
+    r = all_queries()["agg_welch_t_test"](spark, SF_SMOKE).toPandas().iloc[0]
     ev = _events()
     a = ev.loc[ev["user_id"] % 2 == 0, "value"]
     b = ev.loc[ev["user_id"] % 2 == 1, "value"]
@@ -148,7 +138,7 @@ def test_welch_t_matches_pandas(spark):
 
 
 def test_cohens_d_matches_pandas(spark):
-    r = Q()["agg_cohens_d_effect_size"](spark, SF_SMOKE).toPandas().iloc[0]
+    r = all_queries()["agg_cohens_d_effect_size"](spark, SF_SMOKE).toPandas().iloc[0]
     ev = _events()
     a = ev.loc[ev["user_id"] % 2 == 0, "value"]
     b = ev.loc[ev["user_id"] % 2 == 1, "value"]
@@ -164,7 +154,7 @@ def test_cohens_d_matches_pandas(spark):
 
 
 def test_paired_t_matches_pandas(spark):
-    r = Q()["agg_paired_t_test"](spark, SF_SMOKE).toPandas().iloc[0]
+    r = all_queries()["agg_paired_t_test"](spark, SF_SMOKE).toPandas().iloc[0]
     ev = _events()
     piv = ev.pivot_table(
         index="user_id", columns="event_type", values="value", aggfunc="mean"
@@ -180,7 +170,7 @@ def test_paired_t_matches_pandas(spark):
 # --- distribution diagnostics --------------------------------------------------
 
 def test_entropy_impurity_matches_pandas(spark):
-    out = Q()["agg_entropy_impurity"](spark, SF_SMOKE).toPandas()
+    out = all_queries()["agg_entropy_impurity"](spark, SF_SMOKE).toPandas()
     docs = pd.read_parquet(f"{SF_SMOKE}/documents.parquet")
     for _, r in out.iterrows():
         p = (
@@ -196,7 +186,7 @@ def test_entropy_impurity_matches_pandas(spark):
 
 
 def test_geo_harmonic_mean_inequality_and_values(spark):
-    out = Q()["agg_geo_harmonic_mean"](spark, SF_SMOKE).toPandas()
+    out = all_queries()["agg_geo_harmonic_mean"](spark, SF_SMOKE).toPandas()
     li = _lineitem()
     for _, r in out.iterrows():
         v = li.loc[
@@ -212,7 +202,7 @@ def test_geo_harmonic_mean_inequality_and_values(spark):
 
 
 def test_histogram_2d_matches_pandas(spark):
-    out = Q()["agg_histogram_2d"](spark, SF_SMOKE).toPandas()
+    out = all_queries()["agg_histogram_2d"](spark, SF_SMOKE).toPandas()
     ev = _events()
     vb = np.minimum(np.floor(ev["value"] / 50), 9).astype(int)
     hb = ev["ts"].dt.hour
@@ -225,7 +215,7 @@ def test_histogram_2d_matches_pandas(spark):
 
 
 def test_mad_robust_z_agg_matches_pandas(spark):
-    out = Q()["agg_mad_robust_z"](spark, SF_SMOKE).toPandas()
+    out = all_queries()["agg_mad_robust_z"](spark, SF_SMOKE).toPandas()
     ev = _events()
     for _, r in out.iterrows():
         v = ev.loc[ev["event_type"] == r["event_type"], "value"]
@@ -243,7 +233,7 @@ def test_mad_robust_z_agg_matches_pandas(spark):
 # --- sampling / sketch audits ---------------------------------------------------
 
 def test_hash_sample_audit_matches_pandas_md5(spark):
-    out = Q()["agg_hash_sample_error_audit"](spark, SF_SMOKE).toPandas()
+    out = all_queries()["agg_hash_sample_error_audit"](spark, SF_SMOKE).toPandas()
     ev = _events()
     in_sample = ev["event_id"].map(
         lambda i: hashlib.md5(str(i).encode()).hexdigest()[:2] < "1a"
@@ -261,7 +251,7 @@ def test_hash_sample_audit_matches_pandas_md5(spark):
 def test_bloom_fpr_audit_internally_consistent(spark):
     # sf0.001 has zero probe customers (everyone has orders) -> degenerate
     # NaN rate; use the gate-tier corpus where the probe set is non-empty
-    r = Q()["agg_bloom_fpr_audit"](spark, "/root/testdata/sf0.01").toPandas().iloc[0]
+    r = all_queries()["agg_bloom_fpr_audit"](spark, "/root/testdata/sf0.01").toPandas().iloc[0]
     k, m = 3, 16384
     expected = (1 - math.exp(-k * int(r["n_members"]) / m)) ** k
     assert abs(r["fpr_expected"] - expected) < 1e-5
@@ -275,7 +265,7 @@ def test_bloom_fpr_audit_internally_consistent(spark):
 # --- api / scalar battery --------------------------------------------------------
 
 def test_observe_metrics_result_matches_pandas(spark):
-    out = Q()["api_observe_metrics"](spark, SF_SMOKE).toPandas()
+    out = all_queries()["api_observe_metrics"](spark, SF_SMOKE).toPandas()
     orders = pd.read_parquet(f"{SF_SMOKE}/orders.parquet")
     truth = orders.groupby("o_orderstatus")["o_totalprice"].agg(["size", "sum"])
     for _, r in out.iterrows():
@@ -285,7 +275,7 @@ def test_observe_metrics_result_matches_pandas(spark):
 
 
 def test_posexplode_outer_row_algebra(spark):
-    r = Q()["arr_posexplode_outer"](spark, SF_SMOKE).toPandas().iloc[0]
+    r = all_queries()["arr_posexplode_outer"](spark, SF_SMOKE).toPandas().iloc[0]
     docs = pd.read_parquet(f"{SF_SMOKE}/documents.parquet")
     null_docs = int((docs["doc_id"] % 10 == 0).sum())
     arr_docs = docs[docs["doc_id"] % 10 != 0]
@@ -298,7 +288,7 @@ def test_posexplode_outer_row_algebra(spark):
 
 
 def test_dt_constructors_roundtrip_and_clamp(spark):
-    r = Q()["dt_constructors"](spark, SF_SMOKE).toPandas().iloc[0]
+    r = all_queries()["dt_constructors"](spark, SF_SMOKE).toPandas().iloc[0]
     orders = pd.read_parquet(f"{SF_SMOKE}/orders.parquet")
     od = pd.to_datetime(orders["o_orderdate"]).dt.normalize()
     assert int(r["n_roundtrip"]) == int(r["n_rows"]) == len(od)

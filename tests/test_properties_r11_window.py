@@ -17,16 +17,6 @@ from highspeedrailwaybigdatasystem_spark.registry import all_queries
 
 SF_SMOKE = "/root/testdata/sf0.001"
 
-_Q = None
-
-
-def Q():
-    global _Q
-    if _Q is None:
-        _Q = all_queries()
-    return _Q
-
-
 def _events() -> pd.DataFrame:
     return pd.read_parquet(f"{SF_SMOKE}/events.parquet")
 
@@ -38,7 +28,7 @@ def _docs() -> pd.DataFrame:
 # --- text analysis -------------------------------------------------------------
 
 def test_text_stats_matches_pandas(spark):
-    out = Q()["llm_text_stats"](spark, SF_SMOKE).toPandas()
+    out = all_queries()["llm_text_stats"](spark, SF_SMOKE).toPandas()
     docs = _docs()
     toks = docs.assign(tok=docs["text"].str.split(" ")).explode("tok")
     for _, r in out.iterrows():
@@ -52,7 +42,7 @@ def test_text_stats_matches_pandas(spark):
 
 
 def test_tfidf_keywords_scores_verify(spark):
-    out = Q()["llm_tfidf_keywords"](spark, SF_SMOKE).toPandas()
+    out = all_queries()["llm_tfidf_keywords"](spark, SF_SMOKE).toPandas()
     docs = _docs()
     toks = docs.assign(tok=docs["text"].str.split(" ")).explode("tok")
     n_docs = len(docs)
@@ -65,7 +55,7 @@ def test_tfidf_keywords_scores_verify(spark):
 
 
 def test_quality_filter_matches_pandas(spark):
-    out = Q()["llm_quality_filter"](spark, SF_SMOKE).toPandas()
+    out = all_queries()["llm_quality_filter"](spark, SF_SMOKE).toPandas()
     docs = _docs()
     n_tok = docs["text"].str.split(" ").str.len()
     keep = docs[
@@ -80,7 +70,7 @@ def test_quality_filter_matches_pandas(spark):
 
 
 def test_quality_score_matches_pandas(spark):
-    out = Q()["llm_quality_score"](spark, SF_SMOKE).toPandas()
+    out = all_queries()["llm_quality_score"](spark, SF_SMOKE).toPandas()
     docs = _docs()
     stop = set("the a an and of to in is for on".split())
 
@@ -106,7 +96,7 @@ def test_quality_score_matches_pandas(spark):
 
 
 def test_token_bpe_internally_consistent(spark):
-    out = Q()["llm_token_bpe"](spark, SF_SMOKE).toPandas()
+    out = all_queries()["llm_token_bpe"](spark, SF_SMOKE).toPandas()
     docs = _docs()
     ws = docs["text"].str.strip().str.split(r"\s+").str.len()
     for _, r in out.iterrows():
@@ -119,7 +109,7 @@ def test_token_bpe_internally_consistent(spark):
 
 
 def test_zipf_fit_matches_pandas_ols(spark):
-    r = Q()["llm_zipf_fit"](spark, SF_SMOKE).toPandas().iloc[0]
+    r = all_queries()["llm_zipf_fit"](spark, SF_SMOKE).toPandas().iloc[0]
     docs = _docs()
     freq = (
         docs["text"].str.split(" ").explode().value_counts()
@@ -141,7 +131,7 @@ def test_zipf_fit_matches_pandas_ols(spark):
 
 def test_seq_packing_matches_pandas(spark):
     out = (
-        Q()["llm_seq_packing"](spark, SF_SMOKE)
+        all_queries()["llm_seq_packing"](spark, SF_SMOKE)
         .toPandas()
         .sort_values(["source", "bin_id"])
         .reset_index(drop=True)
@@ -164,7 +154,7 @@ def test_seq_packing_matches_pandas(spark):
 
 
 def test_stratified_sample_matches_pandas_md5(spark):
-    out = Q()["llm_stratified_sample"](spark, SF_SMOKE).toPandas()
+    out = all_queries()["llm_stratified_sample"](spark, SF_SMOKE).toPandas()
     docs = _docs()
     h = docs["doc_id"].map(
         lambda i: hashlib.md5(str(i).encode()).hexdigest()[:2]
@@ -180,7 +170,7 @@ def test_stratified_sample_matches_pandas_md5(spark):
 
 
 def test_pii_scrub_matches_pandas(spark):
-    out = Q()["llm_pii_scrub"](spark, SF_SMOKE).toPandas()
+    out = all_queries()["llm_pii_scrub"](spark, SF_SMOKE).toPandas()
     ev = _events()
     pat = re.compile(r"[0-9]+\.?[0-9]*")
     n_red = ev["props"].map(lambda p: len(pat.findall(p)))
@@ -193,7 +183,7 @@ def test_pii_scrub_matches_pandas(spark):
 
 
 def test_cdc_chunking_rate_identity(spark):
-    out = Q()["llm_cdc_chunking"](spark, SF_SMOKE).toPandas()
+    out = all_queries()["llm_cdc_chunking"](spark, SF_SMOKE).toPandas()
     docs = _docs()
     assert out["n_docs"].sum() == len(docs)  # every doc yields >= 1 chunk
     for _, r in out.iterrows():
@@ -207,7 +197,7 @@ def test_cdc_chunking_rate_identity(spark):
 # --- ETL audits ------------------------------------------------------------------
 
 def test_quarantine_routing_matches_pandas(spark):
-    out = Q()["etl_quarantine_routing"](spark, SF_SMOKE).toPandas()
+    out = all_queries()["etl_quarantine_routing"](spark, SF_SMOKE).toPandas()
     ev = _events()
     bitmap = (
         ((ev["value"].isna() | (ev["value"] < 0)).astype(int))
@@ -230,7 +220,7 @@ def test_quarantine_routing_matches_pandas(spark):
 
 
 def test_partition_skew_audit_matches_pandas_md5(spark):
-    r = Q()["etl_partition_skew_audit"](spark, SF_SMOKE).toPandas().iloc[0]
+    r = all_queries()["etl_partition_skew_audit"](spark, SF_SMOKE).toPandas().iloc[0]
     orders = pd.read_parquet(f"{SF_SMOKE}/orders.parquet")
     bucket = orders["o_custkey"].map(
         lambda k: int(hashlib.md5(str(k).encode()).hexdigest()[:2], 16) % 32
@@ -246,7 +236,7 @@ def test_partition_skew_audit_matches_pandas_md5(spark):
 
 
 def test_psi_drift_matches_pandas(spark):
-    out = Q()["etl_psi_drift"](spark, SF_SMOKE).toPandas()
+    out = all_queries()["etl_psi_drift"](spark, SF_SMOKE).toPandas()
     ev = _events()
     b = np.minimum(np.floor(ev["value"] / 50), 9).astype(int)
     half1 = ev["ts"].dt.day <= 15
@@ -271,13 +261,13 @@ def test_psi_drift_matches_pandas(spark):
     # rows/half/type smoke tier legitimately wobbles into 'moderate';
     # the gate tier must read fully stable.
     assert (out["drift_band"] != "major").all()
-    gate = Q()["etl_psi_drift"](spark, "/root/testdata/sf0.01").toPandas()
+    gate = all_queries()["etl_psi_drift"](spark, "/root/testdata/sf0.01").toPandas()
     assert (gate["drift_band"] == "stable").all()
     assert (gate["psi"] < 0.05).all()
 
 
 def test_null_rate_drift_matches_pandas(spark):
-    out = Q()["etl_null_rate_drift"](spark, SF_SMOKE).toPandas()
+    out = all_queries()["etl_null_rate_drift"](spark, SF_SMOKE).toPandas()
     ev = _events()
     half = np.where(ev["ts"].dt.day <= 15, 1, 2)
     is_zero = (ev["value"] == 0).astype(int)
@@ -303,7 +293,7 @@ def test_null_rate_drift_matches_pandas(spark):
 # --- joins -----------------------------------------------------------------------
 
 def test_asof_tolerance_replay(spark):
-    out = Q()["join_asof_tolerance"](spark, SF_SMOKE).toPandas()
+    out = all_queries()["join_asof_tolerance"](spark, SF_SMOKE).toPandas()
     ev = _events().sort_values(["user_id", "ts", "event_id"])
     truth: dict[int, int | None] = {}
     for _, g in ev.groupby("user_id"):
@@ -339,7 +329,7 @@ def _lev(a: str, b: str) -> int:
 
 
 def test_fuzzy_levenshtein_pairs_verify(spark):
-    out = Q()["join_fuzzy_levenshtein"](spark, SF_SMOKE).toPandas()
+    out = all_queries()["join_fuzzy_levenshtein"](spark, SF_SMOKE).toPandas()
     for _, r in out.iterrows():
         assert r["name_a"] < r["name_b"]
         assert r["name_a"][9:16] == r["name_b"][9:16]  # blocking key holds
@@ -350,7 +340,7 @@ def test_fuzzy_levenshtein_pairs_verify(spark):
 # --- embeddings / detectors: bounds + conservation --------------------------------
 
 def test_centroid_drift_bounds_and_counts(spark):
-    out = Q()["llm_embedding_centroid_drift"](spark, SF_SMOKE).toPandas()
+    out = all_queries()["llm_embedding_centroid_drift"](spark, SF_SMOKE).toPandas()
     emb = pd.read_parquet(f"{SF_SMOKE}/embeddings.parquet")
     counts = emb.groupby("label")["vec_id"].agg(
         even=lambda s: (s % 2 == 0).sum(), odd=lambda s: (s % 2 == 1).sum()
@@ -363,7 +353,7 @@ def test_centroid_drift_bounds_and_counts(spark):
 
 
 def test_pq_codebook_bounds(spark):
-    out = Q()["llm_embedding_pq_codebook"](spark, SF_SMOKE).toPandas()
+    out = all_queries()["llm_embedding_pq_codebook"](spark, SF_SMOKE).toPandas()
     assert len(out) > 0
     assert (out["n_assigned"] > 0).all()
     assert (out["avg_sq_err"] >= -1e-9).all()
@@ -375,7 +365,7 @@ def test_pq_codebook_bounds(spark):
 
 
 def test_format_detect_rates_bounded(spark):
-    out = Q()["llm_format_detect"](spark, SF_SMOKE).toPandas()
+    out = all_queries()["llm_format_detect"](spark, SF_SMOKE).toPandas()
     docs = _docs()
     assert out["n_docs"].sum() == len(docs)
     for col in [
@@ -386,7 +376,7 @@ def test_format_detect_rates_bounded(spark):
 
 
 def test_preference_pairs_margins(spark):
-    out = Q()["llm_preference_pairs"](spark, SF_SMOKE).toPandas()
+    out = all_queries()["llm_preference_pairs"](spark, SF_SMOKE).toPandas()
     assert len(out) > 0
     assert (out["chosen_doc"] != out["rejected_doc"]).all()
     assert (out["score_margin"] >= -1e-9).all()
@@ -394,7 +384,7 @@ def test_preference_pairs_margins(spark):
 
 
 def test_quality_classifier_keep_rate_identity(spark):
-    out = Q()["llm_quality_classifier_linear"](spark, SF_SMOKE).toPandas()
+    out = all_queries()["llm_quality_classifier_linear"](spark, SF_SMOKE).toPandas()
     assert len(out) > 0
     for _, r in out.iterrows():
         assert 0 <= int(r["n_keep"]) <= int(r["n_docs"])
@@ -402,7 +392,7 @@ def test_quality_classifier_keep_rate_identity(spark):
 
 
 def test_repetition_loop_bounds(spark):
-    out = Q()["llm_repetition_loop_detect"](spark, SF_SMOKE).toPandas()
+    out = all_queries()["llm_repetition_loop_detect"](spark, SF_SMOKE).toPandas()
     assert len(out) > 0
     assert (out["max_repeat"] >= 1).all()
     assert (out["max_repeat"] <= out["n_grams"]).all()
@@ -410,7 +400,7 @@ def test_repetition_loop_bounds(spark):
 
 
 def test_span_corruption_bounds(spark):
-    out = Q()["llm_span_corruption_stats"](spark, SF_SMOKE).toPandas()
+    out = all_queries()["llm_span_corruption_stats"](spark, SF_SMOKE).toPandas()
     for _, r in out.iterrows():
         assert 0 < int(r["n_masked"]) <= int(r["total_tokens"])
         assert abs(r["mask_ratio"] - r["n_masked"] / r["total_tokens"]) < 1e-4
@@ -419,7 +409,7 @@ def test_span_corruption_bounds(spark):
 
 
 def test_watermark_detect_bounds(spark):
-    out = Q()["llm_watermark_greenlist_detect"](spark, SF_SMOKE).toPandas()
+    out = all_queries()["llm_watermark_greenlist_detect"](spark, SF_SMOKE).toPandas()
     docs = _docs()
     assert out["n_docs"].sum() == len(docs)
     assert (out["n_flagged"] <= out["n_docs"]).all()

@@ -16,16 +16,6 @@ from highspeedrailwaybigdatasystem_spark.registry import all_queries
 
 SF_SMOKE = "/root/testdata/sf0.001"
 
-_Q = None
-
-
-def Q():
-    global _Q
-    if _Q is None:
-        _Q = all_queries()
-    return _Q
-
-
 def _events() -> pd.DataFrame:
     return pd.read_parquet(f"{SF_SMOKE}/events.parquet")
 
@@ -46,7 +36,7 @@ def _daily_cents(ev: pd.DataFrame) -> pd.Series:
 # --- SQL-surface battery: recompute the inlined semantics ----------------------
 
 def test_sql_cache_table_matches_pandas(spark):
-    out = Q()["sql_cache_table"](spark, SF_SMOKE).toPandas()
+    out = all_queries()["sql_cache_table"](spark, SF_SMOKE).toPandas()
     o = _orders()
     sel = o[pd.to_datetime(o["o_orderdate"]) >= "1998-01-01"]
     truth = sel.groupby("o_orderstatus")["o_totalprice"].agg(["size", "sum"])
@@ -58,7 +48,7 @@ def test_sql_cache_table_matches_pandas(spark):
 
 
 def test_sql_pipe_syntax_matches_pandas(spark):
-    out = Q()["sql_pipe_syntax"](spark, SF_SMOKE).toPandas()
+    out = all_queries()["sql_pipe_syntax"](spark, SF_SMOKE).toPandas()
     li = _lineitem()
     sel = li[pd.to_datetime(li["l_shipdate"]) >= "1997-01-01"]
     rev = sel["l_extendedprice"] * (1 - sel["l_discount"])
@@ -70,7 +60,7 @@ def test_sql_pipe_syntax_matches_pandas(spark):
 
 
 def test_sql_session_variables_matches_pandas(spark):
-    out = Q()["sql_session_variables"](spark, SF_SMOKE).toPandas()
+    out = all_queries()["sql_session_variables"](spark, SF_SMOKE).toPandas()
     o = _orders()
     sel = o[
         (pd.to_datetime(o["o_orderdate"]) >= "1997-01-01")
@@ -85,7 +75,7 @@ def test_sql_session_variables_matches_pandas(spark):
 
 
 def test_sql_execute_immediate_matches_pandas(spark):
-    out = Q()["sql_execute_immediate"](spark, SF_SMOKE).toPandas()
+    out = all_queries()["sql_execute_immediate"](spark, SF_SMOKE).toPandas()
     cust = pd.read_parquet(f"{SF_SMOKE}/customer.parquet")
     truth = cust[cust["c_acctbal"] > 5000.0].groupby("c_mktsegment").size()
     assert set(out["c_mktsegment"]) == set(truth.index)
@@ -94,7 +84,7 @@ def test_sql_execute_immediate_matches_pandas(spark):
 
 
 def test_sql_scripting_matches_pandas(spark):
-    r = Q()["sql_scripting"](spark, SF_SMOKE).toPandas().iloc[0]
+    r = all_queries()["sql_scripting"](spark, SF_SMOKE).toPandas().iloc[0]
     o = _orders()
     yr = pd.to_datetime(o["o_orderdate"]).dt.year
     sel = o[yr.between(1995, 1999)]
@@ -109,7 +99,7 @@ def test_sql_scripting_matches_pandas(spark):
 
 
 def test_sql_order_by_all_matches_pandas(spark):
-    out = Q()["sql_order_by_all"](spark, SF_SMOKE).toPandas()
+    out = all_queries()["sql_order_by_all"](spark, SF_SMOKE).toPandas()
     docs = pd.read_parquet(f"{SF_SMOKE}/documents.parquet")
     truth = (
         docs.groupby(["lang", "source"])["n_chars"]
@@ -128,7 +118,7 @@ def test_sql_order_by_all_matches_pandas(spark):
 
 
 def test_scalar_try_funcs_match_pandas(spark):
-    r = Q()["scalar_try_funcs"](spark, SF_SMOKE).toPandas().iloc[0]
+    r = all_queries()["scalar_try_funcs"](spark, SF_SMOKE).toPandas().iloc[0]
     li = _lineitem()
     odd = (li["l_quantity"] % 2) != 0
     assert int(r["n_rows"]) == len(li)
@@ -142,7 +132,7 @@ def test_scalar_try_funcs_match_pandas(spark):
 
 
 def test_stat_crosstab_matches_pandas(spark):
-    out = Q()["stat_crosstab"](spark, SF_SMOKE).toPandas()
+    out = all_queries()["stat_crosstab"](spark, SF_SMOKE).toPandas()
     li = _lineitem()
     truth = pd.crosstab(li["l_returnflag"], li["l_linestatus"])
     for _, r in out.iterrows():
@@ -154,7 +144,7 @@ def test_stat_crosstab_matches_pandas(spark):
 
 
 def test_pandas_api_bridge_matches_pandas(spark):
-    out = Q()["pandas_api_bridge"](spark, SF_SMOKE).toPandas()
+    out = all_queries()["pandas_api_bridge"](spark, SF_SMOKE).toPandas()
     truth = _orders().groupby("o_orderstatus")["o_totalprice"].agg(["sum", "size"])
     for _, r in out.iterrows():
         s, n = truth.loc[r["o_orderstatus"]]
@@ -163,7 +153,7 @@ def test_pandas_api_bridge_matches_pandas(spark):
 
 
 def test_udaf_custom_geo_mean_matches_numpy(spark):
-    out = Q()["udaf_custom"](spark, SF_SMOKE).toPandas()
+    out = all_queries()["udaf_custom"](spark, SF_SMOKE).toPandas()
     o = _orders()
     for _, r in out.iterrows():
         v = o.loc[o["o_orderpriority"] == r["o_orderpriority"], "o_totalprice"]
@@ -173,7 +163,7 @@ def test_udaf_custom_geo_mean_matches_numpy(spark):
 
 
 def test_csv_permissive_corrupt_shape(spark):
-    out = Q()["src_csv_permissive_corrupt"](spark, SF_SMOKE).toPandas()
+    out = all_queries()["src_csv_permissive_corrupt"](spark, SF_SMOKE).toPandas()
     assert len(out) >= 1
     assert (out["cnt"] > 0).all()
     assert set(out["is_corrupt"]) <= {True, False}
@@ -182,7 +172,7 @@ def test_csv_permissive_corrupt_shape(spark):
 # --- risk / trading-style windows ----------------------------------------------
 
 def test_value_at_risk_tail_algebra(spark):
-    out = Q()["ts_value_at_risk"](spark, SF_SMOKE).toPandas()
+    out = all_queries()["ts_value_at_risk"](spark, SF_SMOKE).toPandas()
     daily = _daily_cents(_events())
     for _, r in out.iterrows():
         s = daily[r["event_type"]].sort_index()
@@ -198,7 +188,7 @@ def test_value_at_risk_tail_algebra(spark):
 
 
 def test_velocity_acceleration_matches_pandas(spark):
-    out = Q()["ts_velocity_acceleration"](spark, SF_SMOKE).toPandas()
+    out = all_queries()["ts_velocity_acceleration"](spark, SF_SMOKE).toPandas()
     daily = _daily_cents(_events())
     for _, r in out.iterrows():
         s = daily[r["event_type"]].sort_index()
@@ -211,7 +201,7 @@ def test_velocity_acceleration_matches_pandas(spark):
 
 
 def test_weekday_weekend_lift_matches_pandas(spark):
-    out = Q()["ts_weekday_weekend_lift"](spark, SF_SMOKE).toPandas()
+    out = all_queries()["ts_weekday_weekend_lift"](spark, SF_SMOKE).toPandas()
     ev = _events()
     weekend = ev["ts"].dt.dayofweek >= 5  # pandas: Monday=0, like the ops
     for _, r in out.iterrows():
@@ -224,7 +214,7 @@ def test_weekday_weekend_lift_matches_pandas(spark):
 
 
 def test_max_drawdown_matches_pandas(spark):
-    out = Q()["win_max_drawdown"](spark, SF_SMOKE).toPandas()
+    out = all_queries()["win_max_drawdown"](spark, SF_SMOKE).toPandas()
     daily = _daily_cents(_events())
     for _, r in out.iterrows():
         s = daily[r["event_type"]].sort_index()
@@ -238,7 +228,7 @@ def test_max_drawdown_matches_pandas(spark):
 
 
 def test_bollinger_bands_match_pandas(spark):
-    out = Q()["win_bollinger_bands"](spark, SF_SMOKE).toPandas()
+    out = all_queries()["win_bollinger_bands"](spark, SF_SMOKE).toPandas()
     ev = _events()
     v4 = (
         ev.groupby([ev["event_type"], ev["ts"].dt.normalize()])["value"]
@@ -276,7 +266,7 @@ def test_bollinger_bands_match_pandas(spark):
 
 def test_ntile_cutpoint_buckets_partition_segments(spark):
     out = (
-        Q()["win_ntile_cutpoint"](spark, SF_SMOKE)
+        all_queries()["win_ntile_cutpoint"](spark, SF_SMOKE)
         .toPandas()
         .sort_values(["c_mktsegment", "quartile"])
     )
@@ -293,7 +283,7 @@ def test_ntile_cutpoint_buckets_partition_segments(spark):
 
 
 def test_rolling_slope_matches_pandas(spark):
-    out = Q()["win_rolling_slope"](spark, SF_SMOKE).toPandas()
+    out = all_queries()["win_rolling_slope"](spark, SF_SMOKE).toPandas()
     ev = _events()
     daily = ev.groupby([ev["event_type"], ev["ts"].dt.day])["value"].sum()
     for _, r in out.iterrows():

@@ -30,16 +30,6 @@ from highspeedrailwaybigdatasystem_spark.registry import all_queries
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_DENSE = "/root/testdata/sf0.1"
 
-_Q = None
-
-
-def Q():
-    global _Q
-    if _Q is None:
-        _Q = all_queries()
-    return _Q
-
-
 # --- geo_grid_topk: numpy brute-force k-NN-within-radius recompute ----------
 
 def _points(sf_dir: str) -> pd.DataFrame:
@@ -66,7 +56,7 @@ def _haversine_matrix(p: pd.DataFrame) -> np.ndarray:
 
 
 def test_geo_grid_topk_matches_numpy_bruteforce(spark):
-    out = Q()["geo_grid_topk"](spark, SF_SMOKE).toPandas()
+    out = all_queries()["geo_grid_topk"](spark, SF_SMOKE).toPandas()
     p = _points(SF_SMOKE)
     d = _haversine_matrix(p)
     ids = p["id"].to_numpy()
@@ -100,7 +90,7 @@ def test_geo_grid_topk_output_is_k_bounded(spark):
     """The op's entire point: per-point output is capped at k=3 rows, so
     total output is <= 3n regardless of point density (geo_grid_join's
     pair dump grows with density^2)."""
-    out = Q()["geo_grid_topk"](spark, SF_SMOKE).toPandas()
+    out = all_queries()["geo_grid_topk"](spark, SF_SMOKE).toPandas()
     n_points = len(pd.read_parquet(f"{SF_SMOKE}/customer.parquet", columns=["c_custkey"]))
     per_point = out.groupby("id").size()
     assert per_point.max() <= 3
@@ -115,7 +105,7 @@ def test_geo_grid_topk_output_is_k_bounded(spark):
 def test_hllpp_bound_holds_at_sf01(spark):
     """agg_approx_distinct's verdict column must hold where HLL++ leaves
     sparse mode: every group's estimate within 3x rsd of exact."""
-    out = Q()["agg_approx_distinct"](spark, SF_DENSE).toPandas()
+    out = all_queries()["agg_approx_distinct"](spark, SF_DENSE).toPandas()
     assert len(out) > 0
     assert out["hll_within_bound"].all(), out.to_string()
     ev = pd.read_parquet(f"{SF_DENSE}/events.parquet", columns=["event_type", "user_id"])
@@ -130,7 +120,7 @@ def test_datasketches_hll_union_bound_holds_at_sf01(spark):
     AND the merged union sketch within 5% of the GLOBAL exact distinct —
     the mergeability property that makes cross-partition re-aggregation
     sound at 100 TB."""
-    out = Q()["agg_hll_sketch"](spark, SF_DENSE).toPandas()
+    out = all_queries()["agg_hll_sketch"](spark, SF_DENSE).toPandas()
     assert out["sketch_within_bound"].all(), out.to_string()
     union = out[out["event_type"] == "__all__"]
     assert len(union) == 1, "union row missing"
@@ -141,6 +131,6 @@ def test_datasketches_hll_union_bound_holds_at_sf01(spark):
 def test_lsh_recall_floor_holds_at_sf01(spark):
     """llm_ann_lsh's recall@10 >= 0.8 verdict at sf0.1 (measured 10/10 in
     round 6 — the floor has slack where bucket density is highest)."""
-    out = Q()["llm_ann_lsh"](spark, SF_DENSE).toPandas()
+    out = all_queries()["llm_ann_lsh"](spark, SF_DENSE).toPandas()
     assert len(out) == 1
     assert bool(out["recall_ok"].iloc[0])

@@ -11,40 +11,16 @@ test_power_iteration_recovers_planted_direction)."""
 from __future__ import annotations
 
 import hashlib
-import os
-import tempfile
 
 import pandas as pd
 from hypothesis import given, settings, strategies as st
 
 from highspeedrailwaybigdatasystem_spark.registry import all_queries
-from highspeedrailwaybigdatasystem_spark.schemas import TABLE_NAMES
+from tests.conftest import synthetic_sf
 
 SF_SMOKE = "/root/testdata/sf0.001"
 
 _SETTINGS = dict(max_examples=5, deadline=None)
-
-
-def _synthetic_sf(documents: pd.DataFrame | None = None,
-                  events: pd.DataFrame | None = None) -> str:
-    """A fresh sf_dir: synthetic tables written as parquet, every other
-    corpus table symlinked from sf0.001 so register_views sees all ten.
-    A new directory per example — ensure_views keys the memo on
-    (sf_dir, events fingerprint), so reusing a path would serve stale
-    views when only documents changed."""
-    d = tempfile.mkdtemp(prefix="prop_sf_")
-    overrides = {}
-    if documents is not None:
-        overrides["documents"] = documents
-    if events is not None:
-        overrides["events"] = events
-    for name in TABLE_NAMES:
-        dst = os.path.join(d, f"{name}.parquet")
-        if name in overrides:
-            overrides[name].to_parquet(dst, index=False)
-        else:
-            os.symlink(f"{SF_SMOKE}/{name}.parquet", dst)
-    return d
 
 
 def _docs(texts_sources_langs) -> pd.DataFrame:
@@ -94,7 +70,7 @@ def test_lift_gain_monotone_and_closed(spark, ev):
             "props": "{}",
         }
     )
-    sf = _synthetic_sf(events=events)
+    sf = synthetic_sf(events=events)
     out = (
         all_queries()["agg_lift_gain_table"](spark, sf)
         .toPandas()
@@ -135,7 +111,7 @@ def test_mixture_temperature_weight_algebra(spark, srcs):
         for s, n in srcs
         for i in range(n)
     )
-    sf = _synthetic_sf(documents=docs)
+    sf = synthetic_sf(documents=docs)
     out = all_queries()["llm_mixture_temperature"](spark, sf).toPandas()
     assert len(out) == len(srcs)
     tol = 1e-5 * max(1, len(out))  # each weight rounded to 6 decimals
@@ -177,7 +153,7 @@ def test_prefix_clusters_match_pandas_reference(spark, rows):
         )
         for pref, variant, is_long, src in rows
     )
-    sf = _synthetic_sf(documents=docs)
+    sf = synthetic_sf(documents=docs)
     got = (
         all_queries()["llm_prefix_dup_clusters"](spark, sf)
         .toPandas()
@@ -213,7 +189,7 @@ def test_dsir_weights_vanish_when_target_equals_raw(spark):
         (f"alpha beta gamma delta token{i} words", "web", "en")
         for i in range(25)
     )
-    sf = _synthetic_sf(documents=docs)
+    sf = synthetic_sf(documents=docs)
     out = all_queries()["llm_dsir_importance"](spark, sf).toPandas()
     assert len(out) == 20
     assert (out["dsir_weight"] == 0.0).all()
@@ -226,7 +202,7 @@ def test_dsir_upweights_target_like_documents(spark):
     lookalike = [("common shared vocab words here 0", "web", "de")]
     alien = [("zzz qqq xxx vvv kkk jjj", "web", "de")]
     docs = _docs(en_docs + lookalike + alien)
-    sf = _synthetic_sf(documents=docs)
+    sf = synthetic_sf(documents=docs)
     out = all_queries()["llm_dsir_importance"](spark, sf).toPandas()
     w = dict(zip(out["doc_id"], out["dsir_weight"]))
     assert w[10] > w[11], w  # lookalike (doc 10) beats alien (doc 11)
@@ -261,7 +237,7 @@ def test_doremi_weights_normalized_and_ordered_by_excess_loss(spark, doms):
         for s, n, rare in doms
         for i in range(n)
     )
-    sf = _synthetic_sf(documents=docs)
+    sf = synthetic_sf(documents=docs)
     out = all_queries()["llm_doremi_reweight_step"](spark, sf).toPandas()
     assert len(out) == len(doms)
     tol = 1e-5 * max(1, len(out))

@@ -6,29 +6,15 @@ unchanged (same sql_q path and memoized-view machinery the driver uses)."""
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 import pandas as pd
 from hypothesis import given, settings, strategies as st
 
 from highspeedrailwaybigdatasystem_spark.registry import all_queries
-from highspeedrailwaybigdatasystem_spark.schemas import TABLE_NAMES
+from tests.conftest import synthetic_sf
 
 SF_SMOKE = "/root/testdata/sf0.001"
 
 _SETTINGS = dict(max_examples=5, deadline=None)
-
-
-def _synthetic_sf(**overrides: pd.DataFrame) -> str:
-    d = tempfile.mkdtemp(prefix="prop_sf6_")
-    for name in TABLE_NAMES:
-        dst = os.path.join(d, f"{name}.parquet")
-        if name in overrides:
-            overrides[name].to_parquet(dst, index=False)
-        else:
-            os.symlink(f"{SF_SMOKE}/{name}.parquet", dst)
-    return d
 
 
 def _orders(rows) -> pd.DataFrame:
@@ -66,7 +52,7 @@ def test_logistic_gd_weight_sign_and_bound(spark, rows):
     data = [("F", 450_000.0 + p) if f else ("O", p) for f, p in rows]
     # ensure both classes exist
     data += [("F", 480_000.0), ("O", 2_000.0)]
-    sf = _synthetic_sf(orders=_orders(data))
+    sf = synthetic_sf(orders=_orders(data))
     out = (
         all_queries()["ml_logistic_gd_steps"](spark, sf)
         .toPandas()
@@ -98,7 +84,7 @@ def test_fcm_mass_closure_and_centroid_range(spark, vals):
     widened by the kilocent quantization (zero-mass clusters keep their
     init centroid — the FCM empty-cluster rule); the cluster whose init
     centroid is nearest the (tight) data mass takes the dominant share."""
-    sf = _synthetic_sf(orders=_orders([("O", v) for v in vals]))
+    sf = synthetic_sf(orders=_orders([("O", v) for v in vals]))
     out = all_queries()["ml_fuzzy_cmeans_step"](spark, sf).toPandas()
     assert len(out) == 3
     assert abs(out["mass_share"].sum() - 1.0) < 1e-4
@@ -148,7 +134,7 @@ def test_boosting_reduces_training_sse(spark, rows):
             ),
         }
     )
-    sf = _synthetic_sf(lineitem=li)
+    sf = synthetic_sf(lineitem=li)
     out = (
         all_queries()["ml_boosted_stumps_2round"](spark, sf)
         .toPandas()
@@ -192,7 +178,7 @@ def test_xcorr_detects_planted_one_day_lead(spark, seed):
             "props": ["{}"] * len(rows),
         }
     )
-    sf = _synthetic_sf(events=ev)
+    sf = synthetic_sf(events=ev)
     out = (
         all_queries()["ts_cross_correlation"](spark, sf)
         .toPandas()

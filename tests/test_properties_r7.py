@@ -12,29 +12,16 @@ in throwaway sf_dirs (same loader path the driver uses)."""
 from __future__ import annotations
 
 import math
-import os
-import tempfile
 
 import pandas as pd
 from hypothesis import given, settings, strategies as st
 
 from highspeedrailwaybigdatasystem_spark.registry import all_queries
-from highspeedrailwaybigdatasystem_spark.schemas import TABLE_NAMES
+from tests.conftest import synthetic_sf
 
 SF_SMOKE = "/root/testdata/sf0.001"
 
 _SETTINGS = dict(max_examples=5, deadline=None)
-
-
-def _synthetic_sf(**overrides: pd.DataFrame) -> str:
-    d = tempfile.mkdtemp(prefix="prop_sf7_")
-    for name in TABLE_NAMES:
-        dst = os.path.join(d, f"{name}.parquet")
-        if name in overrides:
-            overrides[name].to_parquet(dst, index=False)
-        else:
-            os.symlink(f"{SF_SMOKE}/{name}.parquet", dst)
-    return d
 
 
 def _customer(balances, segments=None) -> pd.DataFrame:
@@ -75,7 +62,7 @@ def test_theil_zero_iff_uniform(spark, bal):
     """Every customer holding the SAME positive balance gives Theil-T = 0
     and Atkinson = 0 exactly; mean_balance is that balance."""
     bal = round(bal, 2)
-    sf = _synthetic_sf(customer=_customer([bal] * 40))
+    sf = synthetic_sf(customer=_customer([bal] * 40))
     out = all_queries()["agg_theil_index"](spark, sf).toPandas()
     assert len(out) == 1
     assert abs(out.loc[0, "theil_t"]) <= 1e-6
@@ -105,7 +92,7 @@ def test_hellinger_zero_on_identical_distributions(spark):
     docs = pd.DataFrame(
         rows, columns=["doc_id", "text", "lang", "source", "n_chars"]
     )
-    sf = _synthetic_sf(documents=docs)
+    sf = synthetic_sf(documents=docs)
     out = all_queries()["agg_hellinger_distance"](spark, sf).toPandas()
     assert len(out) == 2
     assert (abs(out["bhattacharyya_coef"] - 1.0) <= 1e-6).all()
@@ -168,7 +155,7 @@ def test_hhi_single_brand_is_one(spark):
             ),
         }
     )
-    sf = _synthetic_sf(part=part, lineitem=li)
+    sf = synthetic_sf(part=part, lineitem=li)
     out = all_queries()["agg_herfindahl_index"](spark, sf).toPandas()
     assert len(out) == 2
     assert (abs(out["hhi"] - 1.0) <= 1e-9).all()
@@ -196,7 +183,7 @@ def test_jarque_bera_symmetric_two_point(spark):
     n = 120
     vals = [10.0, 30.0] * (n // 2)
     ev = _daily_events([int(v * 100) for v in vals])
-    sf = _synthetic_sf(events=ev)
+    sf = synthetic_sf(events=ev)
     out = all_queries()["agg_jarque_bera"](spark, sf).toPandas()
     assert len(out) == 1
     r = out.iloc[0]
@@ -248,7 +235,7 @@ def test_basket_lift_on_planted_cooccurrence(spark, k, extra):
             ),
         }
     )
-    sf = _synthetic_sf(part=part, lineitem=li)
+    sf = synthetic_sf(part=part, lineitem=li)
     out = all_queries()["agg_market_basket_lift"](spark, sf).toPandas()
     assert len(out) == 1  # only the (A, B) pair ever co-occurs
     r = out.iloc[0]
@@ -279,7 +266,7 @@ def test_dbscan_two_groups_split_by_gap(spark):
     balances = [1000 + (i % 3) for i in range(60)] + [
         2000 + (i % 2) for i in range(30)
     ]
-    sf = _synthetic_sf(customer=_customer([float(b) for b in balances]))
+    sf = synthetic_sf(customer=_customer([float(b) for b in balances]))
     out = (
         all_queries()["ml_dbscan_1d"](spark, sf)
         .toPandas()
@@ -322,7 +309,7 @@ def test_hurst_detects_trend(spark, slope):
     R/S grows ~linearly with window size, so the log-log slope (Hurst)
     must be far above the 0.5 random-walk line."""
     cents = [100_000 + slope * i for i in range(34)]
-    sf = _synthetic_sf(events=_daily_events(cents))
+    sf = synthetic_sf(events=_daily_events(cents))
     out = all_queries()["ts_hurst_rs"](spark, sf).toPandas()
     assert len(out) == 1
     r = out.iloc[0]
@@ -338,14 +325,14 @@ def test_rsi_pins_at_extremes(spark):
     """Strictly increasing daily revenue ⇒ avg_loss = 0 ⇒ RSI = 100;
     strictly decreasing ⇒ avg_gain = 0 ⇒ RSI = 0."""
     up = [100_000 + 137 * i for i in range(20)]
-    sf = _synthetic_sf(events=_daily_events(up))
+    sf = synthetic_sf(events=_daily_events(up))
     out = all_queries()["win_rsi"](spark, sf).toPandas()
     assert len(out) > 0
     assert (out["avg_loss_cents"] == 0).all()
     assert (out["rsi_14"] == 100.0).all()
 
     down = [100_000 - 137 * i for i in range(20)]
-    sf = _synthetic_sf(events=_daily_events(down))
+    sf = synthetic_sf(events=_daily_events(down))
     out = all_queries()["win_rsi"](spark, sf).toPandas()
     assert len(out) > 0
     assert (out["avg_gain_cents"] == 0).all()
@@ -404,7 +391,7 @@ def test_perm_entropy_zero_on_monotone(spark):
     """A strictly increasing daily series has exactly one ordinal pattern
     ('<<<'), so permutation entropy is 0 and the structured flag fires."""
     cents = [50_000 + 777 * i for i in range(25)]
-    sf = _synthetic_sf(events=_daily_events(cents))
+    sf = synthetic_sf(events=_daily_events(cents))
     out = all_queries()["ts_permutation_entropy"](spark, sf).toPandas()
     assert len(out) == 1
     r = out.iloc[0]
@@ -430,7 +417,7 @@ def test_survivorship_invariant_under_row_permutation(spark):
     golden record (every rule carries a deterministic tiebreak)."""
     ev = pd.read_parquet(f"{SF_SMOKE}/events.parquet")
     shuffled = ev.sample(frac=1.0, random_state=20260814).reset_index(drop=True)
-    sf = _synthetic_sf(events=shuffled)
+    sf = synthetic_sf(events=shuffled)
     q = all_queries()["etl_survivorship_golden_record"]
     base = q(spark, SF_SMOKE).toPandas()
     perm = q(spark, sf).toPandas()
@@ -452,7 +439,7 @@ def test_survivorship_tiebreaks(spark):
             "props": ["{}"] * 2,
         }
     )
-    sf = _synthetic_sf(events=ev)
+    sf = synthetic_sf(events=ev)
     out = all_queries()["etl_survivorship_golden_record"](spark, sf).toPandas()
     assert len(out) == 1
     r = out.iloc[0]

@@ -11,36 +11,13 @@ the REGISTERED ops on the smoke corpus or synthetic sf_dirs."""
 from __future__ import annotations
 
 import math
-import os
-import tempfile
 
 import pandas as pd
 
 from highspeedrailwaybigdatasystem_spark.registry import all_queries
-from highspeedrailwaybigdatasystem_spark.schemas import TABLE_NAMES
+from tests.conftest import synthetic_sf
 
 SF_SMOKE = "/root/testdata/sf0.001"
-
-_Q = None
-
-
-def Q():
-    global _Q
-    if _Q is None:
-        _Q = all_queries()
-    return _Q
-
-
-def _synthetic_sf(**overrides: pd.DataFrame) -> str:
-    d = tempfile.mkdtemp(prefix="prop_sf7o_")
-    for name in TABLE_NAMES:
-        dst = os.path.join(d, f"{name}.parquet")
-        if name in overrides:
-            overrides[name].to_parquet(dst, index=False)
-        else:
-            os.symlink(f"{SF_SMOKE}/{name}.parquet", dst)
-    return d
-
 
 def _daily_events(cents_by_day, start="2024-01-02") -> pd.DataFrame:
     days = pd.date_range(start, periods=len(cents_by_day), freq="D")
@@ -62,19 +39,19 @@ def _daily_events(cents_by_day, start="2024-01-02") -> pd.DataFrame:
 # --- algebraic identities ----------------------------------------------------
 
 def test_state_merges_consistent_on_smoke(spark):
-    out = Q()["etl_incremental_state_merge_audit"](spark, SF_SMOKE).toPandas()
+    out = all_queries()["etl_incremental_state_merge_audit"](spark, SF_SMOKE).toPandas()
     assert len(out) > 0 and out["merge_consistent"].all()
-    out = Q()["agg_welford_merge_audit"](spark, SF_SMOKE).toPandas()
+    out = all_queries()["agg_welford_merge_audit"](spark, SF_SMOKE).toPandas()
     assert len(out) > 0 and out["merge_consistent"].all()
 
 
 def test_agg_pushdown_equivalence_holds(spark):
-    out = Q()["join_agg_pushdown_equivalence"](spark, SF_SMOKE).toPandas()
+    out = all_queries()["join_agg_pushdown_equivalence"](spark, SF_SMOKE).toPandas()
     assert len(out) > 0 and out["plans_equivalent"].all()
 
 
 def test_backfill_idempotency(spark):
-    out = Q()["etl_backfill_idempotency_audit"](spark, SF_SMOKE).toPandas()
+    out = all_queries()["etl_backfill_idempotency_audit"](spark, SF_SMOKE).toPandas()
     assert len(out) >= 1  # only the duplicated day(s) appear
     assert out["idempotent"].all()
     assert (out["n_dup_rows"] == out["n_orig"]).all()  # exact double-ingest
@@ -82,7 +59,7 @@ def test_backfill_idempotency(spark):
 
 
 def test_cascade_totals_add_up(spark):
-    r = Q()["etl_cascade_delete_plan"](spark, SF_SMOKE).toPandas().iloc[0]
+    r = all_queries()["etl_cascade_delete_plan"](spark, SF_SMOKE).toPandas().iloc[0]
     assert r["total_rows"] == (
         r["customers_deleted"] + r["orders_cascaded"] + r["lineitems_cascaded"]
     )
@@ -90,7 +67,7 @@ def test_cascade_totals_add_up(spark):
 
 
 def test_pii_vault_roundtrip(spark):
-    r = Q()["etl_pii_tokenization_vault"](spark, SF_SMOKE).toPandas().iloc[0]
+    r = all_queries()["etl_pii_tokenization_vault"](spark, SF_SMOKE).toPandas().iloc[0]
     assert bool(r["roundtrip_complete"])
     assert r["n_collisions"] == r["n_users"] - r["n_tokens"]
     assert r["n_events_tokenized"] == r["n_events"]
@@ -105,8 +82,8 @@ def test_tukey_degenerates_on_equal_groups(spark):
     ev.loc[ev.index % 3 == 0, "event_type"] = "click"
     ev.loc[ev.index % 3 == 0, "value"] = 900.0  # far group, tight spread
     ev["value"] = ev["value"] + (ev.index % 5) * 0.01  # nonzero within-var
-    sf = _synthetic_sf(events=ev)
-    out = Q()["agg_tukey_hsd"](spark, sf).toPandas()
+    sf = synthetic_sf(events=ev)
+    out = all_queries()["agg_tukey_hsd"](spark, sf).toPandas()
     flagged = out[(out["type_a"] == "click") | (out["type_b"] == "click")]
     assert flagged["significant_5pct"].all()
 
@@ -114,7 +91,7 @@ def test_tukey_degenerates_on_equal_groups(spark):
 # --- estimator sanity --------------------------------------------------------
 
 def test_kmv_estimate_close(spark):
-    r = Q()["agg_kmv_distinct_estimate"](spark, SF_SMOKE).toPandas().iloc[0]
+    r = all_queries()["agg_kmv_distinct_estimate"](spark, SF_SMOKE).toPandas().iloc[0]
     assert r["k_used"] == 256 or r["k_used"] == r["true_distinct"]
     assert r["kmv_estimate"] > 0
     # k=256 KMV has ~1/sqrt(254) ≈ 6.3% std error; 25% is > 3.9 sigma
@@ -122,13 +99,13 @@ def test_kmv_estimate_close(spark):
 
 
 def test_gumbel_return_level_dominates_mean(spark):
-    r = Q()["agg_extreme_value_gumbel"](spark, SF_SMOKE).toPandas().iloc[0]
+    r = all_queries()["agg_extreme_value_gumbel"](spark, SF_SMOKE).toPandas().iloc[0]
     assert r["return_level_99_dollars"] > r["mean_block_max_dollars"]
     assert r["gumbel_beta_dollars"] > 0
 
 
 def test_hill_alpha_positive(spark):
-    r = Q()["agg_hill_tail_index"](spark, SF_SMOKE).toPandas().iloc[0]
+    r = all_queries()["agg_hill_tail_index"](spark, SF_SMOKE).toPandas().iloc[0]
     assert r["hill_h"] > 0 and r["tail_alpha"] > 0
     assert r["m_order_stats"] == 100
 
@@ -139,8 +116,8 @@ def test_binseg_finds_planted_level_shift(spark):
     cents = [100_000 + (i % 3) * 7 for i in range(14)] + [
         500_000 + (i % 3) * 7 for i in range(14)
     ]
-    sf = _synthetic_sf(events=_daily_events(cents))
-    r = Q()["ts_changepoint_binseg"](spark, sf).toPandas().iloc[0]
+    sf = synthetic_sf(events=_daily_events(cents))
+    r = all_queries()["ts_changepoint_binseg"](spark, sf).toPandas().iloc[0]
     assert r["split_after_rn"] == 14
     assert bool(r["changepoint_detected"])
     assert abs(r["mean_before_dollars"] - 1000.0) < 1.0
@@ -149,8 +126,8 @@ def test_binseg_finds_planted_level_shift(spark):
 
 def test_dft_finds_planted_weekly_period(spark):
     cents = [100_000 + (50_000 if i % 7 == 0 else 0) for i in range(28)]
-    sf = _synthetic_sf(events=_daily_events(cents))
-    out = Q()["ts_dft_power_topk"](spark, sf).toPandas().set_index("period_days")
+    sf = synthetic_sf(events=_daily_events(cents))
+    out = all_queries()["ts_dft_power_topk"](spark, sf).toPandas().set_index("period_days")
     assert bool(out.loc[7, "dominant_period"])
     assert out.loc[7, "power_share"] > 0.5
 
@@ -161,21 +138,21 @@ def test_variance_ratio_regimes(spark):
     # NOT do this: its increments are constant, so all diff variances
     # collapse — VR detects random-walk-like persistence, not drift)
     tent = [100_000 + 5_000 * min(i, 30 - i) for i in range(31)]
-    sf = _synthetic_sf(events=_daily_events(tent))
-    out = Q()["ts_variance_ratio"](spark, sf).toPandas()
+    sf = synthetic_sf(events=_daily_events(tent))
+    out = all_queries()["ts_variance_ratio"](spark, sf).toPandas()
     assert (out["variance_ratio"] > 1).all()
     assert out["trending_regime"].all()
     # strict alternation (mean reversion) → VR < 1
     alt = [100_000 + (50_000 if i % 2 == 0 else 0) for i in range(30)]
-    sf = _synthetic_sf(events=_daily_events(alt))
-    out = Q()["ts_variance_ratio"](spark, sf).toPandas()
+    sf = synthetic_sf(events=_daily_events(alt))
+    out = all_queries()["ts_variance_ratio"](spark, sf).toPandas()
     assert (out["variance_ratio"] < 1).all()
 
 
 def test_ljung_box_rejects_on_trend(spark):
     cents = [100_000 + 2_000 * i for i in range(30)]
-    sf = _synthetic_sf(events=_daily_events(cents))
-    r = Q()["ts_ljung_box"](spark, sf).toPandas().iloc[0]
+    sf = synthetic_sf(events=_daily_events(cents))
+    r = all_queries()["ts_ljung_box"](spark, sf).toPandas().iloc[0]
     assert bool(r["reject_white_noise_5pct"])
     assert r["ljung_box_q"] > 14.067
 
@@ -192,8 +169,8 @@ def test_two_proportion_detects_planted_uplift(spark):
                        "props"],
     )
     ev["ts"] = ev["ts"].astype("datetime64[us]")
-    sf = _synthetic_sf(events=ev)
-    r = Q()["ml_two_proportion_ztest"](spark, sf).toPandas().iloc[0]
+    sf = synthetic_sf(events=ev)
+    r = all_queries()["ml_two_proportion_ztest"](spark, sf).toPandas().iloc[0]
     assert r["rate_control"] == 0.0 and r["rate_treatment"] == 1.0
     assert bool(r["significant_5pct"]) and r["z_stat"] > 10
 
@@ -202,7 +179,7 @@ def test_two_proportion_detects_planted_uplift(spark):
 
 def test_truncation_loss_monotone(spark):
     out = (
-        Q()["llm_truncation_loss_curve"](spark, SF_SMOKE)
+        all_queries()["llm_truncation_loss_curve"](spark, SF_SMOKE)
         .toPandas()
         .sort_values("context_limit")
     )
@@ -212,14 +189,14 @@ def test_truncation_loss_monotone(spark):
 
 
 def test_elbow_wss_decreases(spark):
-    out = Q()["ml_elbow_k_sweep"](spark, SF_SMOKE).toPandas().sort_values("k")
+    out = all_queries()["ml_elbow_k_sweep"](spark, SF_SMOKE).toPandas().sort_values("k")
     wss = out["wss_millions"].tolist()
     assert all(b <= a + 1e-9 for a, b in zip(wss, wss[1:]))
 
 
 def test_ridge_shrinks_monotonically(spark):
     out = (
-        Q()["ml_ridge_regression_grid"](spark, SF_SMOKE)
+        all_queries()["ml_ridge_regression_grid"](spark, SF_SMOKE)
         .toPandas()
         .sort_values("lambda_per_row")
     )
@@ -231,7 +208,7 @@ def test_ridge_shrinks_monotonically(spark):
 
 def test_shingle_sensitivity_monotone(spark):
     out = (
-        Q()["llm_shingle_size_sensitivity"](spark, SF_SMOKE)
+        all_queries()["llm_shingle_size_sensitivity"](spark, SF_SMOKE)
         .toPandas()
         .sort_values("shingle_n")
     )
@@ -241,7 +218,7 @@ def test_shingle_sensitivity_monotone(spark):
 
 def test_learning_curve_shape(spark):
     out = (
-        Q()["ml_learning_curve_stump"](spark, SF_SMOKE)
+        all_queries()["ml_learning_curve_stump"](spark, SF_SMOKE)
         .toPandas()
         .sort_values("train_pct")
     )
@@ -255,7 +232,7 @@ def test_learning_curve_shape(spark):
 # --- closure / bounds --------------------------------------------------------
 
 def test_char_class_shares_close(spark):
-    out = Q()["llm_char_class_mix"](spark, SF_SMOKE).toPandas()
+    out = all_queries()["llm_char_class_mix"](spark, SF_SMOKE).toPandas()
     s = (
         out["letter_share"] + out["digit_share"] + out["space_share"]
         + out["symbol_share"]
@@ -264,7 +241,7 @@ def test_char_class_shares_close(spark):
 
 
 def test_diversity_bounds(spark):
-    out = Q()["agg_shannon_diversity"](spark, SF_SMOKE).toPandas()
+    out = all_queries()["agg_shannon_diversity"](spark, SF_SMOKE).toPandas()
     for _, r in out.iterrows():
         assert r["shannon_h"] >= -1e-9
         assert -1e-6 <= r["pielou_evenness"] <= 1 + 1e-6
@@ -273,27 +250,27 @@ def test_diversity_bounds(spark):
 
 
 def test_reciprocity_bounds(spark):
-    r = Q()["graph_reciprocity"](spark, SF_SMOKE).toPandas().iloc[0]
+    r = all_queries()["graph_reciprocity"](spark, SF_SMOKE).toPandas().iloc[0]
     assert 0 <= r["reciprocity"] <= 1
     assert r["n_edges_distinct"] <= r["n_edges_raw"]
     assert r["n_reciprocal_directed"] % 2 == 0  # mutual pairs count twice
 
 
 def test_two_hop_reach_bounds(spark):
-    out = Q()["graph_two_hop_reach"](spark, SF_SMOKE).toPandas()
+    out = all_queries()["graph_two_hop_reach"](spark, SF_SMOKE).toPandas()
     assert (out["degree"] <= 4).all()
     assert (out["two_hop_reach"] <= out["degree"] ** 2).all()
 
 
 def test_bipartite_projection_bounds(spark):
-    out = Q()["graph_bipartite_projection"](spark, SF_SMOKE).toPandas()
+    out = all_queries()["graph_bipartite_projection"](spark, SF_SMOKE).toPandas()
     assert (out["overlap_coef"] >= out["cosine_sim"] - 1e-9).all()
     assert (out["overlap_coef"] <= 1 + 1e-9).all()
     assert (out["shared_users"] <= out[["n_users_a", "n_users_b"]].min(axis=1)).all()
 
 
 def test_vad_run_length_algebra(spark):
-    out = Q()["mm_audio_vad_stub"](spark, SF_SMOKE).toPandas()
+    out = all_queries()["mm_audio_vad_stub"](spark, SF_SMOKE).toPandas()
     assert (out["n_voiced"] <= out["n_frames"]).all()
     assert (out["longest_segment"] <= out["n_voiced"]).all()
     assert ((out["n_segments"] == 0) == (out["n_voiced"] == 0)).all()
@@ -301,7 +278,7 @@ def test_vad_run_length_algebra(spark):
 
 
 def test_patch_embed_consistent_with_length(spark):
-    out = Q()["mm_patch_embed_stub"](spark, SF_SMOKE).toPandas()
+    out = all_queries()["mm_patch_embed_stub"](spark, SF_SMOKE).toPandas()
     docs = pd.read_parquet(f"{SF_SMOKE}/documents.parquet")[
         ["doc_id", "n_chars"]
     ]
@@ -314,7 +291,7 @@ def test_patch_embed_consistent_with_length(spark):
 
 
 def test_simhash_fp_rates_bounded(spark):
-    out = Q()["llm_simhash_fp_audit"](spark, SF_SMOKE).toPandas()
+    out = all_queries()["llm_simhash_fp_audit"](spark, SF_SMOKE).toPandas()
     assert (out["hamming"] <= 3).all()
     assert ((out["false_positive_rate"] >= 0)
             & (out["false_positive_rate"] <= 1)).all()
@@ -322,7 +299,7 @@ def test_simhash_fp_rates_bounded(spark):
 
 
 def test_budget_allocator_caps(spark):
-    out = Q()["llm_token_budget_allocator"](spark, SF_SMOKE).toPandas()
+    out = all_queries()["llm_token_budget_allocator"](spark, SF_SMOKE).toPandas()
     assert (out["allocated_tokens"] <= out["available_tokens"]).all()
     assert ((out["utilization"] >= 0) & (out["utilization"] <= 1 + 1e-9)).all()
     budget = out["available_tokens"].sum() // 2
@@ -330,19 +307,19 @@ def test_budget_allocator_caps(spark):
 
 
 def test_cardinality_audit_products(spark):
-    out = Q()["join_cardinality_estimate_audit"](spark, SF_SMOKE).toPandas()
+    out = all_queries()["join_cardinality_estimate_audit"](spark, SF_SMOKE).toPandas()
     assert (out["predicted_pairs"] == out["n_left"] * out["n_right"]).all()
     assert (out["predicted_pairs"].diff().dropna() <= 0).all()
 
 
 def test_pinball_matching_quantile_wins(spark):
-    r = Q()["ml_pinball_quantile_eval"](spark, SF_SMOKE).toPandas().iloc[0]
+    r = all_queries()["ml_pinball_quantile_eval"](spark, SF_SMOKE).toPandas().iloc[0]
     assert bool(r["p90_predictor_wins_tau90"])
     assert r["pinball90_at_p90"] <= r["pinball90_at_median"]
 
 
 def test_stl_components_sum_to_actual(spark):
-    out = Q()["ts_stl_decompose_additive"](spark, SF_SMOKE).toPandas()
+    out = all_queries()["ts_stl_decompose_additive"](spark, SF_SMOKE).toPandas()
     resid = (
         out["actual_dollars"]
         - out["trend_dollars"] - out["seasonal_dollars"]
@@ -352,7 +329,7 @@ def test_stl_components_sum_to_actual(spark):
 
 
 def test_forecast_eval_identities(spark):
-    r = Q()["ts_forecast_eval_naive"](spark, SF_SMOKE).toPandas().iloc[0]
+    r = all_queries()["ts_forecast_eval_naive"](spark, SF_SMOKE).toPandas().iloc[0]
     assert r["wape_lastweek"] >= 0 and r["wape_naive1"] >= 0
     expected_mase = r["wape_lastweek"] / r["wape_naive1"]
     assert abs(r["mase_vs_naive1"] - expected_mase) < 1e-3
@@ -360,14 +337,14 @@ def test_forecast_eval_identities(spark):
 
 
 def test_chi2_ranking_complete(spark):
-    out = Q()["ml_chi2_feature_ranking"](spark, SF_SMOKE).toPandas()
+    out = all_queries()["ml_chi2_feature_ranking"](spark, SF_SMOKE).toPandas()
     assert sorted(out["rank"]) == [1, 2, 3]
     assert (out["chi2"] >= -1e-9).all()
     assert (out["dof"] == out["n_levels"] - 1).all()
 
 
 def test_try_cast_rates(spark):
-    out = Q()["sql_try_cast_audit"](spark, SF_SMOKE).toPandas()
+    out = all_queries()["sql_try_cast_audit"](spark, SF_SMOKE).toPandas()
     assert ((out["parse_rate"] >= 0) & (out["parse_rate"] <= 1)).all()
     assert (
         out["n_unparseable"]
@@ -376,13 +353,13 @@ def test_try_cast_rates(spark):
 
 
 def test_freshness_watermark_stream_has_zero_lag(spark):
-    out = Q()["etl_freshness_sla_audit"](spark, SF_SMOKE).toPandas()
+    out = all_queries()["etl_freshness_sla_audit"](spark, SF_SMOKE).toPandas()
     assert out["lag_hours"].min() == 0.0  # some stream holds the watermark
     assert (out["lag_hours"] >= 0).all()
 
 
 def test_bin_packing_conserves_rows(spark):
-    out = Q()["etl_bin_packing_plan"](spark, SF_SMOKE).toPandas()
+    out = all_queries()["etl_bin_packing_plan"](spark, SF_SMOKE).toPandas()
     ev = pd.read_parquet(f"{SF_SMOKE}/events.parquet")
     assert out["n_rows"].sum() == len(ev)
     assert (out["fill_ratio"] > 0).all()
@@ -392,29 +369,29 @@ def test_bin_packing_conserves_rows(spark):
 def test_group_sample_invariant_under_permutation(spark):
     orders = pd.read_parquet(f"{SF_SMOKE}/orders.parquet")
     shuffled = orders.sample(frac=1.0, random_state=7).reset_index(drop=True)
-    sf = _synthetic_sf(orders=shuffled)
-    q = Q()["agg_deterministic_group_sample"]
+    sf = synthetic_sf(orders=shuffled)
+    q = all_queries()["agg_deterministic_group_sample"]
     base = q(spark, SF_SMOKE).toPandas()
     perm = q(spark, sf).toPandas()
     pd.testing.assert_frame_equal(base, perm)
 
 
 def test_uniformity_chisq_sane(spark):
-    r = Q()["agg_hash_uniformity_chisq"](spark, SF_SMOKE).toPandas().iloc[0]
+    r = all_queries()["agg_hash_uniformity_chisq"](spark, SF_SMOKE).toPandas().iloc[0]
     assert r["chi_square"] >= 0
     assert r["n_buckets_hit"] <= 256
     assert r["max_bucket_load_ratio"] >= 1.0
 
 
 def test_fertility_positive(spark):
-    out = Q()["llm_tokenizer_fertility"](spark, SF_SMOKE).toPandas()
+    out = all_queries()["llm_tokenizer_fertility"](spark, SF_SMOKE).toPandas()
     assert (out["fertility"] > 0).all()
     assert (out["chars_per_token"] > 0).all()
     assert (out["bpe_tokens"] >= out["ws_tokens"]).all()  # splits only add
 
 
 def test_boilerplate_share_bounds(spark):
-    out = Q()["llm_template_boilerplate_detect"](spark, SF_SMOKE).toPandas()
+    out = all_queries()["llm_template_boilerplate_detect"](spark, SF_SMOKE).toPandas()
     assert ((out["boilerplate_share"] >= 0)
             & (out["boilerplate_share"] <= 1)).all()
     assert (out["boilerplate_occurrences"]
@@ -422,7 +399,7 @@ def test_boilerplate_share_bounds(spark):
 
 
 def test_m4_matches_pandas(spark):
-    out = Q()["ts_downsample_m4"](spark, SF_SMOKE).toPandas().set_index("bucket")
+    out = all_queries()["ts_downsample_m4"](spark, SF_SMOKE).toPandas().set_index("bucket")
     ev = pd.read_parquet(f"{SF_SMOKE}/events.parquet")
     ev["bucket"] = ev["event_id"] % 16
     ev["cents"] = (ev["value"] * 100).round().astype("int64")
@@ -436,7 +413,7 @@ def test_m4_matches_pandas(spark):
 # --- batches K/L -------------------------------------------------------------
 
 def test_symmetric_diff_identity(spark):
-    r = Q()["set_symmetric_diff"](spark, SF_SMOKE).toPandas().iloc[0]
+    r = all_queries()["set_symmetric_diff"](spark, SF_SMOKE).toPandas().iloc[0]
     assert r["n_symmetric_diff"] + 2 * r["n_both"] == (
         r["n_first_half"] + r["n_second_half"]
     )
@@ -444,14 +421,14 @@ def test_symmetric_diff_identity(spark):
 
 
 def test_trigram_similarity_bounds(spark):
-    out = Q()["str_trigram_similarity"](spark, SF_SMOKE).toPandas()
+    out = all_queries()["str_trigram_similarity"](spark, SF_SMOKE).toPandas()
     assert 0 < len(out) <= 15
     assert ((out["trigram_sim"] > 0) & (out["trigram_sim"] <= 1)).all()
     assert (out["id_a"] < out["id_b"]).all()
 
 
 def test_distinct_merge_inequality_holds(spark):
-    out = Q()["agg_distinct_merge_inequality"](spark, SF_SMOKE).toPandas()
+    out = all_queries()["agg_distinct_merge_inequality"](spark, SF_SMOKE).toPandas()
     assert out["inequality_holds"].all()
     assert (
         out["overlap_double_counted"]
@@ -460,7 +437,7 @@ def test_distinct_merge_inequality_holds(spark):
 
 
 def test_delta_ci_brackets_point_estimate(spark):
-    out = Q()["ml_ratio_metric_delta_ci"](spark, SF_SMOKE).toPandas()
+    out = all_queries()["ml_ratio_metric_delta_ci"](spark, SF_SMOKE).toPandas()
     assert len(out) == 2
     assert (out["ci95_lo_dollars"] <= out["revenue_per_event_dollars"]).all()
     assert (out["ci95_hi_dollars"] >= out["revenue_per_event_dollars"]).all()
@@ -468,7 +445,7 @@ def test_delta_ci_brackets_point_estimate(spark):
 
 
 def test_pk_fanout_clean_on_smoke(spark):
-    r = Q()["join_pk_fanout_audit"](spark, SF_SMOKE).toPandas().iloc[0]
+    r = all_queries()["join_pk_fanout_audit"](spark, SF_SMOKE).toPandas().iloc[0]
     assert bool(r["all_dims_pk_clean"])
     assert (
         r["n_lineitem"] == r["n_after_orders"]
@@ -477,7 +454,7 @@ def test_pk_fanout_clean_on_smoke(spark):
 
 
 def test_predicate_correlation_consistency(spark):
-    out = Q()["scan_predicate_correlation_audit"](spark, SF_SMOKE).toPandas()
+    out = all_queries()["scan_predicate_correlation_audit"](spark, SF_SMOKE).toPandas()
     assert len(out) == 3
     assert (out["actual_and_selectivity"] >= -1e-9).all()
     assert (out["actual_and_selectivity"] <= 1 + 1e-9).all()
@@ -489,7 +466,7 @@ def test_predicate_correlation_consistency(spark):
 
 
 def test_fiscal_rollup_conserves_revenue(spark):
-    out = Q()["dt_fiscal_quarter_rollup"](spark, SF_SMOKE).toPandas()
+    out = all_queries()["dt_fiscal_quarter_rollup"](spark, SF_SMOKE).toPandas()
     orders = pd.read_parquet(f"{SF_SMOKE}/orders.parquet")
     assert out["n_orders"].sum() == len(orders)
     total = (orders["o_totalprice"] * 100).round().sum() / 100
@@ -498,14 +475,14 @@ def test_fiscal_rollup_conserves_revenue(spark):
 
 
 def test_gini_auc_identity_certified(spark):
-    r = Q()["ml_gini_auc_identity"](spark, SF_SMOKE).toPandas().iloc[0]
+    r = all_queries()["ml_gini_auc_identity"](spark, SF_SMOKE).toPandas().iloc[0]
     assert bool(r["identity_holds"])
     assert abs(r["somers_d"] - r["gini_from_auc"]) < 1e-5
     assert 0 <= r["auc"] <= 1
 
 
 def test_largest_remainder_sums_to_100(spark):
-    out = Q()["agg_largest_remainder_allocation"](spark, SF_SMOKE).toPandas()
+    out = all_queries()["agg_largest_remainder_allocation"](spark, SF_SMOKE).toPandas()
     assert out["allocated_pct"].sum() == 100
     assert (out["allocated_pct"] - out["floor_pct"]).isin([0, 1]).all()
     assert abs(out["exact_share_pct"].sum() - 100) < 1e-3
@@ -513,7 +490,7 @@ def test_largest_remainder_sums_to_100(spark):
 
 def test_dup_degree_histogram_consistent(spark):
     out = (
-        Q()["llm_dup_partner_degree_dist"](spark, SF_SMOKE)
+        all_queries()["llm_dup_partner_degree_dist"](spark, SF_SMOKE)
         .toPandas()
         .sort_values("n_partners")
     )

@@ -24,38 +24,15 @@
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 import duckdb
 import pandas as pd
 import pytest
 
 from highspeedrailwaybigdatasystem_spark.registry import all_oracles, all_queries
 from highspeedrailwaybigdatasystem_spark.schemas import TABLE_NAMES
+from tests.conftest import synthetic_sf
 
 SF_SMOKE = "/root/testdata/sf0.001"
-
-_Q = None
-
-
-def Q():
-    global _Q
-    if _Q is None:
-        _Q = all_queries()
-    return _Q
-
-
-def _synthetic_sf(**overrides: pd.DataFrame) -> str:
-    d = tempfile.mkdtemp(prefix="prop_sf9_")
-    for name in TABLE_NAMES:
-        dst = os.path.join(d, f"{name}.parquet")
-        if name in overrides:
-            overrides[name].to_parquet(dst, index=False)
-        else:
-            os.symlink(f"{SF_SMOKE}/{name}.parquet", dst)
-    return d
-
 
 def _oracle_on(sf_dir: str, sql: str) -> pd.DataFrame:
     con = duckdb.connect()
@@ -101,8 +78,8 @@ def _events(user_ids: list[int]) -> pd.DataFrame:
 
 def test_scene_cut_drops_empty_docs_both_engines(spark):
     texts = ["", "a" * 40, "b" * 7, ""]
-    sf = _synthetic_sf(documents=_docs(texts))
-    out = Q()["mm_video_scene_cut_stub"](spark, sf).toPandas()
+    sf = synthetic_sf(documents=_docs(texts))
+    out = all_queries()["mm_video_scene_cut_stub"](spark, sf).toPandas()
     # the two empty docs vanish on BOTH engines; the rest keep exact frames
     assert sorted(out["doc_id"]) == [1, 2]
     assert dict(zip(out["doc_id"], out["n_frames"])) == {1: 3, 2: 1}
@@ -118,11 +95,11 @@ def test_connected_components_rejects_sparse_ids_loudly(spark):
     # silently hash-mismatch the closed-form oracle
     sparse = _events([0, 1, 2, 3, 4, 10, 11, 12, 13, 14])
     with pytest.raises(AssertionError, match="not dense"):
-        Q()["graph_connected_components"](spark, _synthetic_sf(events=sparse))
+        all_queries()["graph_connected_components"](spark, synthetic_sf(events=sparse))
 
 
 def test_connected_components_conserves_vertices_on_dense(spark):
-    out = Q()["graph_connected_components"](spark, SF_SMOKE).toPandas()
+    out = all_queries()["graph_connected_components"](spark, SF_SMOKE).toPandas()
     n_users = pd.read_parquet(f"{SF_SMOKE}/events.parquet")["user_id"].nunique()
     assert (out["component_size"] * out["n_components"]).sum() == n_users
 
@@ -130,7 +107,7 @@ def test_connected_components_conserves_vertices_on_dense(spark):
 # --- sharpened r7-tail properties (verdict task #8) --------------------------
 
 def test_gini_auc_identity_vs_independent_rank_auc(spark):
-    r = Q()["ml_gini_auc_identity"](spark, SF_SMOKE).toPandas().iloc[0]
+    r = all_queries()["ml_gini_auc_identity"](spark, SF_SMOKE).toPandas().iloc[0]
     orders = pd.read_parquet(f"{SF_SMOKE}/orders.parquet")
     score = (orders["o_totalprice"] * 100).round()
     y = (orders["o_orderstatus"] == "F").astype(int)
@@ -147,12 +124,12 @@ def test_gini_auc_identity_vs_independent_rank_auc(spark):
 
 def test_largest_remainder_invariant_under_row_permutation(spark):
     orders = pd.read_parquet(f"{SF_SMOKE}/orders.parquet")
-    base = _synthetic_sf(orders=orders)
-    perm = _synthetic_sf(
+    base = synthetic_sf(orders=orders)
+    perm = synthetic_sf(
         orders=orders.sample(frac=1.0, random_state=7).reset_index(drop=True)
     )
-    a = Q()["agg_largest_remainder_allocation"](spark, base).toPandas()
-    b = Q()["agg_largest_remainder_allocation"](spark, perm).toPandas()
+    a = all_queries()["agg_largest_remainder_allocation"](spark, base).toPandas()
+    b = all_queries()["agg_largest_remainder_allocation"](spark, perm).toPandas()
     key = a.columns[0]
     pd.testing.assert_frame_equal(
         a.sort_values(key).reset_index(drop=True),
@@ -163,14 +140,14 @@ def test_largest_remainder_invariant_under_row_permutation(spark):
 
 def test_dup_degree_histogram_mass_is_twice_pairs(spark):
     # handshake lemma: Σ degree·count = 2·|pairs| of the SAME pair graph
-    hist = Q()["llm_dup_partner_degree_dist"](spark, SF_SMOKE).toPandas()
-    n_pairs = Q()["llm_minhash_banding"](spark, SF_SMOKE).count()
+    hist = all_queries()["llm_dup_partner_degree_dist"](spark, SF_SMOKE).toPandas()
+    n_pairs = all_queries()["llm_minhash_banding"](spark, SF_SMOKE).count()
     assert (hist["n_partners"] * hist["n_docs"]).sum() == 2 * n_pairs
 
 
 def test_stream_union_rollup_equals_batch_union(spark):
     out = (
-        Q()["stream_union_two_sources"](spark, SF_SMOKE)
+        all_queries()["stream_union_two_sources"](spark, SF_SMOKE)
         .toPandas()
         .sort_values(["topic", "event_type"])
         .reset_index(drop=True)
@@ -191,12 +168,12 @@ def test_stream_union_rollup_equals_batch_union(spark):
 
 def test_stream_anti_join_arrival_order_independent(spark):
     ev = pd.read_parquet(f"{SF_SMOKE}/events.parquet")
-    a = Q()["stream_static_anti_join"](
-        spark, _synthetic_sf(events=ev)
+    a = all_queries()["stream_static_anti_join"](
+        spark, synthetic_sf(events=ev)
     ).toPandas()
-    b = Q()["stream_static_anti_join"](
+    b = all_queries()["stream_static_anti_join"](
         spark,
-        _synthetic_sf(
+        synthetic_sf(
             events=ev.sample(frac=1.0, random_state=11).reset_index(drop=True)
         ),
     ).toPandas()
@@ -219,7 +196,7 @@ def test_stream_anti_join_arrival_order_independent(spark):
 # evidence behind the audit booleans, not just the booleans themselves.
 
 def test_approx_distinct_within_rsd_bound(spark):
-    out = Q()["agg_approx_distinct"](spark, SF_SMOKE).toPandas()
+    out = all_queries()["agg_approx_distinct"](spark, SF_SMOKE).toPandas()
     ev = pd.read_parquet(f"{SF_SMOKE}/events.parquet")
     exact = ev.groupby("event_type")["user_id"].nunique()
     assert set(out["event_type"]) == set(exact.index)
@@ -242,7 +219,7 @@ def test_approx_distinct_within_rsd_bound(spark):
 
 
 def test_hll_sketch_estimates_and_union_consistent(spark):
-    out = Q()["agg_hll_sketch"](spark, SF_SMOKE).toPandas()
+    out = all_queries()["agg_hll_sketch"](spark, SF_SMOKE).toPandas()
     ev = pd.read_parquet(f"{SF_SMOKE}/events.parquet")
     exact = ev.groupby("event_type")["user_id"].nunique()
     per_type = out[out["event_type"] != "__all__"]
@@ -299,5 +276,5 @@ def test_ann_lsh_neighbors_are_genuine(spark):
     exact_top = set(sorted(true_d, key=true_d.get)[:10])
     assert len(exact_top & set(out["vec_id"])) >= 8
     # and the registered audit op agrees
-    audit = Q()["llm_ann_lsh"](spark, SF_SMOKE).toPandas()
+    audit = all_queries()["llm_ann_lsh"](spark, SF_SMOKE).toPandas()
     assert len(audit) == 1 and bool(audit["recall_ok"].iloc[0])

@@ -6,37 +6,13 @@ in pandas, or by planting a signal with a known closed-form answer)."""
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 import numpy as np
 import pandas as pd
 
 from highspeedrailwaybigdatasystem_spark.registry import all_queries
-from highspeedrailwaybigdatasystem_spark.schemas import TABLE_NAMES
+from tests.conftest import synthetic_sf
 
 SF_SMOKE = "/root/testdata/sf0.001"
-
-_Q = None
-
-
-def Q():
-    global _Q
-    if _Q is None:
-        _Q = all_queries()
-    return _Q
-
-
-def _synthetic_sf(**overrides: pd.DataFrame) -> str:
-    d = tempfile.mkdtemp(prefix="prop_sf9w_")
-    for name in TABLE_NAMES:
-        dst = os.path.join(d, f"{name}.parquet")
-        if name in overrides:
-            overrides[name].to_parquet(dst, index=False)
-        else:
-            os.symlink(f"{SF_SMOKE}/{name}.parquet", dst)
-    return d
-
 
 def _events_df(rows: list[dict]) -> pd.DataFrame:
     df = pd.DataFrame(rows)
@@ -68,7 +44,7 @@ def _smoke_events() -> pd.DataFrame:
 # --- ts family: pandas recomputes on the smoke corpus ------------------------
 
 def test_attribution_touch_replay(spark):
-    out = Q()["ts_attribution_touch"](spark, SF_SMOKE).toPandas()
+    out = all_queries()["ts_attribution_touch"](spark, SF_SMOKE).toPandas()
     ev = _smoke_events().sort_values(["user_id", "ts", "event_id"])
     counts = {"last_click": 0, "unattributed": 0}
     for _, g in ev.groupby("user_id"):
@@ -103,8 +79,8 @@ def test_theil_sen_recovers_planted_linear_slope(spark):
         }
         for i in range(10)
     ]
-    out = Q()["ts_theil_sen"](
-        spark, _synthetic_sf(events=_events_df(rows))
+    out = all_queries()["ts_theil_sen"](
+        spark, synthetic_sf(events=_events_df(rows))
     ).toPandas()
     assert len(out) == 1
     assert int(out["n_pairs"].iloc[0]) == 45  # C(10,2)
@@ -112,7 +88,7 @@ def test_theil_sen_recovers_planted_linear_slope(spark):
 
 
 def test_mad_robust_z_matches_pandas(spark):
-    out = Q()["ts_mad_robust_z"](spark, SF_SMOKE).toPandas()
+    out = all_queries()["ts_mad_robust_z"](spark, SF_SMOKE).toPandas()
     ev = _smoke_events()
     for _, r in out.iterrows():
         v = ev.loc[ev["event_type"] == r["event_type"], "value"]
@@ -126,7 +102,7 @@ def test_mad_robust_z_matches_pandas(spark):
 
 
 def test_gap_distribution_counts_and_monotone_tail(spark):
-    out = Q()["ts_gap_distribution"](spark, SF_SMOKE).toPandas()
+    out = all_queries()["ts_gap_distribution"](spark, SF_SMOKE).toPandas()
     ev = _smoke_events()
     per = ev.groupby(["user_id", "event_type"]).size() - 1
     true_gaps = per.clip(lower=0).groupby(level="event_type").sum()
@@ -136,7 +112,7 @@ def test_gap_distribution_counts_and_monotone_tail(spark):
 
 
 def test_seasonality_strength_is_a_variance_share(spark):
-    out = Q()["ts_seasonality_strength"](spark, SF_SMOKE).toPandas()
+    out = all_queries()["ts_seasonality_strength"](spark, SF_SMOKE).toPandas()
     assert (out["seasonal_strength"] >= -1e-9).all()
     assert (out["seasonal_strength"] <= 1 + 1e-9).all()
     assert (out["n_buckets"] <= 24).all()
@@ -152,8 +128,8 @@ def test_forecast_naive_eval_zero_error_on_constant_series(spark):
         }
         for i in range(20)
     ]
-    out = Q()["ts_forecast_naive_eval"](
-        spark, _synthetic_sf(events=_events_df(rows))
+    out = all_queries()["ts_forecast_naive_eval"](
+        spark, synthetic_sf(events=_events_df(rows))
     ).toPandas()
     assert len(out) == 1
     r = out.iloc[0]
@@ -164,7 +140,7 @@ def test_forecast_naive_eval_zero_error_on_constant_series(spark):
 
 
 def test_diff_in_diff_cells_match_pandas(spark):
-    r = Q()["ts_diff_in_diff"](spark, SF_SMOKE).toPandas().iloc[0]
+    r = all_queries()["ts_diff_in_diff"](spark, SF_SMOKE).toPandas().iloc[0]
     ev = _smoke_events()
     grp = np.where(ev["user_id"] % 2 == 0, "treat", "control")
     period = np.where(
@@ -183,7 +159,7 @@ def test_diff_in_diff_cells_match_pandas(spark):
 
 
 def test_seasonal_decompose_variance_ladder(spark):
-    out = Q()["ts_seasonal_decompose"](spark, SF_SMOKE).toPandas()
+    out = all_queries()["ts_seasonal_decompose"](spark, SF_SMOKE).toPandas()
     assert (out["var_total"] >= 0).all()
     assert (out["var_detrended"] >= 0).all()
     assert (out["var_residual"] >= 0).all()
@@ -192,7 +168,7 @@ def test_seasonal_decompose_variance_ladder(spark):
 
 
 def test_burstiness_fano_matches_pandas(spark):
-    out = Q()["ts_burstiness_fano"](spark, SF_SMOKE).toPandas()
+    out = all_queries()["ts_burstiness_fano"](spark, SF_SMOKE).toPandas()
     ev = _smoke_events()
     hourly = ev.groupby(
         ["event_type", ev["ts"].dt.floor("h")]
@@ -215,7 +191,7 @@ def test_burstiness_fano_matches_pandas(spark):
 
 
 def test_out_of_order_audit_matches_pandas(spark):
-    r = Q()["ts_out_of_order_audit"](spark, SF_SMOKE).toPandas().iloc[0]
+    r = all_queries()["ts_out_of_order_audit"](spark, SF_SMOKE).toPandas().iloc[0]
     ev = _smoke_events().sort_values(["user_id", "event_id"])
     us = ev["ts"].astype("int64")
     prev_max = us.groupby(ev["user_id"]).apply(
@@ -229,7 +205,7 @@ def test_out_of_order_audit_matches_pandas(spark):
 
 
 def test_runs_test_matches_pandas(spark):
-    out = Q()["ts_runs_test"](spark, SF_SMOKE).toPandas()
+    out = all_queries()["ts_runs_test"](spark, SF_SMOKE).toPandas()
     ev = _smoke_events()
     cents = (ev["value"] * 100).round().astype("int64")
     daily = cents.groupby(
@@ -259,7 +235,7 @@ def test_simhash_identical_docs_share_fingerprint(spark):
         "one two three four five six seven",
     ]
     out = (
-        Q()["llm_simhash"](spark, _synthetic_sf(documents=_docs(texts)))
+        all_queries()["llm_simhash"](spark, synthetic_sf(documents=_docs(texts)))
         .toPandas()
         .set_index("doc_id")["simhash"]
     )
@@ -269,7 +245,7 @@ def test_simhash_identical_docs_share_fingerprint(spark):
 
 
 def test_minhash_jaccard_estimate_internally_consistent(spark):
-    out = Q()["llm_minhash_jaccard_estimate"](spark, SF_SMOKE).toPandas()
+    out = all_queries()["llm_minhash_jaccard_estimate"](spark, SF_SMOKE).toPandas()
     assert len(out) > 0
     assert ((out["est_jaccard"] >= 0) & (out["est_jaccard"] <= 1)).all()
     assert ((out["exact_jaccard"] >= 0) & (out["exact_jaccard"] <= 1)).all()
@@ -281,7 +257,7 @@ def test_minhash_jaccard_estimate_internally_consistent(spark):
 
 
 def test_tfidf_cosine_pairs_bounds(spark):
-    out = Q()["llm_tfidf_cosine_pairs"](spark, SF_SMOKE).toPandas()
+    out = all_queries()["llm_tfidf_cosine_pairs"](spark, SF_SMOKE).toPandas()
     assert len(out) > 0
     assert (out["doc_a"] < out["doc_b"]).all()
     assert ((out["tfidf_cosine"] >= -1e-9)
@@ -289,7 +265,7 @@ def test_tfidf_cosine_pairs_bounds(spark):
 
 
 def test_sim_blocked_matches_brute_force(spark):
-    out = Q()["llm_sim_blocked"](spark, SF_SMOKE).toPandas()
+    out = all_queries()["llm_sim_blocked"](spark, SF_SMOKE).toPandas()
     emb = pd.read_parquet(f"{SF_SMOKE}/embeddings.parquet")
     m = np.stack(emb["embedding"].to_numpy()).astype(np.float64)
     ids = emb["vec_id"].to_numpy()
@@ -313,7 +289,7 @@ def test_sim_blocked_matches_brute_force(spark):
 
 
 def test_sim_pairs_label_covers_all_pairs(spark):
-    out = Q()["llm_sim_pairs_label"](spark, SF_SMOKE).toPandas()
+    out = all_queries()["llm_sim_pairs_label"](spark, SF_SMOKE).toPandas()
     assert ((out["avg_sim"] >= -1 - 1e-9) & (out["avg_sim"] <= 1 + 1e-9)).all()
     assert (out["pair_cnt"] > 0).all()
 
@@ -325,8 +301,8 @@ def test_decontamination_finds_planted_leak(spark):
         " ".join(f"w{d}x{i}" for i in range(15)) for d in range(15)
     ]  # disjoint vocab, long enough to shingle
     texts = [eval_text, leaked] + clean  # doc_ids 0..16
-    out = Q()["llm_decontamination"](
-        spark, _synthetic_sf(documents=_docs(texts))
+    out = all_queries()["llm_decontamination"](
+        spark, synthetic_sf(documents=_docs(texts))
     ).toPandas()
     assert len(out) == 1
     r = out.iloc[0]
@@ -341,7 +317,7 @@ def test_decontamination_finds_planted_leak(spark):
 # --- graph family: handshake + bounds on the seeded functional graph ---------
 
 def test_degree_stats_histogram_matches_pandas(spark):
-    out = Q()["graph_degree_stats"](spark, SF_SMOKE).toPandas()
+    out = all_queries()["graph_degree_stats"](spark, SF_SMOKE).toPandas()
     users = np.sort(_smoke_events()["user_id"].unique())
     n = len(users)
     edges = set()
@@ -361,7 +337,7 @@ def test_degree_stats_histogram_matches_pandas(spark):
 
 
 def test_jaccard_link_prediction_bounds(spark):
-    out = Q()["graph_jaccard_link_prediction"](spark, SF_SMOKE).toPandas()
+    out = all_queries()["graph_jaccard_link_prediction"](spark, SF_SMOKE).toPandas()
     assert len(out) > 0
     assert (out["user_a"] < out["user_b"]).all()
     assert (out["common_neighbors"] >= 1).all()
@@ -369,7 +345,7 @@ def test_jaccard_link_prediction_bounds(spark):
 
 
 def test_k_core_is_a_subgraph(spark):
-    r = Q()["graph_k_core"](spark, SF_SMOKE).toPandas().iloc[0]
+    r = all_queries()["graph_k_core"](spark, SF_SMOKE).toPandas().iloc[0]
     users = np.sort(_smoke_events()["user_id"].unique())
     n = len(users)
     edges = set()
