@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..registry import plan_memo, register
-from ._util import EVENTS_TS_US, _materialize_cache, money, sql_q, t
+from ._util import EVENTS_TS_US, money, sql_q, t
 
 
 # --------------------------------------------------------------------------
@@ -1196,14 +1196,7 @@ def agg_market_basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     within-order self-join is the classic co-occurrence shape: shuffle
     once on l_orderkey, and the per-order item multiplicity is bounded
     (≤7 lineitems in TPC-H), so the 'quadratic' pair step is O(49) per
-    order — linear overall, never all-pairs across orders. Brand
-    support table is 25 rows → broadcast into the rule projection.
-
-    Plan note (r6 verdict task #4): the (order × brand) distinct basket
-    was referenced 4× through the shared CTE (12 exchanges, 5 lineitem
-    scans); it is now a cached temp view — one lineitem⋈part pass, and
-    the n/s/pr stages read the cache. `_basket_sql(_BASKET_B)` stays the
-    DuckDB oracle text.
+    order — linear overall, never all-pairs across orders.
 
     ORDER-GRAIN BASKETS (r16, guide §2.4 'remove shuffles outright'):
     the DISTINCT(ok, brand) shuffle + the ok-keyed pair self-join are
@@ -1211,61 +1204,56 @@ def agg_market_basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct brand-set array; the ≤C(7,2) within-order pairs are then
     enumerated in whole-stage codegen from the sorted array (strictly
     ascending, so pair_a < pair_b exactly reproduces the self-join's
-    a.brand < c.brand pair set), and the singles/order counts read the
-    same cached baskets. collect_set drops NULL brands, which is
+    a.brand < c.brand pair set). collect_set drops NULL brands, which is
     result-identical: NULL never survives the a.brand < c.brand pair
-    condition nor the brand-equality joins, and order rows themselves
-    are kept by the groupBy even when every brand is NULL."""
+    condition nor the oracle's brand-equality joins, and order rows
+    themselves are kept by the groupBy even when every brand is NULL.
+
+    ONE QUERY, NO CACHE: one LATERAL VIEW emits, per order, a marker row
+    ('n'), one 's' row per brand and one 'p' row per ordered brand pair —
+    the identical multisets the oracle's n/s/pr aggregates count — so a
+    single partial aggregate and one tiny shuffle feed everything. An
+    unpartitioned window then carries the order total and a brand → nb
+    map onto every pair row, replacing the pr ⋈ s ⋈ s × n joins. Its
+    input is bounded by the brand domain (1 + B + B(B−1)/2 rows, 326 for
+    TPC-H's 25 brands), so the single-task window is never corpus-scaled,
+    and nothing is cached or materialized up front: AQE measures the
+    aggregate's size at runtime, which is all the planner statistics a
+    cached copy used to supply. `_basket_sql(_BASKET_B)` stays the DuckDB
+    oracle text."""
     from ..schemas import ensure_views
 
     ensure_views(spark, sf_dir)
-    baskets = spark.sql(
-        f"SELECT ok, sort_array(collect_set(brand)) AS brands"
-        f" FROM ({_BASKET_B.replace('DISTINCT ', '')}) raw GROUP BY ok"
-    ).cache()
-    baskets.createOrReplaceTempView("__basket_sets")
-    # ONE-PASS CONSUMERS (r17, guide §2.4/§1.2): the n/s/pr stages each
-    # re-scanned the order-grain basket cache (3 full cache reads + 3
-    # shuffles; at the 100× tier the cache is 15M array rows and the warm
-    # figure was 12.1 s). One LATERAL VIEW now emits, per order, a
-    # marker row ('n'), one 's' row per brand and one 'p' row per ordered
-    # brand pair — the identical multisets the three aggregates counted —
-    # so a SINGLE cache read + partial aggregate + one tiny (≤326-group)
-    # shuffle feeds everything. The combined aggregate is itself cached
-    # (it is read by pr + sa + sb + n, and Spark re-inlines view
-    # references) and materialized for honest planner stats.
-    agg = spark.sql(
-        """
-        SELECT t.kind, t.x, t.y, CAST(count(*) AS BIGINT) AS c
-        FROM __basket_sets
-        LATERAL VIEW explode(concat(
-            array(struct('n' AS kind, '' AS x, '' AS y)),
-            transform(brands, b -> struct('s' AS kind, b AS x, '' AS y)),
-            flatten(transform(
-                brands,
-                (b, i) -> transform(slice(brands, i + 2, size(brands)),
-                                    yb -> struct('p' AS kind, b AS x,
-                                                 yb AS y))))
-        )) AS t
-        GROUP BY t.kind, t.x, t.y
-        """
-    ).cache()
-    agg.createOrReplaceTempView("__basket_agg")
-    _materialize_cache(spark, agg)
     return spark.sql(
-        """
-        WITH n AS (SELECT c AS n_orders FROM __basket_agg WHERE kind = 'n'),
-        s AS (SELECT x AS brand, c AS nb FROM __basket_agg WHERE kind = 's'),
-        pr AS (SELECT x AS brand_a, y AS brand_b, c AS n_co
-               FROM __basket_agg WHERE kind = 'p')
-        SELECT brand_a, brand_b, n_co,
-               round(n_co * 1e0 / n.n_orders, 6) AS support,
-               round(n_co * 1e0 / sa.nb, 6) AS confidence_a_to_b,
-               round(n_co * 1e0 * n.n_orders / (sa.nb * sb.nb), 6) AS lift
-        FROM pr
-        JOIN s sa ON pr.brand_a = sa.brand
-        JOIN s sb ON pr.brand_b = sb.brand
-        CROSS JOIN n
+        f"""
+        WITH baskets AS (
+          SELECT ok, sort_array(collect_set(brand)) AS brands
+          FROM ({_BASKET_B.replace('DISTINCT ', '')}) raw GROUP BY ok),
+        agg AS (
+          SELECT t.kind, t.x, t.y, CAST(count(*) AS BIGINT) AS c
+          FROM baskets
+          LATERAL VIEW explode(concat(
+              array(struct('n' AS kind, '' AS x, '' AS y)),
+              transform(brands, b -> struct('s' AS kind, b AS x, '' AS y)),
+              flatten(transform(
+                  brands,
+                  (b, i) -> transform(slice(brands, i + 2, size(brands)),
+                                      yb -> struct('p' AS kind, b AS x,
+                                                   yb AS y))))
+          )) AS t
+          GROUP BY t.kind, t.x, t.y),
+        w AS (
+          SELECT kind, x, y, c,
+                 max(CASE WHEN kind = 'n' THEN c END) OVER () AS n_orders,
+                 map_from_entries(collect_list(
+                     CASE WHEN kind = 's' THEN struct(x, c) END) OVER ()) AS nb
+          FROM agg)
+        SELECT x AS brand_a, y AS brand_b, c AS n_co,
+               round(c * 1e0 / n_orders, 6) AS support,
+               round(c * 1e0 / nb[x], 6) AS confidence_a_to_b,
+               round(c * 1e0 * n_orders / (nb[x] * nb[y]), 6) AS lift
+        FROM w
+        WHERE kind = 'p'
         ORDER BY lift DESC, brand_a, brand_b
         LIMIT 15
         """

@@ -23,6 +23,10 @@ def build_session(
     # ~2× cores keeps every core busy through stragglers without tiny-task
     # overhead at test scale; AQE coalesces further at runtime. On a real
     # cluster this would be sized to data volume instead (see README).
+    # Streaming queries are the exception AQE cannot reach: their stateful
+    # partition count is fixed at checkpoint creation, so
+    # streams.run_available_now sizes it per query to
+    # clamp(ceil(staged bytes / advisoryPartitionSizeInBytes), 1, this value).
     shuffle_partitions = shuffle_partitions or max(2 * cpus, 8)
     builder = SparkSession.builder
     # Scale-adaptive input-split knob (r17, r16 verdict task #2): at the

@@ -208,6 +208,8 @@ def stream_file_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     End-of-stream state equals the batch aggregate, so the oracle is exact.
     The file source needs a directory, so the parquet is staged into
     scratch first."""
+    from ..streaming.streams import run_available_now
+
     check_events_ts(f"{sf_dir}/events.parquet")
     src_dir = scratch_dir("stream_file_source_events")
     shutil.rmtree(src_dir, ignore_errors=True)
@@ -219,14 +221,12 @@ def stream_file_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    q = (
+    run_available_now(
+        stream,
         stream.writeStream.format("memory")
         .queryName("stream_file_source_sink")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("complete"),
     )
-    q.awaitTermination()
     return spark.sql("SELECT event_type, cnt FROM stream_file_source_sink")
 
 

@@ -215,7 +215,6 @@ def test_full_surface_plan_hygiene(spark):
         "agg_kendall_tau",         # day-grain (≤31-row) pair theta join + 1-row totals
         "llm_perplexity_filter",   # 1-row vocab-size + corpus-mean broadcasts
         "geo_grid_density",        # 1-row point-total broadcast
-        "agg_market_basket_lift",  # 1-row order-total broadcast
         "agg_cronbach_alpha",      # 5-row event-type spine + 1-row total-var broadcasts
         "ts_hurst_rs",             # 3-row block-size grid × ≤31-row day grain + 1-row slope
         "agg_hellinger_distance",  # 1-row corpus-total broadcast over ≤src×10 bucket cells
@@ -287,6 +286,8 @@ def test_full_surface_plan_hygiene(spark):
                                    # score-level grain (ml_roc_auc discipline)
         "llm_dup_partner_degree_dist",  # cumulative window over the
                                         # |degrees|-row histogram grain
+        "agg_market_basket_lift",  # order total + brand map over the
+                                   # <=1+B+B(B-1)/2-row kind grain
     }
     # windowspecdefinition(...) whose first argument is already a sort order
     # (or the frame itself) has no partition columns => global window.
@@ -308,6 +309,27 @@ def test_full_surface_plan_hygiene(spark):
         if _global_win.search(plan) and name not in GLOBALWIN_OK:
             failures.append(f"{name}: unpartitioned window over unbounded input")
     assert not failures, failures
+
+
+def test_market_basket_is_one_uncached_query(spark):
+    """agg_market_basket_lift is a single spark.sql: building it runs no
+    Spark job, and its plan reads no cache and has no nested-loop join
+    (the n/s/pr joins became a window over the brand-grain aggregate)."""
+    from highspeedrailwaybigdatasystem_spark.schemas import ensure_views
+
+    ensure_views(spark, SF_ORACLE)
+    sc = spark.sparkContext
+    group = "basket_build"
+    sc.setJobGroup(group, group)
+    try:
+        df = _QUERIES["agg_market_basket_lift"](spark, SF_ORACLE)
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs == []
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "InMemoryTableScan" not in plan, plan
+    assert "BroadcastNestedLoopJoin" not in plan, plan
 
 
 def test_dynamic_partition_pruning(spark):

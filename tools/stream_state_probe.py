@@ -9,9 +9,11 @@ key-shifts user ids → per-user state density constant → state linear in
 |users|), not measurement. This tool measures it: it drives the exact
 join shape of ``stream_full_outer_join`` / ``stream_left_outer_join``
 (same watermark-lag eviction, same RocksDB provider, same parquet sink,
-``maxFilesPerTrigger=1``) and records, for every micro-batch, the
-source's input rows, the global watermark, and every stateOperator's
-``numRowsTotal`` / ``numRowsUpdated`` / ``numRowsRemoved`` from
+``maxFilesPerTrigger=1``, started through the same
+``streams.run_available_now``, so its state-partition count is the one the
+ops run with) and records, for every micro-batch, the source's input rows,
+the global watermark, and every stateOperator's ``numRowsTotal`` /
+``numRowsUpdated`` / ``numRowsRemoved`` / ``numStateStoreInstances`` from
 ``StreamingQuery.recentProgress`` — the engine's own state accounting.
 
 What "bounded state" looks like in the output: numRowsTotal rises while
@@ -47,10 +49,9 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from highspeedrailwaybigdatasystem_spark.session import build_session
-    from highspeedrailwaybigdatasystem_spark.sources._scratch import scratch_dir
     from highspeedrailwaybigdatasystem_spark.streaming import streams as S
 
-    spark = build_session("stream-state-probe", shuffle_partitions=64)
+    spark = build_session("stream-state-probe")
     tag = f"ssp_{args.join}"
     clicks = (
         S._stream_events(spark, args.sf, copies=args.copies, tag=f"{tag}_c")
@@ -74,37 +75,18 @@ def main() -> None:
         args.join,
     )
 
-    import shutil
-
-    out = scratch_dir(f"{tag}_out")
-    ckpt = scratch_dir(f"{tag}_ckpt")
-    for d in (out, ckpt):
-        shutil.rmtree(d, ignore_errors=True)
-    key = "spark.sql.streaming.stateStore.providerClass"
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
+    out, ckpt = S._fresh_dirs(tag)
     t0 = time.monotonic()
-    q = (
-        joined.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    q = S.run_available_now(
+        joined,
+        joined.writeStream.format("parquet").option("path", out)
+        .outputMode("append"),
+        checkpoint=ckpt,
+        rocksdb=True,
     )
-    # Poll progress while running: recentProgress keeps only the last ~100
-    # entries, but per-batch polling also gives us wall-clock attribution.
-    seen: dict[int, dict] = {}
-    while q.isActive:
-        for p in q.recentProgress:
-            seen[p["batchId"]] = p
-        time.sleep(0.5)
-    q.awaitTermination()
-    for p in q.recentProgress:
-        seen[p["batchId"]] = p
+    # recentProgress keeps the last spark.sql.streaming.numRecentProgressUpdates
+    # (100) batches: all of them for --copies below that.
+    seen = {p["batchId"]: p for p in q.recentProgress}
     wall = time.monotonic() - t0
 
     print(f"# {args.join} join, sf={args.sf}, copies={args.copies}, "
@@ -132,6 +114,7 @@ def main() -> None:
         "batches": len(seen),
         "final_state_rows": sum(o.get("numRowsTotal", 0) for o in ops),
         "total_removed": sum(o.get("numRowsRemoved", 0) for o in ops),
+        "state_stores": sum(o.get("numStateStoreInstances", 0) for o in ops),
     }))
     spark.stop()
 
