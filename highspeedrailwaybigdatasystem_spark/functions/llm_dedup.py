@@ -265,53 +265,51 @@ def llm_minhash_banding(spark: SparkSession, sf_dir: str) -> DataFrame:
     At production scale xxhash64 would replace md5 as the base hash.
 
     Driver-side construction is a few Py4J calls (memoized corpus views,
-    cache the shingle stage, parse two SQL texts): the Column-op version of
-    this pipeline spent ~0.85 s PER CALL in driver-side DataFrame
-    construction alone (hundreds of JVM round-trips for 20×6 arithmetic
-    Columns), which dominated the sf0.1 wall-clock. The physical plan is
-    identical. The registered op is wrapped in the shared ``@plan_memo``
-    (registry.py): a repeat caller gets the same DataFrame back and runs no
-    job to get it. Composers (llm_lsh_tuning_curve,
-    llm_dup_partner_degree_dist) call the unmemoized body
-    (``llm_minhash_banding.__wrapped__``), which stages the shingle and
-    candidate caches itself; _materialize_cache skips the count when an
-    identical cache is already loaded."""
+    parse three SQL texts): the Column-op version of this pipeline spent
+    ~0.85 s PER CALL in driver-side DataFrame construction alone (hundreds
+    of JVM round-trips for 20×6 arithmetic Columns), which dominated the
+    sf0.1 wall-clock. The physical plan is identical.
+
+    Nothing is cached, so building the op launches no job. The verify
+    joins need no cached size statistics: AQE measures their inputs at
+    runtime, so the initial plan keeps sort-merge joins and AQE demotes
+    them to broadcast joins only where the measured side is small (sf0.1:
+    254 candidate pairs). Nothing is force-broadcast, which OOMed at the
+    100x corpus (round 10). A cache would also defeat the ``@plan_memo``
+    (registry.py) the op is wrapped in: a repeat caller gets the same
+    DataFrame back, and after ``clearCache()`` every hit would rebuild its
+    InMemoryRelations in one task inside the result stage, while AQE
+    stages are reused from their shuffle files. Composers
+    (llm_lsh_tuning_curve, llm_dup_partner_degree_dist) call the
+    unmemoized body (``llm_minhash_banding.__wrapped__``)."""
     from ..schemas import ensure_views
 
     ensure_views(spark, sf_dir)
-    # DOC-GRAIN shingle-set cache (r17; guide §2.4): the previous exploded
-    # (doc_id, sh) cache was read 4× — signature build, sizes aggregate,
-    # and BOTH verify sides — which cost a second cache (__mh_sizes) with
-    # its own materialization job, plus a per-pair sa⋈sb equi-join +
-    # re-aggregate in the verify. Storing one sorted-distinct shingle ARRAY
-    # per doc keeps the signature build identical (one explode over the
-    # cache), makes sizes a free size(shs) projection, and turns the verify
-    # into size(array_intersect(..)) in whole-stage codegen — one
-    # materialization job and two final-query joins fewer, with the exact
-    # same shingle multiset per doc (array_distinct(transform(...)) is the
-    # identical expression the old LATERAL VIEW exploded). The fresh-call
-    # figure drops because the op now builds 2 caches, not 3.
+    # DOC-GRAIN shingle sets (r17; guide §2.4): one distinct-shingle
+    # ARRAY per doc feeds the signature build (one explode), makes sizes a
+    # free size(shs) projection, and turns the verify into
+    # size(array_intersect(..)) in whole-stage codegen, with the exact same
+    # shingle multiset per doc as the old exploded (doc_id, sh) grain.
+    # The shuffle(array(..)) wrap is the §4.4 single-evaluation pin
+    # (value-identical: the array has one element). Without it Catalyst
+    # falls into a pushdown trap: InferFiltersFromGenerate adds
+    # size(shs) > 0 AND isnotnull(shs) for the candidate build's
+    # explode(shs), and predicate pushdown substitutes the shs and tk
+    # aliases down to the documents scan, where split(text, ' ') is
+    # re-evaluated inside the shingle lambda once per shingle: quadratic
+    # per document. The non-deterministic projection stops the pushdown,
+    # so shs is computed once per doc (plan-pinned in tests/test_plans.py).
     shingle = spark.sql(
         """
-        SELECT doc_id, array_distinct(transform(
+        SELECT doc_id, element_at(shuffle(array(array_distinct(transform(
             sequence(0, size(tk) - 3),
-            i -> concat_ws(' ', tk[i], tk[i+1], tk[i+2]))) AS shs
+            i -> concat_ws(' ', tk[i], tk[i+1], tk[i+2]))))), 1) AS shs
         FROM (SELECT d.doc_id, split(d.text, ' ') AS tk
               FROM documents d
               JOIN (SELECT min(doc_id) AS doc_id FROM documents
                     GROUP BY md5(text)) reps USING (doc_id))
         """
-    ).cache()
-    shingle.createOrReplaceTempView("__mh_sharr")
-    # NO separate materialization job for the shingle cache (r17): the
-    # candidate build below is a PURE aggregation pipeline over this view
-    # (sig agg → band explode → bucket collect → pair distinct — no joins,
-    # so no size-estimate-sensitive strategy choice anywhere in its plan),
-    # and its _materialize_cache count populates BOTH InMemoryRelations in
-    # ONE job. The round-10 planner trap (pre-materialization estimates
-    # force-broadcasting the whole view) lives in the VERIFY query's
-    # joins, which is still planned strictly AFTER the cand count has
-    # materialized both caches with real stats.
+    )
     P = 4294967291  # largest 32-bit prime; a*h+b < 2^57 so no overflow
     minhashes = ",\n".join(
         f"min(({1000003 * (s + 1)} * h + {7919 * s + 271}) % {P}) AS mh{s}"
@@ -323,18 +321,9 @@ def llm_minhash_banding(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         for j in range(5)
     )
-    # cached at the CANDIDATE-PAIR grain (round 12, r11 verdict task #5):
-    # sig build → band explode → bucket collect → pair emission fuse into
-    # ONE cached stage/job, so a warm call replays a few-hundred-row cache
-    # instead of re-running the bucket aggregation every time (the band-view
-    # cache this replaces left ~0.32 s of warm candidate aggregation per
-    # call at sf0.1). Cold cost is identical — the same operators ran to
-    # materialize the band view's first read — and the cache is STRICTLY
-    # smaller (pairs ≪ doc×band rows).
-    # CTE-free on purpose: WITH-CTE definitions are not rewritten by
-    # CacheManager's cached-plan substitution, so the CTE formulation of
-    # this query recomputed the shingle explode per reference instead of
-    # reading the cache (found via SHUFFLES.md accounting, round 4).
+    # Candidate pairs: a PURE aggregation pipeline (sig agg → band explode
+    # → bucket collect → pair distinct), so no strategy choice in it
+    # depends on a size estimate.
     # All 20 min-hashes in ONE aggregation pass: per-row affine mixes
     # fold into map-side partial mins, so the shuffle carries 20
     # columns × n_docs groups, not an exploded (shingle × seed) set.
@@ -347,6 +336,9 @@ def llm_minhash_banding(spark: SparkSession, sf_dir: str) -> DataFrame:
     # degenerate-bucket source — are collapsed to representatives upstream
     # in this very pipeline (round 11), so bucket fan-out tracks DISTINCT
     # near-dup density only.
+    # DataFrame arguments ({shingle}, {cand}) are bound to temp views that
+    # spark.sql drops once the query is analyzed: no session-global view
+    # outlives the call.
     cand = spark.sql(
         f"""
         SELECT DISTINCT p.pr.doc_a, p.pr.doc_b
@@ -362,30 +354,25 @@ def llm_minhash_banding(spark: SparkSession, sf_dir: str) -> DataFrame:
                                      cast(conv(substr(md5(sh), 1, 8), 16, 10)
                                        AS bigint) AS h
                               FROM (SELECT doc_id, explode(shs) AS sh
-                                    FROM __mh_sharr))
+                                    FROM {{shingle}}))
                         GROUP BY doc_id) sig
                       LATERAL VIEW explode(array({band_structs})) AS bs)
                 GROUP BY band_id, band_sig
                 HAVING count(*) > 1)) p
-        """
-    ).cache()
-    cand.createOrReplaceTempView("__mh_cand")
-    # Materialized for real InMemoryRelation stats (same trap as the
-    # shingle cache above): with honest row counts the planner broadcasts
-    # the pair side at sf0.1 and AQE shuffle-joins at the 100x corpus.
-    _materialize_cache(spark, cand)
+        """,
+        shingle=shingle,
+    )
     # Verify (r17 doc-grain form): |A∩B| via array_intersect on the two
-    # cached shingle-set arrays — arrays hold DISTINCT shingles, so
+    # shingle-set arrays — arrays hold DISTINCT shingles, so
     # size(array_intersect) equals the old per-pair equi-join count(*)
-    # exactly, and size(shs) equals the old __mh_sizes count. The
-    # shuffle() wrap is the repo's §4.4 single-evaluation pin: `shared`
+    # exactly, and size(shs) equals the old per-doc shingle count. The
+    # shuffle() wrap is the same §4.4 single-evaluation pin: `shared`
     # feeds the filter AND the jaccard projection, and without the pin
     # Catalyst re-inlines the intersect per reference (the
     # llm_near_dedup_minhash finding, r16; plan-pinned in
     # tests/test_plans.py). No BROADCAST hints anywhere (round 10): AQE
-    # converts these joins to broadcast when the built side is genuinely
-    # small (sf0.1: 254 candidate pairs) and falls back to shuffle joins
-    # at the 100x corpus, where a forced broadcast OOMed at 3.5 GiB.
+    # converts these joins to broadcast only after it has measured a side
+    # as small, and a forced broadcast OOMed at 3.5 GiB at the 100x corpus.
     return spark.sql(
         """
         SELECT doc_a, doc_b,
@@ -395,11 +382,13 @@ def llm_minhash_banding(spark: SparkSession, sf_dir: str) -> DataFrame:
           SELECT c.doc_a, c.doc_b,
                  size(shuffle(array_intersect(sa.shs, sb.shs))) AS shared,
                  size(sa.shs) AS na, size(sb.shs) AS nb
-          FROM __mh_cand c
-          JOIN __mh_sharr sa ON sa.doc_id = c.doc_a
-          JOIN __mh_sharr sb ON sb.doc_id = c.doc_b)
+          FROM {cand} c
+          JOIN {shingle} sa ON sa.doc_id = c.doc_a
+          JOIN {shingle} sb ON sb.doc_id = c.doc_b)
         WHERE cast(shared AS double) / (na + nb - shared) >= 0.2
-        """
+        """,
+        cand=cand,
+        shingle=shingle,
     )
 
 
@@ -1402,9 +1391,9 @@ def llm_containment_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
         """
     ).cache()
     shingle.createOrReplaceTempView("__cb_shingle")
-    # Same planner-statistics discipline as llm_minhash_banding (round 10):
-    # materialize so the verify joins are planned against the cache's REAL
-    # size, not the pre-explode estimate.
+    # Planner-statistics discipline (round 10): materialize so the verify
+    # joins are planned against the cache's REAL size, not the pre-explode
+    # estimate, under which the whole view was force-broadcast.
     _materialize_cache(spark, shingle)
     P = 4294967291  # largest 32-bit prime; a*h+b < 2^57, no 64-bit wrap
     minhashes = ",\n".join(

@@ -89,9 +89,13 @@ def plan_memo(fn: QueryFn) -> QueryFn:
     A repeat caller (a dashboard tick, a dedup service, a steady pass of
     ``perfbench/run.py``) therefore skips re-planning, and AQE serves the
     frame's already-materialized shuffle stages from shuffle files instead
-    of re-running them. Composers that build on a memoized op call its
-    unmemoized body (``__wrapped__``), which stages its own caches before
-    the composer plans against them. The memo is NOT a planning-cost
+    of re-running them. So a memoized op's body caches nothing and launches
+    no job at build (tests/test_plan_memo.py pins this for every memoized
+    op): a cache inside a memoized plan is dropped by ``clearCache()`` and
+    rebuilt in one task inside the result stage on every later hit, while
+    its AQE stages are reused. Composers that build on a memoized op call
+    its unmemoized body (``__wrapped__``), so they leave no memo entry and
+    plan their own fresh DataFrame over it. The memo is NOT a planning-cost
     optimization: Catalyst parse/analyze/optimize/plan takes 10–80 ms,
     1–8% of a fresh headline query (sf0.1, 4-core host); the rest is
     execution. Because repeat collects reuse stages, bench.py unwraps the

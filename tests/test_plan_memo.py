@@ -17,6 +17,7 @@ import pytest
 
 from highspeedrailwaybigdatasystem_spark import registry
 from highspeedrailwaybigdatasystem_spark.registry import all_queries
+from highspeedrailwaybigdatasystem_spark.schemas import ensure_views
 from highspeedrailwaybigdatasystem_spark.sources._scratch import scratch_dir
 from tests.conftest import SF_ORACLE
 
@@ -120,8 +121,7 @@ def test_memo_keyed_on_jvm_session_uuid(spark):
 
 def test_memo_hit_after_clear_cache_runs_no_job(spark):
     """A hit hands back the stored DataFrame and nothing else: even after
-    clearCache() dropped the op's staged caches, looking it up launches no
-    Spark job (rebuilding caches is the op body's job, not the memo's)."""
+    clearCache(), looking it up launches no Spark job."""
     fn = all_queries()["llm_minhash_banding"]
     fn(spark, SF_ORACLE)
     spark.catalog.clearCache()
@@ -135,18 +135,51 @@ def test_memo_hit_after_clear_cache_runs_no_job(spark):
     assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
 
 
-@pytest.mark.parametrize(
-    "op, min_cache_scans",
-    [("llm_dup_partner_degree_dist", 10), ("llm_lsh_tuning_curve", 5)],
+_MEMOIZED = sorted(
+    name
+    for name, fn in all_queries().items()
+    if getattr(fn, "__plan_memo__", False)
 )
-def test_composer_builds_banding_outside_memo(spark, op, min_cache_scans):
-    """Composers over llm_minhash_banding call its unmemoized body, so they
-    leave no banding memo entry, and the body stages its own caches before
-    the composer plans: the executed plan still reads them."""
-    registry._PLAN_MEMO.clear()
+
+
+def _build_jobs(spark, build):
+    """Run ``build()`` under a fresh job group; return (its result, the
+    Spark jobs it launched)."""
+    sc = spark.sparkContext
+    group = f"plan_memo_build_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "plan_memo build")
+    try:
+        df = build()
+        return df, list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+@pytest.mark.parametrize("op", _MEMOIZED)
+def test_memoized_body_stages_nothing(spark, op):
+    """The memo contract: the body of every plan_memo op launches no Spark
+    job at build and its executed plan reads no cache. A cache inside a
+    memoized plan is rebuilt in one task on every hit after clearCache(),
+    while the plan's AQE stages are reused from their shuffle files."""
+    ensure_views(spark, SF_ORACLE)
     spark.catalog.clearCache()
-    df = all_queries()[op](spark, SF_ORACLE)
-    assert not [k for k in registry._PLAN_MEMO if k[0] == "llm_minhash_banding"]
+    df, jobs = _build_jobs(
+        spark, lambda: all_queries()[op].__wrapped__(spark, SF_ORACLE)
+    )
+    assert jobs == [], f"{op}: {len(jobs)} Spark jobs at build"
     df.collect()
     plan = df._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("InMemoryTableScan") >= min_cache_scans, plan
+    assert "InMemoryTableScan" not in plan, plan
+
+
+@pytest.mark.parametrize("op", ["llm_dup_partner_degree_dist", "llm_lsh_tuning_curve"])
+def test_composer_builds_banding_outside_memo(spark, op):
+    """Composers over llm_minhash_banding call its unmemoized body, so they
+    leave no banding memo entry, and that body stages nothing: building
+    the composer launches no Spark job."""
+    registry._PLAN_MEMO.clear()
+    spark.catalog.clearCache()
+    ensure_views(spark, SF_ORACLE)
+    _, jobs = _build_jobs(spark, lambda: all_queries()[op](spark, SF_ORACLE))
+    assert not [k for k in registry._PLAN_MEMO if k[0] == "llm_minhash_banding"]
+    assert jobs == [], f"{op}: {len(jobs)} Spark jobs at build"

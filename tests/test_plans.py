@@ -488,13 +488,12 @@ def test_zorder_layout_is_two_aggs_no_sort(spark):
 def test_cached_stage_substitution_holds(spark):
     """Round-4 finding: WITH-CTE definitions are not rewritten by
     CacheManager's cached-plan substitution, so a CTE query over a cached
-    temp view silently recomputes the staged subtree. The three staged
+    temp view silently recomputes the staged subtree. The two staged
     operators must keep their final queries CTE-free — pinned by requiring
     InMemoryTableScan at every reference."""
     from highspeedrailwaybigdatasystem_spark.registry import all_queries
 
     expected = {
-        "llm_minhash_banding": 5,      # shingle ×5 + band ×2 (≥5 proves both)
         "graph_common_neighbors": 5,   # undirected edges ×5
         "ml_naive_bayes_langid": 6,    # tokenized corpus ×6
     }
@@ -508,6 +507,43 @@ def test_cached_stage_substitution_holds(spark):
         )
         got = plan.count("InMemoryTableScan")
         assert got >= at_least, f"{name}: {got} InMemoryTableScan < {at_least}"
+
+
+def test_minhash_banding_plan_reads_no_cache_and_keeps_shingles_up(spark):
+    """llm_minhash_banding caches nothing (AQE's runtime statistics pick
+    the verify joins' strategy), so its plan has no InMemoryTableScan. The
+    shuffle(array(..)) pin on the shingle array keeps the size(shs) > 0
+    filter inferred for explode(shs) above the shingle projection: a
+    Filter whose condition contains transform( means the shingle lambda
+    was pushed down to the documents scan, where it re-splits the text
+    once per shingle (quadratic per document)."""
+    fresh = _QUERIES["llm_minhash_banding"].__wrapped__
+    df = fresh(spark, SF_ORACLE)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "InMemoryTableScan" not in plan, plan
+    pushed = [
+        line
+        for line in plan.splitlines()
+        if "Filter" in line and "transform(" in line
+    ]
+    assert pushed == [], "\n".join(pushed)
+
+
+def test_minhash_banding_leaves_no_temp_view(spark):
+    """The op passes its intermediate frames to spark.sql as DataFrame
+    arguments, whose temp views are dropped after analysis: a call leaves
+    no session-global view behind (it used to leave __mh_sharr and
+    __mh_cand)."""
+
+    def temp_views():
+        return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+    before = temp_views()
+    _QUERIES["llm_minhash_banding"].__wrapped__(spark, SF_ORACLE)
+    after = temp_views()
+    assert after == before, sorted(after - before)
+    assert not [v for v in after if v.startswith("__mh_")], sorted(after)
 
 
 def test_q21_single_fact_scan(spark):

@@ -82,8 +82,10 @@ def _dedup_cached_blocks(plan: str) -> str:
 
 # Bounded-grain justifications for every op at >=10 deduped exchanges
 # (r6 verdict task #4: each such row must either drop or carry one).
-# Counts are distinct EXECUTED stages — cached-stage builds count once;
-# none of these re-runs a corpus-sized stage per reference.
+# Counts are the static plan's exchanges — cached-stage builds count once,
+# and an uncached subtree counts once per reference even where AQE reuses
+# its exchange at runtime; none of these re-runs a corpus-sized stage per
+# reference.
 _NOTES = {
     "llm_curation_funnel": "r13 collapse: text attrs on one rep per "
     "(text,source) group; exchanges are rep-grain stagelets (5.4 s flat "
@@ -109,8 +111,16 @@ _NOTES = {
     "graph_two_hop_reach": "cached adjacency view; count includes the "
     "cached build's printed repeats — live stages are the degree/2-hop/"
     "exclusion aggs on the vertex grain",
-    "llm_dup_partner_degree_dist": "composes the cached banding pipeline; "
-    "degree stage is one union + histogram agg on the pair set",
+    "llm_minhash_banding": "uncached: the initial plan repeats the "
+    "reps/shingle subtree per reference (candidate build, both verify "
+    "sides); AQE reuses those exchanges at runtime (sf0.01: 5 shuffle "
+    "stages run, 3 reused)",
+    "llm_lsh_tuning_curve": "composes the uncached banding pipeline (see "
+    "its row); the curve itself is 6-row arithmetic on the pair set",
+    "llm_dup_partner_degree_dist": "composes the uncached banding pipeline "
+    "once per pair endpoint; AQE reuses the repeated exchanges (sf0.01: 9 "
+    "shuffle stages run, 4 reused); degree stage is one union + histogram "
+    "agg on the pair set",
     "llm_shingle_size_sensitivity": "three independent shingle-size "
     "pipelines over the collapsed reps (7 exchanges each by design)",
     "llm_tfidf_cosine_pairs": "cached tf/weight stages; exchanges are the "
