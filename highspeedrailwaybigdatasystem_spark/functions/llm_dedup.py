@@ -190,6 +190,102 @@ def llm_near_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_MHP = 4294967291  # largest 32-bit prime; a*h+b < 2^57, no 64-bit wrap
+
+
+def _minhash_frames(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The one Spark-side MinHash-LSH signature pipeline, as three uncached
+    frames: ``shingle`` (doc_id, shs: the doc's distinct 3-shingle array,
+    over one representative per distinct text), ``sig`` (doc_id, mh0..mh19:
+    the 20 affine lanes) and ``cand`` (doc_a < doc_b: the 5x4-band
+    candidate pairs). llm_minhash_banding, llm_containment_banded and
+    llm_minhash_jaccard_estimate each add one verify query over them, so
+    the three ops audit and deploy the same signature bit-for-bit.
+
+    Nothing is cached and no job runs: AQE measures the verify joins'
+    inputs at runtime, and the frames reach every later ``spark.sql`` as
+    DataFrame arguments, whose temp views Spark drops after analysis."""
+    from ..schemas import ensure_views
+
+    ensure_views(spark, sf_dir)
+    # DOC-GRAIN shingle sets (r17; guide §2.4): one distinct-shingle
+    # ARRAY per doc feeds the signature build (one explode), makes sizes a
+    # free size(shs) projection, and turns the verify into
+    # size(array_intersect(..)) in whole-stage codegen, with the exact same
+    # shingle multiset per doc as the old exploded (doc_id, sh) grain.
+    # The shuffle(array(..)) wrap is the §4.4 single-evaluation pin
+    # (value-identical: the array has one element). Without it Catalyst
+    # falls into a pushdown trap: InferFiltersFromGenerate adds
+    # size(shs) > 0 AND isnotnull(shs) for the signature build's
+    # explode(shs), and predicate pushdown substitutes the shs and tk
+    # aliases down to the documents scan, where split(text, ' ') is
+    # re-evaluated inside the shingle lambda once per shingle: quadratic
+    # per document. The non-deterministic projection stops the pushdown,
+    # so shs is computed once per doc (plan-pinned in tests/test_plans.py).
+    shingle = spark.sql(
+        """
+        SELECT doc_id, element_at(shuffle(array(array_distinct(transform(
+            sequence(0, size(tk) - 3),
+            i -> concat_ws(' ', tk[i], tk[i+1], tk[i+2]))))), 1) AS shs
+        FROM (SELECT d.doc_id, split(d.text, ' ') AS tk
+              FROM documents d
+              JOIN (SELECT min(doc_id) AS doc_id FROM documents
+                    GROUP BY md5(text)) reps USING (doc_id))
+        """
+    )
+    # All 20 min-hashes in ONE aggregation pass: per-row affine mixes
+    # fold into map-side partial mins, so the shuffle carries 20
+    # columns × n_docs groups, not an exploded (shingle × seed) set.
+    minhashes = ",\n".join(
+        f"min(({1000003 * (s + 1)} * h + {7919 * s + 271}) % {_MHP}) AS mh{s}"
+        for s in range(20)
+    )
+    sig = spark.sql(
+        f"""
+        SELECT doc_id, {minhashes}
+        FROM (SELECT doc_id,
+                     cast(conv(substr(md5(sh), 1, 8), 16, 10) AS bigint) AS h
+              FROM (SELECT doc_id, explode(shs) AS sh FROM {{shingle}}))
+        GROUP BY doc_id
+        """,
+        shingle=shingle,
+    )
+    band_structs = ", ".join(
+        "struct({j} AS band_id, md5(concat_ws('|', {cols})) AS band_sig)".format(
+            j=j, cols=", ".join(f"cast(mh{4 * j + i} AS string)" for i in range(4))
+        )
+        for j in range(5)
+    )
+    # Candidate pairs: a PURE aggregation pipeline (sig agg → band explode
+    # → bucket collect → pair distinct), so no strategy choice in it
+    # depends on a size estimate. ONE bucket aggregation instead of a band
+    # self-join: collect each (band_id, band_sig) bucket's doc list, emit
+    # ordered pairs with a higher-order transform, DISTINCT across bands
+    # (probed at sf0.1 and amplified sf1: identical 254-pair output, ~15%
+    # faster warm than the join). Grain: pairs-per-bucket is quadratic
+    # either way (that IS the candidate set); exact duplicates — the one
+    # degenerate-bucket source — are collapsed to representatives upstream
+    # (round 11), so bucket fan-out tracks DISTINCT near-dup density only.
+    cand = spark.sql(
+        f"""
+        SELECT DISTINCT p.pr.doc_a, p.pr.doc_b
+        FROM (
+          SELECT explode(flatten(transform(ds, (x, ii) ->
+                   slice(transform(ds, y -> struct(x AS doc_a, y AS doc_b)),
+                         ii + 2, size(ds))))) AS pr
+          FROM (SELECT sort_array(collect_list(doc_id)) AS ds
+                FROM (SELECT doc_id, bs.band_id, bs.band_sig FROM {{sig}}
+                      LATERAL VIEW explode(array({band_structs})) AS bs)
+                GROUP BY band_id, band_sig
+                HAVING count(*) > 1)) p
+        """,
+        sig=sig,
+    )
+    return shingle, sig, cand
+
+
 @register(
     "llm_minhash_banding",
     oracle="""
@@ -265,10 +361,11 @@ def llm_minhash_banding(spark: SparkSession, sf_dir: str) -> DataFrame:
     At production scale xxhash64 would replace md5 as the base hash.
 
     Driver-side construction is a few Py4J calls (memoized corpus views,
-    parse three SQL texts): the Column-op version of this pipeline spent
-    ~0.85 s PER CALL in driver-side DataFrame construction alone (hundreds
-    of JVM round-trips for 20×6 arithmetic Columns), which dominated the
-    sf0.1 wall-clock. The physical plan is identical.
+    parse four SQL texts: three in ``_minhash_frames``, one verify): the
+    Column-op version of this pipeline spent ~0.85 s PER CALL in
+    driver-side DataFrame construction alone (hundreds of JVM round-trips
+    for 20×6 arithmetic Columns), which dominated the sf0.1 wall-clock.
+    The physical plan is identical.
 
     Nothing is cached, so building the op launches no job. The verify
     joins need no cached size statistics: AQE measures their inputs at
@@ -282,86 +379,7 @@ def llm_minhash_banding(spark: SparkSession, sf_dir: str) -> DataFrame:
     stages are reused from their shuffle files. Composers
     (llm_lsh_tuning_curve, llm_dup_partner_degree_dist) call the
     unmemoized body (``llm_minhash_banding.__wrapped__``)."""
-    from ..schemas import ensure_views
-
-    ensure_views(spark, sf_dir)
-    # DOC-GRAIN shingle sets (r17; guide §2.4): one distinct-shingle
-    # ARRAY per doc feeds the signature build (one explode), makes sizes a
-    # free size(shs) projection, and turns the verify into
-    # size(array_intersect(..)) in whole-stage codegen, with the exact same
-    # shingle multiset per doc as the old exploded (doc_id, sh) grain.
-    # The shuffle(array(..)) wrap is the §4.4 single-evaluation pin
-    # (value-identical: the array has one element). Without it Catalyst
-    # falls into a pushdown trap: InferFiltersFromGenerate adds
-    # size(shs) > 0 AND isnotnull(shs) for the candidate build's
-    # explode(shs), and predicate pushdown substitutes the shs and tk
-    # aliases down to the documents scan, where split(text, ' ') is
-    # re-evaluated inside the shingle lambda once per shingle: quadratic
-    # per document. The non-deterministic projection stops the pushdown,
-    # so shs is computed once per doc (plan-pinned in tests/test_plans.py).
-    shingle = spark.sql(
-        """
-        SELECT doc_id, element_at(shuffle(array(array_distinct(transform(
-            sequence(0, size(tk) - 3),
-            i -> concat_ws(' ', tk[i], tk[i+1], tk[i+2]))))), 1) AS shs
-        FROM (SELECT d.doc_id, split(d.text, ' ') AS tk
-              FROM documents d
-              JOIN (SELECT min(doc_id) AS doc_id FROM documents
-                    GROUP BY md5(text)) reps USING (doc_id))
-        """
-    )
-    P = 4294967291  # largest 32-bit prime; a*h+b < 2^57 so no overflow
-    minhashes = ",\n".join(
-        f"min(({1000003 * (s + 1)} * h + {7919 * s + 271}) % {P}) AS mh{s}"
-        for s in range(20)
-    )
-    band_structs = ", ".join(
-        "struct({j} AS band_id, md5(concat_ws('|', {cols})) AS band_sig)".format(
-            j=j, cols=", ".join(f"cast(mh{4 * j + i} AS string)" for i in range(4))
-        )
-        for j in range(5)
-    )
-    # Candidate pairs: a PURE aggregation pipeline (sig agg → band explode
-    # → bucket collect → pair distinct), so no strategy choice in it
-    # depends on a size estimate.
-    # All 20 min-hashes in ONE aggregation pass: per-row affine mixes
-    # fold into map-side partial mins, so the shuffle carries 20
-    # columns × n_docs groups, not an exploded (shingle × seed) set.
-    # Candidate generation via ONE bucket aggregation instead of a band
-    # self-join: collect each (band_id, band_sig) bucket's doc list, emit
-    # ordered pairs with a higher-order transform, DISTINCT across bands
-    # (probed at sf0.1 and amplified sf1: identical 254-pair output, ~15%
-    # faster warm than the join). Grain: pairs-per-bucket is quadratic
-    # either way (that IS the candidate set); exact duplicates — the one
-    # degenerate-bucket source — are collapsed to representatives upstream
-    # in this very pipeline (round 11), so bucket fan-out tracks DISTINCT
-    # near-dup density only.
-    # DataFrame arguments ({shingle}, {cand}) are bound to temp views that
-    # spark.sql drops once the query is analyzed: no session-global view
-    # outlives the call.
-    cand = spark.sql(
-        f"""
-        SELECT DISTINCT p.pr.doc_a, p.pr.doc_b
-        FROM (
-          SELECT explode(flatten(transform(ds, (x, ii) ->
-                   slice(transform(ds, y -> struct(x AS doc_a, y AS doc_b)),
-                         ii + 2, size(ds))))) AS pr
-          FROM (SELECT sort_array(collect_list(doc_id)) AS ds
-                FROM (SELECT doc_id, bs.band_id, bs.band_sig
-                      FROM (
-                        SELECT doc_id, {minhashes}
-                        FROM (SELECT doc_id,
-                                     cast(conv(substr(md5(sh), 1, 8), 16, 10)
-                                       AS bigint) AS h
-                              FROM (SELECT doc_id, explode(shs) AS sh
-                                    FROM {{shingle}}))
-                        GROUP BY doc_id) sig
-                      LATERAL VIEW explode(array({band_structs})) AS bs)
-                GROUP BY band_id, band_sig
-                HAVING count(*) > 1)) p
-        """,
-        shingle=shingle,
-    )
+    shingle, _, cand = _minhash_frames(spark, sf_dir)
     # Verify (r17 doc-grain form): |A∩B| via array_intersect on the two
     # shingle-set arrays — arrays hold DISTINCT shingles, so
     # size(array_intersect) equals the old per-pair equi-join count(*)
@@ -1364,8 +1382,9 @@ def llm_containment_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
        the duplicate-multiplicity blowup that made the anchor quadratic
        (20x at 10x data on a 90%-exact-dup corpus).
     2. MinHash-LSH banding over representatives only — the
-       ``llm_minhash_banding`` layout (one md5 + 20 affine integer lanes
-       per shingle, 5x4 bands, band-bucket self-join) — feeding the exact
+       ``llm_minhash_banding`` signature and candidates
+       (``_minhash_frames``: one md5 + 20 affine integer lanes per
+       shingle, 5x4 bands, band-bucket collect) — feeding the exact
        containment verify at >= 0.2.
 
     Documented recall tradeoff vs the anchor: minhash banding is tuned for
@@ -1374,78 +1393,26 @@ def llm_containment_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     exhaustive-within-source form as the semantic oracle. Deterministic
     end-to-end — DuckDB replicates the affine signature bit-for-bit (all
     arithmetic < 2^57), so the twin stays exactly hash-checkable."""
-    from ..schemas import ensure_views
-
-    ensure_views(spark, sf_dir)
-    # cached: sizes + signature build + both sides of the containment verify
-    shingle = spark.sql(
-        """
-        SELECT doc_id, sh
-        FROM (SELECT d.doc_id, split(d.text, ' ') AS tk
-              FROM documents d
-              JOIN (SELECT min(doc_id) AS doc_id FROM documents
-                    GROUP BY md5(text)) reps USING (doc_id))
-        LATERAL VIEW explode(array_distinct(transform(
-            sequence(0, size(tk) - 3),
-            i -> concat_ws(' ', tk[i], tk[i+1], tk[i+2])))) AS sh
-        """
-    ).cache()
-    shingle.createOrReplaceTempView("__cb_shingle")
-    # Planner-statistics discipline (round 10): materialize so the verify
-    # joins are planned against the cache's REAL size, not the pre-explode
-    # estimate, under which the whole view was force-broadcast.
-    _materialize_cache(spark, shingle)
-    P = 4294967291  # largest 32-bit prime; a*h+b < 2^57, no 64-bit wrap
-    minhashes = ",\n".join(
-        f"min(({1000003 * (s + 1)} * h + {7919 * s + 271}) % {P}) AS mh{s}"
-        for s in range(20)
-    )
-    band_structs = ", ".join(
-        "struct({j} AS band_id, md5(concat_ws('|', {cols})) AS band_sig)".format(
-            j=j, cols=", ".join(f"cast(mh{4 * j + i} AS string)" for i in range(4))
-        )
-        for j in range(5)
-    )
-    # CTE-free below the cache points: WITH-CTE references are not rewritten
-    # by CacheManager's cached-plan substitution (round-4 finding), so every
-    # stage reads the cached views directly. All 20 lanes fold in ONE
-    # aggregation pass — the shuffle carries 20 columns x n_reps, never
-    # shingle x seed.
-    band = spark.sql(
-        f"""
-        SELECT doc_id, bs.band_id, bs.band_sig
-        FROM (
-          SELECT doc_id, {minhashes}
-          FROM (SELECT doc_id,
-                       cast(conv(substr(md5(sh), 1, 8), 16, 10) AS bigint) AS h
-                FROM __cb_shingle)
-          GROUP BY doc_id) sig
-        LATERAL VIEW explode(array({band_structs})) AS bs
-        """
-    ).cache()
-    band.createOrReplaceTempView("__cb_band")
+    shingle, _, cand = _minhash_frames(spark, sf_dir)
+    # Same doc-grain verify and single-evaluation pin as the banding op,
+    # with the smaller doc's shingle count as the denominator.
     return spark.sql(
         """
-        SELECT s.doc_a, s.doc_b,
-               round(cast(s.shared_cnt AS double) / least(za.n, zb.n), 6)
-                 AS containment
+        SELECT doc_a, doc_b,
+               round(cast(shared AS double) / least(na, nb), 6) AS containment
         FROM (
-          SELECT c.doc_a, c.doc_b, count(*) AS shared_cnt
-          FROM (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-                FROM __cb_band a JOIN __cb_band b
-                  ON a.band_id = b.band_id AND a.band_sig = b.band_sig
-                 AND a.doc_id < b.doc_id) c
-          JOIN __cb_shingle sa ON sa.doc_id = c.doc_a
-          JOIN __cb_shingle sb ON sb.doc_id = c.doc_b AND sa.sh = sb.sh
-          GROUP BY c.doc_a, c.doc_b) s
-        JOIN (SELECT doc_id, count(*) AS n FROM __cb_shingle GROUP BY doc_id) za
-          ON za.doc_id = s.doc_a
-        JOIN (SELECT doc_id, count(*) AS n FROM __cb_shingle GROUP BY doc_id) zb
-          ON zb.doc_id = s.doc_b
-        WHERE cast(s.shared_cnt AS double) / least(za.n, zb.n) >= 0.2
-        ORDER BY containment DESC, s.doc_a, s.doc_b
+          SELECT c.doc_a, c.doc_b,
+                 size(shuffle(array_intersect(sa.shs, sb.shs))) AS shared,
+                 size(sa.shs) AS na, size(sb.shs) AS nb
+          FROM {cand} c
+          JOIN {shingle} sa ON sa.doc_id = c.doc_a
+          JOIN {shingle} sb ON sb.doc_id = c.doc_b)
+        WHERE cast(shared AS double) / least(na, nb) >= 0.2
+        ORDER BY containment DESC, doc_a, doc_b
         LIMIT 100
-        """
+        """,
+        cand=cand,
+        shingle=shingle,
     )
 
 
@@ -1636,68 +1603,38 @@ def llm_prefix_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sql_q(spark, sf_dir, _PREFIX_DUP_SQL)
 
 
-_MHP = 4294967291  # same 32-bit-prime affine family as llm_minhash_banding
-
-
-def _mh_est_sql(dialect: str) -> str:
-    """MinHash estimate-vs-exact SQL in either engine's dialect. The lane
-    constants are IDENTICAL to llm_minhash_banding's, so this op audits
-    the exact signature family the production near-dedup runs — including
-    its round-11 exact-collapse (one representative per distinct text),
-    which also keeps the audited candidate-pair population a function of
+def _mh_est_sql() -> str:
+    """MinHash estimate-vs-exact oracle (DuckDB). The lane constants are
+    IDENTICAL to llm_minhash_banding's, so this op audits the exact
+    signature family the production near-dedup runs — including its
+    round-11 exact-collapse (one representative per distinct text), which
+    also keeps the audited candidate-pair population a function of
     DISTINCT content (uncollapsed, the 100x verbatim-duplicate corpus made
     the pair set copies²-large: sweep TIMEOUT)."""
-    if dialect == "spark":
-        shingle = (
-            "SELECT doc_id, sh"
-            " FROM (SELECT d.doc_id, split(d.text, ' ') AS tk"
-            " FROM documents d"
-            " JOIN (SELECT min(doc_id) AS doc_id FROM documents"
-            " GROUP BY md5(text)) reps USING (doc_id))"
-            " LATERAL VIEW explode(array_distinct(transform("
-            "sequence(0, size(tk) - 3),"
-            " i -> concat_ws(' ', tk[i], tk[i+1], tk[i+2])))) AS sh"
-        )
-        base_hash = "cast(conv(substr(md5(sh), 1, 8), 16, 10) AS BIGINT)"
-    else:
-        shingle = (
-            "SELECT DISTINCT d.doc_id,"
-            " unnest(list_transform(generate_series(1, len(tk) - 2),"
-            " i -> concat_ws(' ', tk[i], tk[i+1], tk[i+2]))) AS sh"
-            " FROM (SELECT dd.doc_id, string_split(dd.text, ' ') AS tk"
-            " FROM documents dd"
-            " JOIN (SELECT min(doc_id) AS doc_id FROM documents"
-            " GROUP BY md5(text)) reps USING (doc_id)) d"
-        )
-        base_hash = "CAST(('0x' || substr(md5(sh), 1, 8)) AS BIGINT)"
+    shingle = (
+        "SELECT DISTINCT d.doc_id,"
+        " unnest(list_transform(generate_series(1, len(tk) - 2),"
+        " i -> concat_ws(' ', tk[i], tk[i+1], tk[i+2]))) AS sh"
+        " FROM (SELECT dd.doc_id, string_split(dd.text, ' ') AS tk"
+        " FROM documents dd"
+        " JOIN (SELECT min(doc_id) AS doc_id FROM documents"
+        " GROUP BY md5(text)) reps USING (doc_id)) d"
+    )
+    base_hash = "CAST(('0x' || substr(md5(sh), 1, 8)) AS BIGINT)"
     lanes = ",\n             ".join(
         f"min(({1000003 * (s + 1)} * h + {7919 * s + 271}) % {_MHP}) AS mh{s}"
         for s in range(20)
     )
-    if dialect == "spark":
-        band = (
-            "SELECT doc_id, bs.band_id, bs.band_sig FROM sig"
-            " LATERAL VIEW explode(array("
-            + ", ".join(
-                "struct({j} AS band_id, md5(concat_ws('|', {cols})) AS band_sig)".format(
-                    j=j,
-                    cols=", ".join(f"cast(mh{4 * j + i} AS string)" for i in range(4)),
-                )
-                for j in range(5)
-            )
-            + ")) AS bs"
-        )
-    else:
-        band = (
-            "SELECT doc_id, CAST(seed // 4 AS INT) AS band_id,"
-            " md5(string_agg(CAST(mh AS VARCHAR), '|' ORDER BY seed)) AS band_sig"
-            " FROM (SELECT doc_id, u.seed,"
-            " CASE u.seed "
-            + " ".join(f"WHEN {s} THEN mh{s}" for s in range(20))
-            + " END AS mh FROM sig CROSS JOIN"
-            " (SELECT unnest(generate_series(0, 19)) AS seed) u)"
-            " GROUP BY doc_id, seed // 4"
-        )
+    band = (
+        "SELECT doc_id, CAST(seed // 4 AS INT) AS band_id,"
+        " md5(string_agg(CAST(mh AS VARCHAR), '|' ORDER BY seed)) AS band_sig"
+        " FROM (SELECT doc_id, u.seed,"
+        " CASE u.seed "
+        + " ".join(f"WHEN {s} THEN mh{s}" for s in range(20))
+        + " END AS mh FROM sig CROSS JOIN"
+        " (SELECT unnest(generate_series(0, 19)) AS seed) u)"
+        " GROUP BY doc_id, seed // 4"
+    )
     agree = " + ".join(
         f"(CASE WHEN a.mh{s} = b.mh{s} THEN 1 ELSE 0 END)" for s in range(20)
     )
@@ -1742,7 +1679,7 @@ def _mh_est_sql(dialect: str) -> str:
     """
 
 
-@register("llm_minhash_jaccard_estimate", oracle=_mh_est_sql("duck"))
+@register("llm_minhash_jaccard_estimate", oracle=_mh_est_sql())
 def llm_minhash_jaccard_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Estimator-quality audit for the production MinHash family: for every
     LSH band candidate pair, the 20-lane signature-agreement Jaccard
@@ -1754,116 +1691,54 @@ def llm_minhash_jaccard_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     20 small ints per row; exact verify touches shingles only for the
     candidate set (LSH-bounded, linear in true-dup density).
 
-    Plan note (r6 verdict task #4): the corpus-sized shingle explode was
-    referenced 4× and the signature aggregate 3× through the shared CTE
-    (11 exchanges); shingle, signature and candidate-pair stages are now
-    cached temp views (the llm_minhash_banding discipline) —
-    `_mh_est_sql('duck')` stays oracle-only."""
-    from ..schemas import ensure_views
-
-    ensure_views(spark, sf_dir)
-    sh = spark.sql(
-        "SELECT doc_id, sh"
-        " FROM (SELECT d.doc_id, split(d.text, ' ') AS tk"
-        " FROM documents d"
-        " JOIN (SELECT min(doc_id) AS doc_id FROM documents"
-        " GROUP BY md5(text)) reps USING (doc_id))"
-        " LATERAL VIEW explode(array_distinct(transform("
-        "sequence(0, size(tk) - 3),"
-        " i -> concat_ws(' ', tk[i], tk[i+1], tk[i+2])))) AS sh"
-    ).cache()
-    sh.createOrReplaceTempView("__mhe_sh")
-    lanes = ", ".join(
-        f"min(({1000003 * (s + 1)} * h + {7919 * s + 271}) % {_MHP}) AS mh{s}"
-        for s in range(20)
-    )
-    sig = spark.sql(
-        f"SELECT doc_id, {lanes} FROM (SELECT doc_id,"
-        " cast(conv(substr(md5(sh), 1, 8), 16, 10) AS BIGINT) AS h"
-        " FROM __mhe_sh) GROUP BY doc_id"
-    ).cache()
-    sig.createOrReplaceTempView("__mhe_sig")
-    band = (
-        "SELECT doc_id, bs.band_id, bs.band_sig FROM __mhe_sig"
-        " LATERAL VIEW explode(array("
-        + ", ".join(
-            "struct({j} AS band_id, md5(concat_ws('|', {cols})) AS band_sig)".format(
-                j=j,
-                cols=", ".join(f"cast(mh{4 * j + i} AS string)" for i in range(4)),
-            )
-            for j in range(5)
-        )
-        + ")) AS bs"
-    )
-    cand = spark.sql(
-        f"SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b"
-        f" FROM ({band}) x JOIN ({band}) y"
-        " ON x.band_id = y.band_id AND x.band_sig = y.band_sig"
-        " AND x.doc_id < y.doc_id"
-    ).cache()
-    cand.createOrReplaceTempView("__mhe_cand")
-    # Planner-statistics discipline (round 10, llm_minhash_banding note):
-    # materialize every corpus-derived cache BEFORE the final query is
-    # planned, so the verify/estimate joins see REAL sizes — the
-    # unmaterialized estimates broadcast the shingle view and the pair
-    # set, a broadcast OOM at the 100x corpus.
-    _materialize_cache(spark, sh, sig, cand)
+    Shingles, signatures and candidates come from ``_minhash_frames``;
+    the one query below verifies each candidate like the banding op and
+    joins both docs' signatures for the agreement count."""
+    shingle, sig, cand = _minhash_frames(spark, sf_dir)
     agree = " + ".join(
         f"(CASE WHEN a.mh{s} = b.mh{s} THEN 1 ELSE 0 END)" for s in range(20)
     )
     return spark.sql(
         f"""
-        SELECT i.doc_a, i.doc_b,
-               round(e.est_j, 6) AS est_jaccard,
-               round(CAST(i.shared AS DOUBLE) / (za.n + zb.n - i.shared), 6)
-                 AS exact_jaccard,
-               round(abs(e.est_j
-                         - CAST(i.shared AS DOUBLE)
-                           / (za.n + zb.n - i.shared)), 6) AS abs_err
-        FROM (SELECT c.doc_a, c.doc_b, count(*) AS shared
-              FROM __mhe_cand c
-              JOIN __mhe_sh sa ON sa.doc_id = c.doc_a
-              JOIN __mhe_sh sb ON sb.doc_id = c.doc_b AND sa.sh = sb.sh
-              GROUP BY c.doc_a, c.doc_b) i
-        JOIN (SELECT c.doc_a, c.doc_b, CAST(({agree}) AS DOUBLE) / 20 AS est_j
-              FROM __mhe_cand c
-              JOIN __mhe_sig a ON a.doc_id = c.doc_a
-              JOIN __mhe_sig b ON b.doc_id = c.doc_b) e
-          ON e.doc_a = i.doc_a AND e.doc_b = i.doc_b
-        JOIN (SELECT doc_id, count(*) AS n FROM __mhe_sh GROUP BY doc_id) za
-          ON za.doc_id = i.doc_a
-        JOIN (SELECT doc_id, count(*) AS n FROM __mhe_sh GROUP BY doc_id) zb
-          ON zb.doc_id = i.doc_b
-        WHERE CAST(i.shared AS DOUBLE) / (za.n + zb.n - i.shared) >= 0.2
-        ORDER BY exact_jaccard DESC, i.doc_a, i.doc_b
-        """
+        SELECT doc_a, doc_b,
+               round(est_j, 6) AS est_jaccard,
+               round(j, 6) AS exact_jaccard,
+               round(abs(est_j - j), 6) AS abs_err
+        FROM (
+          SELECT v.doc_a, v.doc_b, v.j,
+                 CAST(({agree}) AS DOUBLE) / 20 AS est_j
+          FROM (
+            SELECT doc_a, doc_b, cast(shared AS double) / (na + nb - shared) AS j
+            FROM (
+              SELECT c.doc_a, c.doc_b,
+                     size(shuffle(array_intersect(sa.shs, sb.shs))) AS shared,
+                     size(sa.shs) AS na, size(sb.shs) AS nb
+              FROM {{cand}} c
+              JOIN {{shingle}} sa ON sa.doc_id = c.doc_a
+              JOIN {{shingle}} sb ON sb.doc_id = c.doc_b)
+            WHERE cast(shared AS double) / (na + nb - shared) >= 0.2) v
+          JOIN {{sig}} a ON a.doc_id = v.doc_a
+          JOIN {{sig}} b ON b.doc_id = v.doc_b)
+        ORDER BY exact_jaccard DESC, doc_a, doc_b
+        """,
+        cand=cand,
+        shingle=shingle,
+        sig=sig,
     )
 
 
-def _idf_jaccard_sql(dialect: str) -> str:
+def _idf_jaccard_sql() -> str:
     # EXACT-COLLAPSE FIRST (round 11): one representative per distinct
-    # text before shingling, both dialects — see llm_minhash_banding.
-    if dialect == "spark":
-        shingle = (
-            "SELECT doc_id, source, sh"
-            " FROM (SELECT d.doc_id, d.source, split(d.text, ' ') AS tk"
-            " FROM documents d"
-            " JOIN (SELECT min(doc_id) AS doc_id FROM documents"
-            " GROUP BY md5(text)) reps USING (doc_id))"
-            " LATERAL VIEW explode(array_distinct(transform("
-            "sequence(0, size(tk) - 3),"
-            " i -> concat_ws(' ', tk[i], tk[i+1], tk[i+2])))) AS sh"
-        )
-    else:
-        shingle = (
-            "SELECT DISTINCT d.doc_id, d.source,"
-            " unnest(list_transform(generate_series(1, len(tk) - 2),"
-            " i -> concat_ws(' ', tk[i], tk[i+1], tk[i+2]))) AS sh"
-            " FROM (SELECT dd.doc_id, dd.source, string_split(dd.text, ' ') AS tk"
-            " FROM documents dd"
-            " JOIN (SELECT min(doc_id) AS doc_id FROM documents"
-            " GROUP BY md5(text)) reps USING (doc_id)) d"
-        )
+    # text before shingling, as in llm_minhash_banding.
+    shingle = (
+        "SELECT DISTINCT d.doc_id, d.source,"
+        " unnest(list_transform(generate_series(1, len(tk) - 2),"
+        " i -> concat_ws(' ', tk[i], tk[i+1], tk[i+2]))) AS sh"
+        " FROM (SELECT dd.doc_id, dd.source, string_split(dd.text, ' ') AS tk"
+        " FROM documents dd"
+        " JOIN (SELECT min(doc_id) AS doc_id FROM documents"
+        " GROUP BY md5(text)) reps USING (doc_id)) d"
+    )
     return f"""
     WITH shingle AS ({shingle}),
     nn AS (SELECT CAST(count(DISTINCT doc_id) AS DOUBLE) AS n FROM shingle),
@@ -1891,7 +1766,7 @@ def _idf_jaccard_sql(dialect: str) -> str:
     """
 
 
-@register("llm_idf_weighted_jaccard", oracle=_idf_jaccard_sql("duck"))
+@register("llm_idf_weighted_jaccard", oracle=_idf_jaccard_sql())
 def llm_idf_weighted_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IDF-weighted shingle Jaccard for same-source doc pairs: rare
     shingles dominate the similarity, so boilerplate shared by everything
@@ -1911,7 +1786,7 @@ def llm_idf_weighted_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     and was referenced 5× through the shared CTE (14 exchanges, each
     reference re-running the explode); the shingle, |vocab|-grain idf
     and doc-grain weight-sum stages are now cached temp views read via
-    InMemoryTableScan — `_idf_jaccard_sql('duck')` stays oracle-only."""
+    InMemoryTableScan — `_idf_jaccard_sql()` stays oracle-only."""
     from ..schemas import ensure_views
 
     ensure_views(spark, sf_dir)
@@ -2327,33 +2202,19 @@ def _simhash_code_sql(h_expr: str) -> str:
     )
 
 
-def _simfp_sql(dialect: str) -> str:
-    if dialect == "spark":
-        tokrows = (
-            "SELECT doc_id, source, token FROM (SELECT doc_id, source,"
-            " explode(split(text, ' ')) AS token FROM reps)"
-        )
-        h = "cast(conv(substr(md5(token), 1, 8), 16, 10) AS BIGINT)"
-        sh3 = (
-            "SELECT doc_id, g FROM (SELECT doc_id, split(text, ' ') AS tk"
-            " FROM reps) LATERAL VIEW explode(array_distinct(transform("
-            "sequence(0, size(tk) - 3),"
-            " i -> concat_ws(' ', tk[i], tk[i+1], tk[i+2])))) AS g"
-            " WHERE size(tk) >= 3"
-        )
-    else:
-        tokrows = (
-            "SELECT doc_id, source, unnest(string_split(text, ' ')) AS token"
-            " FROM reps"
-        )
-        h = "CAST(('0x' || substr(md5(token), 1, 8)) AS BIGINT)"
-        sh3 = (
-            "SELECT DISTINCT doc_id,"
-            " unnest(list_transform(generate_series(1, len(tk) - 2),"
-            " i -> concat_ws(' ', tk[i], tk[i+1], tk[i+2]))) AS g"
-            " FROM (SELECT doc_id, string_split(text, ' ') AS tk"
-            " FROM reps) t WHERE len(tk) >= 3"
-        )
+def _simfp_sql() -> str:
+    tokrows = (
+        "SELECT doc_id, source, unnest(string_split(text, ' ')) AS token"
+        " FROM reps"
+    )
+    h = "CAST(('0x' || substr(md5(token), 1, 8)) AS BIGINT)"
+    sh3 = (
+        "SELECT DISTINCT doc_id,"
+        " unnest(list_transform(generate_series(1, len(tk) - 2),"
+        " i -> concat_ws(' ', tk[i], tk[i+1], tk[i+2]))) AS g"
+        " FROM (SELECT doc_id, string_split(text, ' ') AS tk"
+        " FROM reps) t WHERE len(tk) >= 3"
+    )
     ham = " + ".join(
         f"abs(CAST(floor(a.sim / {1 << b}) AS BIGINT) % 2"
         f" - CAST(floor(b.sim / {1 << b}) AS BIGINT) % 2)"
@@ -2411,7 +2272,7 @@ def _simfp_sql(dialect: str) -> str:
     """
 
 
-@register("llm_simhash_fp_audit", oracle=_simfp_sql("duck"))
+@register("llm_simhash_fp_audit", oracle=_simfp_sql())
 def llm_simhash_fp_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Estimator-quality audit for the SimHash family (the
     llm_minhash_jaccard_estimate discipline applied to the OTHER
@@ -2515,31 +2376,20 @@ def llm_simhash_fp_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _shsens_sql(dialect: str) -> str:
+def _shsens_sql() -> str:
     """Same-source near-dup pair counts at shingle sizes 2/3/5 over the
-    exact-collapsed corpus, in either dialect."""
+    exact-collapsed corpus (DuckDB oracle)."""
     parts = []
     for n in (2, 3, 5):
-        if dialect == "spark":
-            sh = (
-                f"SELECT doc_id, source, g FROM (SELECT doc_id, source,"
-                f" split(text, ' ') AS tk FROM reps)"
-                f" LATERAL VIEW explode(array_distinct(transform("
-                f"sequence(0, size(tk) - {n}),"
-                f" i -> concat_ws(' ', "
-                + ", ".join(f"tk[i+{j}]" for j in range(n))
-                + f")))) AS g WHERE size(tk) >= {n}"
-            )
-        else:
-            sh = (
-                f"SELECT DISTINCT doc_id, source,"
-                f" unnest(list_transform(generate_series(1, len(tk) - {n - 1}),"
-                f" i -> concat_ws(' ', "
-                + ", ".join(f"tk[i+{j}]" for j in range(n))
-                + f"))) AS g FROM (SELECT doc_id, source,"
-                f" string_split(text, ' ') AS tk FROM reps) t"
-                f" WHERE len(tk) >= {n}"
-            )
+        sh = (
+            f"SELECT DISTINCT doc_id, source,"
+            f" unnest(list_transform(generate_series(1, len(tk) - {n - 1}),"
+            f" i -> concat_ws(' ', "
+            + ", ".join(f"tk[i+{j}]" for j in range(n))
+            + f"))) AS g FROM (SELECT doc_id, source,"
+            f" string_split(text, ' ') AS tk FROM reps) t"
+            f" WHERE len(tk) >= {n}"
+        )
         parts.append(
             f"""
     SELECT {n} AS shingle_n,
@@ -2568,7 +2418,7 @@ def _shsens_sql(dialect: str) -> str:
     """
 
 
-@register("llm_shingle_size_sensitivity", oracle=_shsens_sql("duck"))
+@register("llm_shingle_size_sensitivity", oracle=_shsens_sql())
 def llm_shingle_size_sensitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shingle-size sensitivity sweep for the near-dup family: the
     number of same-source pairs at exact Jaccard >= 0.5 and their mean

@@ -121,7 +121,7 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def _materialize_cache(spark: SparkSession, *dfs: DataFrame) -> None:
     """count() each cached DataFrame whose in-memory buffers are NOT yet
     built, so downstream queries are planned against the cache's REAL
-    InMemoryRelation statistics (see llm_containment_banded's shingle
+    InMemoryRelation statistics (see llm_idf_weighted_jaccard's shingle
     cache: unmaterialized cached explodes carry pre-explode size
     estimates, under which Catalyst force-broadcasts the whole view, a
     3.5 GiB OOM at the 100x corpus in round 10). Gating on the actual

@@ -111,21 +111,9 @@ def plan_memo(fn: QueryFn) -> QueryFn:
 
     @functools.wraps(fn)
     def wrapper(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from .schemas import _events_fingerprint
+        from .schemas import session_corpus_key
 
-        # Session identity: the JVM session's UUID, not id() of the py4j
-        # proxy. Two Python wrappers of one JVM session share a UUID (the
-        # memo hits, as it should); a stopped session's UUID is never
-        # reused (no stale entry can resurface on a new session whose
-        # proxy happens to land at the same id()). applicationId alone
-        # would alias sibling newSession() clones, whose conf/temp-view
-        # state may differ.
-        key = (
-            fn.__name__,
-            str(spark._jsparkSession.sessionUUID()),
-            sf_dir,
-            _events_fingerprint(sf_dir),
-        )
+        key = (fn.__name__, *session_corpus_key(spark, sf_dir))
         hit = _PLAN_MEMO.get(key)
         if hit is None:
             if len(_PLAN_MEMO) > 64:

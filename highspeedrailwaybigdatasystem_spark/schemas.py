@@ -219,11 +219,22 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
         load(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
-#: (session JVM id) → (sf_dir, events fingerprint) currently registered by
-#: ensure_views. Keyed on the underlying Java session object id so a stopped
-#: and rebuilt SparkSession (fresh catalog, same Python id reuse possible)
-#: never reads a stale entry.
-_VIEWS_REGISTERED: dict[int, tuple[str, tuple[str, int, int]]] = {}
+def session_corpus_key(spark: SparkSession, sf_dir: str) -> tuple:
+    """(session identity, corpus fingerprint): the key of every
+    per-session corpus memo (``ensure_views``, ``registry.plan_memo``).
+
+    Session identity is the JVM session's UUID, not id() of the py4j
+    proxy: two Python wrappers of one JVM session share a UUID, and a
+    stopped session's UUID is never reused, while CPython reuses a freed
+    proxy's id() for the next session. applicationId alone would alias
+    sibling newSession() clones, whose conf/temp-view state may differ.
+    The fingerprint covers every parquet file under ``sf_dir``, so any
+    table rewritten in place changes the key."""
+    return (str(spark._jsparkSession.sessionUUID()), _events_fingerprint(sf_dir))
+
+
+#: session UUID → corpus fingerprint currently registered by ensure_views.
+_VIEWS_REGISTERED: dict[str, tuple[str, int, int]] = {}
 
 
 def ensure_views(spark: SparkSession, sf_dir: str) -> None:
@@ -232,15 +243,14 @@ def ensure_views(spark: SparkSession, sf_dir: str) -> None:
     A ``spark.read.schema(...).parquet(...)`` round-trip costs 25–55 ms of
     driver time per table; ops that re-register all ten views on every call
     were paying ~0.5 s of pure Py4J overhead. One registration per
-    (session, sf_dir) amortizes that to zero on warm paths. The key
-    includes the events-corpus fingerprint (path, mtime, size) so an
-    in-place corpus regeneration invalidates the memo and re-registers
-    (and re-checks) instead of serving stale views. Re-registers when the
-    same session switches sf_dir (plain view names hold one corpus at a
-    time — exactly the driver/mirror/pytest usage).
+    (session, corpus) amortizes that to zero on warm paths. The key is
+    ``session_corpus_key``: an in-place rewrite of any table invalidates
+    the memo and re-registers (and re-checks) instead of serving stale
+    views, and so does switching the same session to another sf_dir
+    (plain view names hold one corpus at a time — exactly the
+    driver/mirror/pytest usage).
     """
-    key = id(spark._jsparkSession)
-    state = (sf_dir, _events_fingerprint(f"{sf_dir}/events.parquet"))
-    if _VIEWS_REGISTERED.get(key) != state:
+    session, corpus = session_corpus_key(spark, sf_dir)
+    if _VIEWS_REGISTERED.get(session) != corpus:
         register_views(spark, sf_dir)
-        _VIEWS_REGISTERED[key] = state
+        _VIEWS_REGISTERED[session] = corpus

@@ -21,9 +21,8 @@ def synthetic_sf(**overrides: pd.DataFrame) -> str:
     """A fresh sf_dir: each override (``documents=``, ``events=``, ...)
     written as parquet, every other corpus table symlinked from sf0.001 so
     register_views sees all ten. A new directory per call (per hypothesis
-    example) — ensure_views keys the memo on (sf_dir, events fingerprint),
-    so reusing a path would serve stale views when only documents
-    changed."""
+    example), so no view or plan memo entry can carry over from one
+    example to the next."""
     from highspeedrailwaybigdatasystem_spark.schemas import TABLE_NAMES
 
     d = tempfile.mkdtemp(prefix="prop_sf_")

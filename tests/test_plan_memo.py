@@ -71,6 +71,29 @@ def test_memo_invalidates_on_corpus_fingerprint_change(spark):
     assert fresh.count() >= n_small
 
 
+def test_ensure_views_sees_any_table_rewritten_in_place(spark):
+    """ensure_views keys its memo like plan_memo (session UUID, fingerprint
+    of every parquet file under sf_dir): rewriting region.parquet in place
+    must re-register its view. A stale view keeps the old file listing,
+    whose shorter length drops the rewritten file's later row groups."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d = scratch_dir("ensure_views_corpus")
+    shutil.rmtree(d, ignore_errors=True)
+    shutil.copytree(SF_SMOKE, d)
+    ensure_views(spark, d)
+    n = spark.table("region").count()
+    path = os.path.join(d, "region.parquet")
+    pq.write_table(
+        pa.concat_tables([pq.read_table(path)] * 400), path, row_group_size=100
+    )
+    ensure_views(spark, d)
+    assert spark.table("region").count() == 400 * n
+
+
 def test_memo_only_on_pure_ops():
     """plan_memo must never wrap side-effectful operators: sinks re-write
     files, streaming ops run queries, scratch-staging ops copy corpora —

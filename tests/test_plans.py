@@ -530,20 +530,41 @@ def test_minhash_banding_plan_reads_no_cache_and_keeps_shingles_up(spark):
     assert pushed == [], "\n".join(pushed)
 
 
-def test_minhash_banding_leaves_no_temp_view(spark):
-    """The op passes its intermediate frames to spark.sql as DataFrame
-    arguments, whose temp views are dropped after analysis: a call leaves
-    no session-global view behind (it used to leave __mh_sharr and
-    __mh_cand)."""
+@pytest.mark.parametrize(
+    "op",
+    ["llm_minhash_banding", "llm_containment_banded", "llm_minhash_jaccard_estimate"],
+)
+def test_minhash_ops_stage_nothing(spark, op):
+    """The three MinHash-LSH ops build on the same uncached frames
+    (llm_dedup._minhash_frames), passed to spark.sql as DataFrame
+    arguments whose temp views are dropped after analysis. Building one
+    launches no Spark job and leaves no session-global view behind (they
+    used to leave __mh_*, __cb_* and __mhe_* views), and its executed plan
+    reads no cache."""
+    from highspeedrailwaybigdatasystem_spark.schemas import ensure_views
 
     def temp_views():
         return {t.name for t in spark.catalog.listTables() if t.isTemporary}
 
+    ensure_views(spark, SF_ORACLE)
+    spark.catalog.clearCache()
     before = temp_views()
-    _QUERIES["llm_minhash_banding"].__wrapped__(spark, SF_ORACLE)
+    fn = _QUERIES[op]
+    sc = spark.sparkContext
+    group = f"minhash_build_{op}"
+    sc.setJobGroup(group, group)
+    try:
+        df = getattr(fn, "__wrapped__", fn)(spark, SF_ORACLE)
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs == [], f"{op}: {len(jobs)} Spark jobs at build"
     after = temp_views()
     assert after == before, sorted(after - before)
-    assert not [v for v in after if v.startswith("__mh_")], sorted(after)
+    assert not [v for v in after if v.startswith(("__mh_", "__cb_", "__mhe_"))]
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "InMemoryTableScan" not in plan, plan
 
 
 def test_q21_single_fact_scan(spark):
@@ -845,6 +866,8 @@ def _count_expr(s: str, needle: str) -> int:
         # r17: the minhash verify moved to doc-grain shingle arrays with
         # the same pinned-intersect idiom
         ("llm_minhash_banding", "array_intersect(", 1),
+        ("llm_containment_banded", "array_intersect(", 1),
+        ("llm_minhash_jaccard_estimate", "array_intersect(", 1),
     ],
 )
 def test_nondeterminism_pin_single_evaluation(spark, op, expr, n):

@@ -10,7 +10,7 @@ import numpy as np
 import pandas as pd
 
 from highspeedrailwaybigdatasystem_spark.registry import all_queries
-from tests.conftest import synthetic_sf
+from tests.conftest import SF_ORACLE, synthetic_sf
 
 SF_SMOKE = "/root/testdata/sf0.001"
 
@@ -254,6 +254,20 @@ def test_minhash_jaccard_estimate_internally_consistent(spark):
     # 20-lane estimator: per-pair sd <= sqrt(.25/20) ~ 0.112; 4-sigma cap
     assert out["abs_err"].max() <= 0.45
     assert out["abs_err"].mean() <= 0.15
+
+
+def test_minhash_estimate_verifies_banding_pairs(spark):
+    """The estimate audits the deployed signature: both ops verify the
+    same candidate pairs of the same frames, so the estimate's
+    (doc_a, doc_b, exact_jaccard) rows are exactly banding's
+    (doc_a, doc_b, jaccard) rows."""
+    qs = all_queries()
+    band = qs["llm_minhash_banding"].__wrapped__(spark, SF_ORACLE).collect()
+    est = qs["llm_minhash_jaccard_estimate"](spark, SF_ORACLE).collect()
+    expected = {(r.doc_a, r.doc_b, r.jaccard) for r in band}
+    assert expected
+    assert {(r.doc_a, r.doc_b, r.exact_jaccard) for r in est} == expected
+    assert len(est) == len(expected)
 
 
 def test_tfidf_cosine_pairs_bounds(spark):

@@ -95,8 +95,10 @@ _NOTES = {
     "(5.3 s at 100x), corpus touched once",
     "llm_semdedup_sqrtn": "cached collapse + assignment stages; exchanges "
     "are the distinct cluster-grain aggs and LSH-bounded verify joins",
-    "llm_containment_banded": "cached shingle stage; exchanges are the "
-    "band/candidate/verify stagelets, each LSH-bounded",
+    "llm_containment_banded": "uncached: one query over banding's frames "
+    "(_minhash_frames), so the initial plan repeats the reps/shingle "
+    "subtree per reference as banding's does; AQE reuses those exchanges "
+    "at runtime (sf0.01: 5 shuffle stages run, 3 reused)",
     "llm_idf_weighted_jaccard": "cached shingle/idf/wsum stages (r7 "
     "re-plan, was 14 with recompute); pair stage is source-blocked",
     "ml_naive_bayes_langid": "cached token stage; exchanges are the "
@@ -106,8 +108,11 @@ _NOTES = {
     "bounded at <=7 items/order",
     "ts_hurst_rs": "cached day rollup (r7 re-plan, was 13 events scans); "
     "all downstream stages run on <=31 cached rows",
-    "llm_minhash_jaccard_estimate": "cached shingle/signature/candidate "
-    "stages (r7 re-plan); verify joins are LSH-candidate-bounded",
+    "llm_minhash_jaccard_estimate": "uncached: banding's frames plus two "
+    "signature joins; the initial plan repeats the reps/shingle/signature "
+    "subtrees per reference, AQE reuses those exchanges at runtime "
+    "(sf0.01: 6 shuffle stages run, 5 reused); joins are "
+    "LSH-candidate-bounded",
     "graph_two_hop_reach": "cached adjacency view; count includes the "
     "cached build's printed repeats — live stages are the degree/2-hop/"
     "exclusion aggs on the vertex grain",
