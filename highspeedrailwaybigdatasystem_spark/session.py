@@ -10,7 +10,22 @@ from __future__ import annotations
 
 import os
 
+import pyspark
 from pyspark.sql import SparkSession
+
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def check_pyspark_version(python_version: str, jvm_version: str) -> None:
+    """Workers import the driver's pyspark (see ``pydaemon``), so it must be
+    the JVM's release: a split would run Python tasks against another
+    protocol than the one the JVM speaks."""
+    if python_version != jvm_version:
+        raise RuntimeError(
+            f"pyspark {python_version} is installed but the JVM runs Spark "
+            f"{jvm_version}; Python workers import the installed pyspark, so "
+            "the two must match"
+        )
 
 
 def build_session(
@@ -39,7 +54,7 @@ def build_session(
     mpb = os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES")
     if mpb:
         builder = builder.config("spark.sql.files.maxPartitionBytes", mpb)
-    return (
+    spark = (
         builder.appName(app_name)
         .master(master)
         .config("spark.sql.adaptive.enabled", "true")
@@ -71,5 +86,18 @@ def build_session(
         )
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # Python workers fork from a daemon that first drops Spark's zip
+        # and jar archives from sys.path: each task's
+        # importlib.invalidate_caches() re-read their directories, 0.23-0.33
+        # s per task. The executor PYTHONPATH carries the repo root so the
+        # worker finds that module when the package is not installed (pytest
+        # puts the root on the driver's sys.path only).
+        .config(
+            "spark.python.daemon.module",
+            "highspeedrailwaybigdatasystem_spark.pydaemon",
+        )
+        .config("spark.executorEnv.PYTHONPATH", _ROOT)
         .getOrCreate()
     )
+    check_pyspark_version(pyspark.__version__, spark.version)
+    return spark

@@ -287,7 +287,7 @@ def test_full_surface_plan_hygiene(spark):
         "llm_dup_partner_degree_dist",  # cumulative window over the
                                         # |degrees|-row histogram grain
         "agg_market_basket_lift",  # order total + brand map over the
-                                   # <=1+B+B(B-1)/2-row kind grain
+                                   # <=1+B(B+1)/2-row brand-pair grain
     }
     # windowspecdefinition(...) whose first argument is already a sort order
     # (or the frame itself) has no partition columns => global window.
@@ -314,7 +314,9 @@ def test_full_surface_plan_hygiene(spark):
 def test_market_basket_is_one_uncached_query(spark):
     """agg_market_basket_lift is a single spark.sql: building it runs no
     Spark job, and its plan reads no cache and has no nested-loop join
-    (the n/s/pr joins became a window over the brand-grain aggregate)."""
+    (the n/s/pr joins became a window over the brand-grain aggregate).
+    Its brand pairs come from two posexplode generators, not from
+    interpreted higher-order-function lambdas."""
     from highspeedrailwaybigdatasystem_spark.schemas import ensure_views
 
     ensure_views(spark, SF_ORACLE)
@@ -330,6 +332,11 @@ def test_market_basket_is_one_uncached_query(spark):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "InMemoryTableScan" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
+    df.collect()
+    final = df._jdf.queryExecution().executedPlan().toString()
+    final = final.split("== Initial Plan ==")[0]
+    assert "lambdafunction" not in final, final
+    assert final.count("Generate posexplode(") == 2, final
 
 
 def test_dynamic_partition_pruning(spark):

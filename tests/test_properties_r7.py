@@ -246,6 +246,76 @@ def test_basket_lift_on_planted_cooccurrence(spark, k, extra):
     assert abs(r["lift"] - n_orders / k) <= 1e-4
 
 
+def test_basket_lift_matches_oracle_on_planted_edges(spark):
+    """The generator-paired basket against its DuckDB oracle on a corpus
+    planted with its edges: NULL brands beside real ones, an order whose
+    parts all have a NULL brand (it still counts in n_orders), lineitems
+    with no matching part (an order of only those vanishes), one-brand
+    orders, a brand repeated inside an order, and Brand#44 in one order."""
+    import duckdb
+
+    from highspeedrailwaybigdatasystem_spark.registry import all_oracles
+    from highspeedrailwaybigdatasystem_spark.schemas import TABLE_NAMES
+    from tools.mirror import compare
+
+    brands = ["Brand#11", "Brand#22", "Brand#33", None, None, "Brand#44",
+              "Brand#11"]
+    part = pd.DataFrame(
+        {
+            "p_partkey": range(1, len(brands) + 1),
+            "p_name": [f"p{i}" for i in range(1, len(brands) + 1)],
+            "p_brand": brands,
+            "p_type": ["t"] * len(brands),
+            "p_size": pd.array([1] * len(brands), dtype="int32"),
+            "p_retailprice": [1.0] * len(brands),
+        }
+    )
+    orders = {
+        1: [1, 2, 3, 4],  # a NULL brand beside three real ones
+        2: [1, 2, 7],     # Brand#11 twice, through parts 1 and 7
+        3: [4, 5],        # every part's brand is NULL
+        4: [99],          # no matching part: the order vanishes
+        5: [2, 99],       # one matching, one unmatched lineitem
+        6: [3],           # one-brand orders
+        7: [6, 1, 3],     # Brand#44's only order
+        8: [2],
+        9: [1, 2],
+    }
+    rows = [(ok, pk) for ok, pks in orders.items() for pk in pks]
+    li = pd.DataFrame(
+        {
+            "l_orderkey": [r[0] for r in rows],
+            "l_partkey": [r[1] for r in rows],
+            "l_suppkey": [1] * len(rows),
+            "l_linenumber": pd.array(range(1, len(rows) + 1), dtype="int32"),
+            "l_quantity": [1.0] * len(rows),
+            "l_extendedprice": [10.0] * len(rows),
+            "l_discount": [0.0] * len(rows),
+            "l_tax": [0.0] * len(rows),
+            "l_returnflag": ["N"] * len(rows),
+            "l_linestatus": ["O"] * len(rows),
+            "l_shipdate": pd.Series(
+                [pd.Timestamp("2024-03-05")] * len(rows), dtype="datetime64[us]"
+            ),
+        }
+    )
+    sf = synthetic_sf(part=part, lineitem=li)
+    out = all_queries()["agg_market_basket_lift"](spark, sf).toPandas()
+    con = duckdb.connect()
+    for t in TABLE_NAMES:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf}/{t}.parquet')"
+        )
+    duck = con.execute(all_oracles()["agg_market_basket_lift"]).fetchdf()
+    con.close()
+    assert len(out) == 5  # the five brand pairs that share an order
+    assert not compare("agg_market_basket_lift", out, duck)
+    # n_orders = 8 (order 4 vanished, order 3 counts): support of the
+    # (11, 22) pair, which orders 1, 2 and 9 hold.
+    r = out[(out.brand_a == "Brand#11") & (out.brand_b == "Brand#22")].iloc[0]
+    assert r["n_co"] == 3 and abs(r["support"] - 3 / 8) <= 1e-6
+
+
 def test_basket_invariants_on_smoke(spark):
     out = all_queries()["agg_market_basket_lift"](spark, SF_SMOKE).toPandas()
     assert len(out) > 0

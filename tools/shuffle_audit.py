@@ -103,9 +103,9 @@ _NOTES = {
     "re-plan, was 14 with recompute); pair stage is source-blocked",
     "ml_naive_bayes_langid": "cached token stage; exchanges are the "
     "model-building aggs (lang x vocab grain) + one doc-grain scoring agg",
-    "agg_market_basket_lift": "one uncached query: order-grain basket "
-    "agg + a window over the <=1+B+B(B-1)/2-row brand grain; pair step "
-    "bounded at <=7 items/order",
+    "agg_market_basket_lift": "one uncached query: order-grain brand "
+    "sets, pairs from two posexplode generators (<=7 items/order), then a "
+    "window over the <=1+B(B+1)/2-row brand-pair grain",
     "ts_hurst_rs": "cached day rollup (r7 re-plan, was 13 events scans); "
     "all downstream stages run on <=31 cached rows",
     "llm_minhash_jaccard_estimate": "uncached: banding's frames plus two "
