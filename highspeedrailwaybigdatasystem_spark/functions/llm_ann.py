@@ -247,9 +247,7 @@ def _sim_block_side(
     collapse: bool = False,
     cap: int | None = None,
 ):
-    """One side of the block×block GEMM cogroup. Fresh read per side —
-    identical lineage on both cogroup sides trips Spark's ambiguous-self-join
-    detection.
+    """One side of the block×block GEMM cogroup.
 
     ``collapse`` (round 11): restrict to one representative vec_id per
     distinct embedding payload (min vec_id; the collapse key includes the

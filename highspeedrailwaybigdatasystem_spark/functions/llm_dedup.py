@@ -224,11 +224,13 @@ def _minhash_frames(
     # re-evaluated inside the shingle lambda once per shingle: quadratic
     # per document. The non-deterministic projection stops the pushdown,
     # so shs is computed once per doc (plan-pinned in tests/test_plans.py).
+    # Below 3 tokens shs is empty, as in the oracle's generate_series:
+    # sequence(0, size(tk) - 3) counts down there, and tk[-1] raises.
     shingle = spark.sql(
         """
-        SELECT doc_id, element_at(shuffle(array(array_distinct(transform(
-            sequence(0, size(tk) - 3),
-            i -> concat_ws(' ', tk[i], tk[i+1], tk[i+2]))))), 1) AS shs
+        SELECT doc_id, element_at(shuffle(array(IF(size(tk) < 3, array(),
+            array_distinct(transform(sequence(0, size(tk) - 3),
+            i -> concat_ws(' ', tk[i], tk[i+1], tk[i+2])))))), 1) AS shs
         FROM (SELECT d.doc_id, split(d.text, ' ') AS tk
               FROM documents d
               JOIN (SELECT min(doc_id) AS doc_id FROM documents
@@ -715,8 +717,8 @@ def llm_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.select("doc_id", F.split("text", " ").alias("tk")).select(
         "doc_id",
         F.expr(
-            "array_min(transform(sequence(0, size(tk) - 3),"
-            " i -> md5(concat_ws(' ', tk[i], tk[i+1], tk[i+2]))))"
+            "array_min(IF(size(tk) < 3, array(), transform(sequence(0, size(tk) - 3),"
+            " i -> md5(concat_ws(' ', tk[i], tk[i+1], tk[i+2])))))"
         ).alias("fingerprint"),
     )
 
@@ -1796,9 +1798,9 @@ def llm_idf_weighted_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         " FROM documents d"
         " JOIN (SELECT min(doc_id) AS doc_id FROM documents"
         " GROUP BY md5(text)) reps USING (doc_id))"
-        " LATERAL VIEW explode(array_distinct(transform("
+        " LATERAL VIEW explode(IF(size(tk) < 3, array(), array_distinct(transform("
         "sequence(0, size(tk) - 3),"
-        " i -> concat_ws(' ', tk[i], tk[i+1], tk[i+2])))) AS sh"
+        " i -> concat_ws(' ', tk[i], tk[i+1], tk[i+2]))))) AS sh"
     ).cache()
     sh.createOrReplaceTempView("__idfj_sh")
     _materialize_cache(spark, sh)

@@ -527,7 +527,7 @@ def llm_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     w1. Final top-50 is TakeOrderedAndProject — no global sort
     materialization."""
     d = t(spark, sf_dir, "documents").select("doc_id", F.split("text", " ").alias("tk"))
-    bg = d.select(
+    bg = d.where(F.size("tk") >= 2).select(
         F.explode(
             F.expr("transform(sequence(0, size(tk) - 2), i -> struct(tk[i] AS w1, tk[i + 1] AS w2))")
         ).alias("b")

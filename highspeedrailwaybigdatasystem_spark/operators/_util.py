@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..schemas import load
+from ..schemas import load as t  # noqa: F401 — the ops' corpus reader
 
 #: DuckDB-side µs-canonical view of events.ts (identity on the µs corpus).
 EVENTS_TS_US = "CAST(ts AS TIMESTAMP)"
@@ -113,11 +113,6 @@ def ratio(col: Column | str) -> Column:
     return F.round(F.col(col) if isinstance(col, str) else col, 6)
 
 
-def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one corpus table with its declared schema."""
-    return load(spark, sf_dir, name)
-
-
 def _materialize_cache(spark: SparkSession, *dfs: DataFrame) -> None:
     """count() each cached DataFrame whose in-memory buffers are NOT yet
     built, so downstream queries are planned against the cache's REAL
@@ -149,15 +144,13 @@ def _materialize_cache(spark: SparkSession, *dfs: DataFrame) -> None:
 
 
 def sql_q(spark: SparkSession, sf_dir: str, text: str) -> DataFrame:
-    """Run one Spark SQL text over the memoized corpus views.
+    """Run one Spark SQL text over the corpus views.
 
-    The hot-path (bench headline) ops build their plan this way: a single
-    ``spark.sql`` parse is one Py4J round-trip, where the equivalent
-    Column-expression pipeline costs 25–55 ms per table load plus ~1 ms
-    per Column operator in driver-side JVM calls — measured at 0.15–0.33 s
-    per query build, dominating sf0.1 wall-clock. The logical/physical
-    plan is identical to the DataFrame formulation; Catalyst sees the same
-    tree either way.
+    SQL and DataFrame ops read the corpus the same way: ``sql_q`` names
+    the views ``ensure_views`` registers, and ``t`` returns one of them,
+    so both see the same listed relation and Catalyst the same tree. A
+    ``spark.sql`` parse is one Py4J round-trip, where a Column-expression
+    pipeline pays about 1 ms per Column operator in driver-side JVM calls.
     """
     from ..schemas import ensure_views
 

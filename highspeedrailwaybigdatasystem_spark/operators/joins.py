@@ -878,20 +878,20 @@ def join_null_aware_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     with the oracle. At scale the null-free rewrite (filter NULLs out of
     the subquery explicitly when the semantics allow) is the difference
     between a shuffled anti join and a broadcast null-scan."""
-    t(spark, sf_dir, "customer").createOrReplaceTempView("cust_naa")
-    t(spark, sf_dir, "orders").createOrReplaceTempView("orders_naa")
-    return spark.sql(
+    return sql_q(
+        spark,
+        sf_dir,
         """
         SELECT 'null_free' AS variant, count(*) AS n_cust
-        FROM cust_naa
-        WHERE c_custkey NOT IN (SELECT o_custkey FROM orders_naa
+        FROM customer
+        WHERE c_custkey NOT IN (SELECT o_custkey FROM orders
                                 WHERE o_orderpriority = '1-URGENT')
         UNION ALL
         SELECT 'with_null', count(*)
-        FROM cust_naa
+        FROM customer
         WHERE c_custkey NOT IN (SELECT CASE WHEN o_orderkey % 97 = 0 THEN NULL
                                             ELSE o_custkey END
-                                FROM orders_naa
+                                FROM orders
                                 WHERE o_orderpriority = '1-URGENT')
         """
     )

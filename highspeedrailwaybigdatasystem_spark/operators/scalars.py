@@ -916,8 +916,9 @@ def sql_values_inline(spark: SparkSession, sf_dir: str) -> DataFrame:
     is driver-side and broadcasts by size automatically; the pattern
     replaces the collect-then-when-chain antipattern for small decode
     tables."""
-    t(spark, sf_dir, "customer").createOrReplaceTempView("customer_v")
-    return spark.sql(
+    return sql_q(
+        spark,
+        sf_dir,
         """
         WITH tier(mktsegment, tier_name, tier_mult) AS (
             VALUES ('AUTOMOBILE', 'gold', 1.5D),
@@ -926,7 +927,7 @@ def sql_values_inline(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT t.tier_name,
                count(*) AS n_cust,
                round(sum(c.c_acctbal * t.tier_mult), 2) AS weighted_bal
-        FROM customer_v c
+        FROM customer c
         JOIN tier t ON c.c_mktsegment = t.mktsegment
         GROUP BY t.tier_name
         """
@@ -1000,9 +1001,10 @@ def sql_star_except(spark: SparkSession, sf_dir: str) -> DataFrame:
     enumerating the survivors, the schema-evolution-friendly idiom for
     wide tables. Column pruning still reaches the scan: the excluded
     columns never leave the parquet footer."""
-    t(spark, sf_dir, "customer").createOrReplaceTempView("cust_sx")
-    return spark.sql(
-        "SELECT * EXCEPT (c_name, c_acctbal) FROM cust_sx WHERE c_custkey < 20"
+    return sql_q(
+        spark,
+        sf_dir,
+        "SELECT * EXCEPT (c_name, c_acctbal) FROM customer WHERE c_custkey < 20",
     )
 
 

@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
+from ..schemas import SCHEMAS
 from ._util import money, sql_q, t
 
 
@@ -67,7 +68,9 @@ def scan_metadata_cols(spark: SparkSession, sf_dir: str) -> DataFrame:
     The corpus ships one parquet file per table, so the oracle pins the
     constant name; on a real multi-file table the same query audits every
     file. Zero extra I/O: metadata is attached at the reader, not joined."""
-    li = t(spark, sf_dir, "lineitem")
+    # the file itself, not the corpus view: _metadata belongs to the file
+    # source, and a view does not expose it
+    li = spark.read.schema(SCHEMAS["lineitem"]).parquet(f"{sf_dir}/lineitem.parquet")
     return (
         li.select(F.col("_metadata.file_name").alias("file_name"))
         .groupBy("file_name")

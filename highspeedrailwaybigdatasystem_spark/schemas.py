@@ -1,8 +1,9 @@
 """Declared schemas for the ground-truth corpus (FIXTURES.md §2).
 
 Schemas are declared, not inferred, so that timestamp units and integer
-widths can't drift between reads (SURVEY.md §1.3). ``load`` reads a table
-and asserts the on-disk schema matches the declaration.
+widths can't drift between reads (SURVEY.md §1.3). The declared schema is
+handed to the parquet reader as given, not compared with the file footers;
+only ``events.ts`` is checked up front (``check_events_ts``).
 """
 
 from __future__ import annotations
@@ -199,24 +200,10 @@ def check_events_ts(path: str) -> None:
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one corpus table.
-
-    The declared schema is passed to the reader so every downstream plan
-    sees identical types regardless of parquet footer details; column
-    pruning and predicate pushdown still apply (schema is a projection
-    contract, not a cast). ``events`` is first passed through
-    ``check_events_ts``, which refuses any ``ts`` encoding but timestamp[us].
-    """
-    path = f"{sf_dir}/{name}.parquet"
-    if name == "events":
-        check_events_ts(path)
-    return spark.read.schema(SCHEMAS[name]).parquet(path)
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every corpus table as a temp view (SQL-surface entry point)."""
-    for name in TABLE_NAMES:
-        load(spark, sf_dir, name).createOrReplaceTempView(name)
+    """One corpus table: the session's registered view of it
+    (``ensure_views``), so every op reads the same listed relation."""
+    ensure_views(spark, sf_dir)
+    return spark.table(name)
 
 
 def session_corpus_key(spark: SparkSession, sf_dir: str) -> tuple:
@@ -238,19 +225,30 @@ _VIEWS_REGISTERED: dict[str, tuple[str, int, int]] = {}
 
 
 def ensure_views(spark: SparkSession, sf_dir: str) -> None:
-    """``register_views``, memoized per live session.
+    """Register every corpus table as a temp view, once per
+    ``session_corpus_key``.
 
-    A ``spark.read.schema(...).parquet(...)`` round-trip costs 25–55 ms of
-    driver time per table; ops that re-register all ten views on every call
-    were paying ~0.5 s of pure Py4J overhead. One registration per
-    (session, corpus) amortizes that to zero on warm paths. The key is
-    ``session_corpus_key``: an in-place rewrite of any table invalidates
-    the memo and re-registers (and re-checks) instead of serving stale
-    views, and so does switching the same session to another sf_dir
-    (plain view names hold one corpus at a time — exactly the
-    driver/mirror/pytest usage).
+    The one read path of the corpus: ``load`` (the ops' ``t``) and
+    ``sql_q`` read these views, and only here is a corpus table read with
+    its declared schema or ``events`` checked. A per-call read lists the
+    files again: at sf0.01 (local[2], median of 15 calls) it took 11–16 ms
+    per table against 3–4 ms for ``load`` (same optimized plans), and it
+    was 66–77 ms of a 0.64 s warm ``udf_map_in_arrow`` call.
+
+    The key covers every parquet file under ``sf_dir``, so an in-place
+    rewrite of any table, or switching the session to another sf_dir,
+    registers and checks all ten views again. Plain view names hold one
+    corpus per session at a time, exactly the driver/mirror/pytest usage.
+    The memo entry is dropped first, so a refused or incomplete corpus
+    leaves nothing that a later call would trust.
     """
     session, corpus = session_corpus_key(spark, sf_dir)
-    if _VIEWS_REGISTERED.get(session) != corpus:
-        register_views(spark, sf_dir)
-        _VIEWS_REGISTERED[session] = corpus
+    if _VIEWS_REGISTERED.get(session) == corpus:
+        return
+    _VIEWS_REGISTERED.pop(session, None)
+    check_events_ts(f"{sf_dir}/events.parquet")
+    for name in TABLE_NAMES:
+        spark.read.schema(SCHEMAS[name]).parquet(
+            f"{sf_dir}/{name}.parquet"
+        ).createOrReplaceTempView(name)
+    _VIEWS_REGISTERED[session] = corpus

@@ -20,7 +20,7 @@ SF_ORACLE = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.01")
 def synthetic_sf(**overrides: pd.DataFrame) -> str:
     """A fresh sf_dir: each override (``documents=``, ``events=``, ...)
     written as parquet, every other corpus table symlinked from sf0.001 so
-    register_views sees all ten. A new directory per call (per hypothesis
+    ensure_views sees all ten. A new directory per call (per hypothesis
     example), so no view or plan memo entry can carry over from one
     example to the next."""
     from highspeedrailwaybigdatasystem_spark.schemas import TABLE_NAMES

@@ -16,8 +16,9 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from highspeedrailwaybigdatasystem_spark.schemas import load
+from highspeedrailwaybigdatasystem_spark.schemas import TABLE_NAMES, load
 from highspeedrailwaybigdatasystem_spark.sources._scratch import scratch_dir
+from tests.conftest import SF_SMOKE
 
 _TS = [
     dt.datetime(2024, 1, 2, 13, 33, 7, 222762),
@@ -27,8 +28,13 @@ _TS = [
 
 
 def _write_events(sf_dir: str, ts: pa.Array) -> str:
+    """A corpus dir whose events.parquet holds ``ts``; the other nine
+    tables are symlinked from sf0.001, since ``load`` registers all ten."""
     shutil.rmtree(sf_dir, ignore_errors=True)
     os.makedirs(sf_dir)
+    for name in TABLE_NAMES:
+        if name != "events":
+            os.symlink(f"{SF_SMOKE}/{name}.parquet", f"{sf_dir}/{name}.parquet")
     n = len(ts)
     cols = {
         "event_id": pa.array(range(n), pa.int64()),

@@ -17,7 +17,8 @@ import pytest
 
 from highspeedrailwaybigdatasystem_spark import registry
 from highspeedrailwaybigdatasystem_spark.registry import all_queries
-from highspeedrailwaybigdatasystem_spark.schemas import ensure_views
+from highspeedrailwaybigdatasystem_spark.operators._util import t
+from highspeedrailwaybigdatasystem_spark.schemas import ensure_views, load
 from highspeedrailwaybigdatasystem_spark.sources._scratch import scratch_dir
 from tests.conftest import SF_ORACLE
 
@@ -74,24 +75,70 @@ def test_memo_invalidates_on_corpus_fingerprint_change(spark):
 def test_ensure_views_sees_any_table_rewritten_in_place(spark):
     """ensure_views keys its memo like plan_memo (session UUID, fingerprint
     of every parquet file under sf_dir): rewriting region.parquet in place
-    must re-register its view. A stale view keeps the old file listing,
-    whose shorter length drops the rewritten file's later row groups."""
+    must re-register its view, whether the next read is ensure_views and
+    spark.table or schemas.load (the ops' ``t``). A stale view keeps the
+    old file listing, whose shorter length drops the rewritten file's
+    later row groups."""
     import os
 
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    def view(spark, sf_dir, name):
+        ensure_views(spark, sf_dir)
+        return spark.table(name)
+
     d = scratch_dir("ensure_views_corpus")
     shutil.rmtree(d, ignore_errors=True)
     shutil.copytree(SF_SMOKE, d)
-    ensure_views(spark, d)
-    n = spark.table("region").count()
+    n = view(spark, d, "region").count()
     path = os.path.join(d, "region.parquet")
-    pq.write_table(
-        pa.concat_tables([pq.read_table(path)] * 400), path, row_group_size=100
-    )
-    ensure_views(spark, d)
-    assert spark.table("region").count() == 400 * n
+    base = pq.read_table(path)
+    for copies, read in ((400, view), (401, load)):
+        pq.write_table(
+            pa.concat_tables([base] * copies), path, row_group_size=100
+        )
+        assert read(spark, d, "region").count() == copies * n, read.__name__
+
+
+def test_incomplete_corpus_leaves_no_trusted_views(spark):
+    """A registration that fails part-way (nation.parquet missing, after
+    region's view was already replaced) must not leave the memo naming the
+    previous corpus: the next ensure_views of that corpus registers again
+    instead of serving the broken directory's region."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    ensure_views(spark, SF_SMOKE)
+    n = spark.table("region").count()
+    d = scratch_dir("ensure_views_incomplete")
+    shutil.rmtree(d, ignore_errors=True)
+    os.makedirs(d)
+    base = pq.read_table(f"{SF_SMOKE}/region.parquet")
+    pq.write_table(pa.concat_tables([base] * 3), f"{d}/region.parquet")
+    os.symlink(f"{SF_SMOKE}/events.parquet", f"{d}/events.parquet")
+    with pytest.raises(Exception, match="PATH_NOT_FOUND"):
+        load(spark, d, "region")
+    ensure_views(spark, SF_SMOKE)
+    assert spark.table("region").count() == n
+
+
+def test_load_and_t_read_the_registered_views_listing(spark):
+    """load and t return the session's registered view: repeated reads
+    of one table share the view's JVM InMemoryFileIndex (one file listing
+    per session and corpus) instead of listing the files on every call."""
+
+    def file_index(df):
+        leaf = df._jdf.queryExecution().analyzed().collectLeaves().apply(0)
+        return spark._jvm.System.identityHashCode(leaf.relation().location())
+
+    ensure_views(spark, SF_SMOKE)
+    listed = file_index(spark.table("orders"))
+    assert file_index(load(spark, SF_SMOKE, "orders")) == listed
+    assert file_index(load(spark, SF_SMOKE, "orders")) == listed
+    assert file_index(t(spark, SF_SMOKE, "orders")) == listed
 
 
 def test_memo_only_on_pure_ops():

@@ -614,6 +614,8 @@ def _copy_embeddings(src_dir, dst_dir, permute=False, id_shift=0):
     import numpy as np
     import os
 
+    from highspeedrailwaybigdatasystem_spark.schemas import TABLE_NAMES
+
     tbl = pq.read_table(f"{src_dir}/embeddings.parquet")
     if permute:
         idx = np.random.RandomState(7).permutation(len(tbl))
@@ -626,6 +628,10 @@ def _copy_embeddings(src_dir, dst_dir, permute=False, id_shift=0):
         )
     os.makedirs(dst_dir, exist_ok=True)
     pq.write_table(tbl, f"{dst_dir}/embeddings.parquet")
+    # every op reads the corpus views, which register all ten tables
+    for name in TABLE_NAMES:
+        if name != "embeddings":
+            os.symlink(f"{src_dir}/{name}.parquet", f"{dst_dir}/{name}.parquet")
 
 
 def test_kmeans_invariant_under_row_permutation_and_id_shift(spark, tmp_path):

@@ -556,7 +556,7 @@ def test_cdc_upsert_survives_midstream_kill(spark):
     batch = {
         r["user_id"]: (r["ts_us"], r["event_id"], r["v"], r["n"])
         for r in load_table(spark, SF_ORACLE, "events")  # ts as TIMESTAMP,
-        # same footer-aware conversion the streaming reader applies
+        # read with the same declared schema as the stream's source
         .where(F.col("user_id") < 20)
         .groupBy("user_id")
         .agg(

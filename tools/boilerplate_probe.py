@@ -13,7 +13,8 @@ synthesizes it directly:
 
   N distinct docs = 30-token shared HEADER + 25 unique filler tokens,
   each duplicated x2 with fresh doc_ids (so the exact collapse also has
-  real work to do), written as _scratch/boiler_n{N}/documents.parquet.
+  real work to do), written as documents.parquet of a fresh corpus dir
+  (tests.conftest.synthetic_sf).
 
 For N in (1000, 2000, 4000): run both ops, record wall-clock + output rows.
 Expected: uncapped rows ≈ N(N-1)/2 (4x per doubling), capped rows flat at 0
@@ -29,23 +30,16 @@ import os
 import sys
 import time
 
-import pyarrow as pa
-import pyarrow.parquet as pq
+import pandas as pd
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-SCRATCH = os.path.join(REPO, "_scratch")
+from tests.conftest import synthetic_sf  # noqa: E402
 
 HEADER = " ".join(f"hdr{i}" for i in range(30))
 
 
 def build_corpus(n_distinct: int) -> str:
-    out = os.path.join(SCRATCH, f"boiler_n{n_distinct}")
-    path = os.path.join(out, "documents.parquet")
-    if os.path.exists(path):
-        return out
-    os.makedirs(out, exist_ok=True)
     doc_ids, texts = [], []
     next_id = 0
     for i in range(n_distinct):
@@ -55,17 +49,18 @@ def build_corpus(n_distinct: int) -> str:
             doc_ids.append(next_id)
             texts.append(text)
             next_id += 1
-    tbl = pa.table(
+    docs = pd.DataFrame(
         {
-            "doc_id": pa.array(doc_ids, pa.int64()),
-            "text": pa.array(texts, pa.string()),
-            "lang": pa.array(["en"] * len(doc_ids), pa.string()),
-            "source": pa.array(["boiler"] * len(doc_ids), pa.string()),
-            "n_chars": pa.array([len(t) for t in texts], pa.int64()),
+            "doc_id": pd.Series(doc_ids, dtype="int64"),
+            "text": texts,
+            "lang": "en",
+            "source": "boiler",
+            "n_chars": pd.Series([len(t) for t in texts], dtype="int64"),
         }
     )
-    pq.write_table(tbl, path)
-    return out
+    # the other nine tables come from the smoke corpus: ops read the
+    # corpus views, which register all ten
+    return synthetic_sf(documents=docs)
 
 
 def main() -> None:

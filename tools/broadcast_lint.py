@@ -490,19 +490,12 @@ def _demo_q02(spark, sf_dir: str):
 
     from highspeedrailwaybigdatasystem_spark.operators._util import t
 
-    ps = t(spark, sf_dir, "partsupp") if os.path.exists(
-        f"{sf_dir}/partsupp.parquet"
-    ) else None
-    if ps is None:
-        # corpus has no partsupp; emulate with lineitem supplier costs
-        ps = (
-            t(spark, sf_dir, "lineitem")
-            .select(
-                F.col("l_partkey").alias("ps_partkey"),
-                F.col("l_suppkey").alias("ps_suppkey"),
-                F.col("l_extendedprice").alias("ps_supplycost"),
-            )
-        )
+    # the corpus has no partsupp; emulate it with lineitem supplier costs
+    ps = t(spark, sf_dir, "lineitem").select(
+        F.col("l_partkey").alias("ps_partkey"),
+        F.col("l_suppkey").alias("ps_suppkey"),
+        F.col("l_extendedprice").alias("ps_supplycost"),
+    )
     best = ps.groupBy("ps_partkey").agg(
         F.min("ps_supplycost").alias("min_cost")
     ).withColumnRenamed("ps_partkey", "b_partkey")
