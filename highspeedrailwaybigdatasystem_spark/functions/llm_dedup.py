@@ -151,9 +151,13 @@ def llm_near_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("shingles"),
     )
     tf = HashingTF(inputCol="shingles", outputCol="features", numFeatures=1 << 16, binary=True)
-    # cached: the featurized side is read 3x (fit + both join sides);
-    # materialized before the similarity join is planned (round-10
-    # planner-statistics discipline — fit alone runs no job over feats).
+    # cached: the featurized side is read 3x (fit + both join sides), and
+    # the materialized cache's statistics let the planner broadcast the
+    # LSH bucket join. Uncached, AQE measures the exploded bucket rows
+    # (which carry the feature vectors and shingle arrays) above the
+    # broadcast threshold and keeps a sort-merge join: fresh at sf0.1 on 4
+    # cores 5.53 s uncached against 3.19 s cached (1.73 s against 1.24 s at
+    # sf0.01), medians of 10.
     feats = tf.transform(shingled).cache()
     _materialize_cache(spark, feats)
     lsh = MinHashLSH(inputCol="features", outputCol="minhash", numHashTables=5, seed=42)
@@ -510,18 +514,13 @@ def llm_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
     )
     d = t(spark, sf_dir, "documents").join(reps, "doc_id")
-    # cached: read by both pair-join sides — one row per rep doc with its
-    # token set; n is the set size (== the old tok-grain count per doc)
-    docsets = (
-        d.select(
-            "doc_id",
-            "source",
-            F.array_distinct(F.split("text", " ")).alias("toks"),
-        )
-        .withColumn("n", F.size("toks"))
-        .cache()
-    )
-    _materialize_cache(spark, docsets)
+    # one row per rep doc with its token set; n is the set size (== the
+    # old tok-grain count per doc). Both pair-join sides read it uncached.
+    docsets = d.select(
+        "doc_id",
+        "source",
+        F.array_distinct(F.split("text", " ")).alias("toks"),
+    ).withColumn("n", F.size("toks"))
     a = docsets.alias("a")
     b = docsets.alias("b")
     # the shuffle() wrap is a deliberate non-determinism marker (guide
@@ -858,10 +857,11 @@ def _bloom_dedup_impl(spark: SparkSession, sf_dir: str, m_bits: int) -> DataFram
         .groupBy("word_idx")
         .agg(F.expr("bit_or(mask)").alias("word"))
     )
-    # cached (r16): both output branches (definitely-new rows and the
-    # maybe-dup sliver that pays the exact anti-join) read ``probed``;
-    # uncached, each branch re-ran the position explode + broadcast
-    # membership join — two full probe passes for one batch.
+    # both output branches (definitely-new rows and the maybe-dup sliver
+    # that pays the exact anti-join) read ``probed`` uncached: AQE runs the
+    # position explode + broadcast membership join once and reuses its
+    # exchange for the second branch (fresh at sf0.1, 4 cores: 0.78 s
+    # against 0.91 s with the former cache, 6 jobs against 8).
     probed = (
         positions(batch)
         .withColumn("word_idx", (F.col("pos") / W).cast("long"))
@@ -873,7 +873,6 @@ def _bloom_dedup_impl(spark: SparkSession, sf_dir: str, m_bits: int) -> DataFram
         )
         .groupBy("doc_id", "source", "n_chars", "h")
         .agg(F.min("hit").alias("all_hit"))
-        .cache()
     )
     definitely_new = probed.where(~F.col("all_hit")).select(
         "doc_id", "source", "n_chars"
@@ -942,11 +941,9 @@ def llm_chunk_overlap_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", F.split("text", " ").alias("tk"))
         .where(F.size("tk") >= 20)
     )
-    # cached (r16 optimization round, guide §2.4): both sides of the pair
-    # self-join read this same scan→reps-join→explode→distinct subtree;
-    # uncached, Catalyst plans it TWICE (the md5-per-chunk explode is the
-    # op's dominant per-task cost). Materialized before the join is planned
-    # for honest InMemoryRelation stats (minhash shingle-cache discipline).
+    # uncached: both sides of the pair self-join plan the same
+    # scan→reps-join→explode→distinct subtree, and AQE runs its distinct
+    # exchange once and reuses it for the second side
     chunk = d.select(
         "doc_id",
         F.explode(
@@ -955,8 +952,7 @@ def llm_chunk_overlap_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " i -> md5(array_join(slice(tk, i, 20), ' ')))"
             )
         ).alias("ch"),
-    ).distinct().cache()
-    _materialize_cache(spark, chunk)
+    ).distinct()
     a, b = chunk.alias("a"), chunk.alias("b")
     return (
         a.join(b, (F.col("a.ch") == F.col("b.ch")) & (F.col("a.doc_id") < F.col("b.doc_id")))
@@ -1066,15 +1062,9 @@ def llm_chunk_overlap_dedup_capped(spark: SparkSession, sf_dir: str) -> DataFram
         .select("doc_id", F.split("text", " ").alias("tk"))
         .where(F.size("tk") >= 20)
     )
-    # cached (r16 optimization round, guide §2.4): the uncached version of
-    # this op re-planned the scan→reps-join→explode→distinct subtree FIVE
-    # times (freq, kept, dropped, and kept's two self-join sides) — 29
-    # shuffle exchanges in the audited plan, the worst in SHUFFLES.md.
-    # Caching the chunk grain (computed once), the freq aggregate (read by
-    # kept AND dropped), and the kept/dropped derivations (each read twice
-    # downstream) collapses the plan to one computation per stage.
-    # Materialized before downstream planning for honest InMemoryRelation
-    # stats (minhash shingle-cache discipline).
+    # uncached: the static plan repeats the scan→reps-join→explode→
+    # distinct subtree under freq, kept, dropped and kept's two self-join
+    # sides, but AQE runs each repeated exchange once and reuses it
     chunk = d.select(
         "doc_id",
         F.explode(
@@ -1083,22 +1073,14 @@ def llm_chunk_overlap_dedup_capped(spark: SparkSession, sf_dir: str) -> DataFram
                 " i -> md5(array_join(slice(tk, i, 20), ' ')))"
             )
         ).alias("ch"),
-    ).distinct().cache()
-    _materialize_cache(spark, chunk)
-    freq = chunk.groupBy("ch").agg(F.count(F.lit(1)).alias("df")).cache()
-    _materialize_cache(spark, freq)
-    kept = (
-        chunk.join(freq.where(F.col("df") <= stop_df), "ch")
-        .select("doc_id", "ch")
-        .cache()
-    )
+    ).distinct()
+    freq = chunk.groupBy("ch").agg(F.count(F.lit(1)).alias("df"))
+    kept = chunk.join(freq.where(F.col("df") <= stop_df), "ch").select("doc_id", "ch")
     dropped = (
         chunk.join(freq.where(F.col("df") > stop_df), "ch")
         .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("n_stop"))
-        .cache()
     )
-    _materialize_cache(spark, kept, dropped)
     a, b = kept.alias("a"), kept.alias("b")
     pairs = (
         a.join(b, (F.col("a.ch") == F.col("b.ch")) & (F.col("a.doc_id") < F.col("b.doc_id")))
@@ -1234,9 +1216,10 @@ def llm_containment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     list. EXACT-COLLAPSE FIRST (round 11): pairs run over one
     representative per distinct text — verbatim duplicates otherwise make
     the within-block pair output grow ~copies² (the round-10 100x sweep
-    TIMEOUT); oracle applies the same reps CTE. The shingle stage is a
-    cached temp view (read 3x: sizes + both self-join sides; the CTE form
-    inlined the reps collapse + explode per reference — 15 shuffles)."""
+    TIMEOUT); oracle applies the same reps CTE. The shingle stage is an
+    uncached DataFrame argument read 3x (sizes + both self-join sides):
+    AQE runs its exchanges once and reuses them, so no job runs at
+    construction (a cache cost 5-6 staging jobs and was slower fresh)."""
     from ..schemas import ensure_views
 
     ensure_views(spark, sf_dir)
@@ -1252,26 +1235,25 @@ def llm_containment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
           i -> concat_ws(' ', tk[i], tk[i+1], tk[i+2]))) AS sh
         WHERE size(tk) >= 3
         """
-    ).cache()
-    sh.createOrReplaceTempView("__cd_sh")
-    _materialize_cache(spark, sh)
+    )
     return spark.sql(
         """
         SELECT doc_a, doc_b,
                round(CAST(shared_cnt AS DOUBLE) / least(sa.n, sb.n), 6) AS containment
         FROM (
           SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS shared_cnt
-          FROM __cd_sh a JOIN __cd_sh b ON a.sh = b.sh AND a.source = b.source
-                                       AND a.doc_id < b.doc_id
+          FROM {sh} a JOIN {sh} b ON a.sh = b.sh AND a.source = b.source
+                                 AND a.doc_id < b.doc_id
           GROUP BY 1, 2) shared
-        JOIN (SELECT doc_id, count(*) AS n FROM __cd_sh GROUP BY doc_id) sa
+        JOIN (SELECT doc_id, count(*) AS n FROM {sh} GROUP BY doc_id) sa
           ON sa.doc_id = doc_a
-        JOIN (SELECT doc_id, count(*) AS n FROM __cd_sh GROUP BY doc_id) sb
+        JOIN (SELECT doc_id, count(*) AS n FROM {sh} GROUP BY doc_id) sb
           ON sb.doc_id = doc_b
         WHERE CAST(shared_cnt AS DOUBLE) / least(sa.n, sb.n) >= 0.2
         ORDER BY containment DESC, doc_a, doc_b
         LIMIT 100
-        """
+        """,
+        sh=sh,
     )
 
 
@@ -1525,23 +1507,23 @@ def llm_repetition_loop_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..schemas import ensure_views
 
     ensure_views(spark, sf_dir)
-    spark.sql(
+    grp = spark.sql(
         "SELECT md5(text) AS h, min(doc_id) AS min_doc"
         " FROM documents GROUP BY md5(text)"
-    ).createOrReplaceTempView("__rld_grp")
+    )
     # split ONCE per representative (r16): the lambda body is opaque to
     # Catalyst CSE, so the inline form re-split the text for every
     # 3-gram index — ~3·n_grams splits per doc (guide §1.2).
     # MAP-SIDE max-repeat (r16 session 3 — the llm_gopher_repetition
     # fold): the per-(h, gram) explode + shuffle count + re-aggregate
     # existed only to produce TWO per-doc scalars, and the old shape also
-    # re-evaluated __rld_grp's corpus group-by once per view reference.
+    # re-evaluated grp's corpus group-by once per reference.
     # max_rep = max gram multiplicity = the longest equal run in the
     # SORTED 3-gram array (sort_array + codegen fold), and n_grams =
     # sum of per-gram counts = size(tk) - 2 exactly, so the top-20 rank
     # runs as one projection + TakeOrdered over the rep join — the
     # (h, g)-grain exchange disappears and grp is referenced once.
-    spark.sql(
+    top = spark.sql(
         """
         SELECT h, min_doc, CAST(size(tk) - 2 AS BIGINT) AS n_grams,
                aggregate(
@@ -1556,12 +1538,13 @@ def llm_repetition_loop_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
                                     IF(x <=> acc.prev, acc.run + 1L, 1L))),
                  acc -> acc.best) AS max_rep
         FROM (SELECT r.h, r.min_doc, split(d.text, ' ') AS tk
-              FROM __rld_grp r JOIN documents d ON d.doc_id = r.min_doc)
+              FROM {grp} r JOIN documents d ON d.doc_id = r.min_doc)
         WHERE size(tk) >= 3
         ORDER BY round(CAST(max_rep AS DOUBLE) / n_grams, 6) DESC, min_doc
         LIMIT 20
-        """
-    ).createOrReplaceTempView("__rld_top")
+        """,
+        grp=grp,
+    )
     return spark.sql(
         """
         SELECT d.doc_id, CAST(t.n_grams AS BIGINT) AS n_grams,
@@ -1569,10 +1552,11 @@ def llm_repetition_loop_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
                round(CAST(t.max_rep AS DOUBLE) / t.n_grams, 6) AS loop_score,
                CASE WHEN CAST(t.max_rep AS DOUBLE) / t.n_grams > 0.1
                     THEN 1 ELSE 0 END AS is_loopy
-        FROM __rld_top t JOIN documents d ON md5(d.text) = t.h
+        FROM {top} t JOIN documents d ON md5(d.text) = t.h
         ORDER BY loop_score DESC, d.doc_id
         LIMIT 20
-        """
+        """,
+        top=top,
     )
 
 
@@ -1784,11 +1768,13 @@ def llm_idf_weighted_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     every contained shingle's weight); oracle applies the same reps CTE.
     Top-20 pairs at ≥ 0.2.
 
-    Plan note (r6 verdict task #4): the shingle explode is corpus-sized
-    and was referenced 5× through the shared CTE (14 exchanges, each
-    reference re-running the explode); the shingle, |vocab|-grain idf
-    and doc-grain weight-sum stages are now cached temp views read via
-    InMemoryTableScan — `_idf_jaccard_sql()` stays oracle-only."""
+    Plan note: the shingle explode is corpus-sized and is referenced 5×
+    (idf, wsum, both pair sides and the corpus count); the shingle,
+    |vocab|-grain idf and doc-grain weight-sum stages are uncached
+    DataFrame arguments, and AQE reuses the repeated exchanges (sf0.01:
+    9 shuffle stages run, 4 reused). Caching them ran 16 staging jobs at
+    construction and was slower fresh at sf0.1 (2.69 s against 2.13 s)
+    — `_idf_jaccard_sql()` stays oracle-only."""
     from ..schemas import ensure_views
 
     ensure_views(spark, sf_dir)
@@ -1801,39 +1787,40 @@ def llm_idf_weighted_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         " LATERAL VIEW explode(IF(size(tk) < 3, array(), array_distinct(transform("
         "sequence(0, size(tk) - 3),"
         " i -> concat_ws(' ', tk[i], tk[i+1], tk[i+2]))))) AS sh"
-    ).cache()
-    sh.createOrReplaceTempView("__idfj_sh")
-    _materialize_cache(spark, sh)
+    )
     idf = spark.sql(
         """
         SELECT sh, ln((SELECT CAST(count(DISTINCT doc_id) AS DOUBLE)
-                       FROM __idfj_sh) / count(DISTINCT doc_id)) AS w
-        FROM __idfj_sh GROUP BY sh
-        """
-    ).cache()
-    idf.createOrReplaceTempView("__idfj_idf")
+                       FROM {sh}) / count(DISTINCT doc_id)) AS w
+        FROM {sh} GROUP BY sh
+        """,
+        sh=sh,
+    )
     wsum = spark.sql(
-        "SELECT s.doc_id, sum(i.w) AS tw FROM __idfj_sh s"
-        " JOIN __idfj_idf i ON i.sh = s.sh GROUP BY s.doc_id"
-    ).cache()
-    wsum.createOrReplaceTempView("__idfj_wsum")
-    _materialize_cache(spark, idf, wsum)
+        "SELECT s.doc_id, sum(i.w) AS tw FROM {sh} s"
+        " JOIN {idf} i ON i.sh = s.sh GROUP BY s.doc_id",
+        sh=sh,
+        idf=idf,
+    )
     return spark.sql(
         """
         SELECT i.doc_a, i.doc_b,
                round(i.iw / (wa.tw + wb.tw - i.iw), 6) AS weighted_jaccard
         FROM (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, sum(idf.w) AS iw
-              FROM __idfj_sh a
-              JOIN __idfj_sh b ON b.source = a.source AND b.sh = a.sh
-                              AND a.doc_id < b.doc_id
-              JOIN __idfj_idf idf ON idf.sh = a.sh
+              FROM {sh} a
+              JOIN {sh} b ON b.source = a.source AND b.sh = a.sh
+                        AND a.doc_id < b.doc_id
+              JOIN {idf} idf ON idf.sh = a.sh
               GROUP BY a.doc_id, b.doc_id) i
-        JOIN __idfj_wsum wa ON wa.doc_id = i.doc_a
-        JOIN __idfj_wsum wb ON wb.doc_id = i.doc_b
+        JOIN {wsum} wa ON wa.doc_id = i.doc_a
+        JOIN {wsum} wb ON wb.doc_id = i.doc_b
         WHERE i.iw / (wa.tw + wb.tw - i.iw) >= 0.2
         ORDER BY weighted_jaccard DESC, i.doc_a, i.doc_b
         LIMIT 20
-        """
+        """,
+        sh=sh,
+        idf=idf,
+        wsum=wsum,
     )
 
 
@@ -1876,8 +1863,7 @@ def _register_lsh_tuning() -> None:
         banding pipeline is broadcast arithmetic. Oracle composes the
         banding oracle verbatim as a CTE — lockstep by construction."""
         pairs = llm_minhash_banding.__wrapped__(spark, sf_dir)
-        pairs.createOrReplaceTempView("__lsh_pairs")
-        return spark.sql(_lsh_tuning_sql("SELECT * FROM __lsh_pairs"))
+        return spark.sql(_lsh_tuning_sql("SELECT * FROM {pairs}"), pairs=pairs)
 
 
 _register_lsh_tuning()
@@ -2142,22 +2128,20 @@ def llm_template_boilerplate_detect(
                count(*) AS mult
         FROM documents GROUP BY md5(text), source
         """
-    ).cache()
-    grp.createOrReplaceTempView("__boiler_grp")
+    )
     shr = spark.sql(
         """
         SELECT DISTINCT r0.h, g
         FROM (SELECT h, min(rep_doc) AS rep_doc
-              FROM __boiler_grp GROUP BY h) r0
+              FROM {grp} GROUP BY h) r0
         JOIN (SELECT doc_id, split(text, ' ') AS tk FROM documents) d
           ON d.doc_id = r0.rep_doc
         LATERAL VIEW explode(transform(sequence(0, size(tk) - 3),
             i -> concat_ws(' ', tk[i], tk[i+1], tk[i+2]))) AS g
         WHERE size(tk) >= 3
-        """
-    ).cache()
-    shr.createOrReplaceTempView("__boiler_shr")
-    _materialize_cache(spark, grp, shr)
+        """,
+        grp=grp,
+    )
     return spark.sql(
         """
         SELECT nd.source, nd.docs AS n_docs,
@@ -2169,16 +2153,18 @@ def llm_template_boilerplate_detect(
                               THEN df.df ELSE 0 END)
                      * 1e0 / sum(df.df), 6) AS boilerplate_share
         FROM (SELECT g.source, s.g, CAST(sum(g.mult) AS BIGINT) AS df
-              FROM __boiler_shr s JOIN __boiler_grp g ON g.h = s.h
+              FROM {shr} s JOIN {grp} g ON g.h = s.h
               GROUP BY g.source, s.g) df
         JOIN (SELECT g.source, CAST(sum(g.mult) AS BIGINT) AS docs
-              FROM __boiler_grp g
-              WHERE g.h IN (SELECT DISTINCT h FROM __boiler_shr)
+              FROM {grp} g
+              WHERE g.h IN (SELECT DISTINCT h FROM {shr})
               GROUP BY g.source) nd
           ON df.source = nd.source
         GROUP BY nd.source, nd.docs
         ORDER BY nd.source
-        """
+        """,
+        grp=grp,
+        shr=shr,
     )
 
 
@@ -2289,28 +2275,28 @@ def llm_simhash_fp_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     catches; without the collapse the band join is quadratic in
     duplicate multiplicity on a dup-heavy corpus). Portable bit
     arithmetic throughout
-    (integer-division bit tests, no engine xor/shift). The token,
-    code and candidate stages are cached temp views on the Spark side;
-    the shared builder emits the DuckDB oracle."""
+    (integer-division bit tests, no engine xor/shift). The reps, token,
+    code and shingle-set stages are uncached DataFrame arguments on the
+    Spark side (AQE reuses their repeated exchanges); the shared builder
+    emits the DuckDB oracle."""
     from ..schemas import ensure_views
 
     ensure_views(spark, sf_dir)
     reps = spark.sql(
         "SELECT min(doc_id) AS doc_id, source, text"
         " FROM documents GROUP BY source, text"
-    ).cache()
-    reps.createOrReplaceTempView("__simfp_reps")
+    )
     tok = spark.sql(
         "SELECT doc_id, source, explode(split(text, ' ')) AS token"
-        " FROM __simfp_reps"
-    ).cache()
-    tok.createOrReplaceTempView("tokrows_v")
+        " FROM {reps}",
+        reps=reps,
+    )
     sim = spark.sql(
         _simhash_code_sql(
             "cast(conv(substr(md5(token), 1, 8), 16, 10) AS BIGINT)"
-        ).replace("FROM tokrows)", "FROM tokrows_v)")
-    ).cache()
-    sim.createOrReplaceTempView("__simfp_sim")
+        ).replace("FROM tokrows)", "FROM {tok})"),
+        tok=tok,
+    )
     # DOC-GRAIN shingle sets (r16, guide §2.3): the exact-Jaccard verify
     # used to run at shingle grain — candidates joined to an exploded
     # (doc_id, g) view twice, then re-aggregated per pair; the shared
@@ -2322,12 +2308,26 @@ def llm_simhash_fp_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "sequence(0, size(tk) - 3),"
         " i -> concat_ws(' ', tk[i], tk[i+1], tk[i+2]))) AS gs"
         " FROM (SELECT doc_id, split(text, ' ') AS tk"
-        " FROM __simfp_reps) WHERE size(tk) >= 3"
-    ).cache()
-    sh.createOrReplaceTempView("__simfp_sh")
+        " FROM {reps}) WHERE size(tk) >= 3",
+        reps=reps,
+    )
+    # One band row per (doc, band); the candidate pairs carry both codes,
+    # so no further join reads ``sim``: its two references plan
+    # identically, and AQE computes the token explode once and reuses it.
+    bands = spark.sql(
+        """
+        SELECT doc_id, source, sim, j,
+               CAST(floor(sim / CASE j WHEN 0 THEN 1 WHEN 1 THEN 256
+                   WHEN 2 THEN 65536 ELSE 16777216 END) AS BIGINT) % 256 AS bv
+        FROM {sim}
+        CROSS JOIN (SELECT 0 AS j UNION ALL SELECT 1
+                    UNION ALL SELECT 2 UNION ALL SELECT 3) js
+        """,
+        sim=sim,
+    )
     ham = " + ".join(
-        f"abs(CAST(floor(a.sim / {1 << b}) AS BIGINT) % 2"
-        f" - CAST(floor(b.sim / {1 << b}) AS BIGINT) % 2)"
+        f"abs(CAST(floor(sim_a / {1 << b}) AS BIGINT) % 2"
+        f" - CAST(floor(sim_b / {1 << b}) AS BIGINT) % 2)"
         for b in range(32)
     )
     return spark.sql(
@@ -2346,35 +2346,20 @@ def llm_simhash_fp_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                    size(array_intersect(sa.gs, sb.gs)) AS shared,
                    size(sa.gs) + size(sb.gs) AS nn
             FROM (
-              SELECT c.doc_a, c.doc_b, CAST(({ham}) AS BIGINT) AS hamming
-              FROM (
-                SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-                FROM (SELECT doc_id, source, j,
-                             CAST(floor(sim / CASE j WHEN 0 THEN 1
-                                 WHEN 1 THEN 256 WHEN 2 THEN 65536
-                                 ELSE 16777216 END) AS BIGINT) % 256 AS bv
-                      FROM __simfp_sim
-                      CROSS JOIN (SELECT 0 AS j UNION ALL SELECT 1
-                                  UNION ALL SELECT 2
-                                  UNION ALL SELECT 3) js) x
-                JOIN (SELECT doc_id, source, j,
-                             CAST(floor(sim / CASE j WHEN 0 THEN 1
-                                 WHEN 1 THEN 256 WHEN 2 THEN 65536
-                                 ELSE 16777216 END) AS BIGINT) % 256 AS bv
-                      FROM __simfp_sim
-                      CROSS JOIN (SELECT 0 AS j UNION ALL SELECT 1
-                                  UNION ALL SELECT 2
-                                  UNION ALL SELECT 3) js) y
-                  ON x.source = y.source AND x.j = y.j AND x.bv = y.bv
-                 AND x.doc_id < y.doc_id) c
-              JOIN __simfp_sim a ON a.doc_id = c.doc_a
-              JOIN __simfp_sim b ON b.doc_id = c.doc_b
+              SELECT doc_a, doc_b, CAST(({ham}) AS BIGINT) AS hamming
+              FROM (SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b,
+                                    x.sim AS sim_a, y.sim AS sim_b
+                    FROM {{bands}} x JOIN {{bands}} y
+                      ON x.source = y.source AND x.j = y.j AND x.bv = y.bv
+                     AND x.doc_id < y.doc_id)
               WHERE ({ham}) <= 3) cl
-            JOIN __simfp_sh sa ON sa.doc_id = cl.doc_a
-            JOIN __simfp_sh sb ON sb.doc_id = cl.doc_b) i
+            JOIN {{sh}} sa ON sa.doc_id = cl.doc_a
+            JOIN {{sh}} sb ON sb.doc_id = cl.doc_b) i
         ) v
         GROUP BY hamming ORDER BY hamming
-        """
+        """,
+        bands=bands,
+        sh=sh,
     )
 
 
@@ -2428,49 +2413,40 @@ def llm_shingle_size_sensitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
     justifies the n=3 every other dedup op here uses (small n inflates
     matches with common phrases, large n misses paraphrase overlap;
     the pair count should fall monotonically in n). EXACT-COLLAPSE
-    FIRST like its siblings. Scale shape (round 13 staging rewrite —
-    the r12 verdict's 21-exchange finding): each arm's shingle explode
-    is CACHED ONCE and its per-doc shingle counts once more; the old
-    single-CTE form inlined the shingle subquery 4× per arm (Spark CTEs
-    are not materialization points), re-exploding the corpus 12× across
-    the sweep. Same SQL semantics per arm, oracle unchanged; in
-    production the pair sets come from the banding pipeline and this
-    audit runs on candidates only."""
+    FIRST like its siblings. Scale shape: each arm's shingle explode
+    and per-doc shingle counts are uncached DataFrame arguments that the
+    static plan repeats per reference; AQE reuses the repeated exchanges
+    (sf0.01: 15 shuffle stages run, 3 reused). Caching them ran 14
+    staging jobs at construction and was slower fresh. Same SQL
+    semantics per arm, oracle unchanged; in production the pair sets
+    come from the banding pipeline and this audit runs on candidates
+    only."""
     from ..schemas import ensure_views
 
     ensure_views(spark, sf_dir)
     reps = spark.sql(
         "SELECT min(doc_id) AS doc_id, source, text"
         " FROM documents GROUP BY source, text"
-    ).cache()
-    reps.createOrReplaceTempView("__shs_reps")
-    # no separate reps/sh materialization jobs (r17, the minhash finding):
-    # each arm's cnt aggregate is a JOIN-FREE pipeline over its sh cache,
-    # which is itself a join-free explode over the reps cache — counting
-    # cnt{n} alone materializes reps + sh{n} + cnt{n} in ONE job per arm
-    # (3 jobs instead of 7), and the union query's size-sensitive pair
-    # joins still plan strictly after every cache carries real stats.
+    )
     parts = []
-    staged = []
+    frames = {}
     for n in (2, 3, 5):
         grams = ", ".join(f"tk[i+{j}]" for j in range(n))
-        sh = spark.sql(
+        sh = frames[f"sh{n}"] = spark.sql(
             f"""
             SELECT doc_id, source, g FROM (SELECT doc_id, source,
-            split(text, ' ') AS tk FROM __shs_reps)
+            split(text, ' ') AS tk FROM {{reps}})
             LATERAL VIEW explode(array_distinct(transform(
             sequence(0, size(tk) - {n}),
             i -> concat_ws(' ', {grams})))) AS g
             WHERE size(tk) >= {n}
-            """
-        ).cache()
-        sh.createOrReplaceTempView(f"__shs_sh{n}")
-        cnt = spark.sql(
-            f"SELECT doc_id, CAST(count(*) AS BIGINT) AS n"
-            f" FROM __shs_sh{n} GROUP BY doc_id"
-        ).cache()
-        cnt.createOrReplaceTempView(f"__shs_cnt{n}")
-        staged.append(cnt)  # counting cnt pulls sh (and reps) through
+            """,
+            reps=reps,
+        )
+        frames[f"cnt{n}"] = spark.sql(
+            "SELECT doc_id, CAST(count(*) AS BIGINT) AS n FROM {sh} GROUP BY doc_id",
+            sh=sh,
+        )
         parts.append(
             f"""
     SELECT {n} AS shingle_n,
@@ -2480,17 +2456,16 @@ def llm_shingle_size_sensitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT i.shared * 1e0 / (za.n + zb.n - i.shared) AS j
       FROM (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
                    CAST(count(*) AS BIGINT) AS shared
-            FROM __shs_sh{n} a
-            JOIN __shs_sh{n} b ON b.source = a.source AND b.g = a.g
+            FROM {{sh{n}}} a
+            JOIN {{sh{n}}} b ON b.source = a.source AND b.g = a.g
                          AND a.doc_id < b.doc_id
             GROUP BY a.doc_id, b.doc_id) i
-      JOIN __shs_cnt{n} za ON za.doc_id = i.doc_a
-      JOIN __shs_cnt{n} zb ON zb.doc_id = i.doc_b
+      JOIN {{cnt{n}}} za ON za.doc_id = i.doc_a
+      JOIN {{cnt{n}}} zb ON zb.doc_id = i.doc_b
       WHERE i.shared * 1e0 / (za.n + zb.n - i.shared) >= 0.5) v"""
         )
-    _materialize_cache(spark, *staged)
     u = " UNION ALL ".join(parts)
-    return spark.sql(f"SELECT * FROM ({u}) allrows ORDER BY shingle_n")
+    return spark.sql(f"SELECT * FROM ({u}) allrows ORDER BY shingle_n", **frames)
 
 
 def _degree_dist_sql(pairs_sql: str) -> str:
@@ -2538,10 +2513,7 @@ def _register_dup_partner_degree() -> None:
         the formerly output-bound verbatim-duplicate blowup (12.8x
         measured at 10x amplification in round 10) is gone."""
         pairs = llm_minhash_banding.__wrapped__(spark, sf_dir)
-        pairs.createOrReplaceTempView("__dupdeg_pairs")
-        return spark.sql(
-            _degree_dist_sql("SELECT * FROM __dupdeg_pairs")
-        )
+        return spark.sql(_degree_dist_sql("SELECT * FROM {pairs}"), pairs=pairs)
 
 
 _register_dup_partner_degree()

@@ -116,10 +116,10 @@ def ratio(col: Column | str) -> Column:
 def _materialize_cache(spark: SparkSession, *dfs: DataFrame) -> None:
     """count() each cached DataFrame whose in-memory buffers are NOT yet
     built, so downstream queries are planned against the cache's REAL
-    InMemoryRelation statistics (see llm_idf_weighted_jaccard's shingle
-    cache: unmaterialized cached explodes carry pre-explode size
-    estimates, under which Catalyst force-broadcasts the whole view, a
-    3.5 GiB OOM at the 100x corpus in round 10). Gating on the actual
+    InMemoryRelation statistics (unmaterialized cached explodes carry
+    pre-explode size estimates, under which Catalyst force-broadcasted
+    llm_idf_weighted_jaccard's former shingle cache, a 3.5 GiB OOM at the
+    100x corpus in round 10). Gating on the actual
     CacheManager state (not a process-global seen-set, round 11) skips the
     count when a live identical cache is already loaded. Every caller
     ``.cache()``s its frames in the same op body. Falls back to an

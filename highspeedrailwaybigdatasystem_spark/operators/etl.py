@@ -354,7 +354,19 @@ def etl_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     t(spark, sf_dir, "lineitem").select(cols).repartition(64).write.mode(
         "overwrite"
     ).parquet(frag)
-    spark.read.parquet(frag).coalesce(4).write.mode("overwrite").parquet(compact)
+    # One read split per fragment file, so coalesce(4) always has at least
+    # 4 inputs: Spark packs small files into minPartitionNum splits, which
+    # defaults to the core count (2 splits, so 2 output files, at 2 cores).
+    fragment = spark.read.parquet(frag)
+    prev = spark.conf.get("spark.sql.files.minPartitionNum", None)
+    spark.conf.set("spark.sql.files.minPartitionNum", str(len(fragment.inputFiles())))
+    try:
+        fragment.coalesce(4).write.mode("overwrite").parquet(compact)
+    finally:
+        if prev is None:
+            spark.conf.unset("spark.sql.files.minPartitionNum")
+        else:
+            spark.conf.set("spark.sql.files.minPartitionNum", prev)
 
     def audit(path: str, stage: str) -> DataFrame:
         return (

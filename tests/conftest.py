@@ -45,6 +45,27 @@ def spark():
 
 
 @pytest.fixture(scope="session")
+def nullinj_dir(tmp_path_factory) -> str:
+    """The null-injection corpus (tools/gen_nullinj.py), built once."""
+    from tools.gen_nullinj import build
+
+    out = str(tmp_path_factory.mktemp("nullinj"))
+    build(out)
+    return out
+
+
+@pytest.fixture(scope="session")
+def nullinj_stream_dir(tmp_path_factory) -> str:
+    """The wave-3 streaming null-injection corpus (NULL ts and
+    event_type on top of the base injections), built once."""
+    from tools.gen_nullinj import build
+
+    out = str(tmp_path_factory.mktemp("nullinj_stream"))
+    build(out, stream=True)
+    return out
+
+
+@pytest.fixture(scope="session")
 def duck():
     from highspeedrailwaybigdatasystem_spark.schemas import TABLE_NAMES
 

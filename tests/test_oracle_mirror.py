@@ -1,9 +1,6 @@
 """The t2 gate replica: every queries() entry vs its oracle_sql() on the
 oracle tier (sf0.01 by default) — row count, columns, dtype families,
 order-insensitive exact values (tools/mirror.py compare rules).
-
-Rows-only operators (no oracle) are executed and must return a readable
-DataFrame with a stable, nonempty schema.
 """
 
 from __future__ import annotations
@@ -18,14 +15,11 @@ from tests.conftest import SF_ORACLE
 _QUERIES = entrymod.queries()
 _ORACLES = entrymod.oracle_sql()
 
-ORACLE_NAMES = sorted(n for n in _QUERIES if n in _ORACLES)
-ROWS_ONLY_NAMES = sorted(n for n in _QUERIES if n not in _ORACLES)
+ORACLE_NAMES = sorted(_QUERIES)  # registry.register requires an oracle
 
 
 def test_surface_size():
     assert len(_QUERIES) >= 85
-    # rows-only must stay the rare exception (SURVEY.md §5.1)
-    assert len(ROWS_ONLY_NAMES) <= 8
 
 
 @pytest.mark.parametrize("name", ORACLE_NAMES)
@@ -47,13 +41,6 @@ def test_oracle_match(name, spark, duck):
     duck_pdf = duck.execute(_ORACLES[name]).fetchdf()
     problems = compare(name, spark_pdf, duck_pdf)
     assert not problems, f"{name}: " + "; ".join(problems)
-
-
-@pytest.mark.parametrize("name", ROWS_ONLY_NAMES)
-def test_rows_only_runs(name, spark):
-    df = _QUERIES[name](spark, SF_ORACLE)
-    assert df.columns, f"{name}: empty schema"
-    assert df.count() >= 0
 
 
 def test_entry_smoke(spark):

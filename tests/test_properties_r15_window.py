@@ -167,15 +167,11 @@ def test_stop_chunk_stats_matches_bruteforce(spark):
     assert int(capped["n_shared"].sum()) == kept_pair_work
 
 
-def test_null_profile_counts(spark):
+def test_null_profile_counts(spark, nullinj_dir):
     """llm_null_profile recomputed in pandas; zero null rates on the
-    pristine corpus, exact counts on the null-injection corpus when it
-    exists (generated by tools/gen_nullinj.py)."""
-    import os
-
-    for sf in (SF_ORACLE, "/root/repo/_scratch/nullinj"):
-        if not os.path.exists(f"{sf}/documents.parquet"):
-            continue
+    pristine corpus, exact counts on the null-injection corpus
+    (tools/gen_nullinj.py)."""
+    for sf in (SF_ORACLE, nullinj_dir):
         docs = pd.read_parquet(f"{sf}/documents.parquet",
                                columns=["source", "text", "lang"])
         out = all_queries()["llm_null_profile"](spark, sf).toPandas()
@@ -186,3 +182,4 @@ def test_null_profile_counts(spark):
             assert r.null_lang == int(g["lang"].isna().sum())
             assert r.both_null == int((g["text"].isna() & g["lang"].isna()).sum())
         assert set(out["source"]) == set(docs["source"].unique())
+    assert docs["text"].isna().any(), "null-injection corpus has no NULL text"

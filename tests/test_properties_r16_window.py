@@ -163,22 +163,7 @@ def test_ivf_persist_rebuilds_on_stale_fingerprint(spark):
 
 # --- wave-3 streaming NULL contract (SURVEY.md §5.3 classes f/g) ---
 
-def _stream_nullinj_dir() -> str:
-    """Regenerate the wave-3 corpus if absent (deterministic: a DuckDB
-    rewrite of sf0.01 with NULL ts / NULL event_type injections)."""
-    import subprocess
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    out = os.path.join(repo, "_scratch", "nullinj_stream")
-    if not os.path.exists(os.path.join(out, "events.parquet")):
-        subprocess.run(
-            [sys.executable, os.path.join(repo, "tools", "gen_nullinj.py"), "--stream"],
-            check=True, cwd=repo,
-        )
-    return out
-
-
-def test_stream_null_event_time_contract(spark):
+def test_stream_null_event_time_contract(spark, nullinj_stream_dir):
     """Class (f): NULL event time has no window. stream_tumbling on the
     wave-3 corpus must emit zero NULL win_start rows AND match its own
     oracle (the explicit ingest filter is shared verbatim), which the
@@ -189,7 +174,7 @@ def test_stream_null_event_time_contract(spark):
 
     from highspeedrailwaybigdatasystem_spark.registry import all_oracles
 
-    sf = _stream_nullinj_dir()
+    sf = nullinj_stream_dir
     out = all_queries()["stream_tumbling"](spark, sf).toPandas()
     assert out["win_start"].notna().all(), "NULL-window group leaked through"
     con = duckdb.connect()
@@ -206,7 +191,7 @@ def test_stream_null_event_time_contract(spark):
     assert ev["ts"].isna().any() and ev["event_type"].isna().any()
 
 
-def test_stream_null_routing_key_contract(spark):
+def test_stream_null_routing_key_contract(spark, nullinj_stream_dir):
     """Class (g): NULL routing key is a legitimate merge-key group.
     stream_foreachbatch's accumulator must keep the NULL event_type group
     (bare sorted() raised TypeError on the None/str mix before the fix)
@@ -217,7 +202,7 @@ def test_stream_null_routing_key_contract(spark):
 
     from highspeedrailwaybigdatasystem_spark.registry import all_oracles
 
-    sf = _stream_nullinj_dir()
+    sf = nullinj_stream_dir
     out = all_queries()["stream_foreachbatch"](spark, sf).toPandas()
     assert out["event_type"].isna().any(), "NULL merge-key group missing"
     con = duckdb.connect()

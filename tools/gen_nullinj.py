@@ -31,11 +31,13 @@ Deterministic injections (modulus-keyed, so reruns are identical):
 * embeddings: embedding NULL @ vec_id%97==0
 * nation/region/part/supplier: copied verbatim (domain dims stay sound)
 
-Usage: python tools/gen_nullinj.py  -> _scratch/nullinj/
+Usage: python tools/gen_nullinj.py [--out DIR]  -> DIR (default _scratch/nullinj/)
 Then:  python tools/mirror.py --sf _scratch/nullinj [ops...]
+The test suite builds both corpora once per session with ``build()``
+(``tests/conftest.py``).
 
 WAVE 3 (r15 verdict task #9, the STREAMING axis): ``--stream`` writes a
-second corpus to _scratch/nullinj_stream/ that additionally injects
+second corpus (default _scratch/nullinj_stream/) that additionally injects
 * events.ts NULL @ event_id%83==0 — a NULL EVENT TIME entering
   withWatermark / window() / session_window /
   dropDuplicatesWithinWatermark state;
@@ -132,9 +134,9 @@ STREAM_EVENTS_RULE = """
 """
 
 
-def main() -> None:
-    stream = "--stream" in sys.argv
-    out = OUT + "_stream" if stream else OUT
+def build(out: str, stream: bool = False) -> None:
+    """Write the null-injection corpus (``stream``: the wave-3 one) to
+    ``out``."""
     rules = dict(RULES)
     if stream:
         rules["events"] = STREAM_EVENTS_RULE
@@ -148,6 +150,14 @@ def main() -> None:
         n = con.execute(f"SELECT count(*) FROM read_parquet('{dst}')").fetchone()[0]
         print(f"{table}: {n} rows -> {dst}")
     con.close()
+
+
+def main() -> None:
+    stream = "--stream" in sys.argv
+    out = OUT + "_stream" if stream else OUT
+    if "--out" in sys.argv:
+        out = sys.argv[sys.argv.index("--out") + 1]
+    build(out, stream)
 
 
 if __name__ == "__main__":

@@ -113,11 +113,6 @@ def run_mirror(sf_dir: str, only: list[str] | None = None) -> dict[str, list[str
         except Exception as ex:  # noqa: BLE001
             results[name] = [f"SPARK ERROR: {type(ex).__name__}: {str(ex)[:300]}"]
             continue
-        if name not in oracles:
-            results[name] = (
-                [] if len(spark_pdf) >= 0 else ["rows-only: no result"]
-            )  # rows-only: ran successfully
-            continue
         try:
             duck_pdf = con.execute(oracles[name]).fetchdf()
         except Exception as ex:  # noqa: BLE001

@@ -17,7 +17,6 @@ Usage: ``python tools/shuffle_audit.py``  (≈2 min on local[32])
 from __future__ import annotations
 
 import os
-import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -27,58 +26,6 @@ from highspeedrailwaybigdatasystem_spark.session import build_session
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-_SHUFFLE = re.compile(r"Exchange (?:hash|range)partitioning")
-_BCAST = re.compile(r"BroadcastExchange")
-_PY = re.compile(r"BatchEvalPython|ArrowEvalPython|FlatMapGroupsInPandas|MapInPandas")
-
-
-_GLYPHS = re.compile(r"^[\s:+|-]*")
-
-
-def _dedup_cached_blocks(plan: str) -> str:
-    """Collapse repeated InMemoryRelation subtrees to a single occurrence.
-
-    ``executedPlan().toString()`` re-prints a cached stage's ENTIRE child
-    plan under every InMemoryTableScan that references it, so an op that
-    stages a table once but reads it 5 times would count the staging
-    shuffles 5×. The cached stage executes once; keep the first printed
-    copy, drop the repeats (distinct cached plans each still count once).
-    Recursive since round 11: a cached view whose BUILD reads another
-    cached view embeds that inner build in its own printed block, so the
-    inner copies never matched a standalone occurrence and chained caches
-    (shingle → idf → wsum) re-counted the shingle build once per printed
-    context — 112 'shuffles' for llm_idf_weighted_jaccard's 12 real ones."""
-
-    def _key(lines: list[str]) -> str:
-        # ignores per-reference expression ids (#123) and tree glyphs
-        return re.sub(r"#\d+", "#", "\n".join(ln.lstrip(" :+|-") for ln in lines))
-
-    def _walk(lines: list[str], seen: set[str]) -> list[str]:
-        out: list[str] = []
-        i = 0
-        while i < len(lines):
-            line = lines[i]
-            if "InMemoryRelation" in line:
-                depth = len(_GLYPHS.match(line).group(0))
-                j = i + 1
-                while j < len(lines) and len(_GLYPHS.match(lines[j]).group(0)) > depth:
-                    j += 1
-                block = _key(lines[i:j])
-                if block in seen:
-                    i = j
-                    continue
-                seen.add(block)
-                out.append(line)
-                out.extend(_walk(lines[i + 1 : j], seen))
-                i = j
-            else:
-                out.append(line)
-                i += 1
-        return out
-
-    return "\n".join(_walk(plan.splitlines(), set()))
-
 
 # Bounded-grain justifications for every op at >=10 deduped exchanges
 # (r6 verdict task #4: each such row must either drop or carry one).
@@ -99,8 +46,19 @@ _NOTES = {
     "(_minhash_frames), so the initial plan repeats the reps/shingle "
     "subtree per reference as banding's does; AQE reuses those exchanges "
     "at runtime (sf0.01: 5 shuffle stages run, 3 reused)",
-    "llm_idf_weighted_jaccard": "cached shingle/idf/wsum stages (r7 "
-    "re-plan, was 14 with recompute); pair stage is source-blocked",
+    "llm_idf_weighted_jaccard": "uncached shingle/idf/wsum frames repeat "
+    "per reference in the static plan; AQE reuses those exchanges at "
+    "runtime (sf0.01: 9 shuffle stages run, 4 reused); pair stage is "
+    "source-blocked",
+    "llm_containment_dedup": "uncached shingle frame read 3x (sizes, both "
+    "pair sides); AQE reuses the repeated exchanges at runtime (sf0.01: 5 "
+    "shuffle stages run, 1 reused); pair join is source-blocked",
+    "llm_chunk_overlap_dedup_capped": "uncached chunk frame repeats under "
+    "freq, kept, dropped and both pair sides; AQE reuses those exchanges "
+    "at runtime (sf0.01: 5 shuffle stages run, 4 reused)",
+    "llm_template_boilerplate_detect": "uncached group and rep-shingle "
+    "frames read twice each; exchanges are the md5(text) group-by and "
+    "rep-grain stagelets (sf0.01: 10 shuffle stages run, 0 reused)",
     "ml_naive_bayes_langid": "cached token stage; exchanges are the "
     "model-building aggs (lang x vocab grain) + one doc-grain scoring agg",
     "agg_market_basket_lift": "one uncached query: order-grain brand "
@@ -126,8 +84,10 @@ _NOTES = {
     "once per pair endpoint; AQE reuses the repeated exchanges (sf0.01: 9 "
     "shuffle stages run, 4 reused); degree stage is one union + histogram "
     "agg on the pair set",
-    "llm_shingle_size_sensitivity": "three independent shingle-size "
-    "pipelines over the collapsed reps (7 exchanges each by design)",
+    "llm_shingle_size_sensitivity": "three shingle-size arms over the "
+    "collapsed reps; each arm's uncached shingle and count frames repeat "
+    "per reference, AQE reuses them at runtime (sf0.01: 15 shuffle stages "
+    "run, 3 reused)",
     "llm_tfidf_cosine_pairs": "cached tf/weight stages; exchanges are the "
     "norm/pair/idf stagelets, pair join source-blocked",
     "str_trigram_similarity": "collapsed-rep trigram join; exchanges are "
