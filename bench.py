@@ -32,7 +32,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from highspeedrailwaybigdatasystem_spark.registry import all_queries
-from highspeedrailwaybigdatasystem_spark.session import build_session
+from highspeedrailwaybigdatasystem_spark.session import build_session, class_archive_state
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -256,6 +256,9 @@ def main() -> None:
                 # effective parallelism (r16 verdict task #2): makes the
                 # $SPARK_GRAFT_CPUS contract observable from the artifact
                 "parallelism": parallelism,
+                # how the driver JVM started: "mapped" from the class-data
+                # archive, "recording" it, or "off"; compare like with like
+                "jvm_class_archive": class_archive_state(),
                 "sf": sf_val,
                 "host_probe": probe,
                 # contention verdict (r13 task #2): True means every

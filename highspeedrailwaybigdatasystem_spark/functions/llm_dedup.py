@@ -2282,9 +2282,16 @@ def llm_simhash_fp_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..schemas import ensure_views
 
     ensure_views(spark, sf_dir)
+    # Both reads of ``reps`` filter on its grouping keys: the band join
+    # implies isnotnull(source) and the shingle sets need 3 tokens. Pushed
+    # below the aggregate one each, they planned two (source, text)
+    # exchanges; filtered here once, the reads plan alike and AQE runs
+    # one. A rep without both has no shingle set or no same-source
+    # partner, so the verify joins drop it anyway.
     reps = spark.sql(
-        "SELECT min(doc_id) AS doc_id, source, text"
-        " FROM documents GROUP BY source, text"
+        "SELECT min(doc_id) AS doc_id, source, text FROM documents"
+        " WHERE source IS NOT NULL AND size(split(text, ' ')) >= 3"
+        " GROUP BY source, text"
     )
     tok = spark.sql(
         "SELECT doc_id, source, explode(split(text, ' ')) AS token"
@@ -2307,8 +2314,7 @@ def llm_simhash_fp_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "SELECT doc_id, array_distinct(transform("
         "sequence(0, size(tk) - 3),"
         " i -> concat_ws(' ', tk[i], tk[i+1], tk[i+2]))) AS gs"
-        " FROM (SELECT doc_id, split(text, ' ') AS tk"
-        " FROM {reps}) WHERE size(tk) >= 3",
+        " FROM (SELECT doc_id, split(text, ' ') AS tk FROM {reps})",
         reps=reps,
     )
     # One band row per (doc, band); the candidate pairs carry both codes,

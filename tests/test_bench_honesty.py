@@ -168,8 +168,10 @@ def test_bench_artifact_carries_both_ratios():
         "contended",
         "attempts",
         "per_query_vs_baseline",
+        "jvm_class_archive",
     ):
         assert key in art, f"BENCH artifact missing {key}"
+    assert art["jvm_class_archive"] in ("mapped", "recording", "off")
     assert art["host_probe"]["duckdb_control_sec"] > 0
     assert isinstance(art["contended"], bool)
     assert art["attempts"] >= 1

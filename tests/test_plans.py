@@ -574,6 +574,27 @@ def test_minhash_ops_stage_nothing(spark, op):
     assert "InMemoryTableScan" not in plan, plan
 
 
+def test_simhash_audit_groups_representatives_once(spark):
+    """llm_simhash_fp_audit reads its (source, text) representatives
+    twice: for the SimHash codes and for the shingle sets. Both reads carry
+    the same filters on the grouping keys, so they plan alike and AQE runs
+    the representatives' exchange once and reuses it for the other read
+    (each read used to push its own filter below the aggregate)."""
+    import re
+
+    fn = _QUERIES["llm_simhash_fp_audit"]
+    df = getattr(fn, "__wrapped__", fn)(spark, SF_ORACLE)
+    df.collect()
+    final = df._jdf.queryExecution().executedPlan().toString()
+    final = final.split("== Initial Plan ==")[0]
+    reps = [
+        line for line in final.splitlines()
+        if re.search(r"Exchange hashpartitioning\(source#\d+, text#\d+, ", line)
+    ]
+    assert len(reps) == 2, "\n".join(reps)
+    assert sum("ReusedExchange" in line for line in reps) == 1, "\n".join(reps)
+
+
 def test_q21_single_fact_scan(spark):
     """tpch_q21 folds the EXISTS + NOT EXISTS double correlation into one
     per-order aggregate: exactly ONE lineitem scan (the semi/anti plan read
