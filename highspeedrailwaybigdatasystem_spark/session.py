@@ -197,12 +197,14 @@ class ClassArchive:
 
     @property
     def java_option(self) -> str:
-        flag = "SharedArchiveFile" if self.state == "mapped" else "ArchiveClassesAtExit"
-        path = self.archive if self.state == "mapped" else self.part
+        if self.state == "mapped":
+            option = f'-XX:SharedArchiveFile="{self.archive}"'
+        else:
+            option = f'-XX:ArchiveClassesAtExit="{self.part}"'
         # CDS logs each class it cannot archive (hundreds of lines) to
         # stdout at exit; a failure shows in the exit code, the archive's
         # header or the JVM's mappings instead.
-        return f'-XX:{flag}="{path}" -Xlog:cds*=off'
+        return option + " -Xlog:cds*=off"
 
     def release(self) -> None:
         """Delete the recording's part file and claim."""
@@ -282,10 +284,9 @@ def _sweep(cds_dir: str, key: str) -> None:
     """Delete the files of other keys and any orphaned part or claim file,
     so that the directory holds one archive. A live recorder's files stay."""
     for name in os.listdir(cds_dir):
-        stem = name.split(".")[0]
-        if name in ("conf", key + ".jsa") or _claim_alive(
-            os.path.join(cds_dir, stem + ".claim")
-        ):
+        if name in ("conf", key + ".jsa"):
+            continue
+        if _claim_alive(os.path.join(cds_dir, name.split(".")[0] + ".claim")):
             continue
         with contextlib.suppress(FileNotFoundError):
             os.remove(os.path.join(cds_dir, name))
