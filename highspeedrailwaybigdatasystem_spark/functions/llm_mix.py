@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..registry import register
-from ..operators._util import _materialize_cache, ratio, sql_q, t
+from ..operators._util import ratio, sql_q, t
 from ._llm_shared import _DOT_ORACLE
 
 
@@ -816,67 +816,52 @@ def llm_data_scaling_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     and on a low-duplication corpus the collapse degrades to the one
     md5(text) group-by shuffle every exact-collapse op already pays.
     Results are provably identical, so the ORACLE is unchanged.
-    Chained temp views (not CTEs) keep the cached stages substitutable."""
+    Each stage reaches the next ``spark.sql`` as an uncached DataFrame
+    argument; the vocabulary and token totals derive from ``cnt``, so
+    the k ⋈ m join runs once (BASELINE.md, "llm_mix and llm_text stage
+    nothing")."""
     from ..schemas import ensure_views
 
     ensure_views(spark, sf_dir)
-    spark.sql(
-        "SELECT explode(array('33', '66', '99', 'cc')) AS cut"
-    ).createOrReplaceTempView("__lc_cuts")
     # per-(content group, cut) train multiplicity: linear scan, no explode
     m = spark.sql(
         """
         SELECT md5(d.text) AS h, d.lang, c.cut, count(*) AS m
-        FROM documents d JOIN __lc_cuts c
+        FROM documents d
+        JOIN (SELECT explode(array('33', '66', '99', 'cc')) AS cut) c
           ON substr(md5(CAST(d.doc_id AS STRING)), 1, 2) < c.cut
         WHERE d.text IS NOT NULL
         GROUP BY md5(d.text), d.lang, c.cut
         """
-    ).cache()
-    m.createOrReplaceTempView("__lc_m")
+    )
     # one representative text per content group, tokenized ONCE
-    spark.sql(
-        """
-        SELECT md5(text) AS h, lang, min(doc_id) AS rep_doc
-        FROM documents WHERE text IS NOT NULL
-        GROUP BY md5(text), lang
-        """
-    ).createOrReplaceTempView("__lc_reps")
     k = spark.sql(
         """
         SELECT r.h, r.lang, token, count(*) AS k
-        FROM __lc_reps r JOIN documents d ON d.doc_id = r.rep_doc
+        FROM (SELECT md5(text) AS h, lang, min(doc_id) AS rep_doc
+              FROM documents WHERE text IS NOT NULL
+              GROUP BY md5(text), lang) r
+        JOIN documents d ON d.doc_id = r.rep_doc
         LATERAL VIEW explode(split(d.text, ' ')) AS token
         WHERE token <> ''
         GROUP BY r.h, r.lang, token
         """
-    ).cache()
-    k.createOrReplaceTempView("__lc_k")
-    # Round-10 planner-statistics discipline: both cached stages feed
-    # several model views each — materialize before anything downstream
-    # is planned so the joins see real InMemoryRelation stats.
-    _materialize_cache(spark, m, k)
-    views = {
-        "__lc_cnt": """
-            SELECT m.cut, k.lang, k.token, sum(k.k * m.m) AS c
-            FROM __lc_k k JOIN __lc_m m
-              ON m.h = k.h AND m.lang <=> k.lang
-            GROUP BY m.cut, k.lang, k.token""",
-        "__lc_tot": """
-            SELECT cut, lang, sum(c) AS tt FROM __lc_cnt GROUP BY cut, lang""",
-        "__lc_vocab": """
-            SELECT m.cut, count(DISTINCT k.token) AS v
-            FROM __lc_k k JOIN __lc_m m
-              ON m.h = k.h AND m.lang <=> k.lang
-            GROUP BY m.cut""",
-        "__lc_prior": """
-            SELECT cut, lang, sum(m) AS d FROM __lc_m GROUP BY cut, lang""",
-    }
-    for name, sql in views.items():
-        spark.sql(sql).createOrReplaceTempView(name)
-    spark.sql(
-        "SELECT cut, sum(d) AS dt FROM __lc_prior GROUP BY cut"
-    ).createOrReplaceTempView("__lc_dtot")
+    )
+    cnt = spark.sql(
+        """
+        SELECT m.cut, k.lang, k.token, sum(k.k * m.m) AS c
+        FROM {k} k JOIN {m} m ON m.h = k.h AND m.lang <=> k.lang
+        GROUP BY m.cut, k.lang, k.token
+        """,
+        k=k,
+        m=m,
+    )
+    prior = spark.sql(
+        "SELECT cut, lang, sum(m) AS d FROM {m} GROUP BY cut, lang", m=m
+    )
+    dtot = spark.sql(
+        "SELECT cut, sum(d) AS dt FROM {prior} GROUP BY cut", prior=prior
+    )
     # Eval slice bounded BY CONSTRUCTION (round 11): the md5-bucket slice
     # alone scales with the corpus, so capping it to doc_id < 50000 fixes
     # its size at any scale (a no-op at every test tier — max doc_id 4999)
@@ -885,15 +870,6 @@ def llm_data_scaling_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the same predicate. Tokenized DIRECTLY from the filtered documents
     # scan (round 13) — the filter reaches the parquet scan instead of an
     # already-exploded corpus-sized token stage.
-    spark.sql(
-        """
-        SELECT doc_id, lang AS actual_lang, token
-        FROM documents LATERAL VIEW explode(split(text, ' ')) AS token
-        WHERE token <> ''
-          AND substr(md5(CAST(doc_id AS STRING)), 1, 2) >= 'e6'
-          AND doc_id < 50000
-        """
-    ).createOrReplaceTempView("__lc_eval")
     return spark.sql(
         """
         SELECT p2.cut, CAST(max(dt2.dt) AS BIGINT) AS train_docs,
@@ -916,20 +892,30 @@ def llm_data_scaling_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
                      sum(e.ke * CAST(round(ln((COALESCE(c.c, 0) + 1.0)
                                               / (t.tt + v.v))
                                     * 1000000) AS BIGINT)) AS ll
-              FROM (SELECT doc_id, actual_lang, token, count(*) AS ke
-                    FROM __lc_eval
-                    GROUP BY doc_id, actual_lang, token) e
-              JOIN __lc_tot t ON true
-              JOIN __lc_vocab v ON v.cut = t.cut
-              LEFT JOIN __lc_cnt c ON c.cut = t.cut AND c.lang = t.lang
-                                   AND c.token = e.token
+              FROM (SELECT doc_id, lang AS actual_lang, token,
+                           count(*) AS ke
+                    FROM documents
+                    LATERAL VIEW explode(split(text, ' ')) AS token
+                    WHERE token <> ''
+                      AND substr(md5(CAST(doc_id AS STRING)), 1, 2) >= 'e6'
+                      AND doc_id < 50000
+                    GROUP BY doc_id, lang, token) e
+              JOIN (SELECT cut, lang, sum(c) AS tt FROM {cnt}
+                    GROUP BY cut, lang) t ON true
+              JOIN (SELECT cut, count(DISTINCT token) AS v FROM {cnt}
+                    GROUP BY cut) v ON v.cut = t.cut
+              LEFT JOIN {cnt} c ON c.cut = t.cut AND c.lang = t.lang
+                               AND c.token = e.token
               GROUP BY t.cut, e.doc_id, e.actual_lang, t.lang) s
-            JOIN __lc_prior p ON p.cut = s.cut AND p.lang = s.cand_lang
-            JOIN __lc_dtot dt ON dt.cut = s.cut) f) p2
-        JOIN __lc_dtot dt2 ON dt2.cut = p2.cut
+            JOIN {prior} p ON p.cut = s.cut AND p.lang = s.cand_lang
+            JOIN {dtot} dt ON dt.cut = s.cut) f) p2
+        JOIN {dtot} dt2 ON dt2.cut = p2.cut
         WHERE p2.rn = 1
         GROUP BY p2.cut
-        """
+        """,
+        cnt=cnt,
+        prior=prior,
+        dtot=dtot,
     )
 
 
@@ -1064,56 +1050,46 @@ def llm_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash by definition, so the keep-lowest winner is the group holding
     the globally minimal doc_id (min over group minima). The near-dedup
     self-join was already survivor-bounded; now the metadata stage is
-    too. The 1-row raw-count broadcast is allowlisted; stage views are
-    CTE-free (the round-4 cache-substitution rule)."""
+    too. The 1-row raw-count broadcast is allowlisted. Each stage
+    reaches the next ``spark.sql`` as an uncached DataFrame argument and
+    AQE reuses the repeated exchanges: without its four staged caches the
+    op ran faster at sf0.01 and as fast at sf0.1 (BASELINE.md, "llm_mix
+    and llm_text stage nothing")."""
     from ..schemas import ensure_views
 
     ensure_views(spark, sf_dir)
-    # copies → (text, source) content groups: the only full-corpus pass
-    grp = spark.sql(
-        """
-        SELECT md5(text) AS ht, source, min(doc_id) AS rep_doc,
-               count(*) AS mult
-        FROM documents GROUP BY md5(text), source
-        """
-    ).cache()
-    grp.createOrReplaceTempView("__cf_grp")
-    # text attributes on representatives only
+    # text attributes on one representative per (text, source) content
+    # group: the group-by is the only full-corpus pass
     meta = spark.sql(
         """
         SELECT g.rep_doc AS doc_id, g.source, g.mult,
                md5(lower(trim(d.text))) AS h,
                size(split(d.text, ' ')) AS n_tok,
                size(array_distinct(split(d.text, ' '))) AS n_uniq
-        FROM __cf_grp g JOIN documents d ON d.doc_id = g.rep_doc
+        FROM (SELECT md5(text) AS ht, source, min(doc_id) AS rep_doc,
+                     count(*) AS mult
+              FROM documents GROUP BY md5(text), source) g
+        JOIN documents d ON d.doc_id = g.rep_doc
         """
-    ).cache()
-    meta.createOrReplaceTempView("__cf_meta")
-    _materialize_cache(spark, grp, meta)
+    )
     # keep-lowest per normalized hash: the winning group is the one whose
     # min doc_id is globally minimal (copies share their group's rep)
-    # s1/s2 cached (r16): view references are re-inlined per consumer —
-    # __cf_s2 feeds the token-set build, the near-dup NOT IN filter and
-    # the funnel union, and each of those re-ran the keep-lowest window
-    # (exchange + sort over the survivor grain) — ~4 window passes per
-    # call collapse to 1.
     s1 = spark.sql(
         """
         SELECT doc_id, source, h, n_tok, n_uniq FROM (
           SELECT m.*, min(doc_id) OVER (PARTITION BY h) AS keep
-          FROM __cf_meta m)
+          FROM {meta} m)
         WHERE doc_id = keep AND h IS NOT NULL
-        """
-    ).cache()
-    s1.createOrReplaceTempView("__cf_s1")
+        """,
+        meta=meta,
+    )
     s2 = spark.sql(
         """
-        SELECT * FROM __cf_s1
+        SELECT * FROM {s1}
         WHERE n_tok BETWEEN 10 AND 400 AND n_uniq * 10 >= 3 * n_tok
-        """
-    ).cache()
-    s2.createOrReplaceTempView("__cf_s2")
-    _materialize_cache(spark, s1, s2)
+        """,
+        s1=s1,
+    )
     # DOC-GRAIN near-dedup (r16, guide §2.3): the old token-grain
     # self-join on (token, source) shuffled ~11M intermediate rows into
     # a pair-grain hash agg plus two size joins; a pair's shared count
@@ -1126,10 +1102,10 @@ def llm_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         """
         SELECT s2.doc_id, s2.source,
                array_distinct(split(d.text, ' ')) AS toks
-        FROM documents d JOIN __cf_s2 s2 ON d.doc_id = s2.doc_id
-        """
-    ).cache()
-    sets.createOrReplaceTempView("__cf_sets")
+        FROM documents d JOIN {s2} s2 ON d.doc_id = s2.doc_id
+        """,
+        s2=s2,
+    )
     # shuffle() wrap = non-determinism marker (guide §4.4 on a JVM
     # expression): keeps Catalyst from pushing the jaccard filter into
     # the join condition and from re-inlining the intersect per
@@ -1137,20 +1113,22 @@ def llm_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # an EXACT prune: jaccard >= 0.5 ⟺ 3c >= na+nb, and c <= least(na,
     # nb), so pairs with 3·least(na,nb) < na+nb can never qualify and
     # skip the intersect entirely (cheap int compare in the join).
-    spark.sql(
+    s3 = spark.sql(
         """
-        SELECT * FROM __cf_s2 WHERE doc_id NOT IN (
+        SELECT * FROM {s2} WHERE doc_id NOT IN (
           SELECT DISTINCT db FROM (
             SELECT b.doc_id AS db,
                    size(shuffle(array_intersect(a.toks, b.toks))) AS c,
                    size(a.toks) + size(b.toks) AS nn
-            FROM __cf_sets a JOIN __cf_sets b
+            FROM {sets} a JOIN {sets} b
               ON a.source = b.source AND a.doc_id < b.doc_id
              AND least(size(a.toks), size(b.toks)) * 3
                  >= size(a.toks) + size(b.toks)) p
           WHERE CAST(c AS DOUBLE) / (nn - c) >= 0.5)
-        """
-    ).createOrReplaceTempView("__cf_s3")
+        """,
+        s2=s2,
+        sets=sets,
+    )
     return spark.sql(
         """
         SELECT stage, n_docs, n_tokens,
@@ -1158,18 +1136,22 @@ def llm_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM (
           SELECT '0_raw' AS stage, sum(mult) AS n_docs,
                  CAST(sum(mult * n_tok) AS BIGINT) AS n_tokens
-          FROM __cf_meta
+          FROM {meta}
           UNION ALL
           SELECT '1_exact_dedup', count(*), CAST(sum(n_tok) AS BIGINT)
-          FROM __cf_s1
+          FROM {s1}
           UNION ALL
           SELECT '2_quality', count(*), CAST(sum(n_tok) AS BIGINT)
-          FROM __cf_s2
+          FROM {s2}
           UNION ALL
           SELECT '3_near_dedup', count(*), CAST(sum(n_tok) AS BIGINT)
-          FROM __cf_s3) f
-        CROSS JOIN (SELECT sum(mult) AS rd FROM __cf_meta) raw
-        """
+          FROM {s3}) f
+        CROSS JOIN (SELECT sum(mult) AS rd FROM {meta}) raw
+        """,
+        meta=meta,
+        s1=s1,
+        s2=s2,
+        s3=s3,
     )
 
 
@@ -1228,65 +1210,68 @@ def llm_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     back to documents to enumerate copy doc_ids (bounded expansion), then
     the exact original ordering applies. Weight per group is Σ k·w / n —
     the same token multiset every copy averages, equal at the 6-dp
-    rounding both engines share. Oracle unchanged."""
+    rounding both engines share. Oracle unchanged. Each stage is an
+    uncached DataFrame argument of the next ``spark.sql``; ``k`` carries
+    its group's ``min_doc``, so no read joins the group table back."""
     from ..schemas import ensure_views
 
     ensure_views(spark, sf_dir)
-    bucket = "cast(conv(substr(md5(token), 1, 4), 16, 10) AS bigint) % 64"
-    grp = spark.sql(
-        """
-        SELECT md5(text) AS h, lang, min(doc_id) AS min_doc, count(*) AS mult
-        FROM documents GROUP BY md5(text), lang
-        """
-    ).cache()
-    grp.createOrReplaceTempView("__dsir_grp")
+    # coalesce (a no-op: md5 hex always converts) makes the bucket
+    # non-nullable, so the join on b infers no isnotnull(b) filter into
+    # the feature table's two reads of k: they stay identical, AQE reuses
+    # their exchange, and the token explode runs twice, not three times
+    bucket = (
+        "coalesce(cast(conv(substr(md5(token), 1, 4), 16, 10) AS bigint)"
+        " % 64, 0)"
+    )
     k = spark.sql(
         f"""
-        SELECT g.h, g.lang, g.mult, {bucket} AS b, count(*) AS k
-        FROM __dsir_grp g JOIN documents d ON d.doc_id = g.min_doc
+        SELECT g.h, g.lang, g.mult, g.min_doc, {bucket} AS b, count(*) AS k
+        FROM (SELECT md5(text) AS h, lang, min(doc_id) AS min_doc,
+                     count(*) AS mult
+              FROM documents GROUP BY md5(text), lang) g
+        JOIN documents d ON d.doc_id = g.min_doc
         LATERAL VIEW explode(split(d.text, ' ')) AS token
-        GROUP BY g.h, g.lang, g.mult, {bucket}
+        GROUP BY g.h, g.lang, g.mult, g.min_doc, {bucket}
         """
-    ).cache()
-    k.createOrReplaceTempView("__dsir_k")
-    _materialize_cache(spark, grp, k)
-    spark.sql(
+    )
+    feat = spark.sql(
         """
         SELECT b,
                CAST(sum(CASE WHEN lang = 'en' THEN mult * k ELSE 0 END) + 1
                     AS DOUBLE) AS ct,
                CAST(sum(mult * k) + 1 AS DOUBLE) AS cr
-        FROM __dsir_k GROUP BY b
-        """
-    ).createOrReplaceTempView("__dsir_feat")
-    spark.sql(
-        """
-        SELECT f.b, ln((f.ct / t.st) / (f.cr / t.sr)) AS w
-        FROM __dsir_feat f
-        CROSS JOIN (SELECT sum(ct) AS st, sum(cr) AS sr FROM __dsir_feat) t
-        """
-    ).createOrReplaceTempView("__dsir_lw")
-    spark.sql(
+        FROM {k} GROUP BY b
+        """,
+        k=k,
+    )
+    topgrp = spark.sql(
         """
         SELECT k.h, k.lang, CAST(sum(k.k) AS BIGINT) AS n_tok,
                round(sum(k.k * lw.w) / sum(k.k), 6) AS dsir_weight,
-               max(g.min_doc) AS min_doc
-        FROM __dsir_k k
-        JOIN __dsir_lw lw ON lw.b = k.b
-        JOIN __dsir_grp g ON g.h = k.h AND g.lang = k.lang
+               max(k.min_doc) AS min_doc
+        FROM {k} k
+        JOIN (SELECT f.b, ln((f.ct / t.st) / (f.cr / t.sr)) AS w
+              FROM {feat} f
+              CROSS JOIN (SELECT sum(ct) AS st, sum(cr) AS sr
+                          FROM {feat}) t) lw
+          ON lw.b = k.b
         GROUP BY k.h, k.lang
         ORDER BY dsir_weight DESC, min_doc
         LIMIT 20
-        """
-    ).createOrReplaceTempView("__dsir_topgrp")
+        """,
+        k=k,
+        feat=feat,
+    )
     return spark.sql(
         """
         SELECT d.doc_id, tg.lang, tg.n_tok, tg.dsir_weight
-        FROM __dsir_topgrp tg
-        JOIN documents d ON md5(d.text) = tg.h AND d.lang = tg.lang
+        FROM {topgrp} tg
+        JOIN documents d ON md5(d.text) = tg.h AND d.lang <=> tg.lang
         ORDER BY tg.dsir_weight DESC, d.doc_id
         LIMIT 20
-        """
+        """,
+        topgrp=topgrp,
     )
 
 
@@ -1337,51 +1322,58 @@ def llm_doremi_reweight_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcasts. Output: per-source old/new mixture weights.
 
     Plan note (r6 verdict task #4): the shared-CTE formulation re-ran the
-    token explode for every `tok` reference (21 exchanges). The token
-    stage and the |domains|-grain `dom` aggregate are now STAGED ONCE as
-    cached temp views (the ml_naive_bayes_langid discipline) and the
-    final reweighting reads only the tiny cached `dom`; `_doremi_sql()`
-    stays the DuckDB oracle text."""
+    token explode for every `tok` reference (21 exchanges). The explode
+    now runs once, into (source, token) counts: the unigram table and its
+    total derive from them, as the oracle's `tot` does, and document
+    counts come from a plain scan (a non-NULL text splits into at least
+    one token). `_doremi_sql()` stays the DuckDB oracle text."""
     from ..schemas import ensure_views
 
     ensure_views(spark, sf_dir)
-    tok = spark.sql(
-        "SELECT doc_id, source, explode(split(text, ' ')) AS token"
-        " FROM documents"
-    ).cache()
-    tok.createOrReplaceTempView("__doremi_tok")
+    st = spark.sql(
+        """
+        SELECT source, token, count(*) AS cst
+        FROM documents LATERAL VIEW explode(split(text, ' ')) AS token
+        GROUP BY source, token
+        """
+    )
+    freq = spark.sql(
+        "SELECT token, CAST(sum(cst) AS DOUBLE) AS c FROM {st} GROUP BY token",
+        st=st,
+    )
     dom = spark.sql(
         """
-        SELECT t.source,
-               CAST(count(DISTINCT t.doc_id) AS BIGINT) AS n_docs,
-               sum(-ln(f.c / (SELECT CAST(count(*) AS DOUBLE)
-                              FROM __doremi_tok))) / count(*) AS avg_nll
-        FROM __doremi_tok t
-        JOIN (SELECT token, CAST(count(*) AS DOUBLE) AS c
-              FROM __doremi_tok GROUP BY token) f ON f.token = t.token
-        GROUP BY t.source
-        """
-    ).cache()
-    dom.createOrReplaceTempView("__doremi_dom")
+        SELECT s.source, nd.n_docs,
+               sum(s.cst * -ln(f.c / (SELECT sum(c) FROM {freq})))
+                 / sum(s.cst) AS avg_nll
+        FROM {st} s
+        JOIN {freq} f ON f.token = s.token
+        JOIN (SELECT source, CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs
+              FROM documents WHERE text IS NOT NULL
+              GROUP BY source) nd ON nd.source <=> s.source
+        GROUP BY s.source, nd.n_docs
+        """,
+        st=st,
+        freq=freq,
+    )
+    # windows over the |domains|-row `dom`: one SinglePartition exchange
+    # instead of a broadcast job per 1-row total
     return spark.sql(
         """
         SELECT source, n_docs,
                round(avg_nll, 6) AS avg_nll,
                round(w_old, 6) AS w_old,
-               round(w_old * exp(0.5 * excess) /
-                     (SELECT sum(CAST(n_docs AS DOUBLE)
-                                   / (SELECT sum(n_docs) FROM __doremi_dom)
-                                 * exp(0.5 * (avg_nll - (SELECT min(avg_nll)
-                                                         FROM __doremi_dom))))
-                      FROM __doremi_dom), 6) AS w_new
-        FROM (SELECT source, n_docs, avg_nll,
-                     CAST(n_docs AS DOUBLE)
-                       / (SELECT sum(n_docs) FROM __doremi_dom) AS w_old,
-                     avg_nll - (SELECT min(avg_nll) FROM __doremi_dom)
-                       AS excess
-              FROM __doremi_dom)
+               round(w_unnorm / sum(w_unnorm) OVER (), 6) AS w_new
+        FROM (SELECT source, n_docs, avg_nll, w_old,
+                     w_old * exp(0.5 * excess) AS w_unnorm
+              FROM (SELECT source, n_docs, avg_nll,
+                           CAST(n_docs AS DOUBLE)
+                             / sum(n_docs) OVER () AS w_old,
+                           avg_nll - min(avg_nll) OVER () AS excess
+                    FROM {dom}))
         ORDER BY source
-        """
+        """,
+        dom=dom,
     )
 
 

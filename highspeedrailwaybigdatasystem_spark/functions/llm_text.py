@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..registry import plan_memo, register
-from ..operators._util import _materialize_cache, ratio, sql_q, t
+from ..operators._util import ratio, sql_q, t
 
 
 @register(
@@ -87,14 +87,14 @@ def llm_tfidf_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     explode → two aggregations → broadcast IDF join → per-group top-k."""
     d = t(spark, sf_dir, "documents")
     tok = d.select("doc_id", "lang", F.explode(F.split("text", " ")).alias("token"))
-    n_docs = d.count()  # scalar plan parameter (tiny dimension count)
+    n_docs = d.agg(F.count(F.lit(1)).cast("double")).scalar()  # subquery
     df_ = tok.groupBy("token").agg(F.countDistinct("doc_id").alias("doc_freq"))
     tf = tok.groupBy("lang", "token").agg(F.count(F.lit(1)).alias("term_freq"))
     scored = tf.join(F.broadcast(df_), "token").select(
         "lang",
         "token",
         F.round(
-            F.col("term_freq") * F.log(F.lit(float(n_docs)) / F.col("doc_freq")), 6
+            F.col("term_freq") * F.log(n_docs / F.col("doc_freq")), 6
         ).alias("tfidf"),
     )
     w = Window.partitionBy("lang").orderBy(F.col("tfidf").desc(), "token")
@@ -637,38 +637,41 @@ def llm_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenizer-budget planning: what fraction of corpus tokens does a
     top-K frequency vocabulary cover? Reports coverage at K ∈ {8, 16,
     32, 48} (sized to this corpus's ~60-word synthetic vocabulary; real
-    runs probe 32k/50k/100k/256k). The frequency rank AND the cumulative
-    token mass are built with the ``_range_prefix`` offsets machinery —
-    exact global rank and running sum, windows partitioned by ``_pid``
-    only, scalable to 10⁸-term vocabularies. The tiny K-marks frame is
-    broadcast; coverage is a 4-row aggregate."""
-    from ..operators.windows import _range_prefix
-
+    runs probe 32k/50k/100k/256k). Only the top max(K) words matter: a
+    top-K limit keeps them, in rank order, as one array, and coverage at
+    each K is the sum over its first K entries, crossed with the 1-row
+    token total. No global rank or running sum over the whole vocabulary
+    is built, so nothing is staged."""
+    ks = (8, 16, 32, 48)
     tok = t(spark, sf_dir, "documents").select(
         F.explode(F.split("text", " ")).alias("w")
     )
     freq = tok.groupBy("w").agg(F.count(F.lit(1)).alias("f"))
-    order = [F.col("f").desc(), F.col("w").asc()]
-    part, _n, tot_f = _range_prefix(freq, order, "f")
-    w_run = (
-        Window.partitionBy("_pid")
-        .orderBy(*order)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    ranked = part.select(
-        (F.col("_cnt_off") + F.row_number().over(w_run)).alias("r"),
-        (F.col("_sum_off") + F.sum("f").over(w_run)).alias("run_f"),
-    )
-    marks = spark.range(1).select(
-        F.explode(F.array(F.lit(8), F.lit(16), F.lit(32), F.lit(48))).alias("vocab_k")
-    )
-    return (
-        ranked.join(F.broadcast(marks), F.col("r") <= F.col("vocab_k"))
-        .groupBy("vocab_k")
+    # array_sort on (-f, w) is the rank order (f desc, w asc)
+    top = (
+        freq.orderBy(F.col("f").desc(), F.col("w"))
+        .limit(max(ks))
         .agg(
+            F.array_sort(
+                F.collect_list(F.struct((-F.col("f")).alias("nf"), "w", "f"))
+            ).alias("top")
+        )
+    )
+    tot = freq.agg(F.sum("f").alias("tot_f"))
+    return (
+        top.crossJoin(tot)
+        .where(F.col("tot_f").isNotNull())  # an empty corpus has no rows
+        .select(F.explode(F.array(*map(F.lit, ks))).alias("vocab_k"), "top", "tot_f")
+        .select(
+            "vocab_k",
             ratio(
-                F.max("run_f").cast("double") / F.lit(float(tot_f))
-            ).alias("coverage")
+                F.aggregate(
+                    F.slice("top", 1, F.col("vocab_k")),
+                    F.lit(0).cast("bigint"),
+                    lambda acc, x: acc + x["f"],
+                ).cast("double")
+                / F.col("tot_f")
+            ).alias("coverage"),
         )
     )
 
@@ -841,54 +844,51 @@ def llm_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     avg = Σ ν(h over groups first-seen in the source) / Σ mult (the zero
     terms drop out of the sum), min = 0 as soon as the source holds any
     non-first copy. Exploded volume tracks distinct content; oracle
-    unchanged."""
+    unchanged. Each stage is an uncached DataFrame argument of the next
+    ``spark.sql``; AQE reuses the group-by exchanges that several reads
+    repeat, and uncached the op ran faster than with its three staged
+    caches (BASELINE.md, "llm_mix and llm_text stage nothing")."""
     from ..schemas import ensure_views
 
     ensure_views(spark, sf_dir)
-    # grp/hmin cached (r16): temp-view references are re-inlined per
-    # consumer — hmin feeds the rep explode, BOTH sides of the
-    # first-occurrence join and the final rollup, so the md5 group-by
-    # corpus pass re-ran ~4× per call.
     grp = spark.sql(
         """
         SELECT md5(text) AS h, source, min(doc_id) AS min_doc,
                count(*) AS mult
         FROM documents GROUP BY md5(text), source
         """
-    ).cache()
-    grp.createOrReplaceTempView("__nov_grp")
+    )
     hmin = spark.sql(
-        "SELECT h, min(min_doc) AS gdoc FROM __nov_grp GROUP BY h"
-    ).cache()
-    hmin.createOrReplaceTempView("__nov_hmin")
-    _materialize_cache(spark, grp, hmin)
+        "SELECT h, min(min_doc) AS gdoc FROM {grp} GROUP BY h", grp=grp
+    )
     shr = spark.sql(
         """
         SELECT DISTINCT r.h, sh
-        FROM __nov_hmin r
+        FROM {hmin} r
         JOIN (SELECT doc_id, split(text, ' ') AS tk FROM documents) d
           ON d.doc_id = r.gdoc
         LATERAL VIEW explode(transform(
           sequence(0, size(tk) - 3),
           i -> concat_ws(' ', tk[i], tk[i+1], tk[i+2]))) AS sh
         WHERE size(tk) >= 3
-        """
-    ).cache()
-    shr.createOrReplaceTempView("__nov_shr")
-    _materialize_cache(spark, shr)
-    spark.sql(
+        """,
+        hmin=hmin,
+    )
+    nu = spark.sql(
         """
         SELECT s.h,
                CAST(sum(CASE WHEN f.first_doc = m.gdoc THEN 1 ELSE 0 END)
                     AS DOUBLE) / count(*) AS nu
-        FROM __nov_shr s
+        FROM {shr} s
         JOIN (SELECT s2.sh, min(m2.gdoc) AS first_doc
-              FROM __nov_shr s2 JOIN __nov_hmin m2 ON m2.h = s2.h
+              FROM {shr} s2 JOIN {hmin} m2 ON m2.h = s2.h
               GROUP BY s2.sh) f ON f.sh = s.sh
-        JOIN __nov_hmin m ON m.h = s.h
+        JOIN {hmin} m ON m.h = s.h
         GROUP BY s.h
-        """
-    ).createOrReplaceTempView("__nov_nu")
+        """,
+        shr=shr,
+        hmin=hmin,
+    )
     return spark.sql(
         """
         SELECT g.source, CAST(sum(g.mult) AS BIGINT) AS n_docs,
@@ -896,11 +896,14 @@ def llm_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
                               ELSE 0e0 END) / sum(g.mult), 6) AS avg_novelty,
                round(min(CASE WHEN m.gdoc = g.min_doc AND g.mult = 1
                               THEN nu.nu ELSE 0e0 END), 6) AS min_novelty
-        FROM __nov_grp g
-        JOIN __nov_hmin m ON m.h = g.h
-        JOIN __nov_nu nu ON nu.h = g.h
+        FROM {grp} g
+        JOIN {hmin} m ON m.h = g.h
+        JOIN {nu} nu ON nu.h = g.h
         GROUP BY g.source
-        """
+        """,
+        grp=grp,
+        hmin=hmin,
+        nu=nu,
     )
 
 
@@ -1252,7 +1255,9 @@ def llm_perplexity_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan note (r6 verdict task #4): the corpus-sized bigram explode was
     referenced 3× and the doc-grain cross-entropy stage 2× through the
-    shared CTE; both became cached temp views.
+    shared CTE. Now c(u) and c(uv) are two windows over the one bigram
+    frame that share its exchange on `u`, so the bigrams are counted
+    once; the vocabulary subquery explodes the reps once more.
 
     Round-13 exact-collapse (isolated-cache sweep: 69.9 s cold at 100×):
     H is a pure function of text + the corpus LM tables, so bigrams are
@@ -1271,45 +1276,42 @@ def llm_perplexity_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
                count(*) AS mult
         FROM documents GROUP BY md5(text), source
         """
-    ).cache()
-    grp.createOrReplaceTempView("__pplf_grp")
-    spark.sql(
-        "SELECT h, min(rep_doc) AS rep_doc, sum(mult) AS m"
-        " FROM __pplf_grp GROUP BY h"
-    ).createOrReplaceTempView("__pplf_rep")
+    )
+    rep = spark.sql(
+        "SELECT h, min(rep_doc) AS rep_doc, sum(mult) AS m FROM {grp} GROUP BY h",
+        grp=grp,
+    )
     kb = spark.sql(
         """
         SELECT r.h, r.m, element_at(tk, i) AS u, element_at(tk, i + 1) AS v,
                count(*) AS k
         FROM (SELECT r0.h, r0.m, split(d.text, ' ') AS tk
-              FROM __pplf_rep r0 JOIN documents d ON d.doc_id = r0.rep_doc) r
+              FROM {rep} r0 JOIN documents d ON d.doc_id = r0.rep_doc) r
         LATERAL VIEW explode(sequence(1, size(tk) - 1)) s AS i
         WHERE size(tk) >= 2
         GROUP BY r.h, r.m, element_at(tk, i), element_at(tk, i + 1)
-        """
-    ).cache()
-    kb.createOrReplaceTempView("__pplf_kb")
-    _materialize_cache(spark, grp, kb)
+        """,
+        rep=rep,
+    )
     gh = spark.sql(
         """
-        SELECT b.h,
-               -sum(b.k * log2((bc.cuv + 1e0)
-                         / (uc.cu + (SELECT CAST(count(DISTINCT w) AS DOUBLE)
-                                     FROM (SELECT explode(split(d2.text, ' ')) AS w
-                                           FROM __pplf_rep r2
-                                           JOIN documents d2
-                                             ON d2.doc_id = r2.rep_doc)))))
-                 / sum(b.k) AS h_val
-        FROM __pplf_kb b
-        JOIN (SELECT u, v, sum(k * m) AS cuv FROM __pplf_kb GROUP BY u, v) bc
-          ON b.u = bc.u AND b.v = bc.v
-        JOIN (SELECT u, sum(k * m) AS cu FROM __pplf_kb GROUP BY u) uc
-          ON b.u = uc.u
-        GROUP BY b.h
-        """
-    ).cache()
-    gh.createOrReplaceTempView("__pplf_gh")
-    _materialize_cache(spark, gh)
+        SELECT h,
+               -sum(k * log2((cuv + 1e0)
+                    / (cu + (SELECT CAST(count(DISTINCT w) AS DOUBLE)
+                             FROM (SELECT explode(split(d2.text, ' ')) AS w
+                                   FROM {rep} r2
+                                   JOIN documents d2
+                                     ON d2.doc_id = r2.rep_doc))))) / sum(k)
+                 AS h_val
+        FROM (SELECT h, k, cu, sum(k * m) OVER (PARTITION BY u, v) AS cuv
+              FROM (SELECT h, m, u, v, k,
+                           sum(k * m) OVER (PARTITION BY u) AS cu
+                    FROM {kb}))
+        GROUP BY h
+        """,
+        rep=rep,
+        kb=kb,
+    )
     return spark.sql(
         """
         SELECT g.source,
@@ -1320,14 +1322,16 @@ def llm_perplexity_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
                  AS mean_ppl,
                CAST(sum(CASE WHEN gh.h_val >
                           (SELECT sum(g2.mult * gh2.h_val) / sum(g2.mult)
-                           FROM __pplf_grp g2
-                           JOIN __pplf_gh gh2 ON gh2.h = g2.h)
+                           FROM {grp} g2
+                           JOIN {gh} gh2 ON gh2.h = g2.h)
                              THEN g.mult ELSE 0 END) AS BIGINT)
                  AS n_above_corpus_mean
-        FROM __pplf_grp g JOIN __pplf_gh gh ON gh.h = g.h
+        FROM {grp} g JOIN {gh} gh ON gh.h = g.h
         GROUP BY g.source
         ORDER BY g.source
-        """
+        """,
+        grp=grp,
+        gh=gh,
     )
 
 

@@ -1,7 +1,10 @@
-"""Every op in functions/llm_dedup.py stages nothing and leaks nothing:
-building it runs no Spark job, it leaves no temp view in the session, and
-its collect() leaves no block in storage memory. A long-lived session that
-serves these ops between other work carries no state from one to the next."""
+"""Every op of the text, curation, multimodal and UDF modules stages
+nothing and leaks nothing: building it runs no Spark job, it leaves no temp
+view in the session, and its collect() leaves no block in storage memory. A
+long-lived session that serves these ops between other work carries no
+state from one to the next. ``llm_ann`` is left out: its caches feed
+Arrow kernels. (The file and test names predate the widening from
+``llm_dedup`` to these five modules.)"""
 
 from __future__ import annotations
 
@@ -13,8 +16,11 @@ from highspeedrailwaybigdatasystem_spark.registry import all_queries
 from highspeedrailwaybigdatasystem_spark.schemas import ensure_views
 from tests.conftest import SF_SMOKE
 
-DEDUP_OPS = sorted(
-    name for name, fn in all_queries().items() if fn.__module__.endswith(".llm_dedup")
+MODULES = ("llm_dedup", "llm_mix", "llm_text", "llm_mm", "udfs")
+OPS = sorted(
+    name
+    for name, fn in all_queries().items()
+    if fn.__module__.rsplit(".", 1)[-1] in MODULES
 )
 
 #: (op, check) -> why the op is exempt from that check
@@ -27,6 +33,14 @@ EXEMPT = {
     "the planner broadcast the LSH bucket join; uncached it was 73% slower "
     "fresh at sf0.1",
     ("llm_near_dedup_minhash", "storage"): "the same feature cache",
+    ("llm_zipf_fit", "jobs"): "operators.windows._range_prefix "
+    "localCheckpoints the range-partitioned vocabulary and collects its "
+    "per-partition offsets (6 jobs), so the global rank needs no "
+    "single-task sort at scale; a plain global row_number window returns "
+    "the same rows in 0.35 s against 0.91 s fresh at sf0.01 (0.33 s "
+    "against 0.78 s at sf0.1), but sorts the whole vocabulary in one task",
+    ("llm_zipf_fit", "storage"): "the localCheckpoint blocks of that "
+    "partitioning are what its result reads",
 }
 
 
@@ -38,14 +52,14 @@ def _stored_rdds(spark) -> set[int]:
     return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
 
 
-@pytest.mark.parametrize("op", DEDUP_OPS)
+@pytest.mark.parametrize("op", OPS)
 def test_dedup_op_stages_nothing(spark, op):
     ensure_views(spark, SF_SMOKE)
     spark.catalog.clearCache()
     views, stored = _temp_views(spark), _stored_rdds(spark)
     sc = spark.sparkContext
-    group = f"dedup_build_{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "dedup op build")
+    group = f"op_build_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "op build")
     try:
         df = all_queries()[op](spark, SF_SMOKE)
     finally:

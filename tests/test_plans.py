@@ -288,6 +288,8 @@ def test_full_surface_plan_hygiene(spark):
                                         # |degrees|-row histogram grain
         "agg_market_basket_lift",  # order total + brand map over the
                                    # <=1+B(B+1)/2-row brand-pair grain
+        "llm_doremi_reweight_step",  # mixture-weight totals over the
+                                     # |sources|-row domain grain
     }
     # windowspecdefinition(...) whose first argument is already a sort order
     # (or the frame itself) has no partition columns => global window.

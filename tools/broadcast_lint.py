@@ -198,8 +198,6 @@ SITE_TAGS: dict[tuple[str, str, int], tuple[str, str]] = {
         "domain", "per-language oversample factors (|langs| rows)"),
     (f"{_P}/functions/llm_mm.py", "mm_embed_sim_stub", 0): (
         "topk", "single probe embedding (doc_id == 0, 1 row)"),
-    (f"{_P}/functions/llm_text.py", "llm_vocab_coverage", 0): (
-        "cutpoint", "vocab-size marks (K rows)"),
     (f"{_P}/operators/aggregates.py", "agg_rollup", 0): (
         "domain", "nation dim (25 rows at any SF)"),
     (f"{_P}/operators/aggregates.py", "agg_rollup", 1): (

@@ -35,11 +35,16 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 # reference.
 _NOTES = {
     "llm_curation_funnel": "r13 collapse: text attrs on one rep per "
-    "(text,source) group; exchanges are rep-grain stagelets (5.4 s flat "
-    "at 100x), only the md5(text) group-by is corpus-sized",
+    "(text,source) group; uncached stage frames repeat per reference, AQE "
+    "reuses those exchanges at runtime (sf0.01: 17 shuffle stages, 8 "
+    "reused); only the md5(text) group-by is corpus-sized",
     "llm_data_scaling_curve": "r13 collapse: rep tokenize + (group,cut) "
-    "multiplicity join; exchanges are group/vocab-grain model aggs "
-    "(5.3 s at 100x), corpus touched once",
+    "multiplicity join; exchanges are group/vocab-grain model aggs, and the "
+    "uncached count frame repeats per reference, AQE reuses those "
+    "exchanges at runtime (sf0.01: 17 shuffle stages, 6 reused)",
+    "llm_ngram_novelty": "r13 collapse: shingles of one rep per text; the "
+    "uncached group/rep-shingle frames repeat per reference, AQE reuses "
+    "those exchanges at runtime (sf0.01: 9 shuffle stages, 5 reused)",
     "llm_semdedup_sqrtn": "cached collapse + assignment stages; exchanges "
     "are the distinct cluster-grain aggs and LSH-bounded verify joins",
     "llm_containment_banded": "uncached: one query over banding's frames "
@@ -92,8 +97,10 @@ _NOTES = {
     "norm/pair/idf stagelets, pair join source-blocked",
     "str_trigram_similarity": "collapsed-rep trigram join; exchanges are "
     "the sizes/shared/rank stagelets on the bounded rep set",
-    "llm_perplexity_filter": "cached bigram + doc-entropy stages (r7 "
-    "re-plan, was 8 documents scans); scoring join is the one real shuffle",
+    "llm_perplexity_filter": "uncached: one explode over every token "
+    "position of the rep texts feeds two windows that share one exchange "
+    "on the first token; AQE reuses the group-by exchanges at runtime "
+    "(sf0.01: 14 shuffle stages, 2 reused)",
 }
 
 
