@@ -175,8 +175,10 @@ def llm_near_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # plan showed 2 evaluations per candidate pair, now 1. The intersect
     # is projected as its OWN column first (non-deterministic exprs are
     # excluded from codegen CSE, so inlining it into numerator AND union
-    # would still evaluate twice).
-    inter = F.size(F.shuffle(F.array_intersect("sh_a", "sh_b")))
+    # would still evaluate twice). The seed is fixed so that the generated
+    # code, which embeds it, is the same at every call and compiles once
+    # per session; a seeded shuffle is still non-deterministic.
+    inter = F.size(F.shuffle(F.array_intersect("sh_a", "sh_b"), seed=0))
     return (
         cand.select(
             "doc_a",
@@ -219,8 +221,10 @@ def _minhash_frames(
     # free size(shs) projection, and turns the verify into
     # size(array_intersect(..)) in whole-stage codegen, with the exact same
     # shingle multiset per doc as the old exploded (doc_id, sh) grain.
-    # The shuffle(array(..)) wrap is the §4.4 single-evaluation pin
-    # (value-identical: the array has one element). Without it Catalyst
+    # The shuffle(array(..), 0) wrap is the §4.4 single-evaluation pin
+    # (value-identical: the array has one element; the fixed seed keeps
+    # the generated code, which embeds it, the same at every call, so its
+    # classes compile once per session). Without it Catalyst
     # falls into a pushdown trap: InferFiltersFromGenerate adds
     # size(shs) > 0 AND isnotnull(shs) for the signature build's
     # explode(shs), and predicate pushdown substitutes the shs and tk
@@ -234,7 +238,7 @@ def _minhash_frames(
         """
         SELECT doc_id, element_at(shuffle(array(IF(size(tk) < 3, array(),
             array_distinct(transform(sequence(0, size(tk) - 3),
-            i -> concat_ws(' ', tk[i], tk[i+1], tk[i+2])))))), 1) AS shs
+            i -> concat_ws(' ', tk[i], tk[i+1], tk[i+2]))))), 0), 1) AS shs
         FROM (SELECT d.doc_id, split(d.text, ' ') AS tk
               FROM documents d
               JOIN (SELECT min(doc_id) AS doc_id FROM documents
@@ -390,8 +394,8 @@ def llm_minhash_banding(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shingle-set arrays — arrays hold DISTINCT shingles, so
     # size(array_intersect) equals the old per-pair equi-join count(*)
     # exactly, and size(shs) equals the old per-doc shingle count. The
-    # shuffle() wrap is the same §4.4 single-evaluation pin: `shared`
-    # feeds the filter AND the jaccard projection, and without the pin
+    # shuffle(.., 0) wrap is the same seeded §4.4 single-evaluation pin:
+    # `shared` feeds the filter AND the jaccard projection, and without the pin
     # Catalyst re-inlines the intersect per reference (the
     # llm_near_dedup_minhash finding, r16; plan-pinned in
     # tests/test_plans.py). No BROADCAST hints anywhere (round 10): AQE
@@ -404,7 +408,7 @@ def llm_minhash_banding(spark: SparkSession, sf_dir: str) -> DataFrame:
                  AS jaccard
         FROM (
           SELECT c.doc_a, c.doc_b,
-                 size(shuffle(array_intersect(sa.shs, sb.shs))) AS shared,
+                 size(shuffle(array_intersect(sa.shs, sb.shs), 0)) AS shared,
                  size(sa.shs) AS na, size(sb.shs) AS nb
           FROM {cand} c
           JOIN {shingle} sa ON sa.doc_id = c.doc_a
@@ -530,8 +534,11 @@ def llm_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and (b) re-inlining the intersect into filter + both jaccard
     # references — measured 3 evaluations per candidate pair (11.0 s)
     # without it, exactly 1 (3.6 s) with it; the plan pins one
-    # array_intersect occurrence.
-    shared = F.size(F.shuffle(F.array_intersect(F.col("a.toks"), F.col("b.toks"))))
+    # array_intersect occurrence. Its seed is fixed so that the generated
+    # code, which embeds it, compiles once per session, not at every call.
+    shared = F.size(
+        F.shuffle(F.array_intersect(F.col("a.toks"), F.col("b.toks")), seed=0)
+    )
     return (
         a.join(
             b,
@@ -1386,7 +1393,7 @@ def llm_containment_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
                round(cast(shared AS double) / least(na, nb), 6) AS containment
         FROM (
           SELECT c.doc_a, c.doc_b,
-                 size(shuffle(array_intersect(sa.shs, sb.shs))) AS shared,
+                 size(shuffle(array_intersect(sa.shs, sb.shs), 0)) AS shared,
                  size(sa.shs) AS na, size(sb.shs) AS nb
           FROM {cand} c
           JOIN {shingle} sa ON sa.doc_id = c.doc_a
@@ -1697,7 +1704,7 @@ def llm_minhash_jaccard_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
             SELECT doc_a, doc_b, cast(shared AS double) / (na + nb - shared) AS j
             FROM (
               SELECT c.doc_a, c.doc_b,
-                     size(shuffle(array_intersect(sa.shs, sb.shs))) AS shared,
+                     size(shuffle(array_intersect(sa.shs, sb.shs), 0)) AS shared,
                      size(sa.shs) AS na, size(sb.shs) AS nb
               FROM {{cand}} c
               JOIN {{shingle}} sa ON sa.doc_id = c.doc_a

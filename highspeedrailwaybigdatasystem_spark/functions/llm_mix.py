@@ -1109,7 +1109,8 @@ def llm_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shuffle() wrap = non-determinism marker (guide §4.4 on a JVM
     # expression): keeps Catalyst from pushing the jaccard filter into
     # the join condition and from re-inlining the intersect per
-    # reference — exactly one evaluation per pair. The size conjunct is
+    # reference — exactly one evaluation per pair. Its seed is fixed so
+    # that the generated code compiles once per session. The size conjunct is
     # an EXACT prune: jaccard >= 0.5 ⟺ 3c >= na+nb, and c <= least(na,
     # nb), so pairs with 3·least(na,nb) < na+nb can never qualify and
     # skip the intersect entirely (cheap int compare in the join).
@@ -1118,7 +1119,7 @@ def llm_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT * FROM {s2} WHERE doc_id NOT IN (
           SELECT DISTINCT db FROM (
             SELECT b.doc_id AS db,
-                   size(shuffle(array_intersect(a.toks, b.toks))) AS c,
+                   size(shuffle(array_intersect(a.toks, b.toks), 0)) AS c,
                    size(a.toks) + size(b.toks) AS nn
             FROM {sets} a JOIN {sets} b
               ON a.source = b.source AND a.doc_id < b.doc_id

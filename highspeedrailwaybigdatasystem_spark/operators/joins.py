@@ -1074,12 +1074,14 @@ def join_fuzzy_levenshtein(spark: SparkSession, sf_dir: str) -> DataFrame:
     of O(len²) — ``BETWEEN 0 AND 1`` is exactly the old ``<= 1`` set
     because -1 encodes "above threshold", and for every SURVIVING pair
     the threshold value IS the distance, so ``edit_dist`` reuses it
-    instead of re-running the full DP. The shuffle(array(..)) wrap is
+    instead of re-running the full DP. The shuffle(array(..), 0) wrap is
     the §4.4 non-determinism pin (value-identical: the array has one
     element): without it Catalyst pushed the filter into the join
     condition ahead of the cheap name ``<`` conjunct and re-inlined the
     DP per reference — 4.0 s; pinned to one evaluation — 2.0 s, plan
-    shows a single levenshtein."""
+    shows a single levenshtein. The seed is fixed so that the generated
+    code, which embeds it, is the same at every call and compiles once
+    per session; a seeded shuffle is still non-deterministic."""
     return sql_q(
         spark,
         sf_dir,
@@ -1091,7 +1093,7 @@ def join_fuzzy_levenshtein(spark: SparkSession, sf_dir: str) -> DataFrame:
           SELECT a.c_name AS name_a, b.c_name AS name_b,
                  CAST(a.n AS BIGINT) AS n_a, CAST(b.n AS BIGINT) AS n_b,
                  element_at(shuffle(array(
-                     levenshtein(a.c_name, b.c_name, 1))), 1) AS d
+                     levenshtein(a.c_name, b.c_name, 1)), 0), 1) AS d
           FROM blocked a JOIN blocked b
             ON a.blk = b.blk AND a.c_name < b.c_name)
         SELECT name_a, name_b, n_a, n_b, CAST(d AS INT) AS edit_dist

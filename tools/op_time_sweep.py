@@ -9,6 +9,13 @@ sf0.1 spends 20+ s pickling 6M rows to the driver under collect, which
 says nothing about the 100 TB plan). Writes JSONL to argv[1] (default
 /tmp/op_sweep.jsonl) so a crash keeps partial results.
 
+Each record also carries ``compiles``: the classes Janino compiled during
+the warm-up call and during each timed call (``session.codegen_compiles``).
+An op whose timed calls compile anything regenerates different code at
+each call (a literal that changes, such as an unseeded random seed), or
+its classes were evicted from the session's codegen cache. ``metaspace_mb``
+is the driver JVM's metaspace after the op.
+
 This is the optimization-round ranking pass (guide §1: measure first) —
 the headline bench covers 10 ops; this covers all 490+ so slow outliers
 outside the headline set are found, not guessed.
@@ -24,11 +31,17 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from highspeedrailwaybigdatasystem_spark.registry import all_queries
-from highspeedrailwaybigdatasystem_spark.session import build_session
+from highspeedrailwaybigdatasystem_spark.session import build_session, codegen_compiles
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 OUT = sys.argv[1] if len(sys.argv) > 1 else "/tmp/op_sweep.jsonl"
 ONLY = set(sys.argv[2:])
+
+
+def metaspace_mb(spark) -> float:
+    mgmt = spark._jvm.java.lang.management.ManagementFactory
+    pool = next(p for p in mgmt.getMemoryPoolMXBeans() if p.getName() == "Metaspace")
+    return pool.getUsage().getUsed() / (1024.0 * 1024.0)
 
 
 def main() -> None:
@@ -57,17 +70,21 @@ def main() -> None:
                 # before each timed run so cache-bearing ops pay their own
                 # cache build in `sec` (CacheManager otherwise serves the
                 # timed runs from warmup-populated InMemoryRelations).
-                spark.catalog.clearCache()
-                t0 = time.perf_counter()
-                _drive(fresh(spark, SF_DIR))  # warmup (plan+codegen+listing)
-                warm = time.perf_counter() - t0
-                best = float("inf")
-                for _ in range(2):
+                secs, compiles = [], []
+                for _ in range(3):  # warmup (plan+codegen+listing), 2 timed
                     spark.catalog.clearCache()
+                    c0 = codegen_compiles(spark)
                     t0 = time.perf_counter()
                     _drive(fresh(spark, SF_DIR))
-                    best = min(best, time.perf_counter() - t0)
-                rec = {"op": name, "sec": round(best, 4), "cold": round(warm, 4)}
+                    secs.append(time.perf_counter() - t0)
+                    compiles.append(codegen_compiles(spark) - c0)
+                rec = {
+                    "op": name,
+                    "sec": round(min(secs[1:]), 4),
+                    "cold": round(secs[0], 4),
+                    "compiles": compiles,
+                    "metaspace_mb": round(metaspace_mb(spark), 1),
+                }
             except Exception as e:  # noqa: BLE001 — record and continue
                 rec = {"op": name, "error": str(e)[:200]}
             fh.write(json.dumps(rec) + "\n")
