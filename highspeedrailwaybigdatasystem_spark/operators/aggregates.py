@@ -2190,51 +2190,9 @@ def agg_lift_gain_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     gain/lift. Decile boundaries land identically in both engines because
     the cumulative counts are exact integers.
 
-    Plan note (r16, the round-4 cache-substitution rule): Spark inlines
-    WITH-CTEs, so referencing ``lev`` from tot/cum/deciled re-ran the
-    full events scan+aggregate three times (plan showed 3 scans). The
-    score-level table is a bounded integer domain (~|levels| rows), so
-    it is computed once into a cached temp view and the window/decile
-    SQL reads the cache; ``_LIFT_SQL`` stays the DuckDB oracle text."""
-    from ..schemas import ensure_views
-
-    ensure_views(spark, sf_dir)
-    lev = spark.sql(
-        """
-        SELECT CAST(floor(value * 2) AS INT) AS s,
-               sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS p,
-               count(*) AS n
-        FROM events GROUP BY CAST(floor(value * 2) AS INT)
-        """
-    ).cache()
-    lev.createOrReplaceTempView("__lift_lev")
-    return spark.sql(
-        """
-        WITH tot AS (SELECT sum(p) AS tp, sum(n) AS tn FROM __lift_lev),
-        cum AS (
-          SELECT s,
-                 sum(p) OVER (ORDER BY s DESC
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cp,
-                 sum(n) OVER (ORDER BY s DESC
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cn
-          FROM __lift_lev),
-        deciled AS (
-          SELECT least(9, CAST(floor(CAST(cn - 1 AS DOUBLE) / tot.tn * 10)
-                               AS INT)) AS decile,
-                 max(cp) AS cum_pos, max(cn) AS cum_n
-          FROM cum CROSS JOIN tot
-          GROUP BY least(9, CAST(floor(CAST(cn - 1 AS DOUBLE) / tot.tn * 10)
-                                 AS INT)))
-        SELECT d.decile,
-               CAST(d.cum_n AS BIGINT) AS cum_rows,
-               CAST(d.cum_pos AS BIGINT) AS cum_positives,
-               round(CAST(d.cum_pos AS DOUBLE) / tot.tp, 6) AS gain,
-               round(CAST(d.cum_pos AS DOUBLE) / d.cum_n
-                     / (CAST(tot.tp AS DOUBLE) / tot.tn), 6) AS lift
-        FROM deciled d CROSS JOIN tot
-        ORDER BY d.decile
-        """
-    )
+    The oracle text is the plan: ``lev`` is read by tot and cum, and AQE
+    reuses its one events scan + aggregate exchange at runtime."""
+    return sql_q(spark, sf_dir, _LIFT_SQL)
 
 
 _ANOVA_SQL = """

@@ -1,5 +1,16 @@
 """Graph operators (iterative superstep algorithms on DataFrames).
 
+Every op but graph_bipartite_projection reads the distinct non-NULL
+users (``_users``), and every op but it and graph_connected_components
+reads one deterministic interaction graph over them, built in one place
+(``_graph``): two out-edges per user (u → (7u+13) mod N and
+u → (11u+5) mod N) and its undirected forms. N rides in the plan as a
+scalar subquery, so building the frames runs no job. The non-iterative
+ops cache nothing: each reads the frames in one query (as DataFrame
+arguments of ``spark.sql``, or in DataFrame joins), and AQE reuses the
+exchanges that the repeated reads share. The fixpoint ops
+localCheckpoint them.
+
 Scale notes (100 TB): PageRank-style algorithms are repeated
 join + aggregate supersteps — each iteration shuffles the rank table on
 the edge key, exactly like llm_dedup_components' label propagation. The
@@ -11,6 +22,8 @@ iterations 1-9.
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -19,6 +32,49 @@ from ._util import ratio, sql_q, t
 
 _D = 0.85
 _ITERS = 10
+
+
+def _users(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The graph's vertex set: distinct non-NULL ``user_id``."""
+    return (
+        t(spark, sf_dir, "events")
+        .where(F.col("user_id").isNotNull())
+        .select("user_id")
+        .distinct()
+    )
+
+
+class _Graph(NamedTuple):
+    edges: DataFrame  # src, dst: two per user, self-loops and repeats kept
+    und: DataFrame  # a < b: each undirected non-loop edge once
+    sym: DataFrame  # u, v: each undirected non-loop edge in both directions
+
+
+def _graph(users: DataFrame) -> _Graph:
+    """The deterministic out-degree-2 graph over ``users`` (a ``_users``
+    frame, checkpointed or not), as uncached frames. The vertex count is
+    a scalar subquery, not a driver count, so building them runs no job.
+    ``sym`` is ``und`` and its reversal, so its reads share ``und``'s one
+    distinct exchange."""
+    n = users.agg(F.count(F.lit(1))).scalar()
+    u = F.col("user_id")
+    edges = users.select(
+        u.alias("src"),
+        F.explode(F.array((u * 7 + 13) % n, (u * 11 + 5) % n)).alias("dst"),
+    )
+    a, b = F.least("src", "dst"), F.greatest("src", "dst")
+    # The not-null terms are true of every non-loop edge. Stated here, they
+    # keep each read's join from pushing its own inferred isnotnull below
+    # the distinct, which would give the reads different exchanges.
+    und = (
+        edges.where((F.col("src") != F.col("dst")) & a.isNotNull() & b.isNotNull())
+        .select(a.alias("a"), b.alias("b"))
+        .distinct()
+    )
+    sym = und.select(F.col("a").alias("u"), F.col("b").alias("v")).unionAll(
+        und.select(F.col("b").alias("u"), F.col("a").alias("v"))
+    )
+    return _Graph(edges, und, sym)
 
 
 def _pagerank_oracle() -> str:
@@ -73,23 +129,9 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # uncached scan+distinct referenced by the count, the edge build, the
     # rank init AND the dangling-vertex join of every superstep — the
     # events scan + distinct shuffle re-ran ~13× across the 10 iterations.
-    users = (
-        t(spark, sf_dir, "events")
-        .where(F.col("user_id").isNotNull())
-        .select("user_id")
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    users = _users(spark, sf_dir).localCheckpoint(eager=True)
     n = users.count()
-    edges = users.select(
-        F.col("user_id").alias("src"),
-        F.explode(
-            F.array(
-                (F.col("user_id") * 7 + 13) % n,
-                (F.col("user_id") * 11 + 5) % n,
-            )
-        ).alias("dst"),
-    ).localCheckpoint()
+    edges = _graph(users).edges.localCheckpoint()
     ranks = users.select("user_id", (F.lit(1.0) / n).alias("pr"))
     for _ in range(_ITERS):
         contrib = (
@@ -154,25 +196,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     # their checkpoints (connected_components measured 9.9→8.7 s at 100×);
     # this op's frame is referenced only 3× inside ONE job, where Spark's
     # shuffle-stage reuse already serves the distinct's exchange.
-    users = (
-        t(spark, sf_dir, "events")
-        .where(F.col("user_id").isNotNull())
-        .select("user_id")
-        .distinct()
-    )
-    n = users.count()
-    dedges = users.select(
-        F.col("user_id").alias("src"),
-        F.explode(
-            F.array(
-                (F.col("user_id") * 7 + 13) % n,
-                (F.col("user_id") * 11 + 5) % n,
-            )
-        ).alias("dst"),
-    ).where(F.col("src") != F.col("dst"))
-    und = dedges.select(
-        F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-    ).distinct()
+    und = _graph(_users(spark, sf_dir)).und
     e1 = und.alias("e1")
     e2 = und.select(F.col("a").alias("b"), F.col("b").alias("c")).alias("e2")
     e3 = und.select(F.col("a").alias("a3"), F.col("b").alias("c3")).alias("e3")
@@ -212,22 +236,7 @@ def graph_degree_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     iterative graph job: a heavy-tailed histogram says salt the hot
     vertices first. One edge-dedup shuffle + one vertex-grain count +
     one |degrees|-row histogram agg — no iteration, no global sort."""
-    ev = t(spark, sf_dir, "events").where(F.col("user_id").isNotNull()).select("user_id").distinct()
-    n = ev.count()  # vertex count: one tiny job, literal into the edge map
-    edges = ev.select(
-        F.col("user_id").alias("src"),
-        ((F.col("user_id") * 7 + 13) % F.lit(n)).alias("dst"),
-    ).unionAll(
-        ev.select(
-            F.col("user_id").alias("src"),
-            ((F.col("user_id") * 11 + 5) % F.lit(n)).alias("dst"),
-        )
-    )
-    und = (
-        edges.where(F.col("src") != F.col("dst"))
-        .select(F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b"))
-        .distinct()
-    )
+    und = _graph(_users(spark, sf_dir)).und
     verts = und.select(F.col("a").alias("v")).unionAll(und.select(F.col("b")))
     deg = verts.groupBy("v").agg(F.count(F.lit(1)).alias("degree"))
     return deg.groupBy("degree").agg(F.count(F.lit(1)).alias("n_nodes"))
@@ -283,26 +292,10 @@ def graph_bfs_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-vertex min aggregate; ``localCheckpoint`` truncates the growing
     lineage exactly as in pagerank. Output: reachable-user count per hop
     ring (≤ 5 hops)."""
-    # vertex set materialized ONCE (r16): the count, both union branches
-    # of the edge build and the dist init each re-ran the scan+distinct.
-    ev = (
-        t(spark, sf_dir, "events")
-        .where(F.col("user_id").isNotNull())
-        .select("user_id")
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    n = ev.count()
-    edges = ev.select(
-        F.col("user_id").alias("src"),
-        ((F.col("user_id") * 7 + 13) % F.lit(n)).alias("dst"),
-    ).unionAll(
-        ev.select(
-            F.col("user_id").alias("src"),
-            ((F.col("user_id") * 11 + 5) % F.lit(n)).alias("dst"),
-        )
-    )
-    edges = edges.localCheckpoint()
+    # vertex set materialized ONCE (r16): the vertex count, the edge build
+    # and the dist init each re-ran the scan+distinct.
+    ev = _users(spark, sf_dir).localCheckpoint(eager=True)
+    edges = _graph(ev).edges.localCheckpoint()
     dist = ev.select(
         "user_id",
         F.when(F.col("user_id") == 0, F.lit(0)).otherwise(F.lit(999)).alias("dist"),
@@ -369,43 +362,12 @@ def graph_common_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     similarity heuristic): for every NON-adjacent vertex pair reached by
     a two-hop path, count shared neighbors and score neighborhood
     Jaccard; top-20 predicted links. Same deterministic out-degree-2
-    graph as graph_pagerank. Scale shape: the undirected adjacency list
-    is STAGED ONCE (cached temp view — a WITH-CTE formulation inlines
-    the events-distinct subtree into every one of its 5 references and
-    the plan exploded to 88 shuffles; staging cuts it to ~7). The two-hop
-    self-join is keyed on the shared middle vertex — the canonical
-    wedge shuffle (cost ∑ deg(v)², the quantity graph_degree_stats
-    diagnoses); the adjacency check lowers to a left-anti hash join, and
-    degrees broadcast."""
-    from ..schemas import ensure_views
-
-    ensure_views(spark, sf_dir)
-    # vertex count resolved to a literal first: a scalar subquery inside the
-    # staged plan defeats CacheManager's canonicalized-plan matching, which
-    # re-inlined the whole events-distinct subtree at every reference (88
-    # shuffles). One bounded scalar to the driver, like kmeans' centroids.
-    n_vertices = spark.sql(
-        "SELECT count(DISTINCT user_id) AS n FROM events"
-    ).collect()[0]["n"]
-    und = spark.sql(
-        f"""
-        WITH users AS (SELECT DISTINCT user_id FROM events
-                   WHERE user_id IS NOT NULL),
-        edges0 AS (
-          SELECT user_id AS src, (user_id * 7 + 13) % {n_vertices} AS dst
-          FROM users
-          UNION ALL
-          SELECT user_id, (user_id * 11 + 5) % {n_vertices} FROM users)
-        SELECT DISTINCT u, v FROM (
-          SELECT src AS u, dst AS v FROM edges0 WHERE src <> dst
-          UNION ALL
-          SELECT dst, src FROM edges0 WHERE src <> dst)
-        """
-    ).cache()
-    und.createOrReplaceTempView("__cn_und")
-    # inline subqueries, not WITH-CTEs: CTE definitions are not rewritten by
-    # CacheManager's cached-plan substitution (verified live: the CTE form
-    # re-planned the staging subtree uncached), inline forms are.
+    graph as graph_pagerank. Scale shape: the symmetric adjacency list
+    is read five times; its distinct exchange runs once and AQE reuses
+    it. The two-hop self-join is keyed on the shared middle vertex — the
+    canonical wedge shuffle (cost ∑ deg(v)², the quantity
+    graph_degree_stats diagnoses); the adjacency check lowers to a
+    left-anti hash join, and degrees broadcast."""
     return spark.sql(
         """
         SELECT n2.u, n2.v, n2.common_cnt,
@@ -414,14 +376,15 @@ def graph_common_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM (
           SELECT c.u, c.v, c.common_cnt FROM (
             SELECT a.u AS u, b.u AS v, count(*) AS common_cnt
-            FROM __cn_und a JOIN __cn_und b ON a.v = b.v AND a.u < b.u
+            FROM {und} a JOIN {und} b ON a.v = b.v AND a.u < b.u
             GROUP BY a.u, b.u) c
           WHERE NOT EXISTS
-            (SELECT 1 FROM __cn_und e WHERE e.u = c.u AND e.v = c.v)) n2
-        JOIN (SELECT u, count(*) AS d FROM __cn_und GROUP BY u) da ON da.u = n2.u
-        JOIN (SELECT u, count(*) AS d FROM __cn_und GROUP BY u) db ON db.u = n2.v
+            (SELECT 1 FROM {und} e WHERE e.u = c.u AND e.v = c.v)) n2
+        JOIN (SELECT u, count(*) AS d FROM {und} GROUP BY u) da ON da.u = n2.u
+        JOIN (SELECT u, count(*) AS d FROM {und} GROUP BY u) db ON db.u = n2.v
         ORDER BY n2.common_cnt DESC, n2.u, n2.v LIMIT 20
-        """
+        """,
+        und=_graph(_users(spark, sf_dir)).sym,
     )
 
 
@@ -477,27 +440,7 @@ def graph_k_core(spark: SparkSession, sf_dir: str) -> DataFrame:
     each iteration reuses the same shuffle layout; survivor sets shrink
     monotonically, so at 100 TB later rounds touch a fraction of the
     edge table."""
-    from ..schemas import ensure_views
-
-    ensure_views(spark, sf_dir)
-    n_vertices = spark.sql(
-        "SELECT count(DISTINCT user_id) AS n FROM events"
-    ).collect()[0]["n"]
-    edges = spark.sql(
-        f"""
-        WITH users AS (SELECT DISTINCT user_id FROM events
-                   WHERE user_id IS NOT NULL),
-        edges0 AS (
-          SELECT user_id AS src, (user_id * 7 + 13) % {n_vertices} AS dst
-          FROM users
-          UNION ALL
-          SELECT user_id, (user_id * 11 + 5) % {n_vertices} FROM users)
-        SELECT DISTINCT u, v FROM (
-          SELECT src AS u, dst AS v FROM edges0 WHERE src <> dst
-          UNION ALL
-          SELECT dst, src FROM edges0 WHERE src <> dst)
-        """
-    ).localCheckpoint()
+    edges = _graph(_users(spark, sf_dir)).sym.localCheckpoint()
     for _ in range(_KCORE_ROUNDS):
         keep = (
             edges.groupBy("u")
@@ -555,35 +498,10 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     (infrastructure shape). THE one-number prior for how badly an
     iterative graph job will skew: disassortative graphs concentrate
     wedge work on hub partitions (what graph_degree_stats shows in
-    histogram form, collapsed to a correlation). Plan: the same cached
-    deterministic edge list family, two degree joins (degree table
-    broadcasts), one corr aggregate — integer-exact moments, one rounded
-    division at the end."""
-    from ..schemas import ensure_views
-
-    ensure_views(spark, sf_dir)
-    # staged cached edge list + CTE-free final query: the WITH-CTE
-    # formulation re-inlined the events-distinct subtree at every
-    # reference (53 accounted shuffles) — see graph_common_neighbors.
-    n_vertices = spark.sql(
-        "SELECT count(DISTINCT user_id) AS n FROM events"
-    ).collect()[0]["n"]
-    und = spark.sql(
-        f"""
-        WITH users AS (SELECT DISTINCT user_id FROM events
-                   WHERE user_id IS NOT NULL),
-        edges0 AS (
-          SELECT user_id AS src, (user_id * 7 + 13) % {n_vertices} AS dst
-          FROM users
-          UNION ALL
-          SELECT user_id, (user_id * 11 + 5) % {n_vertices} FROM users)
-        SELECT DISTINCT u, v FROM (
-          SELECT src AS u, dst AS v FROM edges0 WHERE src <> dst
-          UNION ALL
-          SELECT dst, src FROM edges0 WHERE src <> dst)
-        """
-    ).cache()
-    und.createOrReplaceTempView("__as_und")
+    histogram form, collapsed to a correlation). Plan: the shared
+    symmetric edge list, two degree joins (degree table broadcasts), one
+    corr aggregate — integer-exact moments, one rounded division at the
+    end."""
     return spark.sql(
         """
         SELECT count(*) AS n_edge_endpoints,
@@ -592,12 +510,13 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
                  AS assortativity
         FROM (
           SELECT d1.d AS du, d2.d AS dv
-          FROM __as_und e
-          JOIN (SELECT u, count(*) AS d FROM __as_und GROUP BY u) d1
+          FROM {und} e
+          JOIN (SELECT u, count(*) AS d FROM {und} GROUP BY u) d1
             ON e.u = d1.u
-          JOIN (SELECT u, count(*) AS d FROM __as_und GROUP BY u) d2
+          JOIN (SELECT u, count(*) AS d FROM {und} GROUP BY u) d2
             ON e.v = d2.u) pairs
-        """
+        """,
+        und=_graph(_users(spark, sf_dir)).sym,
     )
 
 
@@ -647,30 +566,10 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     hub-and-spoke from community structure. Reuses the ordered triangle
     enumeration (a<b<c counted once), explodes each triangle to its three
     corners for per-vertex counts, joins degrees, top-10 by coefficient.
-    The canonical edge set is CACHED and referenced via a temp view —
-    five references (three triangle sides + both degree ends) would each
-    recompute the users-distinct + explode + distinct pipeline under CTE
-    inlining (measured 173 accounted shuffles; cached form is 8). Scale
-    shape: the two triangle equi-joins dominate exactly as in the count
-    op; corner explode adds one |triangles|-row shuffle."""
-    users = t(spark, sf_dir, "events").where(F.col("user_id").isNotNull()).select("user_id").distinct()
-    n = users.count()
-    und = (
-        users.select(
-            F.col("user_id").alias("src"),
-            F.explode(
-                F.array(
-                    (F.col("user_id") * 7 + 13) % n,
-                    (F.col("user_id") * 11 + 5) % n,
-                )
-            ).alias("dst"),
-        )
-        .where(F.col("src") != F.col("dst"))
-        .select(F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b"))
-        .distinct()
-        .cache()
-    )
-    und.createOrReplaceTempView("__cc_und")
+    The canonical edge set is read five times (three triangle sides +
+    both degree ends); its distinct exchange runs once and AQE reuses it.
+    Scale shape: the two triangle equi-joins dominate exactly as in the
+    count op; corner explode adds one |triangles|-row shuffle."""
     return spark.sql(
         """
         SELECT deg.v AS user_id, CAST(deg.d AS BIGINT) AS degree,
@@ -678,22 +577,23 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
                round(CAST(2 * COALESCE(vt.t, 0) AS DOUBLE)
                      / (deg.d * (deg.d - 1)), 6) AS clustering_coeff
         FROM (SELECT v, count(*) AS d FROM (
-                SELECT a AS v FROM __cc_und
-                UNION ALL SELECT b FROM __cc_und) ends
+                SELECT a AS v FROM {und}
+                UNION ALL SELECT b FROM {und}) ends
               GROUP BY v) deg
         LEFT JOIN (
           SELECT v, count(*) AS t FROM (
             SELECT corner AS v
             FROM (SELECT e1.a AS va, e1.b AS vb, e2.b AS vc
-                  FROM __cc_und e1
-                  JOIN __cc_und e2 ON e2.a = e1.b
-                  JOIN __cc_und e3 ON e3.a = e1.a AND e3.b = e2.b) tri
+                  FROM {und} e1
+                  JOIN {und} e2 ON e2.a = e1.b
+                  JOIN {und} e3 ON e3.a = e1.a AND e3.b = e2.b) tri
             LATERAL VIEW explode(array(va, vb, vc)) AS corner) allv
           GROUP BY v) vt ON vt.v = deg.v
         WHERE deg.d >= 2
         ORDER BY clustering_coeff DESC, user_id
         LIMIT 10
-        """
+        """,
+        und=_graph(_users(spark, sf_dir)).und,
     )
 
 
@@ -738,34 +638,15 @@ def graph_jaccard_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame
     score |N(a)∩N(b)| / |N(a)∪N(b)| and rank the top-10 missing links —
     the classic neighborhood-overlap recommender
     (graph_common_neighbors's raw count, normalized by union degree so
-    hubs don't dominate). The cached symmetric adjacency is the shuffle
-    key for the wedge join (x–w–z through the shared neighbor w —
-    candidate generation is wedge-bounded, the same budget as triangle
-    counting), then an anti join removes existing edges and two degree
-    joins close the formula."""
-    users = t(spark, sf_dir, "events").where(F.col("user_id").isNotNull()).select("user_id").distinct()
-    n = users.count()
-    und = (
-        users.select(
-            F.col("user_id").alias("src"),
-            F.explode(
-                F.array(
-                    (F.col("user_id") * 7 + 13) % n,
-                    (F.col("user_id") * 11 + 5) % n,
-                )
-            ).alias("dst"),
-        )
-        .where(F.col("src") != F.col("dst"))
-        .select(F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b"))
-        .distinct()
-        .cache()
-    )
-    und.createOrReplaceTempView("__lp_und")
+    hubs don't dominate). The symmetric adjacency is the shuffle key
+    for the wedge join (x–w–z through the shared neighbor w — candidate
+    generation is wedge-bounded, the same budget as triangle counting),
+    then an anti join removes existing edges and two degree joins close
+    the formula."""
+    g = _graph(_users(spark, sf_dir))
     return spark.sql(
         """
-        WITH adj AS (
-          SELECT a AS v, b AS w FROM __lp_und
-          UNION ALL SELECT b, a FROM __lp_und),
+        WITH adj AS (SELECT u AS v, v AS w FROM {sym}),
         deg AS (SELECT v, count(*) AS d FROM adj GROUP BY v),
         common AS (
           SELECT x.v AS va, z.v AS vb, count(*) AS cn
@@ -773,7 +654,7 @@ def graph_jaccard_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame
           GROUP BY x.v, z.v),
         cand AS (
           SELECT c.va, c.vb, c.cn FROM common c
-          LEFT JOIN __lp_und e ON e.a = c.va AND e.b = c.vb
+          LEFT JOIN {und} e ON e.a = c.va AND e.b = c.vb
           WHERE e.a IS NULL)
         SELECT c.va AS user_a, c.vb AS user_b,
                CAST(c.cn AS BIGINT) AS common_neighbors,
@@ -783,7 +664,9 @@ def graph_jaccard_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame
         JOIN deg db ON db.v = c.vb
         ORDER BY jaccard DESC, user_a, user_b
         LIMIT 10
-        """
+        """,
+        sym=g.sym,
+        und=g.und,
     )
 
 
@@ -850,19 +733,12 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchanges — Spark re-executed the events-distinct build for every CTE
     reference); ``_lpa_sql()`` is now oracle text only, and a plan test
     pins the single edge build."""
-    users = t(spark, sf_dir, "events").where(F.col("user_id").isNotNull()).select("user_id").distinct().cache()
-    n = users.count()
+    # checkpointed, not cached: a cached vertex set would stay in the
+    # session and be substituted into every later op that reads _users
+    users = _users(spark, sf_dir).localCheckpoint()
     # Undirected edge MULTISET (UNION ALL in the oracle — duplicate and
     # self-loop edges keep their multiplicity in the neighbor-label counts).
-    directed = users.select(
-        F.col("user_id").alias("src"),
-        F.explode(
-            F.array(
-                (F.col("user_id") * 7 + 13) % n,
-                (F.col("user_id") * 11 + 5) % n,
-            )
-        ).alias("dst"),
-    )
+    directed = _graph(users).edges
     und = directed.union(
         directed.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).select(F.col("src").alias("a"), F.col("dst").alias("b")).localCheckpoint()
@@ -945,13 +821,7 @@ def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     loudly here instead of as a silent hash mismatch."""
     # vertex set materialized ONCE (r16): the density assertion, the edge
     # build and the label init each re-ran the scan+distinct.
-    users = (
-        t(spark, sf_dir, "events")
-        .where(F.col("user_id").isNotNull())
-        .select("user_id")
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    users = _users(spark, sf_dir).localCheckpoint(eager=True)
     lo, hi, n_users = users.agg(
         F.min("user_id"), F.max("user_id"), F.count(F.lit(1))
     ).first()
@@ -1073,47 +943,25 @@ def graph_reciprocity(spark: SparkSession, sf_dir: str) -> DataFrame:
     reverse edge also exists — the followback/mutual-link rate, the
     first asymmetry statistic any directed social/citation graph
     report leads with (plus raw/distinct/self-loop edge accounting).
-    The distinct edge set is built ONCE as a cached DataFrame (the
-    pagerank discipline) and every count reads the cache; the
-    reciprocal count is one self-join on the reversed key. The SQL
-    text is the DuckDB oracle only.
-
-    Job accounting (r16, guide §1.2): the five sequential driver
-    actions (raw count, loop count, distinct count, reciprocal count)
-    are folded into two — one conditional aggregate over the raw edge
-    stream (count + loop count in a single pass, so raw no longer
-    needs its own cache), and one left join of the cached distinct
-    edges against their reversal counting rows and matches together
-    (reversals are unique because ed is distinct, so count(match) is
-    exactly the old inner-join count)."""
-    users = t(spark, sf_dir, "events").where(F.col("user_id").isNotNull()).select("user_id").distinct().cache()
-    n = users.count()
-    raw = users.select(
-        F.col("user_id").alias("src"),
-        F.explode(
-            F.array(
-                (F.col("user_id") * 7 + 13) % n,
-                (F.col("user_id") * 11 + 5) % n,
-            )
-        ).alias("dst"),
-    )
-    n_raw, n_loops = raw.agg(
-        F.count(F.lit(1)),
-        F.count(F.when(F.col("src") == F.col("dst"), 1)),
-    ).head()
-    ed = raw.where(F.col("src") != F.col("dst")).distinct().cache()
-    rev = ed.select(
-        F.col("dst").alias("src"), F.col("src").alias("dst"), F.lit(1).alias("m")
-    )
-    n_ed, n_rec = (
-        ed.join(rev, ["src", "dst"], "left")
-        .agg(F.count(F.lit(1)), F.count("m"))
-        .head()
-    )
-    return spark.createDataFrame(
-        [(n_raw, n_ed, n_loops, n_rec, round(n_rec / n_ed, 6))],
-        "n_edges_raw long, n_edges_distinct long, n_self_loops long,"
-        " n_reciprocal_directed long, reciprocity double",
+    One query over the shared directed edge list: the raw and self-loop
+    counts are two scalar subqueries that Spark merges into one
+    aggregate, and one left join of the distinct non-loop edges against
+    their reversal counts rows and matches together (reversals are
+    unique because the edges are distinct, so count(r.src) is exactly
+    the inner-join count)."""
+    return spark.sql(
+        """
+        SELECT CAST((SELECT count(*) FROM {e}) AS BIGINT) AS n_edges_raw,
+               CAST(count(*) AS BIGINT) AS n_edges_distinct,
+               CAST((SELECT count_if(src = dst) FROM {e}) AS BIGINT)
+                 AS n_self_loops,
+               CAST(count(r.src) AS BIGINT) AS n_reciprocal_directed,
+               round(count(r.src) / count(*), 6) AS reciprocity
+        FROM (SELECT DISTINCT src, dst FROM {e} WHERE src <> dst) ed
+        LEFT JOIN (SELECT DISTINCT src, dst FROM {e} WHERE src <> dst) r
+          ON r.src = ed.dst AND r.dst = ed.src
+        """,
+        e=_graph(_users(spark, sf_dir)).edges,
     )
 
 
@@ -1160,42 +1008,25 @@ def graph_two_hop_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     dashboard carries. Per-vertex candidate volume is bounded by
     degree² (≤16 here; degree-capped in any production run), so the
     adjacency self-join is linear in edges, never quadratic in
-    vertices. The adjacency is built ONCE as a cached temp view read
-    by the degree, 2-hop and exclusion stages; the SQL text is the
-    DuckDB oracle only."""
-    users = t(spark, sf_dir, "events").where(F.col("user_id").isNotNull()).select("user_id").distinct().cache()
-    n = users.count()
-    directed = users.select(
-        F.col("user_id").alias("src"),
-        F.explode(
-            F.array(
-                (F.col("user_id") * 7 + 13) % n,
-                (F.col("user_id") * 11 + 5) % n,
-            )
-        ).alias("dst"),
-    ).where(F.col("src") != F.col("dst"))
-    adj = (
-        directed.select(F.col("src").alias("v"), F.col("dst").alias("w"))
-        .union(directed.select(F.col("dst").alias("v"), F.col("src").alias("w")))
-        .distinct()
-        .cache()
-    )
-    adj.createOrReplaceTempView("__twohop_adj")
+    vertices. The shared symmetric adjacency is read by the degree,
+    2-hop and exclusion stages, and its distinct exchange runs once."""
     return spark.sql(
         """
+        WITH adj AS (SELECT u AS v, v AS w FROM {sym})
         SELECT r.a AS user_id, deg.degree, r.two_hop_reach
         FROM (SELECT t.a, CAST(count(*) AS BIGINT) AS two_hop_reach
               FROM (SELECT DISTINCT x.v AS a, y.w AS c
-                    FROM __twohop_adj x JOIN __twohop_adj y ON y.v = x.w
+                    FROM adj x JOIN adj y ON y.v = x.w
                     WHERE y.w <> x.v) t
-              LEFT JOIN __twohop_adj d ON d.v = t.a AND d.w = t.c
+              LEFT JOIN adj d ON d.v = t.a AND d.w = t.c
               WHERE d.v IS NULL
               GROUP BY t.a) r
         JOIN (SELECT v, CAST(count(*) AS BIGINT) AS degree
-              FROM __twohop_adj GROUP BY v) deg ON deg.v = r.a
+              FROM adj GROUP BY v) deg ON deg.v = r.a
         ORDER BY r.two_hop_reach DESC, user_id
         LIMIT 10
-        """
+        """,
+        sym=_graph(_users(spark, sf_dir)).sym,
     )
 
 
@@ -1229,38 +1060,9 @@ def graph_bipartite_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     plus overlap coefficient and cosine similarity — the co-engagement
     projection behind 'users who do A also do B' recommendations and
     the standard first step on any user-item bipartite graph. The
-    distinct (user, type) incidence list is built ONCE as a cached
-    temp view read by both the per-type counts and the pair join; the
-    pair join co-partitions on user_id (one shuffle) and the per-user
-    pair fan-out is bounded by the 5-type enum, so the projection is
-    linear in the incidence list at any scale."""
-    from ..schemas import ensure_views
-
-    ensure_views(spark, sf_dir)
-    ut = spark.sql(
-        "SELECT DISTINCT user_id, event_type FROM events"
-    ).cache()
-    ut.createOrReplaceTempView("__biproj_ut")
-    return spark.sql(
-        """
-        SELECT p.type_a, p.type_b, p.shared_users,
-               ta.n AS n_users_a, tb.n AS n_users_b,
-               round(p.shared_users * 1e0 / least(ta.n, tb.n), 6)
-                 AS overlap_coef,
-               round(p.shared_users * 1e0 / sqrt(ta.n * 1e0 * tb.n), 6)
-                 AS cosine_sim
-        FROM (SELECT a.event_type AS type_a, b.event_type AS type_b,
-                     CAST(count(*) AS BIGINT) AS shared_users
-              FROM __biproj_ut a
-              JOIN __biproj_ut b ON a.user_id = b.user_id
-                                AND a.event_type < b.event_type
-              GROUP BY a.event_type, b.event_type) p
-        JOIN (SELECT event_type, CAST(count(*) AS BIGINT) AS n
-              FROM __biproj_ut GROUP BY event_type) ta
-          ON ta.event_type = p.type_a
-        JOIN (SELECT event_type, CAST(count(*) AS BIGINT) AS n
-              FROM __biproj_ut GROUP BY event_type) tb
-          ON tb.event_type = p.type_b
-        ORDER BY type_a, type_b
-        """
-    )
+    oracle text is the plan: its distinct (user, type) incidence list is
+    read three times, by both per-type counts and the pair join, and AQE
+    reuses its one exchange. The pair join co-partitions on user_id (one
+    shuffle) and the per-user pair fan-out is bounded by the 5-type enum,
+    so the projection is linear in the incidence list at any scale."""
+    return sql_q(spark, sf_dir, _BIPROJ_SQL)

@@ -11,7 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
-from ._util import t
+from ._util import sql_q, t
 
 
 @register(
@@ -136,9 +136,7 @@ def set_union_by_name(spark: SparkSession, sf_dir: str) -> DataFrame:
     return left.unionByName(right, allowMissingColumns=True)
 
 
-@register(
-    "set_symmetric_diff",
-    oracle="""
+_SYMDIFF_SQL = """
     WITH w1 AS (SELECT DISTINCT user_id FROM events WHERE day(ts) <= 15),
     w2 AS (SELECT DISTINCT user_id FROM events WHERE day(ts) > 15),
     only1 AS (SELECT user_id FROM w1 EXCEPT SELECT user_id FROM w2),
@@ -153,27 +151,18 @@ def set_union_by_name(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST((SELECT count(*) FROM
                  (SELECT user_id FROM w1 INTERSECT
                   SELECT user_id FROM w2) b) AS BIGINT) AS n_both
-    """,
-)
+    """
+
+
+@register("set_symmetric_diff", oracle=_SYMDIFF_SQL)
 def set_symmetric_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Symmetric difference of the active-user sets of the two month
     halves — (A∖B) ∪ (B∖A) composed from EXCEPT/INTERSECT, the churn/
     new-user split every retention report starts from, and the set-op
     composition the family's except/intersect primitives exist for.
     Identity pinned by construction: |AΔB| + 2|A∩B| = |A| + |B|. The
-    half-month user sets are built once each (cached) and every count
-    reads the cache; EXCEPT/INTERSECT hash on the key — one shuffle
-    each at user grain."""
-    ev = t(spark, sf_dir, "events")
-    w1 = ev.where(F.dayofmonth("ts") <= 15).select("user_id").distinct().cache()
-    w2 = ev.where(F.dayofmonth("ts") > 15).select("user_id").distinct().cache()
-    only1 = w1.exceptAll(w2.select("user_id")).distinct()
-    only2 = w2.exceptAll(w1.select("user_id")).distinct()
-    n1, n2 = w1.count(), w2.count()
-    no1, no2 = only1.count(), only2.count()
-    nboth = w1.intersect(w2).count()
-    return spark.createDataFrame(
-        [(n1, n2, no1, no2, no1 + no2, nboth)],
-        "n_first_half long, n_second_half long, n_only_first long,"
-        " n_only_second long, n_symmetric_diff long, n_both long",
-    )
+    oracle text is the plan: one query of scalar subqueries, in which
+    each half-month user set is a distinct exchange that AQE runs once
+    and reuses; EXCEPT/INTERSECT hash on the key — one shuffle each at
+    user grain."""
+    return sql_q(spark, sf_dir, _SYMDIFF_SQL)

@@ -2005,16 +2005,10 @@ def ts_hurst_rs(spark: SparkSession, sf_dir: str) -> DataFrame:
     block) and the within-block sum order is pinned by rn, so the
     float walk is engine-identical on integer-cents input.
 
-    Plan note (r6 verdict task #4): the shared-CTE execution re-ran the
-    events day-rollup for every reference (13 exchanges / 13 events
-    scans); the rollup is now a cached temp view and every downstream
-    CTE recomputes over its <=31 cached rows only."""
-    from ..schemas import ensure_views
-
-    ensure_views(spark, sf_dir)
-    day = spark.sql(_HURST_DAY).cache()
-    day.createOrReplaceTempView("__hurst_day")
-    return spark.sql(_hurst_sql("SELECT day, cents FROM __hurst_day"))
+    The oracle text is the plan: Spark inlines the CTEs, so the events
+    day rollup appears at every reference of ``d``, but AQE runs its
+    exchange once and reuses it."""
+    return sql_q(spark, sf_dir, _hurst_sql(_HURST_DAY))
 
 
 _PERM_ENTROPY_SQL = """

@@ -1,10 +1,12 @@
-"""Every op of the text, curation, multimodal and UDF modules stages
-nothing and leaks nothing: building it runs no Spark job, it leaves no temp
-view in the session, and its collect() leaves no block in storage memory. A
-long-lived session that serves these ops between other work carries no
-state from one to the next. ``llm_ann`` is left out: its caches feed
-Arrow kernels. (The file and test names predate the widening from
-``llm_dedup`` to these five modules.)"""
+"""Every op of the text, curation, multimodal, UDF and graph modules, and
+three SQL ops that used to cache (``agg_lift_gain_table``, ``ts_hurst_rs``,
+``set_symmetric_diff``), stages nothing and leaks nothing: building it
+runs no Spark job, it leaves no temp view in the session, and its
+collect() leaves no block in storage memory. A long-lived session that
+serves these ops between other work carries no state from one to the
+next. ``llm_ann`` is left out: its caches feed Arrow kernels. The
+fixpoint ops are named in ``EXEMPT``. (The file and test names predate
+the widening from ``llm_dedup``.)"""
 
 from __future__ import annotations
 
@@ -16,11 +18,21 @@ from highspeedrailwaybigdatasystem_spark.registry import all_queries
 from highspeedrailwaybigdatasystem_spark.schemas import ensure_views
 from tests.conftest import SF_SMOKE
 
-MODULES = ("llm_dedup", "llm_mix", "llm_text", "llm_mm", "udfs")
+MODULES = ("llm_dedup", "llm_mix", "llm_text", "llm_mm", "udfs", "graph")
 OPS = sorted(
     name
     for name, fn in all_queries().items()
     if fn.__module__.rsplit(".", 1)[-1] in MODULES
+    or name in ("agg_lift_gain_table", "ts_hurst_rs", "set_symmetric_diff")
+)
+
+_FIXPOINT = (
+    "localCheckpoints its vertex or edge frame and every superstep "
+    "eagerly, to cut lineage in a fixpoint loop"
+)
+_FIXPOINT_BLOCKS = (
+    "the localCheckpoint blocks of its last superstep are what its "
+    "result reads"
 )
 
 #: (op, check) -> why the op is exempt from that check
@@ -41,6 +53,22 @@ EXEMPT = {
     "against 0.78 s at sf0.1), but sorts the whole vocabulary in one task",
     ("llm_zipf_fit", "storage"): "the localCheckpoint blocks of that "
     "partitioning are what its result reads",
+    ("graph_pagerank", "jobs"): _FIXPOINT + "; it also counts the vertices "
+    "once, for the 1/N and 0.15/N literals of every superstep",
+    ("graph_pagerank", "storage"): _FIXPOINT_BLOCKS,
+    ("graph_bfs_distance", "jobs"): _FIXPOINT,
+    ("graph_bfs_distance", "storage"): _FIXPOINT_BLOCKS,
+    ("graph_k_core", "jobs"): _FIXPOINT + "; the surviving edges are "
+    "counted on the driver",
+    ("graph_k_core", "storage"): _FIXPOINT_BLOCKS,
+    ("graph_label_propagation", "jobs"): "localCheckpoints the vertex set "
+    "and the undirected edge multiset once, so neither round replays the "
+    "events scan",
+    ("graph_label_propagation", "storage"): "the checkpointed edges and the "
+    "checkpointed vertex set that seeds the labels are what its result reads",
+    ("graph_connected_components", "jobs"): _FIXPOINT + "; it also checks "
+    "that the user ids are dense, and counts changed labels per superstep",
+    ("graph_connected_components", "storage"): _FIXPOINT_BLOCKS,
 }
 
 

@@ -497,13 +497,12 @@ def test_zorder_layout_is_two_aggs_no_sort(spark):
 def test_cached_stage_substitution_holds(spark):
     """Round-4 finding: WITH-CTE definitions are not rewritten by
     CacheManager's cached-plan substitution, so a CTE query over a cached
-    temp view silently recomputes the staged subtree. The two staged
-    operators must keep their final queries CTE-free — pinned by requiring
+    temp view silently recomputes the staged subtree. The staged operator
+    must keep its final query CTE-free — pinned by requiring
     InMemoryTableScan at every reference."""
     from highspeedrailwaybigdatasystem_spark.registry import all_queries
 
     expected = {
-        "graph_common_neighbors": 5,   # undirected edges ×5
         "ml_naive_bayes_langid": 6,    # tokenized corpus ×6
     }
     qs = all_queries()
@@ -516,6 +515,18 @@ def test_cached_stage_substitution_holds(spark):
         )
         got = plan.count("InMemoryTableScan")
         assert got >= at_least, f"{name}: {got} InMemoryTableScan < {at_least}"
+
+
+def test_graph_edge_list_runs_once_uncached(spark):
+    """graph_common_neighbors reads the uncached symmetric edge list of
+    graph._graph five times. Nothing is cached, and AQE runs the shared
+    edge subtree once: the final plan reads no cache and reuses at least
+    one exchange."""
+    df = _QUERIES["graph_common_neighbors"](spark, SF_ORACLE)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "InMemoryTableScan" not in plan, plan
+    assert "ReusedExchange" in plan, plan
 
 
 def test_minhash_banding_plan_reads_no_cache_and_keeps_shingles_up(spark):

@@ -69,16 +69,29 @@ _NOTES = {
     "agg_market_basket_lift": "one uncached query: order-grain brand "
     "sets, pairs from two posexplode generators (<=7 items/order), then a "
     "window over the <=1+B(B+1)/2-row brand-pair grain",
-    "ts_hurst_rs": "cached day rollup (r7 re-plan, was 13 events scans); "
-    "all downstream stages run on <=31 cached rows",
+    "ts_hurst_rs": "oracle text: the events day rollup repeats per CTE "
+    "reference in the static plan, AQE runs its exchange once and reuses "
+    "it; every downstream stage runs on <=31 rows",
+    "graph_common_neighbors": "uncached symmetric edge frame (_graph) read "
+    "5x; AQE reuses its exchanges at runtime (sf0.1: 4 exchanges run, 8 "
+    "reused); wedge join is degree^2-bounded",
+    "graph_assortativity": "uncached symmetric edge frame (_graph) read 3x; "
+    "AQE reuses its exchanges at runtime (sf0.1: 4 exchanges run, 4 reused)",
+    "graph_clustering_coefficient": "uncached canonical edge frame (_graph) "
+    "read 5x; AQE reuses its exchanges at runtime (sf0.1: 3 exchanges run, "
+    "1 reused)",
+    "graph_jaccard_link_prediction": "uncached edge frames (_graph) read 5x; "
+    "AQE reuses their exchanges at runtime (sf0.1: 4 exchanges run, 7 "
+    "reused); wedge join is degree^2-bounded",
     "llm_minhash_jaccard_estimate": "uncached: banding's frames plus two "
     "signature joins; the initial plan repeats the reps/shingle/signature "
     "subtrees per reference, AQE reuses those exchanges at runtime "
     "(sf0.01: 6 shuffle stages run, 5 reused); joins are "
     "LSH-candidate-bounded",
-    "graph_two_hop_reach": "cached adjacency view; count includes the "
-    "cached build's printed repeats — live stages are the degree/2-hop/"
-    "exclusion aggs on the vertex grain",
+    "graph_two_hop_reach": "uncached symmetric edge frame (_graph) read "
+    "3x; AQE reuses its exchanges at runtime (sf0.1: 5 exchanges run, 7 "
+    "reused); live stages are the degree/2-hop/exclusion aggs on the "
+    "vertex grain",
     "llm_minhash_banding": "uncached: the initial plan repeats the "
     "reps/shingle subtree per reference (candidate build, both verify "
     "sides); AQE reuses those exchanges at runtime (sf0.01: 5 shuffle "
