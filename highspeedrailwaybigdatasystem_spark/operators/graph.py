@@ -9,7 +9,8 @@ scalar subquery, so building the frames runs no job. The non-iterative
 ops cache nothing: each reads the frames in one query (as DataFrame
 arguments of ``spark.sql``, or in DataFrame joins), and AQE reuses the
 exchanges that the repeated reads share. The fixpoint ops
-localCheckpoint them.
+localCheckpoint them; pagerank and BFS count the vertices on the driver
+and pass that count to the builder.
 
 Scale notes (100 TB): PageRank-style algorithms are repeated
 join + aggregate supersteps — each iteration shuffles the rank table on
@@ -50,13 +51,16 @@ class _Graph(NamedTuple):
     sym: DataFrame  # u, v: each undirected non-loop edge in both directions
 
 
-def _graph(users: DataFrame) -> _Graph:
+def _graph(users: DataFrame, n: int | None = None) -> _Graph:
     """The deterministic out-degree-2 graph over ``users`` (a ``_users``
     frame, checkpointed or not), as uncached frames. The vertex count is
-    a scalar subquery, not a driver count, so building them runs no job.
-    ``sym`` is ``und`` and its reversal, so its reads share ``und``'s one
-    distinct exchange."""
-    n = users.agg(F.count(F.lit(1))).scalar()
+    a scalar subquery, not a driver count, so building them runs no job;
+    a fixpoint op that already holds the count as ``n`` passes it, and
+    its checkpointed edge build then runs no subquery. ``sym`` is ``und``
+    and its reversal, so its reads share ``und``'s one distinct
+    exchange."""
+    if n is None:
+        n = users.agg(F.count(F.lit(1))).scalar()
     u = F.col("user_id")
     edges = users.select(
         u.alias("src"),
@@ -131,7 +135,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # events scan + distinct shuffle re-ran ~13× across the 10 iterations.
     users = _users(spark, sf_dir).localCheckpoint(eager=True)
     n = users.count()
-    edges = _graph(users).edges.localCheckpoint()
+    edges = _graph(users, n).edges.localCheckpoint()
     ranks = users.select("user_id", (F.lit(1.0) / n).alias("pr"))
     for _ in range(_ITERS):
         contrib = (
@@ -295,7 +299,7 @@ def graph_bfs_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     # vertex set materialized ONCE (r16): the vertex count, the edge build
     # and the dist init each re-ran the scan+distinct.
     ev = _users(spark, sf_dir).localCheckpoint(eager=True)
-    edges = _graph(ev).edges.localCheckpoint()
+    edges = _graph(ev, ev.count()).edges.localCheckpoint()
     dist = ev.select(
         "user_id",
         F.when(F.col("user_id") == 0, F.lit(0)).otherwise(F.lit(999)).alias("dist"),
@@ -362,29 +366,32 @@ def graph_common_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     similarity heuristic): for every NON-adjacent vertex pair reached by
     a two-hop path, count shared neighbors and score neighborhood
     Jaccard; top-20 predicted links. Same deterministic out-degree-2
-    graph as graph_pagerank. Scale shape: the symmetric adjacency list
-    is read five times; its distinct exchange runs once and AQE reuses
-    it. The two-hop self-join is keyed on the shared middle vertex — the
-    canonical wedge shuffle (cost ∑ deg(v)², the quantity
-    graph_degree_stats diagnoses); the adjacency check lowers to a
-    left-anti hash join, and degrees broadcast."""
+    graph as graph_pagerank. Scale shape: each vertex's neighbor set is
+    collected once (bounded by its degree); every pair of a vertex's
+    neighbors is a wedge through it, so counting pairs over all sets
+    gives the common-neighbor counts, at cost ∑ deg(v)² (the quantity
+    graph_degree_stats diagnoses). The adjacency check and both degrees
+    come from the two endpoints' sets, so the query reads the symmetric
+    adjacency once and AQE serves the three reads of the neighbor sets
+    from one exchange."""
     return spark.sql(
         """
-        SELECT n2.u, n2.v, n2.common_cnt,
-               round(CAST(n2.common_cnt AS DOUBLE) / (da.d + db.d - n2.common_cnt), 6)
+        WITH nb AS (SELECT u, collect_set(v) AS nbrs FROM {sym} GROUP BY u),
+        cn AS (
+          SELECT x AS u, y AS v, count(*) AS common_cnt
+          FROM nb LATERAL VIEW explode(nbrs) p AS x
+                  LATERAL VIEW explode(nbrs) q AS y
+          WHERE x < y
+          GROUP BY x, y)
+        SELECT c.u, c.v, c.common_cnt,
+               round(CAST(c.common_cnt AS DOUBLE)
+                     / (size(a.nbrs) + size(b.nbrs) - c.common_cnt), 6)
                  AS jaccard
-        FROM (
-          SELECT c.u, c.v, c.common_cnt FROM (
-            SELECT a.u AS u, b.u AS v, count(*) AS common_cnt
-            FROM {und} a JOIN {und} b ON a.v = b.v AND a.u < b.u
-            GROUP BY a.u, b.u) c
-          WHERE NOT EXISTS
-            (SELECT 1 FROM {und} e WHERE e.u = c.u AND e.v = c.v)) n2
-        JOIN (SELECT u, count(*) AS d FROM {und} GROUP BY u) da ON da.u = n2.u
-        JOIN (SELECT u, count(*) AS d FROM {und} GROUP BY u) db ON db.u = n2.v
-        ORDER BY n2.common_cnt DESC, n2.u, n2.v LIMIT 20
+        FROM cn c JOIN nb a ON a.u = c.u JOIN nb b ON b.u = c.v
+        WHERE NOT array_contains(a.nbrs, c.v)
+        ORDER BY c.common_cnt DESC, c.u, c.v LIMIT 20
         """,
-        und=_graph(_users(spark, sf_dir)).sym,
+        sym=_graph(_users(spark, sf_dir)).sym,
     )
 
 
@@ -1005,25 +1012,32 @@ def graph_two_hop_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     excluding self and direct neighbors) on the seeded undirected
     graph — the expansion statistic that predicts how fast influence /
     BFS frontiers grow, and the top-10 hub report every social-graph
-    dashboard carries. Per-vertex candidate volume is bounded by
-    degree² (≤16 here; degree-capped in any production run), so the
-    adjacency self-join is linear in edges, never quadratic in
-    vertices. The shared symmetric adjacency is read by the degree,
-    2-hop and exclusion stages, and its distinct exchange runs once."""
+    dashboard carries. Each vertex's neighbor set is collected once
+    (bounded by its degree); a vertex's two-hop set is the union of its
+    neighbors' sets less itself and its own neighbors, so the candidate
+    volume per vertex is bounded by degree² (≤16 here; degree-capped in
+    any production run) and the work is linear in edges, never quadratic
+    in vertices. The query reads the symmetric adjacency once: the
+    wedge, exclusion and degree terms of the oracle's four adjacency
+    reads all come from the neighbor sets, whose self-join AQE serves
+    from one exchange. Vertices with an empty two-hop set are dropped,
+    as the oracle's inner join drops them."""
     return spark.sql(
         """
-        WITH adj AS (SELECT u AS v, v AS w FROM {sym})
-        SELECT r.a AS user_id, deg.degree, r.two_hop_reach
-        FROM (SELECT t.a, CAST(count(*) AS BIGINT) AS two_hop_reach
-              FROM (SELECT DISTINCT x.v AS a, y.w AS c
-                    FROM adj x JOIN adj y ON y.v = x.w
-                    WHERE y.w <> x.v) t
-              LEFT JOIN adj d ON d.v = t.a AND d.w = t.c
-              WHERE d.v IS NULL
-              GROUP BY t.a) r
-        JOIN (SELECT v, CAST(count(*) AS BIGINT) AS degree
-              FROM adj GROUP BY v) deg ON deg.v = r.a
-        ORDER BY r.two_hop_reach DESC, user_id
+        WITH nb AS (SELECT u AS v, collect_set(v) AS nbrs
+                    FROM {sym} GROUP BY u)
+        SELECT user_id, degree, two_hop_reach
+        FROM (SELECT n.v AS user_id,
+                     CAST(size(any_value(n.nbrs)) AS BIGINT) AS degree,
+                     CAST(size(array_except(
+                       array_distinct(flatten(collect_list(m.nbrs))),
+                       array_union(any_value(n.nbrs), array(n.v))))
+                       AS BIGINT) AS two_hop_reach
+              FROM (SELECT v, nbrs, explode(nbrs) AS w FROM nb) n
+              JOIN nb m ON m.v = n.w
+              GROUP BY n.v)
+        WHERE two_hop_reach > 0
+        ORDER BY two_hop_reach DESC, user_id
         LIMIT 10
         """,
         sym=_graph(_users(spark, sf_dir)).sym,

@@ -1944,14 +1944,10 @@ def ts_cross_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sql_q(spark, sf_dir, _xcorr_sql("ts", "date_add(x.d, l.lag)"))
 
 
-_HURST_DAY = """SELECT date_trunc('day', ts) AS day,
+_HURST_SQL = """
+    WITH d AS (SELECT date_trunc('day', ts) AS day,
              sum(CAST(round(value * 100) AS BIGINT)) AS cents
-      FROM events GROUP BY date_trunc('day', ts)"""
-
-
-def _hurst_sql(day_src: str) -> str:
-    return f"""
-    WITH d AS ({day_src}),
+      FROM events GROUP BY date_trunc('day', ts)),
     r AS (SELECT day, cents, row_number() OVER (ORDER BY day) AS rn FROM d),
     ws AS (SELECT w FROM (VALUES (4), (8), (16)) AS t(w)),
     blk AS (
@@ -1991,7 +1987,7 @@ def _hurst_sql(day_src: str) -> str:
     """
 
 
-@register("ts_hurst_rs", oracle=_hurst_sql(_HURST_DAY))
+@register("ts_hurst_rs", oracle=_HURST_SQL)
 def ts_hurst_rs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hurst exponent by classical rescaled-range (R/S) analysis over
     the daily revenue series: for block sizes w ∈ {4,8,16}, each
@@ -2008,7 +2004,7 @@ def ts_hurst_rs(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle text is the plan: Spark inlines the CTEs, so the events
     day rollup appears at every reference of ``d``, but AQE runs its
     exchange once and reuses it."""
-    return sql_q(spark, sf_dir, _hurst_sql(_HURST_DAY))
+    return sql_q(spark, sf_dir, _HURST_SQL)
 
 
 _PERM_ENTROPY_SQL = """

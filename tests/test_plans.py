@@ -10,6 +10,8 @@ real if the explain() shows them. These lock in:
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 import __spark_entry__ as entrymod
@@ -517,16 +519,25 @@ def test_cached_stage_substitution_holds(spark):
         assert got >= at_least, f"{name}: {got} InMemoryTableScan < {at_least}"
 
 
-def test_graph_edge_list_runs_once_uncached(spark):
-    """graph_common_neighbors reads the uncached symmetric edge list of
-    graph._graph five times. Nothing is cached, and AQE runs the shared
-    edge subtree once: the final plan reads no cache and reuses at least
-    one exchange."""
-    df = _QUERIES["graph_common_neighbors"](spark, SF_ORACLE)
+@pytest.mark.parametrize(
+    "op",
+    ["graph_two_hop_reach", "graph_jaccard_link_prediction", "graph_assortativity"],
+)
+def test_graph_edge_list_runs_once_uncached(spark, op):
+    """These ops read the uncached edge frames of graph._graph two to
+    five times (``sym`` reads ``und`` twice), and the edge pipeline runs
+    once: the executed plan reads no cache and holds one edge-building
+    explode Generate, every other read being a ReusedExchange of its
+    distinct. Without the not-null terms in _graph each read's join
+    pushes its own inferred isnotnull below the distinct, the reads plan
+    different exchanges, and the explode runs three times in each."""
+    df = _QUERIES[op](spark, SF_ORACLE)
     df.collect()
     plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "InMemoryTableScan" not in plan, plan
-    assert "ReusedExchange" in plan, plan
+    final = plan.split("\n+- == Initial Plan ==")[0]
+    assert "InMemoryTableScan" not in final, final
+    assert final.count("Generate explode(array(") == 1, final
+    assert "ReusedExchange" in final, final
 
 
 def test_minhash_banding_plan_reads_no_cache_and_keeps_shingles_up(spark):

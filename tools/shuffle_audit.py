@@ -73,8 +73,9 @@ _NOTES = {
     "reference in the static plan, AQE runs its exchange once and reuses "
     "it; every downstream stage runs on <=31 rows",
     "graph_common_neighbors": "uncached symmetric edge frame (_graph) read "
-    "5x; AQE reuses its exchanges at runtime (sf0.1: 4 exchanges run, 8 "
-    "reused); wedge join is degree^2-bounded",
+    "once into per-vertex neighbor sets, read 3x; AQE reuses their "
+    "exchanges at runtime (sf0.1: 4 exchanges run, 3 reused); wedge pairs "
+    "are degree^2-bounded",
     "graph_assortativity": "uncached symmetric edge frame (_graph) read 3x; "
     "AQE reuses its exchanges at runtime (sf0.1: 4 exchanges run, 4 reused)",
     "graph_clustering_coefficient": "uncached canonical edge frame (_graph) "
@@ -89,9 +90,9 @@ _NOTES = {
     "(sf0.01: 6 shuffle stages run, 5 reused); joins are "
     "LSH-candidate-bounded",
     "graph_two_hop_reach": "uncached symmetric edge frame (_graph) read "
-    "3x; AQE reuses its exchanges at runtime (sf0.1: 5 exchanges run, 7 "
-    "reused); live stages are the degree/2-hop/exclusion aggs on the "
-    "vertex grain",
+    "once into per-vertex neighbor sets and self-joined; AQE reuses their "
+    "exchanges at runtime (sf0.1: 3 exchanges run, 2 reused); live stages "
+    "are on the vertex grain",
     "llm_minhash_banding": "uncached: the initial plan repeats the "
     "reps/shingle subtree per reference (candidate build, both verify "
     "sides); AQE reuses those exchanges at runtime (sf0.01: 5 shuffle "
